@@ -87,11 +87,16 @@ object TaxiReplay {
     * the reference's periodic watermarks advance with serving time.
     * Returns the stream handle + the streaming DataFrame (with a
     * proper event-time `ts` column) to build pipelines on.
+    *
+    * The stream plans `spark.sql.shuffle.partitions` input partitions
+    * per micro-batch, however many `addData` calls the batch spans (a
+    * plain `MemoryStream` plans one per call: 20 ticks per trigger
+    * made 20 scan tasks for a few thousand rows).
     */
   def memoryStream(spark: SparkSession): (MemoryStream[RideEvent], DataFrame) = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ms = MemoryStream[RideEvent]
+    val ms = MemoryStream[RideEvent](spark.conf.get("spark.sql.shuffle.partitions").toInt)
     val df = ms.toDF().withColumn("ts", timestamp_millis(col("tMs")))
     (ms, df)
   }
