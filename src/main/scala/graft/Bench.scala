@@ -1,14 +1,19 @@
 package graft
+import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+
+import graft.queries.StreamingQueries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 object Bench {
   /** Evaluate EVERY output column: hash each row's full struct and
-    * aggregate. A bare `.count()` lets Catalyst prune the output
-    * projection, timing map-only queries as near scan-counts.
+    * aggregate; returns the row count. A bare `.count()` lets Catalyst
+    * prune the output projection, timing map-only queries as near
+    * scan-counts. The one materialization every timing tool uses.
     */
-  private def materialize(df: DataFrame): Unit = {
-    val _ = df.agg(max(xxhash64(struct(df.columns.map(col): _*)))).collect()
-  }
+  private[graft] def materialize(df: DataFrame): Long =
+    df.agg(count(lit(1)), max(xxhash64(struct(df.columns.map(col): _*)))).head().getLong(0)
+
+  private def describe(e: Throwable): String = s"${e.getClass.getName}: ${e.getMessage}"
   /** First three /proc/loadavg fields (1/5/15-min run-queue averages)
     * — the co-tenant-contention evidence stamped into the artifact so
     * a loaded measurement window is visible IN the numbers it
@@ -114,10 +119,74 @@ object Bench {
       try {
         materialize(fn(spark, sfDir))
         timings += name -> (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable => failures += name -> s"${e.getClass.getName}: ${e.getMessage}" }
+      } catch { case e: Throwable => failures += name -> describe(e) }
     }
     Pass(timings.result(), failures.result())
   }
+
+  /** The concurrent mini-pass's workload: (FAIR pool, entry) pairs
+    * from different families (batch agg, iterative graph, streaming
+    * replay). K = 4 takes the first of each family plus one more
+    * batch entry. Entries are mid-weight (0.5–3 s serial at sf0.1).
+    */
+  private val ConcurrentWorkload = Seq(
+    ("batch", "q1_pricing_summary"),
+    ("iterative", "dedup_components"),
+    ("streaming", "taxi_total_stream"),
+    ("batch", "q4_lineitem_orders"),
+    ("batch", "text_stats"),
+    ("iterative", "dedup_pagerank"),
+    ("streaming", "events_type_counts_stream"),
+    ("batch", "q3_join_agg"))
+
+  /** Run `(pool, name, query)` entries concurrently in ONE session —
+    * one thread per entry, each in its FAIR pool, behind a common
+    * start latch so every job hits the scheduler together. Returns the
+    * concurrent wall seconds and a [[Pass]] of per-entry seconds and
+    * failures; a failed entry is never timed. Under FIFO the pool
+    * property is inert and the number degrades to FIFO interleaving.
+    */
+  def concurrentPass(
+      spark: SparkSession, sfDir: String,
+      entries: Seq[(String, String, (SparkSession, String) => DataFrame)]): (Double, Pass) = {
+    val pool = Executors.newFixedThreadPool(entries.size)
+    val start = new CountDownLatch(1)
+    try {
+      val futures = entries.map { case (fairPool, name, fn) =>
+        pool.submit(new Callable[(String, Either[String, Double])] {
+          def call(): (String, Either[String, Double]) = {
+            spark.sparkContext.setLocalProperty("spark.scheduler.pool", fairPool)
+            start.await()
+            val t0 = System.nanoTime()
+            try {
+              materialize(fn(spark, sfDir))
+              name -> Right((System.nanoTime() - t0) / 1e9)
+            } catch { case e: Throwable => name -> Left(describe(e)) }
+          }
+        })
+      }
+      val wallT0 = System.nanoTime()
+      start.countDown()
+      val results = futures.map(_.get(30, TimeUnit.MINUTES))
+      val wall = (System.nanoTime() - wallT0) / 1e9
+      (wall, Pass(
+        results.collect { case (n, Right(sec)) => n -> sec }.toMap,
+        results.collect { case (n, Left(err)) => n -> err }.toMap))
+    } finally pool.shutdown()
+  }
+
+  /** The artifact's `concurrent_k<K>` fields: the concurrent wall, the
+    * serial best-of-2 sum of the same entries and their ratio. None
+    * when an entry failed, concurrently or serially: a failed entry's
+    * time is not a time.
+    */
+  def concurrentStamp(
+      k: Int, wall: Double, conc: Pass, best: Map[String, Double]): Option[String] =
+    if (conc.failures.nonEmpty || !conc.timings.keySet.subsetOf(best.keySet)) None
+    else {
+      val serialSum = conc.timings.keys.toSeq.map(best).sum
+      Some(f""","concurrent_k$k":$wall%.3f,"concurrent_k${k}_serial_sum":$serialSum%.3f,"concurrent_k${k}_speedup":${serialSum / math.max(wall, 1e-9)}%.2f""")
+    }
 
   /** Best-of-passes seconds per entry, and the entries that failed in
     * any pass (first error kept). A failed entry has no best time, so
@@ -135,19 +204,7 @@ object Bench {
     val (settleSec, settleGaveUp) = settle()
     val loadBefore = loadAvg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // FAIR is required by the trailing concurrent mini-pass (pool
-      // property is inert under FIFO); with one job at a time it
-      // schedules identically to FIFO, so the serial passes are
-      // unaffected.
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     // Warm up the session (codegen, parquet reader, shuffle machinery)
     // so the first timed query doesn't absorb JVM startup.
     try {
@@ -188,9 +245,7 @@ object Bench {
     // that inflates multi-×; see SCALE.md round-7 variance notes).
     try {
       import graft.streaming.{RideEvent, TaxiPipelines, TaxiReplay, TempDir}
-      val ss = spark.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "2")
-      ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+      val ss = StreamingQueries.streamSession(spark)
       import ss.implicits._
       val evs = Seq(
         RideEvent(1L, 1000L, isStart = false, -74.0, 40.75, 1),
@@ -270,19 +325,20 @@ object Bench {
     // contention regressions (the class the r14 targeted-unload fix
     // closed — a global unload under mixed load read 0.60× of serial),
     // so every full artifact carries one K=4 concurrent wall beside
-    // the serial total. Workload + harness are ProbeConcurrency's
-    // (mixed batch/iterative/streaming head) so probe and artifact
-    // can't drift; the speedup divisor is THIS artifact's best-of-2
-    // serial numbers for the same entries — same JVM, same window.
-    // Runs after every serial stamp is captured, so it cannot pollute
-    // them; skipped on filtered runs and via SPARK_GRAFT_CONCURRENT_K=0.
+    // the serial total. The speedup divisor is THIS artifact's
+    // best-of-2 serial numbers for the same entries — same JVM, same
+    // window. Runs after every serial stamp is captured, so it cannot
+    // pollute them; skipped on filtered runs and via
+    // SPARK_GRAFT_CONCURRENT_K=0.
     val concK = sys.env.getOrElse("SPARK_GRAFT_CONCURRENT_K", "4").toInt
     val concStamp =
       if (only.isDefined || concK <= 0) ""
       else try {
-        val (wall, per) = graft.tools.ProbeConcurrency.concurrentPass(spark, sfDir, concK)
-        val serialSum = per.flatMap { case (n, _) => best.get(n) }.sum
-        f""","concurrent_k$concK":$wall%.3f,"concurrent_k${concK}_serial_sum":$serialSum%.3f,"concurrent_k${concK}_speedup":${serialSum / math.max(wall, 1e-9)}%.2f"""
+        val (wall, conc) = concurrentPass(spark, sfDir,
+          ConcurrentWorkload.take(concK).map { case (pool, n) => (pool, n, SparkEntry.queries(n)) })
+        conc.failures.foreach { case (name, err) =>
+          Console.err.println(s"[bench] concurrent $name failed: $err") }
+        concurrentStamp(concK, wall, conc, best).getOrElse("")
       } catch { case _: Throwable => "" }
     def fmt(m: Map[String, Double]): String =
       m.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")

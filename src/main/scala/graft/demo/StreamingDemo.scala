@@ -1,7 +1,6 @@
 package graft.demo
 
 import graft.streaming._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Live-replay demo mains — the reference's three applications
@@ -20,13 +19,7 @@ object StreamingDemo {
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("total")
     val speed = if (args.length > 1) args(1).toDouble else 600.0
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     import spark.implicits._
 
     // Live monitoring — the reference's demo environment enables the

@@ -2,7 +2,6 @@ package graft.demo
 
 import graft.geo.NycGeo
 import graft.model.TaxiRide
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Batch form of the reference's TotalArrivalCount over a real taxi
@@ -16,13 +15,7 @@ import org.apache.spark.sql.functions._
 object TaxiCsvDemo {
   def main(args: Array[String]): Unit = {
     val path = args.headOption.getOrElse(sys.error("usage: TaxiCsvDemo <csv path>"))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = sys.env.get("SPARK_MASTER").fold(graft.Session())(graft.Session(_))
 
     val rides = TaxiRide.parseCsv(spark.read.text(path).toDF("line"), "line")
     val counts = rides

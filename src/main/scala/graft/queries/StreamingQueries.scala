@@ -47,109 +47,83 @@ object StreamingQueries {
     * .partitions` *at first micro-batch* and every stateful operator
     * then commits delta files per partition per micro-batch — at the
     * parent session's 32 partitions that checkpoint IO was 80% of the
-    * whole bench (BENCH_r01) for a few thousand replayed rows. The knob
-    * is per-deployment: a production job sizes it to keyspace/executor
-    * count; the replay harness wants it small. `newSession()` shares
-    * the SparkContext but isolates the conf, so batch queries on the
-    * parent session keep their partitioning.
+    * whole bench (BENCH_r01) for a few thousand replayed rows. A
+    * production job sizes it to keyspace/executor count; the replay
+    * harness wants it small. `newSession()` shares the SparkContext
+    * but isolates the conf, so batch queries on the parent session
+    * keep their partitioning.
     */
   private[graft] def streamSession(spark: SparkSession): SparkSession = {
     val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "2"))
-    // State-store provider for the replay sessions. Default stays
-    // HDFSBackedStateStoreProvider: the r9 A/B probe (ProbeStateStore,
-    // results in SCALE.md "State-store provider") measured RocksDB +
-    // changelog checkpointing SLOWER at replay scale — per-micro-batch
-    // native-store open/commit overhead dominates when state is a few
-    // thousand rows on tmpfs. The switch is the per-deployment knob a
-    // production job with GB-scale state per partition would flip.
-    sys.props.get("graft.stateProvider")
-      .orElse(sys.env.get("SPARK_GRAFT_STATE_PROVIDER")) match {
-      case Some("rocksdb") =>
-        ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        ss.conf.set(
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-          "true")
-      case _ => ()
-    }
+    ss.conf.set("spark.sql.shuffle.partitions", "2")
+    // HDFS-backed state store: RocksDB + changelog checkpointing
+    // measured SLOWER at replay scale — per-micro-batch native-store
+    // open/commit overhead dominates when state is a few thousand rows
+    // on tmpfs (SCALE.md "State-store provider: RocksDB measured,
+    // HDFSBacked kept"; re-checked in OPTIMIZATION_r16.md §9). The
+    // transformWithState entries switch per session ([[forceRocksdb]]).
+    ss.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
     // Spark 4.1 turned streaming-checkpoint FILE CHECKSUMS on by
-    // default (spark.sql.streaming.checkpoint.fileChecksum.enabled):
-    // every offset-log / commit-log / state file write then ALSO
-    // creates+renames a companion .checksum file, and every read
+    // default: every offset-log / commit-log / state file write then
+    // ALSO creates+renames a companion .checksum file, and every read
     // probes for one — doubling the per-micro-batch metadata file
     // operations. The replay harness writes EPHEMERAL tmpfs
     // checkpoints that are deleted seconds later; corruption
-    // detection on throwaway files is pure overhead (the bench log
-    // showed the manager warning "No checksum file found" on its own
-    // maintenance snapshots). A durable production checkpoint on
-    // object storage is where the knob earns its cost — env-
-    // parameterized for that deployment choice.
-    ss.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-      sys.env.get("SPARK_GRAFT_CKPT_CHECKSUM").contains("true").toString)
+    // detection on throwaway files is pure overhead
+    // (OPTIMIZATION_r16.md §3).
+    ss.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
     // Checkpoint IO adapter: the replay checkpoints live on LOCAL
     // tmpfs, where the default FileContext-based manager costs ~37 ms
-    // per small create+rename (no-native-hadoop builtin path; measured
-    // by ProbeCkptIo: create ~9 ms, rename ~27 ms, java.nio ~0.1 ms).
-    // At 2 WAL writes + per-partition state commits PER MICRO-BATCH
-    // that put a ~100-150 ms adapter floor under every batch of every
-    // replay entry. NioCheckpointFileManager keeps the identical
-    // rename-based atomic-publication protocol on java.nio. A remote
-    // (hdfs/s3) checkpoint deployment keeps the default manager —
-    // SPARK_GRAFT_CKPT_MANAGER=default restores it.
-    if (!sys.env.get("SPARK_GRAFT_CKPT_MANAGER").contains("default")) {
-      ss.conf.set("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.graftbridge.NioCheckpointFileManager")
-    }
+    // per small create+rename (create ~9 ms, rename ~27 ms, java.nio
+    // ~0.1 ms; OPTIMIZATION_r16.md §1). At 2 WAL writes + per-partition
+    // state commits PER MICRO-BATCH that put a ~100-150 ms adapter
+    // floor under every batch of every replay entry.
+    // NioCheckpointFileManager keeps the identical rename-based
+    // atomic-publication protocol on java.nio; it refuses a
+    // non-`file:` checkpoint, which needs the default manager.
+    ss.conf.set("spark.sql.streaming.checkpointFileManagerClass",
+      "org.apache.spark.sql.graftbridge.NioCheckpointFileManager")
     // The trigger thread sleeps pollingDelay (default 10 ms) whenever a
     // trigger finds no new data, so every driver-fed chunk
     // (addData → processAllAvailable) waits up to 10 ms to be noticed —
-    // ~0.3 s across the 30-feed TTL replay alone (thread-dump sampled).
-    // 1 ms keeps the no-data loop polite while cutting the pickup
-    // latency; a production job on a real source tunes this to its
-    // ingest cadence (env knob below).
-    ss.conf.set("spark.sql.streaming.pollingDelay",
-      sys.env.getOrElse("SPARK_GRAFT_POLLING_DELAY", "1ms"))
+    // ~0.3 s across the 30-feed TTL replay alone (OPTIMIZATION_r16.md
+    // §4). 1 ms keeps the no-data loop polite while cutting the pickup
+    // latency.
+    ss.conf.set("spark.sql.streaming.pollingDelay", "1ms")
     // Without this, every data micro-batch is followed by a no-data
     // micro-batch that re-runs the whole stateful plan on zero rows to
     // apply the advanced watermark — measured at ~45% of replay cost
-    // (ProfileStream: data batch ~0.5 s, trailing no-data batch ~0.4 s,
-    // both dominated by state-store commit + WAL, not data volume).
-    // Append-mode flushing instead happens through one explicit
-    // sentinel *data* batch after the feed (see `appendReplay`), which
-    // applies the final watermark exactly once.
+    // in the per-batch `durationMs` split (data batch ~0.5 s, trailing
+    // no-data batch ~0.4 s, both dominated by state-store commit +
+    // WAL, not data volume). Append-mode flushing instead happens
+    // through one explicit sentinel *data* batch after the feed (see
+    // `appendReplay`), which applies the final watermark exactly once.
     ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     ss
   }
 
   /** Forced-RocksDB sessions (transformWithState entries — Spark
-    * rejects the HDFS-backed provider at query start). Both lifecycle
-    * knobs stay env-parameterized but their DEFAULTS flipped in r15
-    * after a bracketed A/B over the six RocksDB entries at sf0.1
-    * (OPTIMIZATION_r15.md §2): changelog checkpointing ON (per-batch
-    * delta instead of a full RocksDB snapshot upload per commit —
-    * 0.74× alone; the r9 probe's contrary verdict predated the
-    * 30-micro-batch TTL replay, whose per-commit snapshot cost
-    * dominates) and trackTotalNumberOfRows OFF (skips the
-    * read-before-write RocksDB get per state put that only feeds the
-    * numRowsTotal progress metric — 0.77× alone; combined 0.82×
-    * bracketed). Changelog checkpointing is also the documented
-    * production choice at GB-scale state, where a full snapshot per
-    * commit is prohibitive; recovery replays snapshot + changelog
-    * (exercised by ProbeRecovery and the state-reader entry).
-    * Env overrides: SPARK_GRAFT_ROCKSDB_CHANGELOG=false /
-    * SPARK_GRAFT_ROCKSDB_NOTRACK=false restore the r14 behavior.
+    * rejects the HDFS-backed provider at query start), with two
+    * lifecycle settings measured in a bracketed A/B over the six
+    * RocksDB entries at sf0.1 (OPTIMIZATION_r15.md §2): changelog
+    * checkpointing ON (per-batch delta instead of a full RocksDB
+    * snapshot upload per commit — 0.74× alone) and
+    * trackTotalNumberOfRows OFF (skips the read-before-write RocksDB
+    * get per state put that only feeds the numRowsTotal progress
+    * metric — 0.77× alone; combined 0.82× bracketed). Changelog
+    * checkpointing is also the documented production choice at
+    * GB-scale state, where a full snapshot per commit is prohibitive;
+    * recovery replays snapshot + changelog (TwsRecoverySpec and the
+    * state-reader entry exercise it).
     */
-  private def forceRocksdb(ss: SparkSession): Unit = {
+  private[graft] def forceRocksdb(ss: SparkSession): Unit = {
     ss.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     ss.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      (!sys.env.get("SPARK_GRAFT_ROCKSDB_CHANGELOG").contains("false")).toString)
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
     ss.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
-      sys.env.get("SPARK_GRAFT_ROCKSDB_NOTRACK").contains("false").toString)
+      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
   }
 
   /** Serving-ordered ride feed (± sentinel), with the zero-weight
@@ -439,25 +413,7 @@ object StreamingQueries {
     * at-least-once retry + keyed idempotent overwrite = exact
     * convergence, even on a flaky connection.
     */
-  def totalForeachStream(spark: SparkSession, sfDir: String): DataFrame =
-    totalForeachRun(spark, sfDir, nServers = 1)
-
-  /** Shared core of the foreach entry and the SHARDED harness probe
-    * (`graft.tools.ProbeForeachShard`, judge VERDICT r13 item 6):
-    * identical pipeline/writer/read-back, parameterized only by how
-    * many stub stores shard the partition space. The oracle entry runs
-    * nServers = 1 — the reference's one-client-per-sink-instance
-    * contract; the probe runs one per partition, because the sf10
-    * measurement otherwise times the single stub's accept-loop
-    * serialization, not the writer. Sharding preserves convergence:
-    * Update output of a streaming agg is hash-partitioned by group
-    * key with fixed shuffle partitions, so key→partition→port is
-    * stable across micro-batches and per-key last-write-wins holds
-    * per shard (any instability would surface as duplicate keys in
-    * the unioned read-back and fail the oracle loudly).
-    */
-  private[graft] def totalForeachRun(
-      spark: SparkSession, sfDir: String, nServers: Int): DataFrame = {
+  def totalForeachStream(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.types._
     val ss = streamSession(spark)
     val df = TaxiReplay.openJsonlStream(ss,
@@ -467,31 +423,28 @@ object StreamingQueries {
     // pipeline emits ~32 k upserts (≈65 faults at 499); dense enough
     // that the sf0.01 oracle run (~5-8 k upserts) still injects ~10+
     // (non-vacuity require below). firstFaultAt guarantees one fault
-    // on sub-period runs (the sf0.001 plan sweep emits ~490 upserts);
-    // the per-server counters keep the same density under sharding.
-    val servers = Seq.fill(nServers)(
-      new SocketUpsertServer(failEveryN = 499, firstFaultAt = 31).start())
+    // on sub-period runs (the sf0.001 plan sweep emits ~490 upserts).
+    val server = new SocketUpsertServer(failEveryN = 499, firstFaultAt = 31).start()
     val ckpt = TempDir.create("graft-ckpt-")
     val q = TaxiPipelines.totalArrivalCount(df)
       .writeStream.outputMode("update")
       .option("checkpointLocation", ckpt.toString)
-      .foreach(new ForeachKeyedUpsertWriter(
-        "127.0.0.1", servers.map(_.port), nKey = 1, maxRetries = 5))
+      .foreach(new ForeachKeyedUpsertWriter("127.0.0.1", server.port, nKey = 1))
       .start()
     try {
       q.processAllAvailable()
       // non-vacuity: the retry path must actually have been exercised
-      require(servers.map(_.faultCount).sum > 0,
-        s"fault injection never fired (${servers.map(_.upsertCount).sum} upserts)")
+      require(server.faultCount > 0,
+        s"fault injection never fired (${server.upsertCount} upserts)")
       val schema = StructType(Seq(
         StructField("cell", IntegerType), StructField("last_t_ms", LongType),
         StructField("cnt", LongType), StructField("center_lon", FloatType),
         StructField("center_lat", FloatType)))
-      servers.map(_.toDF(ss, schema)).reduce(_ unionByName _).localCheckpoint()
+      server.toDF(ss, schema).localCheckpoint()
     } finally {
       q.stop()
       TempDir.deleteRecursively(ckpt.toString)
-      servers.foreach(_.close())
+      server.close()
       StateStoreBridge.unloadQuery(q.runId)
     }
   }
@@ -1104,41 +1057,13 @@ object StreamingQueries {
   }
 
   /** O11's early-fire pane machine on the NEW arbitrary-state API
-    * ([[graft.streaming.EarlyTriggerProcessor]]): MapState panes +
-    * event-time timers replacing the legacy fMGWS state machine, same
+    * ([[graft.streaming.EarlyTriggerBlobProcessor]]): a per-key pane
+    * map + event-time timers replacing the legacy fMGWS state machine, same
     * ordered replay, same projection, same recursive-CTE oracle as
     * `taxi_early_fires` — the complete early-fire sequence, not just
     * finals, pinned on the migration-target API. RocksDB provider
     * per-session (the API requires it).
     */
-  /** Measurement-only twin of [[earlyTwsStream]] on the OTHER pane
-    * layout (per-pane MapState, [[graft.streaming.EarlyTriggerProcessor]])
-    * — not registered; driven by ProbeTws so the
-    * MapState-vs-ValueState[Map] trade stays a measured number
-    * (SCALE.md round 12; the registered entry ships the blob form,
-    * the measured winner at the replay's dense update pattern).
-    */
-  private[graft] def earlyTwsMapProbe(
-      spark: SparkSession, sfDir: String, threshold: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    appendReplay(spark, sfDir, "earlytwsblob_", maxDelayMs = 0L, rocksdb = true,
-        partitions = Some(8)) { df =>
-      import df.sparkSession.implicits._
-      cellsOf(df)
-        .groupByKey(_.cell)
-        .transformWithState(new graft.streaming.EarlyTriggerProcessor(threshold),
-          org.apache.spark.sql.streaming.TimeMode.EventTime(),
-          org.apache.spark.sql.streaming.OutputMode.Append())
-        .toDF()
-    }
-      .filter(!col("isFinal"))
-      .select(col("cell"), col("wEndMs").as("w_end_ms"),
-        row_number().over(
-          Window.partitionBy(col("cell"), col("wEndMs")).orderBy(col("cnt")))
-          .cast("long").as("seq"),
-        col("cnt").as("early_cnt"))
-  }
-
   def earlyTwsStream(spark: SparkSession, sfDir: String, threshold: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     appendReplay(spark, sfDir, "earlytws_", maxDelayMs = 0L, rocksdb = true,
@@ -1149,9 +1074,8 @@ object StreamingQueries {
         // blob-state pane map: the replay's batches are DENSE (each
         // touches most live panes per key), where one ValueState
         // serde round-trip beats per-pane MapState point-ops —
-        // measured 4.7 vs 6.2 s best-of-2 (ProbeTws A/B, SCALE.md
-        // round 12). The MapState twin ships alongside for the
-        // sparse-update regime and stays probe-covered.
+        // measured 4.7 vs 6.2 s best-of-2 (SCALE.md "Pane-state
+        // layout A/B: MapState vs ValueState blob").
         .transformWithState(new graft.streaming.EarlyTriggerBlobProcessor(threshold),
           org.apache.spark.sql.streaming.TimeMode.EventTime(),
           org.apache.spark.sql.streaming.OutputMode.Append())

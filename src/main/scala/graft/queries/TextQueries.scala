@@ -275,7 +275,7 @@ object TextQueries {
     // materialize only in LSH buckets, eval grams broadcast, the
     // pack shuffle carries narrow rows, and the final meta join is
     // doc_id-keyed. Text never crosses an exchange anywhere.
-    "text_recipe_pipeline" -> ((s, dir) => recipeParts(s, dir).result),
+    "text_recipe_pipeline" -> ((s, dir) => recipePipeline(s, dir)),
 
     // Per-doc salient terms by tf·idf — the keyword/topic signal of a
     // corpus-analysis pass. Two-phase: document frequencies from one
@@ -1005,9 +1005,10 @@ object TextQueries {
       // [[graft.functions.expressions.WinnowFingerprints]]): the
       // r14 interpreted chain — even with the gram-hash array bound
       // to an attribute to avoid the O(tokens²) re-evaluation trap
-      // ProbeWinnow measured at 54.4 s — still evaluated md5 and the
-      // window-min lambdas per element as interpreted expressions
-      // (guide §4); the spec pins equality against that spelling.
+      // (54.4 s, SCALE.md "text_winnow: O(tokens²) lambda-capture
+      // fix") — still evaluated md5 and the window-min lambdas per
+      // element as interpreted expressions (guide §4); the spec pins
+      // equality against that spelling.
       val fp = Tables.documents(s, dir)
         .select(col("doc_id"),
           explode(graft.functions.expressions.WinnowFingerprints(
@@ -1162,16 +1163,7 @@ object TextQueries {
       .filter(stopwordRatio(col("text")) >= 0.05)
       .localCheckpoint()
 
-  /** The composed recipe's intermediate relations, named so the
-    * scaling stage probe ([[graft.tools.ProbeRecipe]]) can time each
-    * one — ONE spelling: the registered `text_recipe_pipeline` entry
-    * consumes [[RecipeParts.result]].
-    */
-  private[graft] case class RecipeParts(
-      gated: DataFrame, canon: DataFrame, manifest0: DataFrame,
-      contaminated: DataFrame, sampled: DataFrame, result: DataFrame)
-
-  private[graft] def recipeParts(s: SparkSession, dir: String): RecipeParts = {
+  private def recipePipeline(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val gated = gatedDocs(s, dir)
     val canon = canonicalOf(s, gated)
@@ -1203,10 +1195,9 @@ object TextQueries {
       .sortWithinPartitions("bucket", "doc_id")
       .mapPartitions(packScan _)
       .toDF("doc_id", "bucket", "seq_idx", "n_tokens_p")
-    val result = packed.join(sampled, "doc_id")
+    packed.join(sampled, "doc_id")
       .select(col("doc_id"), col("source"), col("split"),
         col("bucket"), col("seq_idx"), col("n_tokens"))
-    RecipeParts(gated, canon, manifest0, contaminated, sampled, result)
   }
 
   /** Near-dup cluster canonicals (minimum-id doc per connected

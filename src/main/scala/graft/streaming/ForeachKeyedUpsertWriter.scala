@@ -39,29 +39,15 @@ import org.apache.spark.sql.{ForeachWriter, Row}
   * epoch, the `ForeachWriter` contract.
   */
 final class ForeachKeyedUpsertWriter(
-    host: String, ports: Seq[Int], nKey: Int, maxRetries: Int)
+    host: String, port: Int, nKey: Int, maxRetries: Int = 5)
     extends ForeachWriter[Row] {
-
-  /** Single-store form — the reference contract (one client per sink
-    * instance, `sinks/ElasticsearchUpsertSink.scala:54-65`).
-    */
-  def this(host: String, port: Int, nKey: Int, maxRetries: Int = 5) =
-    this(host, Seq(port), nKey, maxRetries)
 
   @transient private var socket: Socket = _
   @transient private var in: BufferedReader = _
   @transient private var out: BufferedWriter = _
-  /** Store endpoint for THIS partition, fixed at `open()`: partitions
-    * map onto the `ports` ring by id, so a sharded harness (one stub
-    * per partition, VERDICT r13 item 6) keeps every key on one store
-    * — a streaming agg's Update output is hash-partitioned by group
-    * key, so key→partition→port is stable across micro-batches and
-    * per-key last-write-wins convergence is preserved per shard.
-    */
-  @transient private var myPort: Int = _
 
   private def connect(): Unit = {
-    socket = new Socket(host, myPort)
+    socket = new Socket(host, port)
     socket.setTcpNoDelay(true)
     socket.setSoTimeout(30000)
     in = new BufferedReader(new InputStreamReader(socket.getInputStream, UTF_8))
@@ -74,7 +60,6 @@ final class ForeachKeyedUpsertWriter(
   }
 
   override def open(partitionId: Long, epochId: Long): Boolean = {
-    myPort = ports((partitionId % ports.length).toInt)
     // connection establishment gets its own bounded retry — a store
     // briefly unreachable at epoch start should not fail the batch
     var attempt = 0

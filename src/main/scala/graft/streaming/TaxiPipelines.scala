@@ -79,9 +79,9 @@ object TaxiPipelines {
     * sides carry the watermark; the time-range condition is the
     * state-expiry contract — without it stream-stream join state
     * grows forever (the 100 TB failure mode). The ONE definition of
-    * this pipeline: the oracle query (`taxi_duration_stream`), the
-    * profiler attribution (ProfileStream), and the bench warm-up all
-    * build it here, so the warmed/profiled plan IS the shipped plan.
+    * this pipeline: the oracle query (`taxi_duration_stream`) and the
+    * bench warm-up both build it here, so the warmed plan IS the
+    * shipped plan.
     */
   def rideDurationJoin(stream: DataFrame, watermarkDelay: String = "60 seconds"): DataFrame = {
     val wm = stream.withWatermark("ts", watermarkDelay)

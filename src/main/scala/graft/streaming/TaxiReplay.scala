@@ -247,10 +247,10 @@ object TaxiReplay {
     * sleep-per-batch, so (a) feed-side processing time doesn't
     * accumulate as drift across a long replay, and (b) an EMPTY
     * serving interval (a lull in the data) holds real wall silence
-    * instead of being compressed away. Test code never calls this;
-    * the demo `main` and `tools.PacedCheck` do. Returns per-batch
-    * lateness (feed time − deadline, ms) so a caller can report
-    * serving-rate fidelity.
+    * instead of being compressed away. The demo `main` drives it and
+    * ReplayPacedSpec pins its wall pace. Returns per-batch lateness
+    * (feed time − deadline, ms) so a caller can report serving-rate
+    * fidelity.
     */
   def replayPaced(
       ms: MemoryStream[RideEvent],

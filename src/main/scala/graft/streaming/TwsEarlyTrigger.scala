@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** Per-pane trigger counters: total passenger sum and the sum since
   * the last early fire (the reference trigger's per-pane
@@ -12,16 +12,17 @@ final case class PaneCounters(sum: Long, sinceFire: Long)
 /** O11's early-firing count trigger on the NEW arbitrary-state API
   * (`transformWithState`) — the pane state machine of
   * [[TaxiPipelines.earlyTriggerFn]] re-expressed on the primitives
-  * Spark is consolidating stateful streaming on, and the hardest
-  * state shape in the TWS matrix: a keyed MAP of live panes
-  * (windowEnd → counters) point-updated per event, plus event-time
-  * timers driving the watermark-final fire-and-purge.
+  * Spark is consolidating stateful streaming on: a keyed map of live
+  * panes (windowEnd → counters) plus event-time timers driving the
+  * watermark-final fire-and-purge. Registered as `taxi_early_tws`.
   *
-  * Why MapState and not a ValueState[Map]: a pane update touches ONE
-  * pane of the (windowSize/slide) live ones; MapState's point-write
-  * updates that cell in place, where a ValueState would rewrite the
-  * whole map per event (the same argument as [[TypeCountProcessor]],
-  * here on the write-heavy trigger path).
+  * The pane map is ONE ValueState blob (kryo-encoded
+  * `Map[Long, PaneCounters]`), not per-pane MapState cells: the
+  * replay's batches touch most live panes per key, where one serde
+  * round-trip beats two point-ops per touched pane (4.7 vs 6.2 s
+  * best-of-2, SCALE.md "Pane-state layout A/B: MapState vs
+  * ValueState blob"). Per-pane MapState would win only when a batch
+  * touches a pane or two of many live ones.
   *
   * Semantics are IDENTICAL to the fMGWS form — same (tMs, rideId)
   * batch determinization, same FIRE (emit current sum, keep
@@ -30,146 +31,29 @@ final case class PaneCounters(sum: Long, sinceFire: Long)
   * sequence under ordered replay is pinned by the same recursive-CTE
   * oracle as `taxi_early_fires` (TaxiQueries.earlyFiresSql).
   *
-  * State per key is bounded by the live-pane count exactly as in the
-  * fMGWS form; exactly one live timer per key, armed at the LATEST
-  * live pane end — the data-batch purge emits ripening finals for
-  * keys still receiving data, so the timer exists only to flush the
-  * tail of a key that goes quiet (see purgeAndRearm for why
-  * earliest-pane arming was a measured per-batch tax).
-  */
-class EarlyTriggerProcessor(threshold: Int)
-    extends StatefulProcessor[Int, CellEvent, WindowCount] {
-  @transient private var panes: MapState[Long, PaneCounters] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    panes = getHandle.getMapState("panes", Encoders.scalaLong,
-      Encoders.product[PaneCounters], TTLConfig.NONE)
-
-  override def handleInputRows(
-      cell: Int,
-      rows: Iterator[CellEvent],
-      timers: TimerValues): Iterator[WindowCount] = {
-    val wm = timers.getCurrentWatermarkInMs()
-    val out = scala.collection.mutable.ListBuffer.empty[WindowCount]
-    // (tMs, rideId) batch determinization — earlyTriggerFn's contract:
-    // the group iterator's order is shuffle-dependent, event-time
-    // order makes the fire values a pure function of the event data.
-    // The fire recurrence is PER PANE over that order, so panes fold
-    // independently: bucket the batch's passenger deltas per pane
-    // in JVM memory first, then run each pane's recurrence against
-    // ONE state read + ONE state write — not three RocksDB point-ops
-    // per (event, pane), which at 3 live panes per event made the
-    // JNI round-trips the dominant cost of the whole entry.
-    val byPane = scala.collection.mutable.LinkedHashMap
-      .empty[Long, scala.collection.mutable.ArrayBuffer[Long]]
-    rows.toSeq.sortBy(e => (e.tMs, e.rideId)).foreach { e =>
-      TaxiPipelines.windowEndsFor(e.tMs).foreach { wEnd =>
-        if (wEnd > wm) // late panes are dropped (Flink 0.10 default)
-          byPane.getOrElseUpdate(
-            wEnd, scala.collection.mutable.ArrayBuffer.empty[Long]) += e.passengers
-      }
-    }
-    byPane.foreach { case (wEnd, deltas) =>
-      val cur = Option(panes.getValue(wEnd)).getOrElse(PaneCounters(0L, 0L))
-      var sum = cur.sum
-      var since = cur.sinceFire
-      deltas.foreach { p =>
-        sum += p
-        since += p
-        if (since >= threshold) { // FIRE: emit, keep contents
-          out += WindowCount(cell, wEnd, sum, isFinal = false)
-          since = 0L
-        }
-      }
-      panes.updateValue(wEnd, PaneCounters(sum, since))
-    }
-    // purge in data batches too, not just on timer expiry — the
-    // ripening finals of every key that keeps receiving data are
-    // emitted HERE, which is what lets the timer sit at the LATEST
-    // live pane end (see purgeAndRearm) instead of the earliest: an
-    // earliest-pane timer expires for every key on every batch
-    // (watermark passes the oldest pane each time), and the measured
-    // cost of that — ~13.7k expiries + deletes + re-registrations per
-    // batch, 1.5–3 s of timerProcessingTimeMs — exceeded the state
-    // updates themselves. The latest-pane timer never fires while
-    // data keeps arriving and catches exactly the one case the data
-    // path cannot: the tail flush of a key that stops receiving data.
-    out ++= purgeAndRearm(cell, wm)
-    out.iterator
-  }
-
-  override def handleExpiredTimer(
-      cell: Int,
-      timers: TimerValues,
-      expired: ExpiredTimerInfo): Iterator[WindowCount] =
-    purgeAndRearm(cell, timers.getCurrentWatermarkInMs(),
-      expiredTimer = Some(expired.getExpiryTimeInMs())).iterator
-
-  /** FIRE_AND_PURGE every pane the watermark has passed (final sum,
-    * pane removed) and re-arm the single per-key timer at the
-    * LATEST surviving pane end (tail-flush-only timers — see the
-    * class scaladoc).
-    *
-    * `expiredTimer`: the timer that FIRED this call, when invoked
-    * from handleExpiredTimer. Spark's handleTimerRows deletes the
-    * fired timer itself AFTER the callback returns, so the reconcile
-    * below must treat it as already-gone: deleting it here made
-    * Spark's own delete fail with a per-firing
-    * "WARN TimerStateImpl: Failed to delete timer" — ~72k such lines
-    * per bench run, synchronous log IO on the timed path, plus a
-    * redundant RocksDB delete per firing.
-    */
-  private def purgeAndRearm(
-      cell: Int, wm: Long, expiredTimer: Option[Long] = None): Seq[WindowCount] = {
-    // ONE key+value scan (iterator), not keys() + getValue per ripe
-    // pane — the purge touches every live pane each time it runs, so
-    // per-entry point reads double its RocksDB cost for nothing
-    val entries = panes.iterator().toSeq // materialize before mutating
-    val (ripe, live0) = entries.partition(_._1 <= wm)
-    val live = live0.map(_._1)
-    if (live.isEmpty && ripe.nonEmpty) panes.clear() // wholesale drop
-    else ripe.foreach { case (wEnd, _) => panes.removeKey(wEnd) }
-    val fires = ripe.sortBy(_._1).map { case (wEnd, c) =>
-      WindowCount(cell, wEnd, c.sum, isFinal = true)
-    }
-    // deferred-final contract: a pane past the watermark can never be
-    // updated again (the wEnd > wm admission check), so firing a
-    // ripe pane's final LATER than the first batch it ripens in emits
-    // the identical value — which is what makes the latest-pane timer
-    // sound for keys that stop receiving data (their remaining finals
-    // all fire together when the watermark passes the last pane).
-    armTo(live.maxOption, expiredTimer)
-    fires
-  }
-
-  /** Sync the single per-key timer to `next` (None = disarm). The
-    * `alreadyDeleted` timer (the one that just fired) is excluded
-    * from the armed set — Spark deletes it after the callback.
-    */
-  private def armTo(next: Option[Long], alreadyDeleted: Option[Long] = None): Unit = {
-    val armed = getHandle.listTimers().toSeq
-      .filterNot(t => alreadyDeleted.contains(t.asInstanceOf[Long]))
-    if (armed != next.toSeq) {
-      armed.foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
-      next.foreach(getHandle.registerTimer)
-    }
-  }
-}
-
-/** Measurement twin of [[EarlyTriggerProcessor]] with the pane map as
-  * ONE ValueState blob (kryo-encoded `Map[Long, PaneCounters]`)
-  * instead of per-pane MapState cells — NOT registered by any entry;
-  * exists so the MapState-vs-blob trade is a measured number
-  * (ProbeTws A/B, results in SCALE.md) rather than an argument.
-  * The blob form wins when a batch touches most live panes per key
-  * (one serde round-trip replaces 2×touched point-ops); MapState
-  * wins when updates are sparse relative to live panes — the 100 TB
-  * steady state, where a micro-batch touches the newest pane or two
-  * of many live. Semantics identical to the MapState form.
+  * Exactly one live timer per key, armed at the LATEST live pane end.
+  * Every data batch purges the panes the watermark has passed, so a
+  * key that keeps receiving data gets its ripening finals there and
+  * its timer never fires. An earliest-pane timer would instead expire
+  * for every key on every batch (the watermark passes the oldest pane
+  * each time): ~13.7k expiries + deletes + re-registrations per batch,
+  * 1.5–3 s of timerProcessingTimeMs, more than the state updates
+  * themselves. The latest-pane timer catches exactly the one case the
+  * data path cannot: the tail flush of a key that goes quiet. That is
+  * sound because a pane past the watermark can never be updated again
+  * (the wEnd > wm admission check), so firing a ripe pane's final in
+  * a later batch emits the identical value.
+  *
+  * Re-arming excludes the timer that just fired: Spark's
+  * handleTimerRows deletes it itself AFTER the callback returns, and
+  * deleting it here too made Spark's own delete fail with a
+  * per-firing "WARN TimerStateImpl: Failed to delete timer" (~72k
+  * lines per bench run, OPTIMIZATION_r16.md §2) plus a redundant
+  * RocksDB delete.
   */
 class EarlyTriggerBlobProcessor(threshold: Int)
     extends StatefulProcessor[Int, CellEvent, WindowCount] {
-  @transient private var panes: org.apache.spark.sql.streaming.ValueState[Map[Long, PaneCounters]] = _
+  @transient private var panes: ValueState[Map[Long, PaneCounters]] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
     panes = getHandle.getValueState("paneblob",
@@ -221,7 +105,7 @@ class EarlyTriggerBlobProcessor(threshold: Int)
     }
     if (live.isEmpty) panes.clear() else panes.update(live)
     // the fired timer is deleted by Spark AFTER this callback — treat
-    // it as already-gone (see EarlyTriggerProcessor.purgeAndRearm)
+    // it as already-gone (see the class scaladoc)
     val armed = getHandle.listTimers().toSeq
       .filterNot(t => t.asInstanceOf[Long] == expired.getExpiryTimeInMs())
     val next = if (live.isEmpty) None else Some(live.keys.max)

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{Session, SparkEntry}
 import org.apache.spark.sql.functions._
 
 /** Assert two registered queries produce identical results (sorted-row
@@ -12,13 +11,7 @@ object CompareQueries {
   def main(args: Array[String]): Unit = {
     val (a, b) = (args(0), args(1))
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     def digest(name: String): (Long, java.math.BigDecimal) = {
       val df = SparkEntry.queries(name)(spark, sfDir)
       val cols = df.columns.sorted.map(col)

@@ -1,13 +1,13 @@
 package graft.tools
 
-import graft.SparkEntry
+import graft.{Bench, Session, SparkEntry}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Measured physical cost of a named query — rows/bytes through the
   * shuffle system and bytes read from storage, straight from the task
   * metrics (not estimates): the evidence behind SCALE.md's "only X
-  * crosses the exchange" claims.
+  * crosses the exchange" claims. The query is materialized exactly
+  * as `Bench` times it, so every output column is computed.
   *
   *   sbt "runMain graft.tools.CostReport <name> [sfDir]"
   */
@@ -37,14 +37,7 @@ object CostReport {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(',').map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     val acc = new Acc
     spark.sparkContext.addSparkListener(acc)
     // warm the session so one-time init doesn't pollute the first row
@@ -52,7 +45,7 @@ object CostReport {
       .groupBy("l_returnflag").count().count()
     names.foreach { name =>
       acc.reset()
-      val n = SparkEntry.queries(name)(spark, sfDir).count()
+      val n = Bench.materialize(SparkEntry.queries(name)(spark, sfDir))
       // listener events are delivered async; drain before reading
       org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
       println(f"[cost] $name: out_rows=$n input=${acc.inputRecords}%,d rows" +

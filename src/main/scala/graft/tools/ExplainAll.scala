@@ -2,8 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{Session, SparkEntry}
 
 /** Dump the formatted physical plan of EVERY declared query to
   * `<outDir>/<name>.txt` plus one summary line per query on stdout:
@@ -25,14 +24,7 @@ object ExplainAll {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val only: Set[String] = args.drop(2).toSet
     Files.createDirectories(Paths.get(outDir))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.isEmpty || only.contains(n))
     names.foreach { name =>

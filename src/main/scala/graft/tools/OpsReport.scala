@@ -234,14 +234,7 @@ object OpsReport {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outPath = args.drop(1).headOption
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     val (stats, parts, md, fed) = collectFromEventsReplay(spark, sfDir, nChunks = 4)
     val title = s"events type-count replay over $sfDir ($fed events fed)"
     val report = render(title, stats, parts, md)

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.streaming.{CellEvent, KeyedUpsertSink, TaxiPipelines, TaxiReplay, TempDir}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.StateStoreBridge
 
@@ -29,18 +28,10 @@ object ProbeRecovery {
     val sfDir = if (args.nonEmpty) args(0) else "/tmp/graft_sf1"
     val stopAfterBatch = if (args.length > 1) args(1).toLong else 3L
     val nChunks = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     val ss = graft.queries.StreamingQueries.streamSession(spark)
     // transformWithState requires the RocksDB provider
-    ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    graft.queries.StreamingQueries.forceRocksdb(ss)
     import ss.implicits._
 
     val rides = TaxiReplay.ridesFromEvents(ss, sfDir).collect().toSeq

@@ -1,20 +1,13 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{Session, SparkEntry}
 
 /** The driver's t1 smoke, runnable locally: `SparkEntry.entry` on
   * sf0.001 must return rows.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     val n = SparkEntry.entry(spark).count()
     println(s"[smoke] entry rows = $n (queries registered: ${SparkEntry.queries.size}, " +
       s"oracles: ${SparkEntry.oracleSql.size})")

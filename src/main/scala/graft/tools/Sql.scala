@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.GraftExtensions
-import org.apache.spark.sql.SparkSession
+import graft.{GraftExtensions, Session}
 
 /** Ad-hoc SQL runner with the graft functions registered and the
   * driver tables mounted as temp views:
@@ -11,13 +10,7 @@ object Sql {
   def main(args: Array[String]): Unit = {
     val query = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     GraftExtensions.register(spark)
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings").foreach { t =>

@@ -1,9 +1,9 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{Bench, Session, SparkEntry}
 
-/** Time named queries (after a warmup run of a cheap query):
+/** Time named queries (after a warmup run of a cheap query), each run
+  * materialized exactly as `Bench` times it:
   *   sbt "runMain graft.tools.TimeQuery <name>[,<name>...] [sfDir] [reps]"
   */
 object TimeQuery {
@@ -11,28 +11,12 @@ object TimeQuery {
     val names = args(0).split(',').map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // shuffle-partition override for scaling probes (the house rule is
-    // partitions track data volume; the bench pins them to cpus)
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // ad-hoc conf A/Bs for probes: SPARK_GRAFT_EXTRA_CONF="k=v;k=v"
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';')
-      .map(_.trim).filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     spark.read.parquet(s"$sfDir/lineitem.parquet").groupBy("l_returnflag").count().count()
     names.foreach { name =>
       (1 to reps).foreach { r =>
         val t0 = System.nanoTime()
-        val n = SparkEntry.queries(name)(spark, sfDir).count()
+        val n = Bench.materialize(SparkEntry.queries(name)(spark, sfDir))
         println(f"[time] $name rep$r: ${(System.nanoTime() - t0) / 1e9}%.3f s ($n rows)")
       }
     }

@@ -16,7 +16,7 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * checkpoint directories — the replay harness's tmpfs checkpoints
   * (`TempDir`, /dev/shm).
   *
-  * Why it exists (measured, ProbeCkptIo on this machine): one small
+  * Why it exists (measured, OPTIMIZATION_r16.md §1): one small
   * create+write+rename through the default FileContext-based manager
   * costs ~37 ms on tmpfs (create ~9 ms, rename ~27 ms — the
   * no-native-hadoop builtin-java path), while the identical operation
@@ -32,13 +32,12 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * filesystem — crash-recovery semantics are unchanged (exercised by
   * StreamRecoverySpec/TwsRecoverySpec and the checkpoint-restart
   * entries). An `fsync` on tmpfs is a no-op; on a durable local disk
-  * deployment the `FORCE_SYNC` env knob below restores channel
-  * force-on-close. A NON-local checkpoint (hdfs://, s3a://) is
-  * refused at construction — production deployments with remote
-  * checkpoints keep the default manager (this class is wired
-  * per-session by the replay harness, see
-  * StreamingQueries.streamSession, env
-  * SPARK_GRAFT_CKPT_MANAGER=default to restore).
+  * deployment the Hadoop conf key `graft.ckpt.forceSync=true` (a
+  * session conf entry reaches it) restores channel force-on-close. A
+  * NON-local checkpoint (hdfs://, s3a://) is refused at construction
+  * — production deployments with remote checkpoints keep the default
+  * manager (this class is wired per-session by the replay harness,
+  * see StreamingQueries.streamSession).
   */
 class NioCheckpointFileManager(path: Path, conf: Configuration)
     extends CheckpointFileManager {

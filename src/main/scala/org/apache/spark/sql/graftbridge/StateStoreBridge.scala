@@ -36,8 +36,9 @@ object StateStoreBridge {
     *
     * Why this exists: `unloadAll()` is correct for the sequential
     * bench (each replay owns the JVM), but under a mixed concurrent
-    * workload (ProbeConcurrency, SCALE.md round 14) a short query's
-    * teardown would evict every OTHER live query's providers too;
+    * workload (Bench's concurrent mini-pass, SCALE.md round 14) a
+    * short query's teardown would evict every OTHER live query's
+    * providers too;
     * each victim then reloads its stores from the checkpoint on its
     * next micro-batch — correct (that reload path is exactly crash
     * recovery) but repeated-eviction slow. On a real cluster the

@@ -35,4 +35,20 @@ class BenchPassSpec extends AnyFunSuite {
     assert(best == Map("a" -> 1.5))
     assert(failed == Map("flaky" -> "java.lang.RuntimeException: x"))
   }
+
+  test("the concurrent mini-pass records a throwing entry as failed, never timed, and drops the speedup stamp") {
+    val entries: Seq[(String, String, (SparkSession, String) => DataFrame)] = Seq(
+      ("batch", "ok", (s, _) => s.range(10).toDF("x")),
+      ("streaming", "throws", (s, _) => s.range(3).select(raise_error(lit("injected concurrent")).as("e"))))
+    val (wall, conc) = Bench.concurrentPass(spark, "unused", entries)
+    assert(conc.timings.keySet == Set("ok"))
+    assert(conc.failures.keySet == Set("throws"))
+    assert(conc.failures("throws").contains("injected concurrent"))
+
+    val best = Map("ok" -> 1.0, "throws" -> 1.0)
+    assert(Bench.concurrentStamp(4, wall, conc, best).isEmpty)
+    val clean = Bench.Pass(conc.timings, Map.empty)
+    assert(Bench.concurrentStamp(4, 0.5, clean, best).exists(_.contains("\"concurrent_k4_speedup\":2.00")))
+    assert(Bench.concurrentStamp(4, 0.5, clean, Map.empty).isEmpty, "an entry without a serial best has no speedup")
+  }
 }

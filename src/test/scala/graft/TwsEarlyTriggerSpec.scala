@@ -1,7 +1,6 @@
 package graft
 
-import graft.streaming.{CellEvent, EarlyTriggerBlobProcessor, EarlyTriggerProcessor, TaxiPipelines, TempDir, WindowCount}
-import org.apache.spark.sql.streaming.StatefulProcessor
+import graft.streaming.{CellEvent, EarlyTriggerBlobProcessor, TaxiPipelines, TempDir}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.StateStoreBridge
@@ -22,12 +21,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class TwsEarlyTriggerSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  // both pane-state layouts carry the same machine: the blob form is
-  // the registered entry, the MapState form the probe-covered twin
-  for ((layout, mk) <- Seq[(String, Int => StatefulProcessor[Int, CellEvent, WindowCount])](
-      "blob" -> (t => new EarlyTriggerBlobProcessor(t)),
-      "mapstate" -> (t => new EarlyTriggerProcessor(t))))
-  test(s"[$layout] quiet key flushes finals via timer; active key via data-batch purge") {
+  test("[blob] quiet key flushes finals via timer; active key via data-batch purge") {
     val ss = spark.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", "2")
     ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
@@ -48,7 +42,7 @@ class TwsEarlyTriggerSpec extends AnyFunSuite {
       .withWatermark("ts", "0 seconds")
       .as[CellEvent]
       .groupByKey(_.cell)
-      .transformWithState(mk(5),
+      .transformWithState(new EarlyTriggerBlobProcessor(5),
         TimeMode.EventTime(), OutputMode.Append())
       .toDF()
       .writeStream.outputMode("append")
