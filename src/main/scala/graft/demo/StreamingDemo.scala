@@ -39,18 +39,10 @@ object StreamingDemo {
     if (mode == "file") {
       val (stream, chunkDir) = TaxiReplay.fileStream(spark,
         serving.map(e => e.copy(tMs = e.tMs - e.tMs % 1000)), nChunks = 5)
-      val ckpt = TempDir.create("graft-demo-")
-      val q = TaxiPipelines.totalArrivalCount(stream)
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt.toString)
-        .format("console").option("numRows", "10").option("truncate", "false")
-        .start()
-      try q.processAllAvailable()
-      finally {
-        q.stop()
-        TempDir.deleteRecursively(ckpt.toString)
-        TempDir.deleteRecursively(chunkDir)
-      }
+      Replay.run(TaxiPipelines.totalArrivalCount(stream)
+          .writeStream.outputMode("update")
+          .format("console").option("numRows", "10").option("truncate", "false"),
+        dirs = Seq(chunkDir))((q, _) => q.processAllAvailable())
       liveServer.stop(0)
       spark.stop()
       return
@@ -69,28 +61,18 @@ object StreamingDemo {
     }
     val outputMode = if (mode == "total") "update" else "append"
 
-    val ckpt = TempDir.create("graft-demo-")
-    val q = out.writeStream
-      .outputMode(outputMode)
-      .option("checkpointLocation", ckpt.toString)
-      .format("console").option("numRows", "10").option("truncate", "false")
-      .start()
-
-    try {
+    try Replay.run(out.writeStream
+        .outputMode(outputMode)
+        .format("console").option("numRows", "10").option("truncate", "false")) { (q, _) =>
       // Event time is compressed by `speed`: 10 event-hours/minute at 600×.
       TaxiReplay.replayPaced(ms, serving, speed)
       // End-of-stream flush: the reference emits a Long.MaxValue
       // watermark when the source ends so every open window fires; the
       // Structured Streaming equivalent is a far-future zero-passenger
       // sentinel advancing the watermark past all live panes.
-      val maxT = serving.map(_.tMs).maxOption.getOrElse(0L)
-      ms.addData(RideEvent(-1L, maxT + 7200000L, isStart = false, -74.0, 40.75, 0))
+      ms.addData(TaxiReplay.sentinelAfter(serving))
       q.processAllAvailable()
-    } finally {
-      q.stop()
-      TempDir.deleteRecursively(ckpt.toString)
-      liveServer.stop(0)
-    }
+    } finally liveServer.stop(0)
     spark.stop()
   }
 }

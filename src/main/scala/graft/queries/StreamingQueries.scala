@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import graft.streaming._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.StateStoreBridge
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The reference's streaming pipelines run *as streams* and are
   * verified against the same DuckDB oracles as their batch twins —
@@ -16,15 +16,20 @@ import org.apache.spark.sql.graftbridge.StateStoreBridge
   * guarantee (`README.md:64-65`).
   *
   * Ingress: every oracle-checked pipeline feeds from a FILE stream —
-  * gz JSONL chunk drops in serving order ([[EventsReplay]]/
-  * [[DocsReplay]]/[[TaxiReplay.jsonlFileStream]], the object-store
-  * listing path a 100 TB ingest actually runs), with the reference's
-  * bounded-Gaussian out-of-order delay (seed 7452) pre-applied,
-  * mirroring the reference's own driver-thread source
+  * gz JSONL chunk drops in serving order through [[Replay]] (the
+  * object-store listing path a 100 TB ingest actually runs), with the
+  * reference's bounded-Gaussian out-of-order delay (seed 7452)
+  * pre-applied, mirroring the reference's own driver-thread source
   * (`sources/TaxiRideSource.scala:97-168`). The reference's
   * seconds-resolution CSV wire form is pinned by
-  * `taxi_sliding_file_stream`; MemoryStream remains only as the
-  * low-latency unit-test harness and the documented docs-ingest dual.
+  * `taxi_sliding_file_stream`; MemoryStream remains only where the
+  * driver acts between micro-batches (`docs_ingest_stream`,
+  * `events_ttl_stream`).
+  *
+  * Each entry is its pipeline plus its sink: [[toMemory]] (a memory
+  * table), [[toUpsertSink]] (the keyed upsert log, read back
+  * compacted) or its own `foreachBatch`. [[Replay.run]] owns every
+  * query's checkpoint, start, stop and teardown.
   */
 object StreamingQueries {
 
@@ -126,6 +131,39 @@ object StreamingQueries {
       "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
   }
 
+  /** Memory-sink replay: drains `out` into a fresh memory table named
+    * `prefix` + a UUID and returns the table, which outlives the query
+    * and its checkpoint. `drain` defaults to draining the file listing.
+    */
+  private def toMemory(
+      ss: SparkSession,
+      prefix: String,
+      mode: String = "append",
+      dirs: Seq[String] = Nil,
+      trigger: Option[Trigger] = None,
+      drain: StreamingQuery => Unit = _.processAllAvailable())(out: => DataFrame): DataFrame = {
+    val name = prefix + UUID.randomUUID().toString.replace("-", "")
+    Replay.run({
+      val w = out.writeStream.outputMode(mode).format("memory").queryName(name)
+      trigger.fold(w)(w.trigger)
+    }, dirs)((q, _) => drain(q))
+    ss.table(name)
+  }
+
+  /** Update-mode replay into a keyed upsert sink (O14): the sink is the
+    * executor-side upsert log — no driver collect in the query path;
+    * `toDF` is the merge-on-read compaction. The compacted state is
+    * materialized (`localCheckpoint`) before the log dir is deleted, so
+    * the result no longer depends on it.
+    */
+  private def toUpsertSink(ss: SparkSession, sink: KeyedUpsertSink)(
+      out: => DataFrame): DataFrame =
+    Replay.run(out.writeStream.outputMode("update").foreachBatch(sink.upsert _),
+      sinks = Seq(sink)) { (q, _) =>
+      q.processAllAvailable()
+      sink.toDF(ss).localCheckpoint()
+    }
+
   /** Serving-ordered ride feed (± sentinel), with the zero-weight
     * flush contract asserted: the watermark advanced by the last data
     * chunk (which ends with the far-future sentinel) is applied by
@@ -156,44 +194,26 @@ object StreamingQueries {
     */
   private def writeRideChunks(
       ordered: Seq[RideEvent], nChunks: Int, sentinel: Boolean): String =
-    TaxiReplay.writeJsonlChunks(ordered, nChunks,
-      flushChunk = if (sentinel) Seq(ordered.last) else Nil)
+    Replay.write(ordered, nChunks, flush = if (sentinel) Seq(ordered.last) else Nil)
 
-  /** Ride chunk-fixture cache: the fixture WRITE (collect → serving
-    * order → gz chunks) is pure in (sfDir, maxDelayMs, sentinel,
-    * nChunks), and Verify/Bench drive MANY entries over identical
-    * feeds in one JVM — re-collecting and re-writing per entry (and
-    * per bench pass) is pure harness overhead, so identical feeds
-    * share one on-disk fixture. Each query opens its own reader
-    * (independent offset log) — read-only sharing. Cached dirs are
-    * cleaned by a JVM shutdown hook instead of per-entry `finally`
-    * (TempDir's tmpfs-hygiene contract, transferred to JVM scope).
-    * Size is bounded by key cardinality — ≤ #SF dirs × the handful of
-    * (delay, sentinel, chunks) configs the entries use — a few small
-    * gz fixtures, not per-entry growth.
+  /** A default ride feed as a stream. The fixture write (collect →
+    * serving order → gz chunks) is pure in (sfDir, maxDelayMs,
+    * sentinel, nChunks), and Verify/Bench drive many entries over
+    * identical feeds in one JVM, so identical feeds share one cached
+    * fixture ([[Replay.fixture]]); each query reads it through its
+    * own reader.
     */
-  private val rideChunkCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long, Boolean, Int), String]
-  // ONE shutdown hook for the whole cache, registered eagerly at
-  // class-init: per-entry hooks would accumulate per cache key, and
-  // addShutdownHook throws IllegalStateException on a cache miss that
-  // races an already-started shutdown. The hook iterates whatever the
-  // cache holds at exit.
-  Runtime.getRuntime.addShutdownHook(new Thread(() =>
-    rideChunkCache.values.foreach(TempDir.deleteRecursively)))
-  private def ridesChunkDir(
-      ss: SparkSession, sfDir: String,
-      maxDelayMs: Long, sentinel: Boolean, nChunks: Int): String =
-    rideChunkCache.getOrElseUpdate((sfDir, maxDelayMs, sentinel, nChunks),
-      writeRideChunks(
-        orderedRides(ss, sfDir, maxDelayMs, sentinel), nChunks, sentinel))
+  private def rides(
+      ss: SparkSession, sfDir: String, maxDelayMs: Long = MaxDelayMs,
+      sentinel: Boolean = false, nChunks: Int = 3): DataFrame =
+    Replay.read[RideEvent](ss,
+      Replay.fixtureDir(("rides", sfDir, maxDelayMs, sentinel, nChunks))(
+        writeRideChunks(orderedRides(ss, sfDir, maxDelayMs, sentinel), nChunks, sentinel)))
 
   /** Shared Append-mode replay scaffold: serving-ordered ride chunks
-    * ([[ridesChunkDir]] for default feeds, an entry-owned dir for
-    * mutated ones) → `readStream` → `build` pipeline → memory sink →
-    * flush-chunk watermark apply. Checkpoints are ephemeral tmpfs
-    * dirs deleted in the `finally` — the memory-sink table survives
-    * them.
+    * ([[rides]] for default feeds, an entry-owned dir for mutated
+    * ones) → `build` pipeline → memory sink, the flush chunk applying
+    * the final watermark.
     *
     * CONTRACT for `build` pipelines (asserted in [[orderedRides]]):
     * the flush chunk re-feeds the sentinel as a REAL input row, so
@@ -228,51 +248,32 @@ object StreamingQueries {
     // (Spark rejects HDFS-backed at query start) — per-entry opt-in,
     // scoped to this replay's isolated session
     if (rocksdb) forceRocksdb(ss)
-    // mutated feeds are entry-specific (not cacheable); default feeds
-    // share the JVM-wide fixture
-    val (df, ownedDir) = mutate match {
+    mutate match {
       case None =>
-        (TaxiReplay.openJsonlStream(ss,
-          ridesChunkDir(ss, sfDir, maxDelayMs, sentinel, nBatches)), None)
+        toMemory(ss, prefix)(build(rides(ss, sfDir, maxDelayMs, sentinel, nBatches)))
       case Some(f) =>
+        // mutated feeds are entry-specific, so not cached
         val dir = writeRideChunks(
           orderedRides(ss, sfDir, maxDelayMs, sentinel, f), nBatches, sentinel)
-        (TaxiReplay.openJsonlStream(ss, dir), Some(dir))
+        toMemory(ss, prefix, dirs = Seq(dir))(build(Replay.read[RideEvent](ss, dir)))
     }
-    val name = prefix + UUID.randomUUID().toString.replace("-", "")
-    val ckpt = TempDir.create("graft-ckpt-")
-    val q = build(df)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      TempDir.deleteRecursively(ckpt.toString)
-      ownedDir.foreach(TempDir.deleteRecursively)
-      StateStoreBridge.unloadQuery(q.runId)
-    }
-    ss.table(name)
   }
 
   /** Fixture `events` rows as wire-superset replay records, sorted to
     * serving order. The collect is replay HARNESS — it exists only to
-    * WRITE the gz JSONL chunk fixtures ([[EventsReplay.writeChunk]]);
-    * the pipelines consume a `readStream` over those files, never a
-    * driver-held collection (the at-scale ingress contract). Cached
-    * per (sfDir, types): the collect is pure in those inputs, and
-    * ~10 streaming entries (× 2 bench passes) would otherwise each
-    * re-launch the collect job for an identical row set. Bounded by
-    * key cardinality (≤ #SF dirs × 3 type filters); the largest
-    * fixture's rows are ~10 MB on-heap — harness scale, not data
-    * scale.
+    * WRITE the gz JSONL chunk fixtures; the pipelines consume a
+    * `readStream` over those files, never a driver-held collection
+    * (the at-scale ingress contract). Cached per (sfDir, types): the
+    * collect is pure in those inputs, and ~10 streaming entries (× 2
+    * bench passes) would otherwise each re-launch the collect job for
+    * an identical row set. Bounded by key cardinality (≤ #SF dirs × 3
+    * type filters); the largest fixture's rows are ~10 MB on-heap —
+    * harness scale, not data scale.
     */
   private val eventRowsCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Seq[String]), Seq[EventsReplay.Ev]]
-  private def eventRows(
-      ss: SparkSession, sfDir: String,
-      types: Seq[String] = Nil): Seq[EventsReplay.Ev] =
+    .empty[(String, Seq[String]), Seq[Ev]]
+  private[graft] def eventRows(
+      ss: SparkSession, sfDir: String, types: Seq[String] = Nil): Seq[Ev] =
     eventRowsCache.getOrElseUpdate((sfDir, types), {
       val base = graft.Tables.events(ss, sfDir)
       val filtered =
@@ -282,10 +283,17 @@ object StreamingQueries {
         .select(col("user_id"), col("event_id"), unix_millis(col("ts")).as("t_ms"),
           col("event_type"), col("value"))
         .collect()
-        .map(r => EventsReplay.Ev(r.getLong(0), r.getLong(1), r.getLong(2),
+        .map(r => Ev(r.getLong(0), r.getLong(1), r.getLong(2),
           r.getString(3), r.getDouble(4)))
         .toSeq.sortBy(e => (e.tMs, e.eventId))
     })
+
+  /** The whole `events` table as a stream of 3 chunks, with no
+    * sentinel; the fixture is cached like [[rides]].
+    */
+  private def eventsStream(ss: SparkSession, sfDir: String): DataFrame =
+    Replay.read[Ev](ss,
+      Replay.fixtureDir(("events", sfDir))(Replay.write(eventRows(ss, sfDir), 3)))
 
   /** Far-future zero-weight sentinel for the events file replays: it
     * advances the watermark past every real pane (userId = −1, value =
@@ -293,42 +301,24 @@ object StreamingQueries {
     * must exceed every finality bound the pipeline carries (session
     * gap, funnel window, join interval).
     */
-  private def evSentinel(evs: Seq[EventsReplay.Ev], gapMs: Long,
-      etype: String = "view"): EventsReplay.Ev = {
+  private def evSentinel(evs: Seq[Ev], gapMs: Long, etype: String = "view"): Ev = {
     val maxT = evs.map(_.tMs).maxOption.getOrElse(0L)
-    EventsReplay.Ev(-1L, -1L, maxT + gapMs, etype, 0.0)
+    Ev(-1L, -1L, maxT + gapMs, etype, 0.0)
   }
 
-  /** Append-mode file-replay scaffold for the events streams — the
-    * [[appendReplay]] anatomy with the ingress swapped to
-    * [[EventsReplay.fileStream]]: serving-ordered gz JSONL chunks, one
-    * per micro-batch, a trailing flush chunk re-feeding the sentinel
-    * (same zero-weight contract), memory sink, chunk/checkpoint
-    * cleanup. No driver-side feed loop: `processAllAvailable` drains
-    * the file listing.
+  /** Append-mode replay of an events feed ending in `sentinel`: the
+    * [[appendReplay]] anatomy over `evs :+ sentinel` in `nChunks`
+    * chunks, plus the flush chunk re-feeding the sentinel (same
+    * zero-weight contract).
     */
-  private def eventsFileReplay(
+  private def eventsReplay(
       ss: SparkSession,
-      evs: Seq[EventsReplay.Ev],
+      evs: Seq[Ev],
+      sentinel: Ev,
       prefix: String,
-      nChunks: Int,
-      flush: Seq[EventsReplay.Ev])(build: DataFrame => DataFrame): DataFrame = {
-    val (stream, chunkDir) = EventsReplay.fileStream(ss, evs, nChunks, flush)
-    val name = prefix + UUID.randomUUID().toString.replace("-", "")
-    val ckpt = TempDir.create("graft-ckpt-")
-    val q = build(stream)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      TempDir.deleteRecursively(ckpt.toString)
-      TempDir.deleteRecursively(chunkDir)
-      StateStoreBridge.unloadQuery(q.runId)
-    }
-    ss.table(name)
+      nChunks: Int = 3)(build: DataFrame => DataFrame): DataFrame = {
+    val dir = Replay.write(evs :+ sentinel, nChunks, flush = Seq(sentinel))
+    toMemory(ss, prefix, dirs = Seq(dir))(build(Replay.read[Ev](ss, dir)))
   }
 
   /** The per-batch manifest directories under a batchId-overwrite
@@ -363,41 +353,35 @@ object StreamingQueries {
     TaxiPipelines.cellEvents(df, "60 seconds").as[CellEvent]
   }
 
-  /** O9 streaming: Update mode + keyed upsert sink (O14). The sink is
-    * the executor-side upsert log — no driver collect in the query
-    * path; `toDF` is the merge-on-read compaction. The compacted state
-    * is materialized (`localCheckpoint`) before the ephemeral log and
-    * checkpoint dirs are deleted, so nothing leaks to tmpfs and the
-    * returned DataFrame no longer depends on the deleted files.
+  /** The transformWithState total-count sink rows in the
+    * `taxi_total_count` oracle's shape.
+    */
+  private def twsTotals(sinkRows: DataFrame): DataFrame =
+    sinkRows.select(col("cell"), col("lastTMs").as("last_t_ms"), col("cnt"),
+      graft.geo.NycGeo.cellCenterLon(col("cell")).as("center_lon"),
+      graft.geo.NycGeo.cellCenterLat(col("cell")).as("center_lat"))
+
+  /** O9 streaming: Update mode + keyed upsert sink (O14), compacting
+    * mid-replay.
     */
   def totalStream(spark: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(spark)
-    val df = TaxiReplay.openJsonlStream(ss,
-      ridesChunkDir(ss, sfDir, MaxDelayMs, sentinel = false, nChunks = 3))
     val sink = new KeyedUpsertSink(Seq("cell"))
-    val ckpt = TempDir.create("graft-ckpt-")
-    val q = TaxiPipelines.totalArrivalCount(df)
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt.toString)
-      // Compact mid-replay (after the 2nd micro-batch, batchId 1): the
-      // oracle then checks upsert → compact → upsert converges to the
-      // same state as the never-compacted log — the periodic MERGE
-      // running where it would run in production, not only in a unit
-      // spec. foreachBatch is synchronous per micro-batch, so no
-      // append races this call.
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        sink.upsert(batch, id)
-        if (id == 1L) sink.compact(ss)
-      }
-      .start()
-    try {
+    Replay.run(TaxiPipelines.totalArrivalCount(rides(ss, sfDir))
+        .writeStream.outputMode("update")
+        // Compact mid-replay (after the 2nd micro-batch, batchId 1): the
+        // oracle then checks upsert → compact → upsert converges to the
+        // same state as the never-compacted log — the periodic MERGE
+        // running where it would run in production, not only in a unit
+        // spec. foreachBatch is synchronous per micro-batch, so no
+        // append races this call.
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          sink.upsert(batch, id)
+          if (id == 1L) sink.compact(ss)
+        },
+      sinks = Seq(sink)) { (q, _) =>
       q.processAllAvailable()
       sink.toDF(ss).localCheckpoint()
-    } finally {
-      q.stop()
-      TempDir.deleteRecursively(ckpt.toString)
-      sink.close()
-      StateStoreBridge.unloadQuery(q.runId)
     }
   }
 
@@ -416,8 +400,6 @@ object StreamingQueries {
   def totalForeachStream(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.types._
     val ss = streamSession(spark)
-    val df = TaxiReplay.openJsonlStream(ss,
-      ridesChunkDir(ss, sfDir, MaxDelayMs, sentinel = false, nChunks = 3))
     // injection density: sparse enough that fault handling (reconnect
     // per drop) stays a small fraction of the entry — at sf0.1 the
     // pipeline emits ~32 k upserts (≈65 faults at 499); dense enough
@@ -425,13 +407,9 @@ object StreamingQueries {
     // (non-vacuity require below). firstFaultAt guarantees one fault
     // on sub-period runs (the sf0.001 plan sweep emits ~490 upserts).
     val server = new SocketUpsertServer(failEveryN = 499, firstFaultAt = 31).start()
-    val ckpt = TempDir.create("graft-ckpt-")
-    val q = TaxiPipelines.totalArrivalCount(df)
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt.toString)
-      .foreach(new ForeachKeyedUpsertWriter("127.0.0.1", server.port, nKey = 1))
-      .start()
-    try {
+    try Replay.run(TaxiPipelines.totalArrivalCount(rides(ss, sfDir))
+        .writeStream.outputMode("update")
+        .foreach(new ForeachKeyedUpsertWriter("127.0.0.1", server.port, nKey = 1))) { (q, _) =>
       q.processAllAvailable()
       // non-vacuity: the retry path must actually have been exercised
       require(server.faultCount > 0,
@@ -441,12 +419,7 @@ object StreamingQueries {
         StructField("cnt", LongType), StructField("center_lon", FloatType),
         StructField("center_lat", FloatType)))
       server.toDF(ss, schema).localCheckpoint()
-    } finally {
-      q.stop()
-      TempDir.deleteRecursively(ckpt.toString)
-      server.close()
-      StateStoreBridge.unloadQuery(q.runId)
-    }
+    } finally server.close()
   }
 
   /** O9 on the NEW arbitrary-state API: `transformWithState`
@@ -458,28 +431,9 @@ object StreamingQueries {
   def totalTwsStream(spark: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(spark)
     forceRocksdb(ss)
-    val df = TaxiReplay.openJsonlStream(ss,
-      ridesChunkDir(ss, sfDir, MaxDelayMs, sentinel = false, nChunks = 3))
-    val sink = new KeyedUpsertSink(Seq("cell"))
-    val ckpt = TempDir.create("graft-ckpt-")
-    val q = TwsTotalCount.totalCountTws(cellsOf(df)).toDF()
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch(sink.upsert _)
-      .start()
-    try {
-      q.processAllAvailable()
-      sink.toDF(ss)
-        .select(col("cell"), col("lastTMs").as("last_t_ms"), col("cnt"),
-          graft.geo.NycGeo.cellCenterLon(col("cell")).as("center_lon"),
-          graft.geo.NycGeo.cellCenterLat(col("cell")).as("center_lat"))
-        .localCheckpoint()
-    } finally {
-      q.stop()
-      TempDir.deleteRecursively(ckpt.toString)
-      sink.close()
-      StateStoreBridge.unloadQuery(q.runId)
-    }
+    twsTotals(toUpsertSink(ss, new KeyedUpsertSink(Seq("cell"))) {
+      TwsTotalCount.totalCountTws(cellsOf(rides(ss, sfDir))).toDF()
+    })
   }
 
   /** Per-key debounce run AS A STREAM on transformWithState with
@@ -487,7 +441,7 @@ object StreamingQueries {
     * order-dependent fold buffered against out-of-order arrival,
     * Append emission on watermark finality, converging to the batch
     * `events_debounce` oracle. Same gz JSONL file-stream ingress as
-    * `events_sessionize_stream` ([[eventsFileReplay]]); RocksDB
+    * `events_sessionize_stream` ([[eventsReplay]]); RocksDB
     * provider per-session (the API requires it); the far-future
     * sentinel (user −1, filtered) advances the watermark and its
     * flush chunk fires the tail timers.
@@ -497,11 +451,7 @@ object StreamingQueries {
     forceRocksdb(ss)
     import ss.implicits._
     val evs = eventRows(ss, sfDir)
-    val sentinel = evSentinel(evs, gapMs = 7200000L)
-    // flush chunk: apply the sentinel-advanced watermark and fire the
-    // tail timers (no-data micro-batches are disabled)
-    eventsFileReplay(ss, evs :+ sentinel, "deb_", nChunks = 3,
-      flush = Seq(sentinel)) { stream =>
+    eventsReplay(ss, evs, evSentinel(evs, gapMs = 7200000L), "deb_") { stream =>
       stream
         .withWatermark("ts", "60 seconds")
         .as[DebounceEvent]
@@ -522,34 +472,21 @@ object StreamingQueries {
     * remaining 40%. The converged sink must equal the full batch
     * oracle — proving handoff loses nothing at the seam. Nobody
     * starts a 100 TB streaming job from zero state; this is the
-    * adoption-critical facet of transformWithState.
+    * adoption-critical facet of transformWithState. The cutoff split
+    * and the live chunk write are pure in sfDir, so the (history rows,
+    * live chunk dir) pair is a cached [[Replay.fixture]].
     */
-  /** Bootstrap fixture cache (same rationale as [[rideChunkCache]]):
-    * the cutoff split and the live-subset chunk write are pure in
-    * sfDir, and the bench's two passes otherwise re-collect and
-    * re-write identical fixtures. Holds (hist rows, live chunk dir);
-    * dirs are cleaned by one JVM-exit hook.
-    */
-  private val bootstrapFixtureCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Seq[RideEvent], String)]
-  Runtime.getRuntime.addShutdownHook(new Thread(() =>
-    bootstrapFixtureCache.values.foreach { case (_, d) => TempDir.deleteRecursively(d) }))
-  private def bootstrapFixture(
-      ss: SparkSession, sfDir: String): (Seq[RideEvent], String) =
-    bootstrapFixtureCache.getOrElseUpdate(sfDir, {
-      val rides = TaxiReplay.ridesFromEvents(ss, sfDir).collect().toSeq
-      val ordered = TaxiReplay.servingOrder(rides, MaxDelayMs)
-      val times = ordered.map(_.tMs).sorted
-      val cutoff = times(math.min(times.size - 1, (times.size * 6) / 10))
-      val (hist, live) = ordered.partition(_.tMs < cutoff)
-      (hist, TaxiReplay.writeJsonlChunks(live, 3, Nil))
-    })
-
   def totalBootstrapStream(spark: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(spark)
     forceRocksdb(ss)
     import ss.implicits._
-    val (hist, liveChunkDir) = bootstrapFixture(ss, sfDir)
+    val (hist, liveDir) = Replay.fixture(("bootstrap", sfDir)) {
+      val ordered = orderedRides(ss, sfDir, MaxDelayMs, sentinel = false)
+      val times = ordered.map(_.tMs).sorted
+      val cutoff = times(math.min(times.size - 1, (times.size * 6) / 10))
+      val (hist, live) = ordered.partition(_.tMs < cutoff)
+      (hist, Replay.write(live, 3))
+    }
     // batch backfill: aggregate history into initial per-cell state
     val histCells = TaxiPipelines.cellProject(
       ss.createDataset(hist).toDF()
@@ -566,29 +503,13 @@ object StreamingQueries {
       .map { case (c, s, t) => (c, TotalTwsState(s, t)) }
       .localCheckpoint()
     val sink = new KeyedUpsertSink(Seq("cell"))
-    // the backfill writes its own snapshot before the stream takes over
-    sink.upsert(init.map { case (c, st) => TotalCount(c, st.lastT, st.sum) }
-      .toDF(), -1L)
-    val df = TaxiReplay.openJsonlStream(ss, liveChunkDir)
-    val ckpt = TempDir.create("graft-ckpt-")
-    val q = TwsTotalCount.totalCountBootstrap(cellsOf(df), init).toDF()
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch(sink.upsert _)
-      .start()
-    try {
-      q.processAllAvailable()
-      sink.toDF(ss)
-        .select(col("cell"), col("lastTMs").as("last_t_ms"), col("cnt"),
-          graft.geo.NycGeo.cellCenterLon(col("cell")).as("center_lon"),
-          graft.geo.NycGeo.cellCenterLat(col("cell")).as("center_lat"))
-        .localCheckpoint()
-    } finally {
-      q.stop()
-      TempDir.deleteRecursively(ckpt.toString)
-      sink.close()
-      StateStoreBridge.unloadQuery(q.runId)
-    }
+    twsTotals(toUpsertSink(ss, sink) {
+      // the backfill writes its own snapshot before the stream takes over
+      sink.upsert(init.map { case (c, st) => TotalCount(c, st.lastT, st.sum) }
+        .toDF(), -1L)
+      TwsTotalCount.totalCountBootstrap(
+        cellsOf(Replay.read[RideEvent](ss, liveDir)), init).toDF()
+    })
   }
 
   /** The data-quality EXPECTATIONS gate run AS A STREAM — the
@@ -606,34 +527,18 @@ object StreamingQueries {
     */
   def expectationsStream(spark: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(spark)
-    val evs = eventRows(ss, sfDir)
-    val (stream, chunkDir) = EventsReplay.fileStream(ss, evs, nChunks = 3)
-    val sink = new KeyedUpsertSink(Seq("rule"))
-    val ckpt = TempDir.create("graft-ckpt-")
-    val q = stream
-      .select(expr(
-        """stack(4,
-          |  'ts_not_null', CASE WHEN tMs IS NOT NULL THEN 0 ELSE 1 END,
-          |  'value_nonneg', CASE WHEN value >= 0 THEN 0 ELSE 1 END,
-          |  'value_le_50', CASE WHEN value <= 50 THEN 0 ELSE 1 END,
-          |  'etype_allowlist', CASE WHEN etype IN
-          |    ('view', 'click', 'purchase', 'signup') THEN 0 ELSE 1 END)
-          |  AS (rule, viol)""".stripMargin))
-      .groupBy(col("rule"))
-      .agg(sum(col("viol")).as("n_violations"))
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch(sink.upsert _)
-      .start()
-    try {
-      q.processAllAvailable()
-      sink.toDF(ss).localCheckpoint()
-    } finally {
-      q.stop()
-      TempDir.deleteRecursively(ckpt.toString)
-      TempDir.deleteRecursively(chunkDir)
-      sink.close()
-      StateStoreBridge.unloadQuery(q.runId)
+    toUpsertSink(ss, new KeyedUpsertSink(Seq("rule"))) {
+      eventsStream(ss, sfDir)
+        .select(expr(
+          """stack(4,
+            |  'ts_not_null', CASE WHEN tMs IS NOT NULL THEN 0 ELSE 1 END,
+            |  'value_nonneg', CASE WHEN value >= 0 THEN 0 ELSE 1 END,
+            |  'value_le_50', CASE WHEN value <= 50 THEN 0 ELSE 1 END,
+            |  'etype_allowlist', CASE WHEN etype IN
+            |    ('view', 'click', 'purchase', 'signup') THEN 0 ELSE 1 END)
+            |  AS (rule, viol)""".stripMargin))
+        .groupBy(col("rule"))
+        .agg(sum(col("viol")).as("n_violations"))
     }
   }
 
@@ -657,30 +562,19 @@ object StreamingQueries {
     */
   def stateReaderStream(spark: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(spark)
-    val evs = eventRows(ss, sfDir)
-    val (stream, chunkDir) = EventsReplay.fileStream(ss, evs, nChunks = 3)
-    val ckpt = TempDir.create("graft-ckpt-")
-    val q = stream
-      .groupBy(col("etype"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,6)")).as("value_sum"))
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt.toString)
-      .format("noop")
-      .start()
-    try {
+    Replay.run(eventsStream(ss, sfDir)
+        .groupBy(col("etype"))
+        .agg(count(lit(1)).as("n"),
+          sum(col("value").cast("decimal(18,6)")).as("value_sum"))
+        .writeStream.outputMode("update")
+        .format("noop")) { (q, ckpt) =>
       q.processAllAvailable()
       q.stop()
-      ss.read.format("statestore").load(ckpt.toString)
+      ss.read.format("statestore").load(ckpt)
         .select(col("key.etype").as("event_type"),
           col("value.count").as("n"),
           col("value.sum").cast("double").as("value_sum"))
         .localCheckpoint()
-    } finally {
-      if (q.isActive) q.stop()
-      TempDir.deleteRecursively(ckpt.toString)
-      TempDir.deleteRecursively(chunkDir)
-      StateStoreBridge.unloadQuery(q.runId)
     }
   }
 
@@ -696,31 +590,15 @@ object StreamingQueries {
     val ss = streamSession(spark)
     forceRocksdb(ss)
     import ss.implicits._
-    val evs = eventRows(ss, sfDir)
-    val (stream, chunkDir) = EventsReplay.fileStream(ss, evs, nChunks = 3)
-    val sink = new KeyedUpsertSink(Seq("user_id", "event_type"))
-    val ckpt = TempDir.create("graft-ckpt-")
-    val q = stream
-      .select(col("userId"), col("etype").as("eventType"))
-      .as[TypedEvent]
-      .groupByKey(_.userId)
-      .transformWithState(new TypeCountProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Update())
-      .toDF()
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch(sink.upsert _)
-      .start()
-    try {
-      q.processAllAvailable()
-      sink.toDF(ss).localCheckpoint()
-    } finally {
-      q.stop()
-      TempDir.deleteRecursively(ckpt.toString)
-      TempDir.deleteRecursively(chunkDir)
-      sink.close()
-      StateStoreBridge.unloadQuery(q.runId)
+    toUpsertSink(ss, new KeyedUpsertSink(Seq("user_id", "event_type"))) {
+      eventsStream(ss, sfDir)
+        .select(col("userId"), col("etype").as("eventType"))
+        .as[TypedEvent]
+        .groupByKey(_.userId)
+        .transformWithState(new TypeCountProcessor,
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          org.apache.spark.sql.streaming.OutputMode.Update())
+        .toDF()
     }
   }
 
@@ -736,23 +614,8 @@ object StreamingQueries {
     */
   def totalCompleteStream(spark: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(spark)
-    val df = TaxiReplay.openJsonlStream(ss,
-      ridesChunkDir(ss, sfDir, MaxDelayMs, sentinel = false, nChunks = 3))
-    val name = "complete_" + UUID.randomUUID().toString.replace("-", "")
-    val ckpt = TempDir.create("graft-ckpt-")
-    val q = TaxiPipelines.totalArrivalCount(df)
-      .writeStream.outputMode("complete")
-      .option("checkpointLocation", ckpt.toString)
-      .format("memory").queryName(name)
-      .start()
-    try {
-      q.processAllAvailable()
-      ss.table(name).localCheckpoint()
-    } finally {
-      q.stop()
-      TempDir.deleteRecursively(ckpt.toString)
-      StateStoreBridge.unloadQuery(q.runId)
-    }
+    toMemory(ss, "complete_", mode = "complete")(
+      TaxiPipelines.totalArrivalCount(rides(ss, sfDir))).localCheckpoint()
   }
 
   /** Mergeable-sketch state as a STREAMING aggregate: the explicit
@@ -769,27 +632,11 @@ object StreamingQueries {
   def hllRegisterStream(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.functions.Sketches
     val ss = streamSession(spark)
-    val evs = eventRows(ss, sfDir)
-    val (stream, chunkDir) = EventsReplay.fileStream(ss, evs, nChunks = 3)
-    val sink = new KeyedUpsertSink(Seq("bucket"))
-    val ckpt = TempDir.create("graft-ckpt-")
     val h = Sketches.sketchHash(col("eventId"))
-    val q = stream
-      .select(Sketches.hllBucket(h).as("bucket"), Sketches.hllRho(h).as("rho"))
-      .groupBy(col("bucket")).agg(max(col("rho")).as("r"))
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch(sink.upsert _)
-      .start()
-    try {
-      q.processAllAvailable()
-      sink.toDF(ss).localCheckpoint()
-    } finally {
-      q.stop()
-      TempDir.deleteRecursively(ckpt.toString)
-      TempDir.deleteRecursively(chunkDir)
-      sink.close()
-      StateStoreBridge.unloadQuery(q.runId)
+    toUpsertSink(ss, new KeyedUpsertSink(Seq("bucket"))) {
+      eventsStream(ss, sfDir)
+        .select(Sketches.hllBucket(h).as("bucket"), Sketches.hllRho(h).as("rho"))
+        .groupBy(col("bucket")).agg(max(col("rho")).as("r"))
     }
   }
 
@@ -804,31 +651,15 @@ object StreamingQueries {
     */
   def cmsStream(spark: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(spark)
-    val evs = eventRows(ss, sfDir)
-    val (stream, chunkDir) = EventsReplay.fileStream(ss, evs, nChunks = 3)
-    val sink = new KeyedUpsertSink(Seq("d", "b"))
-    val ckpt = TempDir.create("graft-ckpt-")
     val salts = (0 until EventQueries.CmsD).map(d => lit(d.toString))
-    val q = stream
-      .select(explode(array(salts: _*)).as("d"),
-        col("userId").cast("string").as("k"))
-      .select(col("d"),
-        (conv(substring(md5(concat(col("d"), lit(":"), col("k"))), 1, 8), 16, 10)
-          .cast("long") % EventQueries.CmsW).as("b"))
-      .groupBy(col("d"), col("b")).agg(count(lit(1)).as("c"))
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch(sink.upsert _)
-      .start()
-    try {
-      q.processAllAvailable()
-      sink.toDF(ss).localCheckpoint()
-    } finally {
-      q.stop()
-      TempDir.deleteRecursively(ckpt.toString)
-      TempDir.deleteRecursively(chunkDir)
-      sink.close()
-      StateStoreBridge.unloadQuery(q.runId)
+    toUpsertSink(ss, new KeyedUpsertSink(Seq("d", "b"))) {
+      eventsStream(ss, sfDir)
+        .select(explode(array(salts: _*)).as("d"),
+          col("userId").cast("string").as("k"))
+        .select(col("d"),
+          (conv(substring(md5(concat(col("d"), lit(":"), col("k"))), 1, 8), 16, 10)
+            .cast("long") % EventQueries.CmsW).as("b"))
+        .groupBy(col("d"), col("b")).agg(count(lit(1)).as("c"))
     }
   }
 
@@ -848,33 +679,17 @@ object StreamingQueries {
     */
   def bitmapStream(spark: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(spark)
-    val evs = eventRows(ss, sfDir)
-    val (stream, chunkDir) = EventsReplay.fileStream(ss, evs, nChunks = 3)
-    val sink = new KeyedUpsertSink(Seq("event_type", "block"))
-    val ckpt = TempDir.create("graft-ckpt-")
     val bits = EventQueries.BmBits
-    // high-value slice (the KMV/bitmap convention): per-type sets
-    // genuinely differ, so the converged bitmaps are type-dependent
-    val q = stream
-      .filter(col("value") >= EventQueries.KmvValueMin)
-      .select(col("etype").as("event_type"),
-        expr(s"userId div $bits").as("block"),
-        expr(s"shiftleft(CAST(1 AS BIGINT), CAST(userId % $bits AS INT))").as("m"))
-      .groupBy(col("event_type"), col("block"))
-      .agg(expr("bit_or(m)").as("bm"))
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch(sink.upsert _)
-      .start()
-    try {
-      q.processAllAvailable()
-      sink.toDF(ss).localCheckpoint()
-    } finally {
-      q.stop()
-      TempDir.deleteRecursively(ckpt.toString)
-      TempDir.deleteRecursively(chunkDir)
-      sink.close()
-      StateStoreBridge.unloadQuery(q.runId)
+    toUpsertSink(ss, new KeyedUpsertSink(Seq("event_type", "block"))) {
+      // high-value slice (the KMV/bitmap convention): per-type sets
+      // genuinely differ, so the converged bitmaps are type-dependent
+      eventsStream(ss, sfDir)
+        .filter(col("value") >= EventQueries.KmvValueMin)
+        .select(col("etype").as("event_type"),
+          expr(s"userId div $bits").as("block"),
+          expr(s"shiftleft(CAST(1 AS BIGINT), CAST(userId % $bits AS INT))").as("m"))
+        .groupBy(col("event_type"), col("block"))
+        .agg(expr("bit_or(m)").as("bm"))
     }
   }
 
@@ -909,16 +724,16 @@ object StreamingQueries {
 
   /** O10 through the reference's ACTUAL ingress form: a CSV file
     * stream in the reference wire format, one chunk file per
-    * micro-batch (`maxFilesPerTrigger = 1`) — the production-shaped
-    * path matching `sources/TaxiRideSource.scala:97-104`, where the
-    * source IS a gzipped CSV file read line-by-line. Same pipeline and
-    * result contract as `taxi_sliding_stream`, but the events travel
-    * through serialize → file drop → `readStream.text` → `parseCsv`
-    * instead of MemoryStream. The wire format is seconds-resolution,
-    * so event times are pre-truncated and the oracle recomputes the
-    * sliding counts over the truncated times
-    * (`TaxiQueries.slidingSecondsSql`). The flush chunk re-feeds the
-    * zero-weight sentinel (same contract as `appendReplay`).
+    * micro-batch — the production-shaped path matching
+    * `sources/TaxiRideSource.scala:97-104`, where the source IS a
+    * gzipped CSV file read line-by-line. Same pipeline and result
+    * contract as `taxi_sliding_stream`, but the events travel through
+    * serialize → file drop → `readStream.text` → `parseCsv` instead of
+    * MemoryStream. The wire format is seconds-resolution, so event
+    * times are pre-truncated and the oracle recomputes the sliding
+    * counts over the truncated times (`TaxiQueries.slidingSecondsSql`).
+    * The flush chunk re-feeds the zero-weight sentinel (same contract
+    * as `appendReplay`).
     */
   def slidingFileStream(spark: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(spark)
@@ -932,21 +747,8 @@ object StreamingQueries {
     val (stream, chunkDir) =
       TaxiReplay.fileStream(ss, ordered, nChunks = 3,
         flushChunk = Seq(ordered.last), gzip = true)
-    val name = "slidingfile_" + UUID.randomUUID().toString.replace("-", "")
-    val ckpt = TempDir.create("graft-ckpt-")
-    val q = TaxiPipelines.slidingArrivalCount(stream)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      TempDir.deleteRecursively(ckpt.toString)
-      TempDir.deleteRecursively(chunkDir)
-      StateStoreBridge.unloadQuery(q.runId)
-    }
-    ss.table(name).filter(col("cnt") > 0)
+    toMemory(ss, "slidingfile_", dirs = Seq(chunkDir))(
+      TaxiPipelines.slidingArrivalCount(stream)).filter(col("cnt") > 0)
   }
 
   /** The late re-deliveries injected by `taxi_late_drop`: the earliest
@@ -1125,15 +927,13 @@ object StreamingQueries {
     * (order-insensitive), emitted when the watermark passes
     * session-end + gap — so the flushed results equal the batch
     * gap-reconstruction oracle exactly. Feeds from gz JSONL chunk
-    * files ([[eventsFileReplay]]); a far-future sentinel (user −1,
+    * files ([[eventsReplay]]); a far-future sentinel (user −1,
     * filtered from the output) flushes the tail sessions.
     */
   def sessionizeStream(spark: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(spark)
     val evs = eventRows(ss, sfDir)
-    val sentinel = evSentinel(evs, gapMs = 7200000L)
-    eventsFileReplay(ss, evs :+ sentinel, "sess_", nChunks = 3,
-      flush = Seq(sentinel)) { stream =>
+    eventsReplay(ss, evs, evSentinel(evs, gapMs = 7200000L), "sess_") { stream =>
       stream
         .withWatermark("ts", "60 seconds")
         .groupBy(col("userId"), session_window(col("ts"), "30 minutes").as("sw"))
@@ -1158,9 +958,7 @@ object StreamingQueries {
   def sessionizeDynamicStream(spark: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(spark)
     val evs = eventRows(ss, sfDir)
-    val sentinel = evSentinel(evs, gapMs = 7200000L)
-    eventsFileReplay(ss, evs :+ sentinel, "sessd_", nChunks = 3,
-      flush = Seq(sentinel)) { stream =>
+    eventsReplay(ss, evs, evSentinel(evs, gapMs = 7200000L), "sessd_") { stream =>
       stream
         .withWatermark("ts", "60 seconds")
         .groupBy(col("userId"), session_window(col("ts"),
@@ -1180,7 +978,7 @@ object StreamingQueries {
     * single final row per user on the finality bound). Batch twin and
     * oracle: `events_funnel`. The replay feeds only the three funnel
     * event types (the filter the scan would push at scale), sorted,
-    * across 3 gz JSONL chunk files ([[eventsFileReplay]]); a
+    * across 3 gz JSONL chunk files ([[eventsReplay]]); a
     * far-future sentinel (user −1, filtered) advances the watermark
     * past every finality bound so all users flush.
     */
@@ -1188,15 +986,31 @@ object StreamingQueries {
     val ss = streamSession(spark)
     import ss.implicits._
     val evs = eventRows(ss, sfDir, types = Seq("view", "click", "purchase"))
-    val sentinel = evSentinel(evs, gapMs = 2 * Funnel.WindowMs + 3600000L)
-    eventsFileReplay(ss, evs :+ sentinel, "funnel_", nChunks = 3,
-      flush = Seq(sentinel)) { stream =>
+    eventsReplay(ss, evs, evSentinel(evs, gapMs = 2 * Funnel.WindowMs + 3600000L),
+      "funnel_") { stream =>
       Funnel.funnelResults(
         stream
           .withWatermark("ts", "60 seconds")
           .as[FunnelEvent])
         .toDF()
     }.filter(col("user_id") >= 0)
+  }
+
+  /** The click→purchase interval join shared by the two outer-join
+    * entries: both sides carry the watermark, a purchase matches a
+    * click of the same user within the following hour.
+    */
+  private def attribution(stream: DataFrame, joinType: String): DataFrame = {
+    val wm = stream.withWatermark("ts", "60 seconds")
+    val clicks = wm.filter(col("etype") === "click")
+      .select(col("userId").as("c_user"), col("ts").as("c_ts"))
+    val purchases = wm.filter(col("etype") === "purchase")
+      .select(col("userId").as("p_user"), col("ts").as("p_ts"))
+    clicks.join(purchases,
+      col("c_user") === col("p_user") &&
+        col("p_ts") > col("c_ts") &&
+        col("p_ts") <= col("c_ts") + expr("INTERVAL 1 HOUR"),
+      joinType)
   }
 
   /** Stream-stream LEFT OUTER interval join — the emission semantics
@@ -1216,18 +1030,8 @@ object StreamingQueries {
     val evs = eventRows(ss, sfDir, types = Seq("click", "purchase"))
     val sentinel = evSentinel(evs, gapMs = 3600000L + 7200000L, etype = "click")
     // 2 data chunks (same cost rationale as durationStream) + flush
-    eventsFileReplay(ss, evs :+ sentinel, "attr_", nChunks = 2,
-      flush = Seq(sentinel)) { stream =>
-      val wm = stream.withWatermark("ts", "60 seconds")
-      val clicks = wm.filter(col("etype") === "click")
-        .select(col("userId").as("c_user"), col("ts").as("c_ts"))
-      val purchases = wm.filter(col("etype") === "purchase")
-        .select(col("userId").as("p_user"), col("ts").as("p_ts"))
-      clicks.join(purchases,
-          col("c_user") === col("p_user") &&
-            col("p_ts") > col("c_ts") &&
-            col("p_ts") <= col("c_ts") + expr("INTERVAL 1 HOUR"),
-          "left_outer")
+    eventsReplay(ss, evs, sentinel, "attr_", nChunks = 2) { stream =>
+      attribution(stream, "left_outer")
         .select(col("c_user").as("user_id"),
           unix_millis(col("c_ts")).as("click_ms"),
           unix_millis(col("p_ts")).as("purchase_ms"))
@@ -1247,18 +1051,8 @@ object StreamingQueries {
     val ss = streamSession(spark)
     val evs = eventRows(ss, sfDir, types = Seq("click", "purchase"))
     val sentinel = evSentinel(evs, gapMs = 3600000L + 7200000L, etype = "click")
-    eventsFileReplay(ss, evs :+ sentinel, "attrf_", nChunks = 2,
-      flush = Seq(sentinel)) { stream =>
-      val wm = stream.withWatermark("ts", "60 seconds")
-      val clicks = wm.filter(col("etype") === "click")
-        .select(col("userId").as("c_user"), col("ts").as("c_ts"))
-      val purchases = wm.filter(col("etype") === "purchase")
-        .select(col("userId").as("p_user"), col("ts").as("p_ts"))
-      clicks.join(purchases,
-          col("c_user") === col("p_user") &&
-            col("p_ts") > col("c_ts") &&
-            col("p_ts") <= col("c_ts") + expr("INTERVAL 1 HOUR"),
-          "full_outer")
+    eventsReplay(ss, evs, sentinel, "attrf_", nChunks = 2) { stream =>
+      attribution(stream, "full_outer")
         .select(coalesce(col("c_user"), col("p_user")).as("user_id"),
           unix_millis(col("c_ts")).as("click_ms"),
           unix_millis(col("p_ts")).as("purchase_ms"))
@@ -1278,8 +1072,8 @@ object StreamingQueries {
     * its batch stages expect. Event time is docId-derived (1 s spacing)
     * so replay is deterministic; text rides the stream but the emitted
     * manifest is narrow.
-    */
-  /** The ingest pipeline itself — shared by the MemoryStream and
+    *
+    * The ingest pipeline itself is shared by the MemoryStream and
     * file-stream front doors: watermark-bounded exactly-once
     * restoration on the stable doc key, the quality gate, and the
     * narrow per-doc manifest projection. Takes ANY streaming frame
@@ -1294,17 +1088,16 @@ object StreamingQueries {
         TextFunctions.tokenCount(col("text")).as("n_tokens"))
   }
 
-  /** Fixture docs as replay events: docId-derived 1 s event-time
-    * spacing (deterministic), delivered TWICE each (at-least-once
-    * retry semantics). The collect is replay HARNESS, like the taxi
-    * MemoryStream feed — but unlike the taxi rows it carries the
-    * corpus' widest column, so driver memory bounds the usable SF for
-    * the MemoryStream variant; the file-stream variant only holds the
-    * fixture long enough to write the chunk files.
+  /** `docs` (doc_id, text, source) as replay events: docId-derived 1 s
+    * event-time spacing (deterministic), delivered TWICE each
+    * (at-least-once retry semantics). The collect is replay HARNESS,
+    * like the taxi MemoryStream feed — but unlike the taxi rows it
+    * carries the corpus' widest column, so driver memory bounds the
+    * usable SF for the MemoryStream variant; the file-stream variants
+    * only hold the rows long enough to write the chunk files.
     */
-  private def docEvents(ss: SparkSession, sfDir: String): Seq[DocEvent] =
-    graft.Tables.documents(ss, sfDir)
-      .select(col("doc_id"), col("text"), col("source"))
+  private def docEvents(docs: DataFrame): Seq[DocEvent] =
+    docs.select(col("doc_id"), col("text"), col("source"))
       .collect().map(r => DocEvent(r.getLong(0), 1_700_000_000_000L + r.getLong(0) * 1000L,
         r.getString(1), r.getString(2)))
       .toSeq.sortBy(_.docId)
@@ -1313,90 +1106,53 @@ object StreamingQueries {
   def docsIngestStream(spark: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(spark)
     import ss.implicits._
-    val fed = docEvents(ss, sfDir)
+    val fed = docEvents(graft.Tables.documents(ss, sfDir))
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
     val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[DocEvent]
-    val name = "ingest_" + UUID.randomUUID().toString.replace("-", "")
-    val ckpt = TempDir.create("graft-ckpt-")
-    val q = ingestManifest(ms.toDF().withColumn("ts", timestamp_millis(col("tMs"))))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .format("memory").queryName(name)
-      .start()
-    try {
-      val size = math.max(1, math.ceil(fed.size.toDouble / 4).toInt)
-      fed.grouped(size).foreach { b => ms.addData(b); q.processAllAvailable() }
-    } finally {
-      q.stop()
-      TempDir.deleteRecursively(ckpt.toString)
-      StateStoreBridge.unloadQuery(q.runId)
-    }
-    ss.table(name)
+    toMemory(ss, "ingest_",
+      drain = q => Replay.chunks(fed, 4).foreach { b => ms.addData(b); q.processAllAvailable() })(
+      ingestManifest(ms.toDF().withColumn("ts", timestamp_millis(col("tMs")))))
   }
+
+  /** The doubled documents corpus as a stream of 3 chunks; the
+    * duplicate deliveries straddle chunk boundaries. The fixture is
+    * cached like [[rides]].
+    */
+  private def docsStream(ss: SparkSession, sfDir: String): DataFrame =
+    Replay.read[DocEvent](ss, Replay.fixtureDir(("docs", sfDir))(
+      Replay.write(docEvents(graft.Tables.documents(ss, sfDir)), 3)))
 
   /** The file-source twin of [[docsIngestStream]] — the corpus front
     * door in its production ingress form: gzipped JSONL chunk files
     * consumed by `readStream` with one chunk per micro-batch
-    * ([[DocsReplay.fileStream]]), mirroring what
-    * `taxi_sliding_file_stream` does for the taxi wire format. Same
-    * pipeline, same batch-gate oracle; the duplicate deliveries
-    * straddle chunk boundaries, so the dedup state is exercised
-    * ACROSS micro-batches, not just within one. No flush sentinel:
-    * the pipeline has no aggregation, rows emit on first arrival.
+    * ([[docsStream]]), mirroring what `taxi_sliding_file_stream` does
+    * for the taxi wire format. Same pipeline, same batch-gate oracle;
+    * the duplicate deliveries straddle chunk boundaries, so the dedup
+    * state is exercised ACROSS micro-batches, not just within one. No
+    * flush sentinel: the pipeline has no aggregation, rows emit on
+    * first arrival.
     */
   def docsIngestFileStream(spark: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(spark)
-    val fed = docEvents(ss, sfDir)
-    val (stream, chunkDir) = DocsReplay.fileStream(ss, fed, nChunks = 3)
-    val name = "ingestfile_" + UUID.randomUUID().toString.replace("-", "")
-    val ckpt = TempDir.create("graft-ckpt-")
-    val q = ingestManifest(stream)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      TempDir.deleteRecursively(ckpt.toString)
-      TempDir.deleteRecursively(chunkDir)
-      StateStoreBridge.unloadQuery(q.runId)
-    }
-    ss.table(name)
+    toMemory(ss, "ingestfile_")(ingestManifest(docsStream(ss, sfDir)))
   }
 
   /** [[docsIngestFileStream]] under `Trigger.AvailableNow` — the
     * production BACKFILL/catch-up trigger: consume everything already
-    * in the directory in rate-limited micro-batches (the source's
-    * maxFilesPerTrigger bound still applies), then the query STOPS
-    * ITSELF — no driver-side processAllAvailable loop. This is the
-    * shape a scheduled nightly ingest runs: same checkpoint contract
-    * as the continuous form, so the two can alternate on one
-    * checkpoint dir at deployment. Same gate, same batch oracle.
+    * in the directory in rate-limited micro-batches (still one chunk
+    * file per micro-batch), then the query STOPS ITSELF — no
+    * driver-side processAllAvailable loop. This is the shape a
+    * scheduled nightly ingest runs: same checkpoint contract as the
+    * continuous form, so the two can alternate on one checkpoint dir
+    * at deployment. Same gate, same batch oracle.
     */
   def docsIngestAvailableNow(spark: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(spark)
-    val fed = docEvents(ss, sfDir)
-    val (stream, chunkDir) = DocsReplay.fileStream(ss, fed, nChunks = 3)
-    val name = "ingestan_" + UUID.randomUUID().toString.replace("-", "")
-    val ckpt = TempDir.create("graft-ckpt-")
-    val q = ingestManifest(stream)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .format("memory").queryName(name)
-      .start()
-    try {
+    toMemory(ss, "ingestan_", trigger = Some(Trigger.AvailableNow()),
       // AvailableNow terminates on its own once the backlog drains
-      require(q.awaitTermination(120000),
-        "AvailableNow ingest did not drain within 120 s")
-    } finally {
-      if (q.isActive) q.stop()
-      TempDir.deleteRecursively(ckpt.toString)
-      TempDir.deleteRecursively(chunkDir)
-      StateStoreBridge.unloadQuery(q.runId)
-    }
-    ss.table(name)
+      drain = q => require(q.awaitTermination(120000),
+        "AvailableNow ingest did not drain within 120 s"))(
+      ingestManifest(docsStream(ss, sfDir)))
   }
 
   /** Streaming INCREMENTAL curation — the day-2 steady state of a
@@ -1427,61 +1183,47 @@ object StreamingQueries {
       .select(col("doc_id").as("i_id"), DedupQueries.trigrams("text").as("i_tg"))
       .withColumn("i_sz", size(col("i_tg")))
       .localCheckpoint()
-    val delta = docs.filter(col("h") >= 90)
-      .select(col("doc_id"), col("text"), col("source"))
-      .collect().map(r => DocEvent(r.getLong(0), 1_700_000_000_000L + r.getLong(0) * 1000L,
-        r.getString(1), r.getString(2)))
-      .toSeq.sortBy(_.docId)
-      .flatMap(d => Seq(d, d)) // at-least-once, straddling chunk bounds
-    val (stream, chunkDir) = DocsReplay.fileStream(ss, delta, nChunks = 3)
-    val outDir = TempDir.create("graft-manifest-")
-    val ckpt = TempDir.create("graft-ckpt-")
-    val q = stream
-      .withWatermark("ts", "60 seconds")
-      .dropDuplicatesWithinWatermark("docId")
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.select(col("docId").as("doc_id"), col("text"))
-        val bNew = DedupQueries.minhashBands(b)
-          .select(col("band"), col("bhash"), col("doc_id").as("new_id"))
-        val cand = bNew.join(idxBands, Seq("band", "bhash"))
-          .select(col("new_id"), col("idx_id")).distinct()
-        val tgNew = b
-          .select(col("doc_id").as("n_id"), DedupQueries.trigrams("text").as("n_tg"))
-          .withColumn("n_sz", size(col("n_tg")))
-        val dupIds = cand
-          .join(tgNew, col("new_id") === col("n_id"))
-          .join(idxTg, col("idx_id") === col("i_id"))
-          .withColumn("inter", graft.functions.expressions.SortedIntersectSize(
-            col("n_tg"), col("i_tg")))
-          .filter(col("inter").cast("double") /
-            (col("n_sz") + col("i_sz") - col("inter")) >= 0.6)
-          .select(col("new_id").as("doc_id")).distinct()
-        // batchId-deterministic overwrite target (not a bare append):
-        // a foreachBatch retry re-lands on identical bytes instead of
-        // duplicating manifest rows — the manifest-append idempotence
-        // contract (see embedding_ingest_stream)
-        b.join(dupIds, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), lit("delta").as("origin"),
-            TextFunctions.tokenCount(col("text")).as("n_tokens"))
-          .write.mode("overwrite").parquet(s"$outDir/b$batchId")
-        ()
-      }
-      .start()
-    try {
+    // at-least-once, straddling chunk bounds
+    val deltaDir = Replay.write(docEvents(docs.filter(col("h") >= 90)), 3)
+    val outDir = TempDir.create("graft-manifest-").toString
+    Replay.run(Replay.read[DocEvent](ss, deltaDir)
+        .withWatermark("ts", "60 seconds")
+        .dropDuplicatesWithinWatermark("docId")
+        .writeStream.outputMode("append")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          val b = batch.select(col("docId").as("doc_id"), col("text"))
+          val bNew = DedupQueries.minhashBands(b)
+            .select(col("band"), col("bhash"), col("doc_id").as("new_id"))
+          val cand = bNew.join(idxBands, Seq("band", "bhash"))
+            .select(col("new_id"), col("idx_id")).distinct()
+          val tgNew = b
+            .select(col("doc_id").as("n_id"), DedupQueries.trigrams("text").as("n_tg"))
+            .withColumn("n_sz", size(col("n_tg")))
+          val dupIds = cand
+            .join(tgNew, col("new_id") === col("n_id"))
+            .join(idxTg, col("idx_id") === col("i_id"))
+            .withColumn("inter", graft.functions.expressions.SortedIntersectSize(
+              col("n_tg"), col("i_tg")))
+            .filter(col("inter").cast("double") /
+              (col("n_sz") + col("i_sz") - col("inter")) >= 0.6)
+            .select(col("new_id").as("doc_id")).distinct()
+          // batchId-deterministic overwrite target (not a bare append):
+          // a foreachBatch retry re-lands on identical bytes instead of
+          // duplicating manifest rows — the manifest-append idempotence
+          // contract (see embedding_ingest_stream)
+          b.join(dupIds, Seq("doc_id"), "left_anti")
+            .select(col("doc_id"), lit("delta").as("origin"),
+              TextFunctions.tokenCount(col("text")).as("n_tokens"))
+            .write.mode("overwrite").parquet(s"$outDir/b$batchId")
+          ()
+        },
+      dirs = Seq(deltaDir, outDir)) { (q, _) =>
       q.processAllAvailable()
       val idxManifest = docs.filter(col("h") < 90)
         .select(col("doc_id"), lit("index").as("origin"),
           TextFunctions.tokenCount(col("text")).as("n_tokens"))
-      idxManifest.union(readBatchesOrEmpty(ss, outDir.toString, idxManifest))
+      idxManifest.union(readBatchesOrEmpty(ss, outDir, idxManifest))
         .localCheckpoint()
-    } finally {
-      q.stop()
-      TempDir.deleteRecursively(ckpt.toString)
-      TempDir.deleteRecursively(chunkDir)
-      TempDir.deleteRecursively(outDir.toString)
-      StateStoreBridge.unloadQuery(q.runId)
     }
   }
 
@@ -1495,33 +1237,16 @@ object StreamingQueries {
     * arithmetic and the final rank converges to the batch oracle.
     */
   def trendingStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val ss = streamSession(spark)
-    val evs = eventRows(ss, sfDir)
-    val (stream, chunkDir) = EventsReplay.fileStream(ss, evs, nChunks = 3)
-    val sink = new KeyedUpsertSink(Seq("w_start_ms", "event_type"))
-    val ckpt = TempDir.create("graft-ckpt-")
-    val counts = stream
-      .withWatermark("ts", "60 seconds")
-      .groupBy(window(col("ts"), "6 hours").as("w"), col("etype"))
-      .count()
-      .select(unix_millis(col("w.start")).as("w_start_ms"),
-        col("etype").as("event_type"), col("count").as("cnt"))
-    val q = counts.writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch(sink.upsert _)
-      .start()
-    val table =
-      try {
-        q.processAllAvailable()
-        sink.toDF(ss).localCheckpoint()
-      } finally {
-        q.stop()
-        TempDir.deleteRecursively(ckpt.toString)
-        TempDir.deleteRecursively(chunkDir)
-        sink.close()
-        StateStoreBridge.unloadQuery(q.runId)
-      }
     import org.apache.spark.sql.expressions.Window
+    val ss = streamSession(spark)
+    val table = toUpsertSink(ss, new KeyedUpsertSink(Seq("w_start_ms", "event_type"))) {
+      eventsStream(ss, sfDir)
+        .withWatermark("ts", "60 seconds")
+        .groupBy(window(col("ts"), "6 hours").as("w"), col("etype"))
+        .count()
+        .select(unix_millis(col("w.start")).as("w_start_ms"),
+          col("etype").as("event_type"), col("count").as("cnt"))
+    }
     val w = Window.partitionBy(col("w_start_ms"))
       .orderBy(col("cnt").desc, col("event_type").asc)
     table.withColumn("rnk", row_number().over(w))
@@ -1558,13 +1283,9 @@ object StreamingQueries {
     // 6-hour pane + the 60 s watermark delay or the FINAL pane never
     // finalizes (caught by the oracle: 595 vs 600 groups at 2 h).
     val sent = evSentinel(evs, gapMs = 43200000L)
-    val (sA, dirA) = EventsReplay.fileStream(ss, feedA :+ sent, nChunks = 3,
-      flushChunk = Seq(sent))
-    val (sB, dirB) = EventsReplay.fileStream(ss, feedB :+ sent, nChunks = 3,
-      flushChunk = Seq(sent))
-    def watermarked(df: DataFrame) = df.withWatermark("ts", "60 seconds")
-    val name = "union_" + UUID.randomUUID().toString.replace("-", "")
-    val ckpt = TempDir.create("graft-ckpt-")
+    val dirA = Replay.write(feedA :+ sent, 3, flush = Seq(sent))
+    val dirB = Replay.write(feedB :+ sent, 3, flush = Seq(sent))
+    def watermarked(dir: String) = Replay.read[Ev](ss, dir).withWatermark("ts", "60 seconds")
     // NO userId sentinel filter here, deliberately: a non-event-time
     // predicate gets PUSHED BELOW the EventTimeWatermark operator by
     // Catalyst, so a pre-agg filter would drop the sentinels before
@@ -1574,27 +1295,15 @@ object StreamingQueries {
     // sentinel pane sits a full window+delay past the last real
     // event, so the watermark never passes its end and it is never
     // emitted.
-    val q = watermarked(sA).union(watermarked(sB))
-      .groupBy(window(col("ts"), "6 hours").as("w"), col("etype"))
-      .agg(count(lit(1)).as("cnt"),
-        sum(col("value").cast("decimal(18,6)")).as("v_sum"))
-      .select(unix_millis(col("w.start")).as("w_start_ms"),
-        col("etype").as("event_type"), col("cnt"),
-        col("v_sum").cast("double").as("v_sum"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .format("memory").queryName(name)
-      .start()
-    try {
-      q.processAllAvailable()
-      ss.table(name).localCheckpoint()
-    } finally {
-      q.stop()
-      TempDir.deleteRecursively(ckpt.toString)
-      TempDir.deleteRecursively(dirA)
-      TempDir.deleteRecursively(dirB)
-      StateStoreBridge.unloadQuery(q.runId)
-    }
+    toMemory(ss, "union_", dirs = Seq(dirA, dirB)) {
+      watermarked(dirA).union(watermarked(dirB))
+        .groupBy(window(col("ts"), "6 hours").as("w"), col("etype"))
+        .agg(count(lit(1)).as("cnt"),
+          sum(col("value").cast("decimal(18,6)")).as("v_sum"))
+        .select(unix_millis(col("w.start")).as("w_start_ms"),
+          col("etype").as("event_type"), col("cnt"),
+          col("v_sum").cast("double").as("v_sum"))
+    }.localCheckpoint()
   }
 
   /** Stream-STATIC enrichment join — the remaining join mode of the
@@ -1617,11 +1326,9 @@ object StreamingQueries {
   def enrichStream(spark: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(spark)
     val evs = eventRows(ss, sfDir)
-    val sentinel = evSentinel(evs, gapMs = 172800000L)
     val dim = graft.Tables.customer(ss, sfDir)
       .select(col("c_custkey").as("d_user"), col("c_mktsegment").as("segment"))
-    eventsFileReplay(ss, evs :+ sentinel, "enrich_", nChunks = 3,
-      flush = Seq(sentinel)) { stream =>
+    eventsReplay(ss, evs, evSentinel(evs, gapMs = 172800000L), "enrich_") { stream =>
       stream
         .withWatermark("ts", "60 seconds")
         .join(broadcast(dim), col("userId") === col("d_user"))
@@ -1657,29 +1364,24 @@ object StreamingQueries {
 
   def rateIngestStream(spark: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(spark)
-    val stream = ss.readStream.format("rate-micro-batch")
-      .option("rowsPerBatch", RateRowsPerBatch.toString)
-      .option("numPartitions", "2")
-      .option("startTimestamp", RateT0.toString)
-      .option("advanceMillisPerBatch", RateAdvanceMs.toString)
-      .load()
     val name = "rate_" + UUID.randomUUID().toString.replace("-", "")
-    val ckpt = TempDir.create("graft-ckpt-")
     val types = array(lit("view"), lit("click"), lit("purchase"),
       lit("scroll"), lit("hover"))
-    val q = stream
-      .filter(col("value") < RateCap)
-      .select(
-        col("value").as("seq"),
-        (col("value") % 150).as("user_id"),
-        element_at(types, (col("value") % 5 + 1).cast("int")).as("event_type"),
-        unix_millis(col("timestamp")).as("t_ms"))
-      .filter(col("user_id") % 7 =!= 0) // the ingest quality gate
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .format("memory").queryName(name)
-      .start()
-    try {
+    Replay.run(ss.readStream.format("rate-micro-batch")
+        .option("rowsPerBatch", RateRowsPerBatch.toString)
+        .option("numPartitions", "2")
+        .option("startTimestamp", RateT0.toString)
+        .option("advanceMillisPerBatch", RateAdvanceMs.toString)
+        .load()
+        .filter(col("value") < RateCap)
+        .select(
+          col("value").as("seq"),
+          (col("value") % 150).as("user_id"),
+          element_at(types, (col("value") % 5 + 1).cast("int")).as("event_type"),
+          unix_millis(col("timestamp")).as("t_ms"))
+        .filter(col("user_id") % 7 =!= 0) // the ingest quality gate
+        .writeStream.outputMode("append")
+        .format("memory").queryName(name)) { (_, _) =>
       val expected = (0L until RateCap).count(v => (v % 150) % 7 != 0)
       // Each probe is a full Spark job over the memory sink, so poll
       // at 250 ms (not a hot loop) and reuse the last observed count
@@ -1693,10 +1395,6 @@ object StreamingQueries {
       require(seen >= expected,
         s"rate ingest did not reach $expected rows within 120 s (saw $seen)")
       ss.table(name).localCheckpoint()
-    } finally {
-      q.stop()
-      TempDir.deleteRecursively(ckpt.toString)
-      StateStoreBridge.unloadQuery(q.runId)
     }
   }
 
@@ -1706,15 +1404,15 @@ object StreamingQueries {
     * and then FREEZE — the production contract, since re-training
     * would invalidate every stored code; the delta (the 10%) arrives
     * as gz JSONL chunk drops through the file ingress
-    * ([[EmbeddingsReplay]]), and each micro-batch encodes against
-    * the frozen driver-held codebooks ([[SimilarityQueries.pqEncode]]
-    * inside `foreachBatch` — a pure map, no shuffle) and APPENDS the
-    * nibble codes to the real parquet index manifest (the
-    * docs_incremental_stream write shape). Output: index ∪ delta
-    * codes — which must equal a batch encode of the whole corpus
-    * under the index-trained codebooks, proving the freeze/append
-    * seam loses nothing. Float JSON round-trips bit-exactly
-    * (shortest-repr serialization), so the streamed codes are the
+    * ([[EmbeddingRow]] on [[Replay]]), and each micro-batch encodes
+    * against the frozen driver-held codebooks
+    * ([[SimilarityQueries.pqEncode]] inside `foreachBatch` — a pure
+    * map, no shuffle) and APPENDS the nibble codes to the real parquet
+    * index manifest (the docs_incremental_stream write shape). Output:
+    * index ∪ delta codes — which must equal a batch encode of the
+    * whole corpus under the index-trained codebooks, proving the
+    * freeze/append seam loses nothing. Floats round-trip the JSON wire
+    * bit-exactly (ReplayWireSpec), so the streamed codes are the
     * batch codes.
     */
   def embeddingIngestStream(spark: SparkSession, sfDir: String): DataFrame = {
@@ -1723,43 +1421,35 @@ object StreamingQueries {
     val emb = graft.Tables.embeddings(ss, sfDir)
     val idx = emb.filter(col("vec_id") % 10 =!= 9)
     val cents = SimilarityQueries.pqCodebooks(idx)
-    val deltaVecs = emb.filter(col("vec_id") % 10 === 9)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])].collect().toSeq.sortBy(_._1)
-    val (stream, chunkDir) = EmbeddingsReplay.fileStream(ss, deltaVecs, nChunks = 3)
-    val outDir = TempDir.create("graft-vecidx-")
-    val ckpt = TempDir.create("graft-ckpt-")
-    val q = stream.writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // batchId-deterministic OVERWRITE target, not a bare append:
-        // a foreachBatch RETRY re-delivers the same batchId, and
-        // overwriting its own directory makes the re-run land on the
-        // identical bytes instead of duplicating manifest rows — the
-        // same idempotence contract KeyedUpsertSink carries, applied
-        // to an append-only manifest
-        SimilarityQueries.pqEncode(batch, cents)
-          .select(col("vec_id"), posexplode(col("codes")))
-          .select(col("vec_id"), col("pos").cast("int").as("s"),
-            col("col").as("code"), lit("delta").as("origin"))
-          .write.mode("overwrite").parquet(s"$outDir/b$batchId")
-        ()
-      }
-      .start()
-    try {
+    val deltaDir = Replay.write(emb.filter(col("vec_id") % 10 === 9)
+      .select(col("vec_id").as("vecId"), col("embedding"))
+      .as[EmbeddingRow].collect().toSeq.sortBy(_.vecId), 3)
+    val outDir = TempDir.create("graft-vecidx-").toString
+    Replay.run(Replay.read[EmbeddingRow](ss, deltaDir)
+        .select(col("vecId").as("vec_id"), col("embedding"))
+        .writeStream.outputMode("append")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          // batchId-deterministic OVERWRITE target, not a bare append:
+          // a foreachBatch RETRY re-delivers the same batchId, and
+          // overwriting its own directory makes the re-run land on the
+          // identical bytes instead of duplicating manifest rows — the
+          // same idempotence contract KeyedUpsertSink carries, applied
+          // to an append-only manifest
+          SimilarityQueries.pqEncode(batch, cents)
+            .select(col("vec_id"), posexplode(col("codes")))
+            .select(col("vec_id"), col("pos").cast("int").as("s"),
+              col("col").as("code"), lit("delta").as("origin"))
+            .write.mode("overwrite").parquet(s"$outDir/b$batchId")
+          ()
+        },
+      dirs = Seq(deltaDir, outDir)) { (q, _) =>
       q.processAllAvailable()
       val idxCodes = SimilarityQueries.pqEncode(idx, cents)
         .select(col("vec_id"), posexplode(col("codes")))
         .select(col("vec_id"), col("pos").cast("int").as("s"),
           col("col").as("code"), lit("index").as("origin"))
-      idxCodes.union(readBatchesOrEmpty(ss, outDir.toString, idxCodes))
+      idxCodes.union(readBatchesOrEmpty(ss, outDir, idxCodes))
         .localCheckpoint()
-    } finally {
-      q.stop()
-      TempDir.deleteRecursively(ckpt.toString)
-      TempDir.deleteRecursively(chunkDir)
-      TempDir.deleteRecursively(outDir.toString)
-      StateStoreBridge.unloadQuery(q.runId)
     }
   }
 
@@ -1786,7 +1476,7 @@ object StreamingQueries {
   def ccStream(spark: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(spark)
     import ss.implicits._
-    val labelBase = TempDir.create("graft-cclab-")
+    val labelBase = TempDir.create("graft-cclab-").toString
     def genDir(g: Int) = s"$labelBase/g$g"
     // the CURRENT generation is discovered from the table layout, not
     // a driver variable — a restarted incarnation (or a foreachBatch
@@ -1795,7 +1485,7 @@ object StreamingQueries {
     // table the batch's merge graph is empty and no new generation is
     // written)
     def currentGen(): Int = {
-      val d = java.nio.file.Paths.get(labelBase.toString)
+      val d = java.nio.file.Paths.get(labelBase)
       val s = java.nio.file.Files.list(d)
       try s.iterator().asScala
         .flatMap(p => "^g(\\d+)$".r.findFirstMatchIn(p.getFileName.toString)
@@ -1809,135 +1499,92 @@ object StreamingQueries {
     val pairs = DedupQueries.minhashVerifiedPairs(ss, sfDir)
       .select(col("doc_a"), col("doc_b"))
       .as[(Long, Long)].collect().toSeq.sorted
-    // pair edges ride the shared events wire schema (userId = doc_a,
-    // eventId = doc_b) — the one-topic contract EventsReplay documents
-    val fed = pairs.zipWithIndex.map { case ((a, b), i) =>
-      EventsReplay.Ev(a, b, i.toLong, "pair", 0.0)
-    }
-    val (stream, chunkDir) = EventsReplay.fileStream(ss, fed, nChunks = 3)
-    val ckpt = TempDir.create("graft-ckpt-")
-    val q = stream.writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val gen = currentGen()
-        val labels = ss.read.parquet(genDir(gen))
-        // broadcast the MICRO-BATCH side: the label table is
-        // corpus-sized at scale while a batch's pair set is bounded,
-        // so the labels relation must never be the shuffled/built
-        // side of these lookups (hint-only; results unchanged)
-        val merges = org.apache.spark.sql.functions.broadcast(
-            org.apache.spark.sql.functions.broadcast(batch
-              .select(col("userId").as("a"), col("eventId").as("b")))
-            .join(labels.select(col("doc_id").as("a"), col("component").as("la")), Seq("a")))
-          .join(labels.select(col("doc_id").as("b"), col("component").as("lb")), Seq("b"))
-          .select(col("la"), col("lb"))
-          .filter(col("la") =!= col("lb")).distinct()
-          .as[(Long, Long)].collect()
-        if (merges.nonEmpty) {
-          // union-find over the TOUCHED labels only — batch-bounded
-          val parent = scala.collection.mutable.Map.empty[Long, Long]
-          def find(x: Long): Long = {
-            val p = parent.getOrElse(x, x)
-            if (p == x) x
-            else { val r = find(p); parent(x) = r; r }
-          }
-          merges.foreach { case (a, b) =>
-            val (ra, rb) = (find(a), find(b))
-            if (ra != rb) {
-              if (ra < rb) parent(rb) = ra else parent(ra) = rb
+    // pair edges ride the shared events wire type (userId = doc_a,
+    // eventId = doc_b) — the one-topic contract [[Ev]] documents
+    val pairDir = Replay.write(pairs.zipWithIndex.map { case ((a, b), i) =>
+      Ev(a, b, i.toLong, "pair", 0.0)
+    }, 3)
+    Replay.run(Replay.read[Ev](ss, pairDir).writeStream.outputMode("append")
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          val gen = currentGen()
+          val labels = ss.read.parquet(genDir(gen))
+          // broadcast the MICRO-BATCH side: the label table is
+          // corpus-sized at scale while a batch's pair set is bounded,
+          // so the labels relation must never be the shuffled/built
+          // side of these lookups (hint-only; results unchanged)
+          val merges = broadcast(broadcast(batch
+                .select(col("userId").as("a"), col("eventId").as("b")))
+              .join(labels.select(col("doc_id").as("a"), col("component").as("la")), Seq("a")))
+            .join(labels.select(col("doc_id").as("b"), col("component").as("lb")), Seq("b"))
+            .select(col("la"), col("lb"))
+            .filter(col("la") =!= col("lb")).distinct()
+            .as[(Long, Long)].collect()
+          if (merges.nonEmpty) {
+            // union-find over the TOUCHED labels only — batch-bounded
+            val parent = scala.collection.mutable.Map.empty[Long, Long]
+            def find(x: Long): Long = {
+              val p = parent.getOrElse(x, x)
+              if (p == x) x
+              else { val r = find(p); parent(x) = r; r }
             }
+            merges.foreach { case (a, b) =>
+              val (ra, rb) = (find(a), find(b))
+              if (ra != rb) {
+                if (ra < rb) parent(rb) = ra else parent(ra) = rb
+              }
+            }
+            val mergeMap = parent.keys.map(l => l -> find(l))
+              .filter { case (l, r) => l != r }.toMap
+            val bc = ss.sparkContext.broadcast(mergeMap)
+            val next = labels.as[(Long, Long)]
+              .mapPartitions(_.map { case (d, l) =>
+                (d, bc.value.getOrElse(l, l))
+              })
+              .toDF("doc_id", "component")
+            next.write.mode("overwrite").parquet(genDir(gen + 1))
           }
-          val mergeMap = parent.keys.map(l => l -> find(l))
-            .filter { case (l, r) => l != r }.toMap
-          val bc = ss.sparkContext.broadcast(mergeMap)
-          val next = labels.as[(Long, Long)]
-            .mapPartitions(_.map { case (d, l) =>
-              (d, bc.value.getOrElse(l, l))
-            })
-            .toDF("doc_id", "component")
-          next.write.mode("overwrite").parquet(genDir(gen + 1))
-        }
-        ()
-      }
-      .start()
-    try {
+          ()
+        },
+      dirs = Seq(pairDir, labelBase)) { (q, _) =>
       q.processAllAvailable()
       ss.read.parquet(genDir(currentGen()))
         .withColumn("is_canonical",
           (col("doc_id") === col("component")).cast("int"))
         .localCheckpoint()
-    } finally {
-      q.stop()
-      TempDir.deleteRecursively(ckpt.toString)
-      TempDir.deleteRecursively(chunkDir)
-      TempDir.deleteRecursively(labelBase.toString)
-      StateStoreBridge.unloadQuery(q.runId)
     }
   }
 
   /** Streaming MULTIMODAL ingest — binary payloads through a stream
     * (the streaming × multimodal cell): media rows arrive as gz JSONL
-    * chunk drops with the payload base64-encoded on the wire (the one
-    * way binary rides a text transport; `unbase64` restores the exact
-    * bytes), and each micro-batch runs the REAL decode → pooled-grid
-    * featurize stage ([[Multimodal.extractFeatures]] — a stateless
-    * typed mapPartitions, which Structured Streaming runs unchanged)
-    * emitting the per-media feature manifest. No aggregation → rows
-    * emit on arrival, no watermark, no flush sentinel; payloads never
-    * cross a shuffle (features leave the decode stage as 32 ints).
-    * Oracle: the BATCH `multimodal_features` relation — streamed
-    * decode+featurize must equal the batch stage byte-for-byte.
+    * chunk drops ([[MediaRow]] on [[Replay]]) with the payload
+    * base64-encoded on the wire (the one way binary rides a text
+    * transport), and each micro-batch runs the REAL decode →
+    * pooled-grid featurize stage ([[Multimodal.extractFeatures]] — a
+    * stateless typed mapPartitions, which Structured Streaming runs
+    * unchanged) emitting the per-media feature manifest. No
+    * aggregation → rows emit on arrival, no watermark, no flush
+    * sentinel; payloads never cross a shuffle (features leave the
+    * decode stage as 32 ints). Oracle: the BATCH `multimodal_features`
+    * relation — streamed decode+featurize must equal the batch stage
+    * byte-for-byte.
     */
   def multimodalIngestStream(spark: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(spark)
     import ss.implicits._
-    val media = graft.multimodal.Multimodal.mediaFromDocuments(ss, sfDir)
-      .select(col("media_id"), col("kind"), col("payload"))
-      .as[(Long, String, Array[Byte])].collect().toSeq.sortBy(_._1)
-    val dir = TempDir.create("graft-media-")
-    val enc = java.util.Base64.getEncoder
-    media.grouped(math.max(1, math.ceil(media.size / 3.0).toInt)).zipWithIndex
-      .foreach { case (chunk, i) =>
-        ReplayChunks.writeJsonlGz(dir.toString, f"media-$i%05d.jsonl.gz", i,
-          chunk.map { case (id, kind, payload) =>
-            s"""{"mediaId":$id,"kind":"$kind","payload":"${enc.encodeToString(payload)}"}"""
-          })
-      }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("mediaId",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("kind",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("payload",
-        org.apache.spark.sql.types.StringType)))
-    val stream = ss.readStream
-      .option("maxFilesPerTrigger", "1")
-      .text(dir.toString)
-      .select(from_json(col("value"), schema).as("j"))
-      .select(col("j.mediaId").as("media_id"), col("j.kind").as("kind"),
-        unbase64(col("j.payload")).as("payload"))
-    val name = "mmingest_" + UUID.randomUUID().toString.replace("-", "")
-    val ckpt = TempDir.create("graft-ckpt-")
-    val feats = graft.multimodal.Multimodal.extractFeatures(stream).toDF()
-    val head = Seq(col("media_id"),
-      org.apache.spark.sql.functions.size(col("features")).as("dim"),
-      org.apache.spark.sql.functions.round(
-        graft.functions.VectorFunctions.norm(col("features")), 3).as("nrm"))
-    val cells = (0 until 16).map(b => element_at(col("grid"), b + 1).as(s"g$b"))
-    val buckets = (0 until 16).map(b => element_at(col("hist"), b + 1).as(s"h$b"))
-    val q = feats.select(head ++ cells ++ buckets: _*)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      TempDir.deleteRecursively(ckpt.toString)
-      TempDir.deleteRecursively(dir.toString)
-      StateStoreBridge.unloadQuery(q.runId)
+    val mediaDir = Replay.write(graft.multimodal.Multimodal.mediaFromDocuments(ss, sfDir)
+      .select(col("media_id").as("mediaId"), col("kind"), col("payload"))
+      .as[MediaRow].collect().toSeq.sortBy(_.mediaId), 3)
+    toMemory(ss, "mmingest_", dirs = Seq(mediaDir)) {
+      val stream = Replay.read[MediaRow](ss, mediaDir)
+        .select(col("mediaId").as("media_id"), col("kind"), col("payload"))
+      val feats = graft.multimodal.Multimodal.extractFeatures(stream).toDF()
+      val head = Seq(col("media_id"),
+        size(col("features")).as("dim"),
+        round(graft.functions.VectorFunctions.norm(col("features")), 3).as("nrm"))
+      val cells = (0 until 16).map(b => element_at(col("grid"), b + 1).as(s"g$b"))
+      val buckets = (0 until 16).map(b => element_at(col("hist"), b + 1).as(s"h$b"))
+      feats.select(head ++ cells ++ buckets: _*)
     }
-    ss.table(name)
   }
 
   /** Virtual-clock TTL constants for [[ttlFoldStream]], shared with
@@ -1974,6 +1621,7 @@ object StreamingQueries {
     * advance the clock BETWEEN batches, which a file listing can't.
     */
   def ttlFoldStream(spark: SparkSession, sfDir: String): DataFrame = {
+    import org.apache.spark.sql.graftbridge.ClockBridge
     val ss = streamSession(spark)
     forceRocksdb(ss)
     import ss.implicits._
@@ -1981,18 +1629,16 @@ object StreamingQueries {
     val byDay = eventRows(ss, sfDir)
       .groupBy(_.tMs / TtlBatchMs).toSeq.sortBy(_._1)
     val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[TtlKV]
-    val clock = org.apache.spark.sql.graftbridge.ClockBridge
-      .virtualClock(byDay.head._1 * TtlBatchMs)
-    val ckpt = TempDir.create("graft-ckpt-")
+    val clock = ClockBridge.virtualClock(byDay.head._1 * TtlBatchMs)
+    val sink = new org.apache.spark.sql.execution.streaming.sources.MemorySink()
     val out = ms.toDS()
       .groupByKey(_.k)
       .transformWithState(new TtlFoldProcessor(TtlMs, TtlBatchMs),
         org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
         org.apache.spark.sql.streaming.OutputMode.Update())
       .toDF()
-    val (q, sink) = org.apache.spark.sql.graftbridge.ClockBridge.startWithClock(
-      out, org.apache.spark.sql.streaming.OutputMode.Update(), ckpt.toString, clock)
-    try {
+    Replay.runStarting(ClockBridge.startWithClock(
+        out, org.apache.spark.sql.streaming.OutputMode.Update(), _, clock, sink)) { (q, _) =>
       byDay.foreach { case (b, chunk) =>
         clock.setTime(b * TtlBatchMs)
         ms.addData(chunk.map(e => TtlKV(e.userId, e.eventId)))
@@ -2001,10 +1647,6 @@ object StreamingQueries {
       ss.createDataFrame(sink.allData.asJava,
           org.apache.spark.sql.Encoders.product[TtlPane].schema)
         .localCheckpoint()
-    } finally {
-      q.stop()
-      TempDir.deleteRecursively(ckpt.toString)
-      StateStoreBridge.unloadQuery(q.runId)
     }
   }
 

@@ -101,33 +101,22 @@ final class LiveOps(publishDir: Option[Path] = None)
 
   // ---- rendering --------------------------------------------------
 
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   /** The whole surface as one JSON object (stable key order by query
     * name then id, so diffs of successive scrapes are readable).
     */
   def json: String = {
     val rows = snapshot.values.toList.sortBy(v => (v.name, v.id.toString))
       .map { v =>
-        s"""{"name":${jstr(v.name)},"id":${jstr(v.id.toString)},""" +
-          s""""runId":${jstr(v.runId.toString)},"status":${jstr(v.status)},""" +
-          s""""batchId":${v.batchId},"timestamp":${jstr(v.timestamp)},""" +
+        s"""{"name":${Replay.jsonStr(v.name)},"id":${Replay.jsonStr(v.id.toString)},""" +
+          s""""runId":${Replay.jsonStr(v.runId.toString)},"status":${Replay.jsonStr(v.status)},""" +
+          s""""batchId":${v.batchId},"timestamp":${Replay.jsonStr(v.timestamp)},""" +
           s""""numInputRows":${v.numInputRows},""" +
           f""""inputRowsPerSecond":${v.inputRowsPerSecond}%.2f,""" +
           f""""processedRowsPerSecond":${v.processedRowsPerSecond}%.2f,""" +
           s""""triggerMs":${v.triggerMs},"addBatchMs":${v.addBatchMs},""" +
           s""""stateRowsTotal":${v.stateRowsTotal},"stateBytes":${v.stateBytes},""" +
-          s""""watermark":${jstr(v.watermark)}""" +
-          v.error.map(err => s""","error":${jstr(err)}""").getOrElse("") + "}"
+          s""""watermark":${Replay.jsonStr(v.watermark)}""" +
+          v.error.map(err => s""","error":${Replay.jsonStr(err)}""").getOrElse("") + "}"
       }
     rows.mkString("""{"queries":[""", ",", "]}")
   }

@@ -26,8 +26,9 @@ import org.apache.spark.sql.functions._
   *
   * MemoryStream collects rows on the driver, which is fine for the
   * replay *harness* (the reference source is equally single-node); the
-  * production-scale streaming ingress is a file/Kafka source — see
-  * `FileStreamReplay` below for the file-based variant.
+  * production-scale streaming ingress is a file/Kafka source — the
+  * file-drop feeds go through [[Replay]], and [[fileStream]] below is
+  * the reference's CSV wire form on it.
   */
 object TaxiReplay {
 
@@ -106,22 +107,21 @@ object TaxiReplay {
       events: Seq[RideEvent],
       nBatches: Int,
       process: () => Unit): Unit = {
-    val size = math.max(1, math.ceil(events.size.toDouble / nBatches).toInt)
-    events.grouped(size).foreach { batch =>
+    Replay.chunks(events, nBatches).foreach { batch =>
       ms.addData(batch)
       process()
     }
   }
 
-  /** File-based streaming replay: serving-ordered events written as
-    * CSV chunk files (the reference's wire format, 2-events-per-ride
-    * lines) consumed by `spark.readStream.csv` with
-    * `maxFilesPerTrigger = 1` — one chunk per micro-batch. This is the
-    * production-shaped ingress (file drops / object-store listing);
-    * MemoryStream above is the low-latency test harness. Returns the
-    * parsed streaming DataFrame with the event-time `ts` column plus
-    * the chunk dir, which the caller must `TempDir.deleteRecursively`
-    * after the query stops (the source reads the files lazily).
+  /** The reference's wire form on the [[Replay]] file feed: each ride
+    * is one CSV line (`rideId,time,START|END,lon,lat,passengers,0.0`,
+    * seconds resolution, so callers pre-truncate event times), read
+    * back through `TaxiRide.parseCsv`. `gzip` writes the reference's
+    * actual source form (a gzipped CSV file,
+    * `sources/TaxiRideSource.scala:97-104`); Hadoop's text reader
+    * decompresses by extension, so the parse path is unchanged.
+    * Returns the parsed stream with the event-time `ts` column and the
+    * chunk dir, which the caller deletes after the query stops.
     */
   def fileStream(
       spark: SparkSession,
@@ -130,114 +130,23 @@ object TaxiReplay {
       flushChunk: Seq[RideEvent] = Nil,
       gzip: Boolean = false): (DataFrame, String) = {
     import graft.model.TaxiRide
-    val dir = TempDir.create("graft-replay-")
-    val chunkSize = math.max(1, math.ceil(events.size.toDouble / nChunks).toInt)
     val fmt = java.time.format.DateTimeFormatter.ofPattern(TaxiRide.TimePattern)
     // format in the SESSION timezone: parseCsv's to_timestamp parses in
     // spark.sql.session.timeZone, so writing hardcoded UTC would shift
     // every event time on non-UTC sessions
     val zone = java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))
-    def writeChunk(chunk: Seq[RideEvent], i: Int): Unit = {
-      val lines = chunk.map { e =>
-        // the reference wire format is seconds-resolution (§1.2) —
-        // callers must pre-truncate event times to seconds
-        val t = java.time.Instant.ofEpochMilli(e.tMs).atZone(zone).format(fmt)
-        s"${e.rideId},$t,${if (e.isStart) "START" else "END"},${e.lon},${e.lat},${e.passengers},0.0"
-      }
-      val bytes = lines.mkString("\n").getBytes("UTF-8")
-      // gzip = the reference's ACTUAL wire form (a gzipped CSV file,
-      // `sources/TaxiRideSource.scala:97-104`); Hadoop's text reader
-      // decompresses by extension, so the parse path is unchanged.
-      // One gz chunk = one micro-batch — non-splittability is moot.
-      // Mod-time ordering contract: [[ReplayChunks]].
-      val name = if (gzip) f"chunk-$i%05d.csv.gz" else f"chunk-$i%05d.csv"
-      ReplayChunks.write(dir.toString, name, i, bytes, gzip)
+    val dir = Replay.writeLines(events, nChunks, flushChunk, gzip, ext = "csv") { e =>
+      val t = java.time.Instant.ofEpochMilli(e.tMs).atZone(zone).format(fmt)
+      s"${e.rideId},$t,${if (e.isStart) "START" else "END"},${e.lon},${e.lat},${e.passengers},0.0"
     }
-    val dataChunks = events.grouped(chunkSize).toVector
-    dataChunks.zipWithIndex.foreach { case (chunk, i) => writeChunk(chunk, i) }
-    // Optional trailing flush chunk — processed as one more data
-    // micro-batch AFTER the last event chunk, applying the watermark
-    // that chunk advanced (no-data micro-batches are disabled in the
-    // replay sessions; see StreamingQueries.streamSession). Callers
-    // pass the zero-weight sentinel here, same contract as
-    // StreamingQueries.appendReplay's flush batch.
-    if (flushChunk.nonEmpty) writeChunk(flushChunk, dataChunks.size)
-    val raw = spark.readStream
-      .option("maxFilesPerTrigger", "1")
-      .text(dir.toString)
-    val parsed = TaxiRide.parseCsv(raw, "value")
+    val parsed = TaxiRide.parseCsv(Replay.lines(spark, dir), "value")
       .select(
         col("rideId"),
         unix_millis(col("time")).as("tMs"),
         col("isStart"), col("lon"), col("lat"),
         col("passengerCnt").cast("int").as("passengers"))
       .withColumn("ts", timestamp_millis(col("tMs")))
-    (parsed, dir.toString)
-  }
-
-  /** ms-exact gz JSONL replay ingress for the ride streams — the
-    * file-drop twin of [[memoryStream]] (same columns, same
-    * millisecond event-time semantics), where [[fileStream]] above is
-    * the reference's seconds-resolution CSV wire. The stateful
-    * pipelines whose oracles pin ms event times replay through this:
-    * longs/booleans serialize exactly, doubles via `Double.toString`
-    * (shortest round-tripping form), so `from_json`'s parse is
-    * bit-exact. One gz chunk per micro-batch (mod-time ordering
-    * contract: [[ReplayChunks]]); the optional trailing flush chunk is
-    * processed as one more data micro-batch after the last event
-    * chunk, applying the watermark that chunk advanced (no-data
-    * micro-batches are disabled in the replay sessions). Caller must
-    * delete the returned chunk dir after the query stops.
-    */
-  def jsonlFileStream(
-      spark: SparkSession,
-      events: Seq[RideEvent],
-      nChunks: Int,
-      flushChunk: Seq[RideEvent] = Nil): (DataFrame, String) = {
-    val dir = writeJsonlChunks(events, nChunks, flushChunk)
-    (openJsonlStream(spark, dir), dir)
-  }
-
-  /** Fixture half of [[jsonlFileStream]]: write the chunk files and
-    * return the dir. Split out so callers that CACHE the fixture
-    * (the write is pure in its inputs) can share one dir across many
-    * independent readers.
-    */
-  def writeJsonlChunks(
-      events: Seq[RideEvent],
-      nChunks: Int,
-      flushChunk: Seq[RideEvent] = Nil): String = {
-    val dir = TempDir.create("graft-rides-")
-    def writeChunk(chunk: Seq[RideEvent], i: Int): Unit =
-      ReplayChunks.writeJsonlGz(dir.toString, f"rides-$i%05d.jsonl.gz", i,
-        chunk.map(e => s"""{"rideId":${e.rideId},"tMs":${e.tMs},"isStart":${e.isStart},""" +
-          s""""lon":${e.lon},"lat":${e.lat},"passengers":${e.passengers}}"""))
-    val chunkSize = math.max(1, math.ceil(events.size.toDouble / nChunks).toInt)
-    val dataChunks = events.grouped(chunkSize).toVector
-    dataChunks.zipWithIndex.foreach { case (chunk, i) => writeChunk(chunk, i) }
-    if (flushChunk.nonEmpty) writeChunk(flushChunk, dataChunks.size)
-    dir.toString
-  }
-
-  /** Reader half of [[jsonlFileStream]]: a parsed streaming DataFrame
-    * over an existing chunk dir — one chunk per micro-batch; each
-    * caller gets an independent reader (its own offset log), so a
-    * shared fixture dir is read-only sharing.
-    */
-  def openJsonlStream(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("rideId", LongType), StructField("tMs", LongType),
-      StructField("isStart", BooleanType), StructField("lon", DoubleType),
-      StructField("lat", DoubleType), StructField("passengers", IntegerType)))
-    spark.readStream
-      .option("maxFilesPerTrigger", "1")
-      .text(dir)
-      .select(from_json(col("value"), schema).as("j"))
-      .select(col("j.rideId").as("rideId"), col("j.tMs").as("tMs"),
-        col("j.isStart").as("isStart"), col("j.lon").as("lon"),
-        col("j.lat").as("lat"), col("j.passengers").as("passengers"))
-      .withColumn("ts", timestamp_millis(col("tMs")))
+    (parsed, dir)
   }
 
   /** Pacing for live demo replay (reference `toServingTime`,

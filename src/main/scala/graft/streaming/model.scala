@@ -36,6 +36,22 @@ final case class RunningState(sum: Long, pending: List[(Long, Long, Long)])
   */
 final case class UserEvent(userId: Long, tMs: Long, value: Double)
 
+/** One replayed `events` row: the wire superset every events-table
+  * stream reads (each pipeline projects the columns it needs, the
+  * schema-on-read contract of a shared ingest topic). The pair-edge
+  * stream `dedup_cc_stream` rides it too (userId = doc_a, eventId =
+  * doc_b).
+  */
+final case class Ev(userId: Long, eventId: Long, tMs: Long, etype: String, value: Double)
+
+/** One arriving delta vector for `embedding_ingest_stream`. */
+final case class EmbeddingRow(vecId: Long, embedding: Array[Float])
+
+/** One arriving media row for `multimodal_ingest_stream`; the payload
+  * rides the text wire as base64.
+  */
+final case class MediaRow(mediaId: Long, kind: String, payload: Array[Byte])
+
 /** One arriving document for the streaming curation front door
   * (`docs_ingest_stream`): the `documents` row plus a synthetic
   * arrival event time (docId-derived, deterministic).

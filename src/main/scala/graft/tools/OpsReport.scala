@@ -1,9 +1,9 @@
 package graft.tools
 
-import graft.streaming.{EventsReplay, TempDir}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.queries.StreamingQueries
+import graft.streaming.{Ev, Replay}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.StateStoreBridge
 import org.apache.spark.sql.streaming.StreamingQueryProgress
 
 /** Operational report over a streaming job's two observability
@@ -141,40 +141,27 @@ object OpsReport {
   def collectFromEventsReplay(
       spark: SparkSession, sfDir: String, nChunks: Int):
       (Seq[BatchStat], Seq[(Int, Long)], Seq[String], Long) = {
-    val ss = graft.queries.StreamingQueries.streamSession(spark)
-    val evs = graft.Tables.events(ss, sfDir)
-      .select(col("user_id"), col("event_id"), unix_millis(col("ts")).as("t_ms"),
-        col("event_type"), col("value"))
-      .collect().map(r => EventsReplay.Ev(r.getLong(0), r.getLong(1),
-        r.getLong(2), r.getString(3), r.getDouble(4)))
-      .toSeq.sortBy(e => (e.tMs, e.eventId))
-    val (stream, chunkDir) = EventsReplay.fileStream(ss, evs, nChunks)
-    val ckpt = TempDir.create("graft-ops-ckpt-")
-    val q = stream
-      .withWatermark("ts", "60 seconds")
-      .groupBy(col("etype"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,6)")).as("value_sum"))
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt.toString)
-      .format("noop")
-      .start()
-    try {
+    val ss = StreamingQueries.streamSession(spark)
+    val evs = StreamingQueries.eventRows(ss, sfDir)
+    val dir = Replay.write(evs, nChunks)
+    Replay.run(Replay.read[Ev](ss, dir)
+        .withWatermark("ts", "60 seconds")
+        .groupBy(col("etype"))
+        .agg(count(lit(1)).as("n"),
+          sum(col("value").cast("decimal(18,6)")).as("value_sum"))
+        .writeStream.outputMode("update")
+        .format("noop"),
+      dirs = Seq(dir)) { (q, ckpt) =>
       q.processAllAvailable()
       q.stop()
       val stats = batchStats(q.recentProgress.toSeq)
-      val parts = stateByPartition(ss, ckpt.toString)
-      val md = ss.read.format("state-metadata").load(ckpt.toString)
+      val parts = stateByPartition(ss, ckpt)
+      val md = ss.read.format("state-metadata").load(ckpt)
         .collect().map(r =>
           s"operator=${r.getAs[String]("operatorName")} store=${r.getAs[String]("stateStoreName")} " +
           s"partitions=${r.getAs[Int]("numPartitions")} batches=${r.getAs[Long]("minBatchId")}..${r.getAs[Long]("maxBatchId")}")
         .toSeq
       (stats, parts, md, evs.size.toLong)
-    } finally {
-      if (q.isActive) q.stop()
-      TempDir.deleteRecursively(ckpt.toString)
-      TempDir.deleteRecursively(chunkDir)
-      StateStoreBridge.unloadAll()
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.streaming.{CellEvent, KeyedUpsertSink, TaxiPipelines, TaxiReplay, TempDir}
+import graft.streaming.{CellEvent, KeyedUpsertSink, Replay, RideEvent, TaxiPipelines, TaxiReplay, TempDir}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.StateStoreBridge
 
@@ -36,13 +36,13 @@ object ProbeRecovery {
 
     val rides = TaxiReplay.ridesFromEvents(ss, sfDir).collect().toSeq
     val ordered = TaxiReplay.servingOrder(rides, 60000L)
-    val dir = TaxiReplay.writeJsonlChunks(ordered, nChunks)
+    val dir = Replay.write(ordered, nChunks)
     println(s"[recover] feed: ${ordered.size} rides in $nChunks chunks")
 
     val sink = new KeyedUpsertSink(Seq("cell"))
     val ckpt = TempDir.create("graft-recover-")
     def start() = {
-      val df = TaxiReplay.openJsonlStream(ss, dir)
+      val df = Replay.read[RideEvent](ss, dir)
       graft.streaming.TwsTotalCount
         .totalCountTws(TaxiPipelines.cellEvents(df, "60 seconds").as[CellEvent])
         .toDF()

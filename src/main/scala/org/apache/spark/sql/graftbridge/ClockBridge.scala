@@ -24,10 +24,9 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   * streaming analogue of the replay sources' deadline pacing: the
   * harness owns time.
   *
-  * The query writes to a fresh [[MemorySink]] (the collected-output
-  * sink `format("memory")` uses underneath), returned alongside the
-  * query so the caller reads converged rows without a registered
-  * table name. `Trigger.ProcessingTime(0)` executes continuously
+  * The query writes to the caller's [[MemorySink]] (the
+  * collected-output sink `format("memory")` uses underneath), so the
+  * caller reads converged rows without a registered table name. `Trigger.ProcessingTime(0)` executes continuously
   * without consulting the clock for WAITING — the clock's only role
   * is the per-batch timestamp stamp, which is exactly the
   * determinism the caller wants.
@@ -51,10 +50,10 @@ object ClockBridge {
       outputMode: OutputMode,
       checkpointLocation: String,
       clock: VirtualClock,
-      queryName: Option[String] = None): (StreamingQuery, MemorySink) = {
+      sink: MemorySink,
+      queryName: Option[String] = None): StreamingQuery = {
     val cds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-    val sink = new MemorySink()
-    val q = cds.sparkSession.streams.startQuery(
+    cds.sparkSession.streams.startQuery(
       queryName,
       Some(checkpointLocation),
       cds,
@@ -67,6 +66,5 @@ object ClockBridge {
       triggerClock = clock.underlying,
       catalogAndIdent = None,
       catalogTable = None)
-    (q, sink)
   }
 }

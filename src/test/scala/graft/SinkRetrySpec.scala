@@ -1,7 +1,7 @@
 package graft
 
 import graft.queries.StreamingQueries
-import graft.streaming.{DocEvent, DocsReplay, KeyedUpsertSink, TempDir}
+import graft.streaming.{DocEvent, Replay, KeyedUpsertSink, TempDir}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.StateStoreBridge
 import org.apache.spark.sql.streaming.StreamingQueryException
@@ -46,7 +46,7 @@ class SinkRetrySpec extends AnyFunSuite {
     // plain shared state sees every attempt; records attempts per
     // batchId and throws on batch 1's FIRST delivery only
     val attempts = scala.collection.mutable.Map.empty[Long, Int]
-    def pipeline = DocsReplay.openStream(ss, chunkDir.toString)
+    def pipeline = Replay.read[DocEvent](ss, chunkDir.toString)
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(length(col("text"))).as("n_chars"))
     def run(): Unit = {
@@ -63,9 +63,9 @@ class SinkRetrySpec extends AnyFunSuite {
     }
 
     try {
-      DocsReplay.writeChunk(chunkDir.toString, 0, half1)
+      Replay.writeChunk(chunkDir.toString, 0, half1)
       run() // incarnation 1: batch 0 commits
-      DocsReplay.writeChunk(chunkDir.toString, 1, half2)
+      Replay.writeChunk(chunkDir.toString, 1, half2)
       val e = intercept[StreamingQueryException](run()) // batch 1 dies mid-write
       assert(e.getMessage.contains("injected sink failure"), e.getMessage)
       assert(attempts.synchronized(attempts(1L)) == 1, "injector must have fired on first delivery")

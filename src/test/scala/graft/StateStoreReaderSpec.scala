@@ -1,7 +1,7 @@
 package graft
 
 import graft.queries.StreamingQueries
-import graft.streaming.{CellEvent, EventsReplay, TempDir, TwsTotalCount}
+import graft.streaming.{CellEvent, Ev, Replay, TempDir, TwsTotalCount}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.StateStoreBridge
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,11 +23,12 @@ class StateStoreReaderSpec extends AnyFunSuite {
     val evs = Tables.events(ss, sf)
       .select(col("user_id"), col("event_id"), unix_millis(col("ts")).as("t_ms"),
         col("event_type"), col("value"))
-      .collect().map(r => EventsReplay.Ev(r.getLong(0), r.getLong(1),
+      .collect().map(r => Ev(r.getLong(0), r.getLong(1),
         r.getLong(2), r.getString(3), r.getDouble(4)))
       .toSeq.sortBy(e => (e.tMs, e.eventId))
     val nChunks = 3
-    val (stream, chunkDir) = EventsReplay.fileStream(ss, evs, nChunks = nChunks)
+    val chunkDir = Replay.write(evs, nChunks)
+    val stream = Replay.read[Ev](ss, chunkDir)
     val ckpt = TempDir.create("graft-ckpt-")
     val q = stream.groupBy(col("etype")).agg(count(lit(1)).as("n"))
       .writeStream.outputMode("update")
@@ -76,9 +77,9 @@ class StateStoreReaderSpec extends AnyFunSuite {
         .option("batchId", 0).load(ckpt.toString)
         .select(col("key.etype"), col("value.count"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      // chunk 0 = micro-batch 0 by EventsReplay's exposed assignment
+      // chunk 0 = micro-batch 0 by Replay's exposed assignment
       // (chunks), not a re-derivation of its ceil-division
-      val want0 = EventsReplay.chunks(evs, nChunks).head.groupBy(_.etype)
+      val want0 = Replay.chunks(evs, nChunks).head.groupBy(_.etype)
         .map { case (t, es) => t -> es.size.toLong }
       assert(st0 == want0,
         s"batchId=0 must snapshot chunk 0's aggregate: $st0 vs $want0")

@@ -1,7 +1,7 @@
 package graft
 
 import graft.queries.StreamingQueries
-import graft.streaming.{DocEvent, DocsReplay, TempDir}
+import graft.streaming.{DocEvent, Replay, TempDir}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.StateStoreBridge
 import org.scalatest.funsuite.AnyFunSuite
@@ -37,7 +37,7 @@ class StreamRecoverySpec extends AnyFunSuite {
     val ckpt = TempDir.create("graft-ckpt-")
     val outDir = TempDir.create("graft-out-")
     def runUntilDrained(): Unit = {
-      val q = StreamingQueries.ingestManifest(DocsReplay.openStream(ss, chunkDir.toString))
+      val q = StreamingQueries.ingestManifest(Replay.read[DocEvent](ss, chunkDir.toString))
         .writeStream.outputMode("append")
         .option("checkpointLocation", ckpt.toString)
         .format("parquet").option("path", outDir.toString)
@@ -46,10 +46,10 @@ class StreamRecoverySpec extends AnyFunSuite {
       finally q.stop()
     }
     try {
-      DocsReplay.writeChunk(chunkDir.toString, 0, docs)
+      Replay.writeChunk(chunkDir.toString, 0, docs)
       runUntilDrained() // first incarnation consumes chunk 0, then "crashes"
       val afterFirst = ss.read.parquet(outDir.toString).count()
-      DocsReplay.writeChunk(chunkDir.toString, 1, docs) // upstream retries everything
+      Replay.writeChunk(chunkDir.toString, 1, docs) // upstream retries everything
       runUntilDrained() // second incarnation resumes from the checkpoint
       val out = ss.read.parquet(outDir.toString)
         .select(col("doc_id")).collect().map(_.getLong(0))
@@ -88,13 +88,13 @@ class StreamRecoverySpec extends AnyFunSuite {
         .option("checkpointLocation", ckpt.toString)
         .format("parquet").option("path", outDir.toString)
     try {
-      DocsReplay.writeChunk(chunkDir.toString, 0, docs)
+      Replay.writeChunk(chunkDir.toString, 0, docs)
       val q1 = sinkOf(StreamingQueries.ingestManifest(
-        DocsReplay.openStream(ss, chunkDir.toString)).writeStream).start()
+        Replay.read[DocEvent](ss, chunkDir.toString)).writeStream).start()
       try q1.processAllAvailable() finally q1.stop()
-      DocsReplay.writeChunk(chunkDir.toString, 1, docs) // upstream retries
+      Replay.writeChunk(chunkDir.toString, 1, docs) // upstream retries
       val q2 = sinkOf(StreamingQueries.ingestManifest(
-        DocsReplay.openStream(ss, chunkDir.toString)).writeStream)
+        Replay.read[DocEvent](ss, chunkDir.toString)).writeStream)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       try require(q2.awaitTermination(120000), "AvailableNow did not drain")
