@@ -205,12 +205,8 @@ object Bench {
     val loadBefore = loadAvg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session()
-    // Warm up the session (codegen, parquet reader, shuffle machinery)
-    // so the first timed query doesn't absorb JVM startup.
-    try {
-      spark.read.parquet(s"$sfDir/lineitem.parquet")
-        .groupBy("l_returnflag").count().count()
-    } catch { case _: Throwable => () }
+    try Session.warmUp(spark, sfDir)
+    catch { case _: Throwable => () }
     // Warm the *streaming* machinery too (incremental planner, state
     // store provider, offset/commit WAL, memory sink): the first
     // streaming replay otherwise pays ~1.5-2 s of one-time init that

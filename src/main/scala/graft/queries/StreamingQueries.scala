@@ -306,19 +306,26 @@ object StreamingQueries {
     Ev(-1L, -1L, maxT + gapMs, etype, 0.0)
   }
 
-  /** Append-mode replay of an events feed ending in `sentinel`: the
-    * [[appendReplay]] anatomy over `evs :+ sentinel` in `nChunks`
-    * chunks, plus the flush chunk re-feeding the sentinel (same
-    * zero-weight contract).
+  /** Append-mode replay of the `types` events feed ending in its
+    * [[evSentinel]]: the [[appendReplay]] anatomy over `evs :+ sentinel`
+    * in `nChunks` chunks, plus the flush chunk re-feeding the sentinel
+    * (same zero-weight contract). The feed is pure in its arguments, so
+    * it is a cached fixture like [[eventsStream]].
     */
   private def eventsReplay(
       ss: SparkSession,
-      evs: Seq[Ev],
-      sentinel: Ev,
+      sfDir: String,
       prefix: String,
+      gapMs: Long,
+      types: Seq[String] = Nil,
+      etype: String = "view",
       nChunks: Int = 3)(build: DataFrame => DataFrame): DataFrame = {
-    val dir = Replay.write(evs :+ sentinel, nChunks, flush = Seq(sentinel))
-    toMemory(ss, prefix, dirs = Seq(dir))(build(Replay.read[Ev](ss, dir)))
+    val dir = Replay.fixtureDir(("events+sentinel", sfDir, types, gapMs, etype, nChunks)) {
+      val evs = eventRows(ss, sfDir, types)
+      val sentinel = evSentinel(evs, gapMs, etype)
+      Replay.write(evs :+ sentinel, nChunks, flush = Seq(sentinel))
+    }
+    toMemory(ss, prefix)(build(Replay.read[Ev](ss, dir)))
   }
 
   /** The per-batch manifest directories under a batchId-overwrite
@@ -450,8 +457,7 @@ object StreamingQueries {
     val ss = streamSession(spark)
     forceRocksdb(ss)
     import ss.implicits._
-    val evs = eventRows(ss, sfDir)
-    eventsReplay(ss, evs, evSentinel(evs, gapMs = 7200000L), "deb_") { stream =>
+    eventsReplay(ss, sfDir, "deb_", gapMs = 7200000L) { stream =>
       stream
         .withWatermark("ts", "60 seconds")
         .as[DebounceEvent]
@@ -932,8 +938,7 @@ object StreamingQueries {
     */
   def sessionizeStream(spark: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(spark)
-    val evs = eventRows(ss, sfDir)
-    eventsReplay(ss, evs, evSentinel(evs, gapMs = 7200000L), "sess_") { stream =>
+    eventsReplay(ss, sfDir, "sess_", gapMs = 7200000L) { stream =>
       stream
         .withWatermark("ts", "60 seconds")
         .groupBy(col("userId"), session_window(col("ts"), "30 minutes").as("sw"))
@@ -957,8 +962,7 @@ object StreamingQueries {
     */
   def sessionizeDynamicStream(spark: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(spark)
-    val evs = eventRows(ss, sfDir)
-    eventsReplay(ss, evs, evSentinel(evs, gapMs = 7200000L), "sessd_") { stream =>
+    eventsReplay(ss, sfDir, "sessd_", gapMs = 7200000L) { stream =>
       stream
         .withWatermark("ts", "60 seconds")
         .groupBy(col("userId"), session_window(col("ts"),
@@ -985,9 +989,8 @@ object StreamingQueries {
   def funnelStream(spark: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(spark)
     import ss.implicits._
-    val evs = eventRows(ss, sfDir, types = Seq("view", "click", "purchase"))
-    eventsReplay(ss, evs, evSentinel(evs, gapMs = 2 * Funnel.WindowMs + 3600000L),
-      "funnel_") { stream =>
+    eventsReplay(ss, sfDir, "funnel_", gapMs = 2 * Funnel.WindowMs + 3600000L,
+      types = Seq("view", "click", "purchase")) { stream =>
       Funnel.funnelResults(
         stream
           .withWatermark("ts", "60 seconds")
@@ -1027,10 +1030,9 @@ object StreamingQueries {
     */
   def attributionOuterStream(spark: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(spark)
-    val evs = eventRows(ss, sfDir, types = Seq("click", "purchase"))
-    val sentinel = evSentinel(evs, gapMs = 3600000L + 7200000L, etype = "click")
     // 2 data chunks (same cost rationale as durationStream) + flush
-    eventsReplay(ss, evs, sentinel, "attr_", nChunks = 2) { stream =>
+    eventsReplay(ss, sfDir, "attr_", gapMs = 3600000L + 7200000L,
+      types = Seq("click", "purchase"), etype = "click", nChunks = 2) { stream =>
       attribution(stream, "left_outer")
         .select(col("c_user").as("user_id"),
           unix_millis(col("c_ts")).as("click_ms"),
@@ -1049,9 +1051,8 @@ object StreamingQueries {
     */
   def attributionFullStream(spark: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(spark)
-    val evs = eventRows(ss, sfDir, types = Seq("click", "purchase"))
-    val sentinel = evSentinel(evs, gapMs = 3600000L + 7200000L, etype = "click")
-    eventsReplay(ss, evs, sentinel, "attrf_", nChunks = 2) { stream =>
+    eventsReplay(ss, sfDir, "attrf_", gapMs = 3600000L + 7200000L,
+      types = Seq("click", "purchase"), etype = "click", nChunks = 2) { stream =>
       attribution(stream, "full_outer")
         .select(coalesce(col("c_user"), col("p_user")).as("user_id"),
           unix_millis(col("c_ts")).as("click_ms"),
@@ -1282,9 +1283,13 @@ object StreamingQueries {
     // appendReplay convention, per feed. Its gap must clear the
     // 6-hour pane + the 60 s watermark delay or the FINAL pane never
     // finalizes (caught by the oracle: 595 vs 600 groups at 2 h).
+    // Both feeds are pure in sfDir, so they are cached fixtures.
     val sent = evSentinel(evs, gapMs = 43200000L)
-    val dirA = Replay.write(feedA :+ sent, 3, flush = Seq(sent))
-    val dirB = Replay.write(feedB :+ sent, 3, flush = Seq(sent))
+    def feed(half: String, rows: Seq[Ev]): String =
+      Replay.fixtureDir(("events-union", sfDir, half))(
+        Replay.write(rows :+ sent, 3, flush = Seq(sent)))
+    val dirA = feed("a", feedA)
+    val dirB = feed("b", feedB)
     def watermarked(dir: String) = Replay.read[Ev](ss, dir).withWatermark("ts", "60 seconds")
     // NO userId sentinel filter here, deliberately: a non-event-time
     // predicate gets PUSHED BELOW the EventTimeWatermark operator by
@@ -1295,7 +1300,7 @@ object StreamingQueries {
     // sentinel pane sits a full window+delay past the last real
     // event, so the watermark never passes its end and it is never
     // emitted.
-    toMemory(ss, "union_", dirs = Seq(dirA, dirB)) {
+    toMemory(ss, "union_") {
       watermarked(dirA).union(watermarked(dirB))
         .groupBy(window(col("ts"), "6 hours").as("w"), col("etype"))
         .agg(count(lit(1)).as("cnt"),
@@ -1325,10 +1330,9 @@ object StreamingQueries {
     */
   def enrichStream(spark: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(spark)
-    val evs = eventRows(ss, sfDir)
     val dim = graft.Tables.customer(ss, sfDir)
       .select(col("c_custkey").as("d_user"), col("c_mktsegment").as("segment"))
-    eventsReplay(ss, evs, evSentinel(evs, gapMs = 172800000L), "enrich_") { stream =>
+    eventsReplay(ss, sfDir, "enrich_", gapMs = 172800000L) { stream =>
       stream
         .withWatermark("ts", "60 seconds")
         .join(broadcast(dim), col("userId") === col("d_user"))

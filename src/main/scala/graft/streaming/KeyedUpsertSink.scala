@@ -79,6 +79,16 @@ final class KeyedUpsertSink(keyCols: Seq[String], logPath: String)
 
   private def dir: Path = Paths.get(localDir)
 
+  /** The row schema (with `_batch_id`) of the last write, which `toDF`
+    * and `compact` hand to their reads so Spark skips its schema-
+    * inference job. A sink that has not written yet (one opened over an
+    * existing log) infers.
+    */
+  @volatile private var logSchema: Option[StructType] = None
+
+  private def readLog(spark: SparkSession, paths: String*): DataFrame =
+    logSchema.fold(spark.read)(spark.read.schema).parquet(paths: _*)
+
   /** `foreachBatch` callback: executor-side write of the micro-batch
     * to the keyed upsert log, one file per partition.
     */
@@ -91,7 +101,8 @@ final class KeyedUpsertSink(keyCols: Seq[String], logPath: String)
     * schema-only file, so `toDF` can read an otherwise-empty log.
     */
   private def writeLog(df: DataFrame, prefix: String): Unit = {
-    val conf = writerConf(df.sparkSession, df.schema)
+    val schema = df.schema
+    val conf = writerConf(df.sparkSession, schema)
     val rdd = df.queryExecution.toRdd
     val d = localDir // the task closure takes locals, not the sink
     Files.createDirectories(dir)
@@ -99,6 +110,7 @@ final class KeyedUpsertSink(keyCols: Seq[String], logPath: String)
     else rdd.sparkContext.runJob(rdd,
       (ctx: TaskContext, rows: Iterator[InternalRow]) =>
         writePartition(d, prefix, ctx.partitionId(), conf, rows))
+    logSchema = Some(schema)
   }
 
   /** Current state: last-write-wins per key over the log. `max_by` of
@@ -115,7 +127,7 @@ final class KeyedUpsertSink(keyCols: Seq[String], logPath: String)
     * reduces to key dedup — `max_by(struct())` would fail analysis.
     */
   def toDF(spark: SparkSession): DataFrame =
-    fold(spark.read.parquet(logPath))
+    fold(readLog(spark, logPath))
 
   private def fold(log: DataFrame): DataFrame = {
     val valueCols = log.columns.filterNot(c => keyCols.contains(c) || c == "_batch_id")
@@ -153,7 +165,7 @@ final class KeyedUpsertSink(keyCols: Seq[String], logPath: String)
     val gen = consumed.flatMap(f =>
       "compact-g(\\d+)-".r.findFirstMatchIn(f.getFileName.toString)
         .map(_.group(1).toInt)).maxOption.getOrElse(0) + 1
-    val snapshot = spark.read.parquet(consumed.map(_.toString): _*)
+    val snapshot = readLog(spark, consumed.map(_.toString): _*)
     // a log holding only zero-row files (an empty micro-batch still
     // writes a schema-only parquet file) has nothing to fold — and
     // max(_batch_id) would be null. Leave the files; they carry the

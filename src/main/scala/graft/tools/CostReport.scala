@@ -41,8 +41,7 @@ object CostReport {
     val acc = new Acc
     spark.sparkContext.addSparkListener(acc)
     // warm the session so one-time init doesn't pollute the first row
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .groupBy("l_returnflag").count().count()
+    Session.warmUp(spark, sfDir)
     names.foreach { name =>
       acc.reset()
       val n = Bench.materialize(SparkEntry.queries(name)(spark, sfDir))

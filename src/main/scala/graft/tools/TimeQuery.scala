@@ -12,7 +12,7 @@ object TimeQuery {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
     val spark = Session()
-    spark.read.parquet(s"$sfDir/lineitem.parquet").groupBy("l_returnflag").count().count()
+    Session.warmUp(spark, sfDir)
     names.foreach { name =>
       (1 to reps).foreach { r =>
         val t0 = System.nanoTime()

@@ -152,6 +152,27 @@ class KeyedUpsertSinkSpec extends AnyFunSuite {
     } finally { plain.close(); compacted.close() }
   }
 
+  test("after a write, toDF and compact read the log with its schema: no inference job") {
+    import spark.implicits._
+    val (sink, other) = (newSink(Seq("k")), newSink(Seq("k")))
+    try {
+      Seq(sink, other).foreach { s =>
+        s.upsert(Seq((1, "a", 10L), (2, "b", 20L)).toDF("k", "v", "n"), 0L)
+        s.upsert(Seq((1, "a2", 11L)).toDF("k", "v", "n"), 1L)
+      }
+      assert(JobCount.during(spark)(sink.toDF(spark).queryExecution.executedPlan) == 0)
+      // a sink opened over an existing log has not written: it infers
+      val reopened = new KeyedUpsertSink(Seq("k"), sinkPath(other))
+      assert(JobCount.during(spark)(reopened.toDF(spark).queryExecution.executedPlan) == 1)
+      assert(reopened.toDF(spark).schema == sink.toDF(spark).schema)
+      // the same compaction over the same log, less the inference job
+      val inferred = JobCount.during(spark)(reopened.compact(spark))
+      assert(JobCount.during(spark)(sink.compact(spark)) == inferred - 1)
+      assert(state(sink) == Map(1 -> ("a2", 11L), 2 -> ("b", 20L)))
+      assert(state(reopened) == state(sink))
+    } finally { sink.close(); other.close() }
+  }
+
   test("all-key schema degenerates to key dedup") {
     import spark.implicits._
     val sink = newSink(Seq("k"))

@@ -96,12 +96,13 @@ class LiveOpsSpec extends AnyFunSuite {
 
     val ops = LiveOps.attach(ss, None)
     val ms = MemoryStream[Long]
+    val ckpt = TempDir.create("graft-livefail-").toString
     val q = ms.toDF().toDF("v")
       .select(when(col("v") === 1L, raise_error(lit("boom")))
         .otherwise(col("v")).as("checked"))
       .writeStream.outputMode("append")
       .format("memory").queryName("liveops_fail")
-      .option("checkpointLocation", TempDir.create("graft-livefail-").toString)
+      .option("checkpointLocation", ckpt)
       .start()
     try {
       ms.addData(1L)
@@ -116,6 +117,7 @@ class LiveOpsSpec extends AnyFunSuite {
     } finally {
       if (q.isActive) q.stop()
       ss.streams.removeListener(ops)
+      TempDir.deleteRecursively(ckpt)
     }
   }
 }
