@@ -210,27 +210,28 @@ object Bench {
     // Warm the *streaming* machinery too (incremental planner, state
     // store provider, offset/commit WAL, memory sink): the first
     // streaming replay otherwise pays ~1.5-2 s of one-time init that
-    // belongs to the JVM, not the query being timed.
+    // belongs to the JVM, not the query being timed. Every warm-up
+    // query runs through the replay lifecycle ([[Replay.run]]), which
+    // stops it, deletes its checkpoint and unloads its state-store
+    // providers even when it fails: a leaked warm provider would churn
+    // against its deleted checkpoint through the timed passes.
+    import graft.streaming.{CellEvent, Replay, RideEvent, TaxiPipelines, TaxiReplay}
+    def toMemory(df: DataFrame, name: String) =
+      df.writeStream.outputMode("append").format("memory").queryName(name)
     try {
-      import graft.streaming.TempDir
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       import spark.implicits._
       val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Int, Long)]
-      val ckpt = TempDir.create("graft-warm-")
-      val q = ms.toDF().toDF("k", "tMs")
+      Replay.run(toMemory(ms.toDF().toDF("k", "tMs")
         .withColumn("ts", timestamp_millis(col("tMs")))
         .withWatermark("ts", "1 second")
-        .groupBy(window(col("ts"), "1 second"), col("k")).count()
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt.toString)
-        .format("memory").queryName("graft_warmup")
-        .start()
-      try {
-        ms.addData(Seq((1, 1000L), (2, 2000L)))
-        q.processAllAvailable()
-        ms.addData(Seq((1, 100000000L)))
-        q.processAllAvailable()
-      } finally { q.stop(); TempDir.deleteRecursively(ckpt.toString) }
+        .groupBy(window(col("ts"), "1 second"), col("k")).count(), "graft_warmup")) {
+        (q, _) =>
+          ms.addData(Seq((1, 1000L), (2, 2000L)))
+          q.processAllAvailable()
+          ms.addData(Seq((1, 100000000L)))
+          q.processAllAvailable()
+      }
     } catch { case _: Throwable => () }
     // Warm the remaining stateful-operator paths the replay queries
     // use — flatMapGroupsWithState, dropDuplicatesWithinWatermark,
@@ -240,7 +241,6 @@ object Bench {
     // machine, JIT compilation is exactly the kind of fixed cost
     // that inflates multi-×; see SCALE.md round-7 variance notes).
     try {
-      import graft.streaming.{RideEvent, TaxiPipelines, TaxiReplay, TempDir}
       val ss = StreamingQueries.streamSession(spark)
       import ss.implicits._
       val evs = Seq(
@@ -248,44 +248,25 @@ object Bench {
         RideEvent(1L, 1000L, isStart = false, -74.0, 40.75, 1),
         RideEvent(3L, 2000L, isStart = false, -74.01, 40.76, 2))
       val sentinel = TaxiReplay.sentinelAfter(evs)
-      try {
-        // dedup + fMGWS in one pipeline
-        val (ms1, df1) = TaxiReplay.memoryStream(ss)
-        val ckpt1 = TempDir.create("graft-warm-")
-        val q1 = TaxiPipelines.earlyArrivalCount(
-            TaxiPipelines.cellProject(
-              df1.withWatermark("ts", "60 seconds")
-                .dropDuplicatesWithinWatermark("rideId")).as[graft.streaming.CellEvent],
-            threshold = 1)
-          .toDF().writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt1.toString)
-          .format("memory").queryName("graft_warm_fmgws")
-          .start()
-        try {
-          ms1.addData(evs :+ sentinel); q1.processAllAvailable()
-          ms1.addData(Seq(sentinel)); q1.processAllAvailable()
-        } finally { q1.stop(); TempDir.deleteRecursively(ckpt1.toString) }
-        // stream-stream interval join — the SAME pipeline the timed
-        // query plans (TaxiPipelines.rideDurationJoin)
-        val (ms2, df2) = TaxiReplay.memoryStream(ss)
-        val ckpt2 = TempDir.create("graft-warm-")
-        val q2 = TaxiPipelines.rideDurationJoin(df2)
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt2.toString)
-          .format("memory").queryName("graft_warm_ssjoin")
-          .start()
-        try {
+      // dedup + fMGWS in one pipeline
+      val (ms1, df1) = TaxiReplay.memoryStream(ss)
+      Replay.run(toMemory(TaxiPipelines.earlyArrivalCount(
+          TaxiPipelines.cellProject(
+            df1.withWatermark("ts", "60 seconds")
+              .dropDuplicatesWithinWatermark("rideId")).as[CellEvent],
+          threshold = 1).toDF(), "graft_warm_fmgws")) { (q, _) =>
+        ms1.addData(evs :+ sentinel); q.processAllAvailable()
+        ms1.addData(Seq(sentinel)); q.processAllAvailable()
+      }
+      // stream-stream interval join — the SAME pipeline the timed
+      // query plans (TaxiPipelines.rideDurationJoin)
+      val (ms2, df2) = TaxiReplay.memoryStream(ss)
+      Replay.run(toMemory(TaxiPipelines.rideDurationJoin(df2), "graft_warm_ssjoin")) {
+        (q, _) =>
           ms2.addData(Seq(
             RideEvent(10L, 1000L, isStart = true, -74.0, 40.75, 1),
             RideEvent(11L, 2000L, isStart = false, -74.0, 40.75, 1)))
-          q2.processAllAvailable()
-        } finally { q2.stop(); TempDir.deleteRecursively(ckpt2.toString) }
-      } finally {
-        // must run even on partial warm-up failure: leaked warm
-        // providers would otherwise churn against deleted checkpoint
-        // dirs through every timed query until the first replay's own
-        // cleanup — the exact contamination the bench exists to avoid
-        org.apache.spark.sql.graftbridge.StateStoreBridge.unloadAll()
+          q.processAllAvailable()
       }
     } catch { case _: Throwable => () }
     // Best-of-2 inside one JVM: co-tenant load swings totals ±30% and

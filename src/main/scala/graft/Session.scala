@@ -35,8 +35,8 @@ object Session {
 
   /** Warm `spark` up (codegen, the parquet read path through [[Tables]],
     * shuffle machinery) so the first timed query does not absorb
-    * one-time init. Bench, TimeQuery and CostReport run it before they
-    * time anything.
+    * one-time init. Bench and CostReport run it before they time
+    * anything.
     */
   def warmUp(spark: SparkSession, sfDir: String): Unit =
     Tables.lineitem(spark, sfDir).groupBy("l_returnflag").count().count()

@@ -54,46 +54,9 @@ object EventQueries {
     Seq("click", "error", "purchase", "signup", "view")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // Sessionization via session_window: per (user, session) the
-    // start, last-event time, event count and exact value sum. One
-    // shuffle on user_id; session merging is state-local.
-    "events_sessionize" -> ((s, dir) => {
-      Tables.events(s, dir)
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
-        .agg(
-          count(lit(1)).as("n_events"),
-          max(unix_millis(col("ts"))).as("last_t_ms"),
-          sum(col("value").cast("decimal(18,4)")).cast("double").as("sum_value"))
-        .select(
-          col("user_id"),
-          unix_millis(col("sw.start")).as("session_start_ms"),
-          col("last_t_ms"), col("n_events"), col("sum_value"))
-    }),
+    "events_sessionize" -> ((s, dir) => sessionize(Tables.events(s, dir))),
 
-    // Session windows with a DYNAMIC per-event gap — Spark's
-    // expression-valued session_window (a purchase holds the session
-    // open 60 min, anything else 30): the per-user-journey semantics
-    // a fixed gap can't express. Fixed-gap islands-by-lag is WRONG
-    // here — an event can extend the session past its successor's
-    // lag distance — so the session is the interval-merge closure
-    // [ts, ts+gap(event)) (end = max over merged events), which the
-    // oracle mirrors with a running MAX(t+gap) over preceding rows
-    // (ties ordered by event_id carry the same merge verdict either
-    // way — starts equal ⇒ always merged). Same single user-keyed
-    // shuffle as the fixed-gap entry; the gap expression is
-    // row-local.
-    "events_sessionize_dynamic" -> ((s, dir) => {
-      Tables.events(s, dir)
-        .groupBy(col("user_id"), session_window(col("ts"),
-          when(col("event_type") === "purchase", "60 minutes")
-            .otherwise("30 minutes")).as("sw"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(
-          col("user_id"),
-          unix_millis(col("sw.start")).as("session_start_ms"),
-          unix_millis(col("sw.end")).as("session_end_ms"),
-          col("n_events"))
-    }),
+    "events_sessionize_dynamic" -> ((s, dir) => sessionizeDynamic(Tables.events(s, dir))),
 
     // Pivot (long→wide reshape): per-user event counts, one column
     // per event type — the DataFrame API surface no other entry
@@ -934,12 +897,7 @@ object EventQueries {
     // regardless of which HLL regime the data lands in.
     "events_hll_registers" -> ((s, dir) => {
       import graft.functions.Sketches
-      val h = Sketches.sketchHash(col("event_id"))
-      Tables.events(s, dir)
-        .select(col("event_type"),
-          Sketches.hllBucket(h).as("bucket"), Sketches.hllRho(h).as("rho"))
-        .groupBy(col("event_type"), col("bucket"))
-        .agg(max(col("rho")).as("r"))
+      hllRegisters(Tables.events(s, dir), "event_type")
         .groupBy(col("event_type"))
         .agg(
           (lit(Sketches.HllM.toLong) - count(lit(1))).as("v_empty"),
@@ -1232,14 +1190,7 @@ object EventQueries {
     // without the slice every bitmap saturates identically and a
     // type-blind bug would slip the oracle.
     "events_bitmap_distinct" -> ((s, dir) => {
-      Tables.events(s, dir)
-        .filter(col("value") >= KmvValueMin)
-        .select(col("event_type"),
-          expr(s"user_id div $BmBits").as("block"),
-          expr(s"shiftleft(CAST(1 AS BIGINT), CAST(user_id % $BmBits AS INT))")
-            .as("m"))
-        .groupBy(col("event_type"), col("block"))
-        .agg(bit_or(col("m")).as("bm"))
+      bitmapBlocks(Tables.events(s, dir))
         .groupBy(col("event_type"))
         .agg(sum(bit_count(col("bm"))).cast("long").as("n_users"),
           count(lit(1)).as("n_blocks"))
@@ -1337,6 +1288,78 @@ object EventQueries {
           .cast("long") % CmsW).as("b"))
       .groupBy(col("d"), col("b")).agg(count(lit(1)).as("c"))
   }
+
+  /** Sessionization via session_window: per (user, 30-minute session)
+    * the start, last-event time, event count and exact value sum. One
+    * shuffle on user_id; session merging is state-local. The batch
+    * entry `events_sessionize`, and `events_sessionize_stream` on its
+    * watermarked feed.
+    */
+  private[queries] def sessionize(events: DataFrame): DataFrame =
+    events
+      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
+      .agg(
+        count(lit(1)).as("n_events"),
+        max(unix_millis(col("ts"))).as("last_t_ms"),
+        sum(col("value").cast("decimal(18,4)")).cast("double").as("sum_value"))
+      .select(
+        col("user_id"),
+        unix_millis(col("sw.start")).as("session_start_ms"),
+        col("last_t_ms"), col("n_events"), col("sum_value"))
+
+  /** Session windows with a DYNAMIC per-event gap — Spark's
+    * expression-valued session_window (a purchase holds the session
+    * open 60 min, anything else 30): the per-user-journey semantics a
+    * fixed gap can't express. Fixed-gap islands-by-lag is WRONG here —
+    * an event can extend the session past its successor's lag
+    * distance — so the session is the interval-merge closure
+    * [ts, ts+gap(event)) (end = max over merged events), which the
+    * oracle mirrors with a running MAX(t+gap) over preceding rows
+    * (ties ordered by event_id carry the same merge verdict either way
+    * — starts equal ⇒ always merged). Same single user-keyed shuffle as
+    * [[sessionize]]; the gap expression is row-local. The batch entry
+    * `events_sessionize_dynamic`, and its `_stream` twin.
+    */
+  private[queries] def sessionizeDynamic(events: DataFrame): DataFrame =
+    events
+      .groupBy(col("user_id"), session_window(col("ts"),
+        when(col("event_type") === "purchase", "60 minutes")
+          .otherwise("30 minutes")).as("sw"))
+      .agg(count(lit(1)).as("n_events"))
+      .select(
+        col("user_id"),
+        unix_millis(col("sw.start")).as("session_start_ms"),
+        unix_millis(col("sw.end")).as("session_end_ms"),
+        col("n_events"))
+
+  /** HLL registers (bucket, r = max rho) of the `event_id` hashes per
+    * `keys` — a max-merged two-phase agg. `events_hll_registers` keys
+    * them by event type; `events_hll_stream` keeps one register table.
+    */
+  private[queries] def hllRegisters(events: DataFrame, keys: String*): DataFrame = {
+    import graft.functions.Sketches
+    val h = Sketches.sketchHash(col("event_id"))
+    events
+      .select(keys.map(col) :+ Sketches.hllBucket(h).as("bucket") :+
+        Sketches.hllRho(h).as("rho"): _*)
+      .groupBy((keys :+ "bucket").map(col): _*)
+      .agg(max(col("rho")).as("r"))
+  }
+
+  /** Bitmap block table (event_type, block, bm) of the high-value
+    * slice ([[KmvValueMin]]): one [[BmBits]]-bit word per
+    * (type, user_id div BmBits), OR-merged — commutative and
+    * idempotent. `events_bitmap_distinct` popcounts it;
+    * `events_bitmap_stream` keeps it as streaming state.
+    */
+  private[queries] def bitmapBlocks(events: DataFrame): DataFrame =
+    events
+      .filter(col("value") >= KmvValueMin)
+      .select(col("event_type"),
+        expr(s"user_id div $BmBits").as("block"),
+        expr(s"shiftleft(CAST(1 AS BIGINT), CAST(user_id % $BmBits AS INT))").as("m"))
+      .groupBy(col("event_type"), col("block"))
+      .agg(bit_or(col("m")).as("bm"))
 
   /** KMV sketch size (k-th minimum order statistic): below the
     * per-type distinct-user-hash count at sf0.01+ (estimator branch)

@@ -295,6 +295,14 @@ object StreamingQueries {
     Replay.read[Ev](ss,
       Replay.fixtureDir(("events", sfDir))(Replay.write(eventRows(ss, sfDir), 3)))
 
+  /** The events wire feed under the `events` table's names, so the
+    * batch entries' functions in [[EventQueries]] apply to it
+    * unchanged.
+    */
+  private def asEventsTable(feed: DataFrame): DataFrame =
+    feed.select(col("userId").as("user_id"), col("eventId").as("event_id"),
+      col("etype").as("event_type"), col("value"), col("ts"))
+
   /** Far-future zero-weight sentinel for the events file replays: it
     * advances the watermark past every real pane (userId = −1, value =
     * 0 — callers filter the id and it can change no sum). `gapMs`
@@ -636,13 +644,9 @@ object StreamingQueries {
     * registers never retract).
     */
   def hllRegisterStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.functions.Sketches
     val ss = streamSession(spark)
-    val h = Sketches.sketchHash(col("eventId"))
     toUpsertSink(ss, new KeyedUpsertSink(Seq("bucket"))) {
-      eventsStream(ss, sfDir)
-        .select(Sketches.hllBucket(h).as("bucket"), Sketches.hllRho(h).as("rho"))
-        .groupBy(col("bucket")).agg(max(col("rho")).as("r"))
+      EventQueries.hllRegisters(asEventsTable(eventsStream(ss, sfDir)))
     }
   }
 
@@ -657,15 +661,8 @@ object StreamingQueries {
     */
   def cmsStream(spark: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(spark)
-    val salts = (0 until EventQueries.CmsD).map(d => lit(d.toString))
     toUpsertSink(ss, new KeyedUpsertSink(Seq("d", "b"))) {
-      eventsStream(ss, sfDir)
-        .select(explode(array(salts: _*)).as("d"),
-          col("userId").cast("string").as("k"))
-        .select(col("d"),
-          (conv(substring(md5(concat(col("d"), lit(":"), col("k"))), 1, 8), 16, 10)
-            .cast("long") % EventQueries.CmsW).as("b"))
-        .groupBy(col("d"), col("b")).agg(count(lit(1)).as("c"))
+      EventQueries.cmsCells(asEventsTable(eventsStream(ss, sfDir)))
     }
   }
 
@@ -685,17 +682,8 @@ object StreamingQueries {
     */
   def bitmapStream(spark: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(spark)
-    val bits = EventQueries.BmBits
     toUpsertSink(ss, new KeyedUpsertSink(Seq("event_type", "block"))) {
-      // high-value slice (the KMV/bitmap convention): per-type sets
-      // genuinely differ, so the converged bitmaps are type-dependent
-      eventsStream(ss, sfDir)
-        .filter(col("value") >= EventQueries.KmvValueMin)
-        .select(col("etype").as("event_type"),
-          expr(s"userId div $bits").as("block"),
-          expr(s"shiftleft(CAST(1 AS BIGINT), CAST(userId % $bits AS INT))").as("m"))
-        .groupBy(col("event_type"), col("block"))
-        .agg(expr("bit_or(m)").as("bm"))
+      EventQueries.bitmapBlocks(asEventsTable(eventsStream(ss, sfDir)))
     }
   }
 
@@ -927,8 +915,9 @@ object StreamingQueries {
 
   /** Streaming sessionization over the `events` table — session
     * windows run *as a stream* (the reference README markets session
-    * windows; no demo uses them; the batch twin is
-    * `events_sessionize`). `session_window` + watermark in Append
+    * windows; no demo uses them): [[EventQueries.sessionize]], the
+    * batch twin `events_sessionize`, on the watermarked feed.
+    * `session_window` + watermark in Append
     * mode: sessions are state-local per user, merged as events arrive
     * (order-insensitive), emitted when the watermark passes
     * session-end + gap — so the flushed results equal the batch
@@ -939,17 +928,7 @@ object StreamingQueries {
   def sessionizeStream(spark: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(spark)
     eventsReplay(ss, sfDir, "sess_", gapMs = 7200000L) { stream =>
-      stream
-        .withWatermark("ts", "60 seconds")
-        .groupBy(col("userId"), session_window(col("ts"), "30 minutes").as("sw"))
-        .agg(
-          count(lit(1)).as("n_events"),
-          max(col("tMs")).as("last_t_ms"),
-          sum(col("value").cast("decimal(18,4)")).cast("double").as("sum_value"))
-        .select(
-          col("userId").as("user_id"),
-          unix_millis(col("sw.start")).as("session_start_ms"),
-          col("last_t_ms"), col("n_events"), col("sum_value"))
+      EventQueries.sessionize(asEventsTable(stream).withWatermark("ts", "60 seconds"))
     }.filter(col("user_id") >= 0)
   }
 
@@ -957,23 +936,14 @@ object StreamingQueries {
     * `session_window` (purchase holds the session open 60 min, else
     * 30) under a watermark in Append mode; the state-local interval
     * merge is order-insensitive, so the flushed sessions equal the
-    * batch interval-merge-closure oracle (`events_sessionize_dynamic`)
-    * exactly. Sentinel gap 2 h clears the largest per-event gap.
+    * batch interval-merge-closure oracle (`events_sessionize_dynamic`,
+    * the same [[EventQueries.sessionizeDynamic]]) exactly. Sentinel gap
+    * 2 h clears the largest per-event gap.
     */
   def sessionizeDynamicStream(spark: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(spark)
     eventsReplay(ss, sfDir, "sessd_", gapMs = 7200000L) { stream =>
-      stream
-        .withWatermark("ts", "60 seconds")
-        .groupBy(col("userId"), session_window(col("ts"),
-          when(col("etype") === "purchase", "60 minutes")
-            .otherwise("30 minutes")).as("sw"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(
-          col("userId").as("user_id"),
-          unix_millis(col("sw.start")).as("session_start_ms"),
-          unix_millis(col("sw.end")).as("session_end_ms"),
-          col("n_events"))
+      EventQueries.sessionizeDynamic(asEventsTable(stream).withWatermark("ts", "60 seconds"))
     }.filter(col("user_id") >= 0)
   }
 
@@ -1700,6 +1670,13 @@ object StreamingQueries {
     "taxi_running_stream" -> (runningStream _)
   )
 
+  /** The batch stopword gate the three docs ingress entries converge to. */
+  private val docsGateSql: String =
+    s"""SELECT doc_id, source,
+       |  ${graft.functions.TextFunctions.Sql.tokenCount("text")} AS n_tokens
+       |FROM documents
+       |WHERE ${graft.functions.TextFunctions.Sql.stopwordRatio("text")} >= 0.05""".stripMargin
+
   /** Streaming results must converge to the batch oracles. */
   val oracleSql: Map[String, String] = Map(
     // freeze-and-append must equal the batch whole-corpus encode
@@ -1737,11 +1714,7 @@ object StreamingQueries {
         |    event_type, value FROM events)
         |GROUP BY w_start_ms, event_type""".stripMargin,
     // exactly-once restoration + gate must equal the batch gate
-    "docs_ingest_stream" ->
-      s"""SELECT doc_id, source,
-         |  ${graft.functions.TextFunctions.Sql.tokenCount("text")} AS n_tokens
-         |FROM documents
-         |WHERE ${graft.functions.TextFunctions.Sql.stopwordRatio("text")} >= 0.05""".stripMargin,
+    "docs_ingest_stream" -> docsGateSql,
     // the grown manifest must equal the batch "index ∪ non-dup delta":
     // the dup set is dedup_incremental's verified-probe relation
     "docs_incremental_stream" -> {
@@ -1771,16 +1744,8 @@ object StreamingQueries {
          |WHERE d.doc_id NOT IN (SELECT new_id FROM dup)""".stripMargin
     },
     // file ingress must converge to the identical batch gate
-    "docs_ingest_available_now" ->
-      s"""SELECT doc_id, source,
-         |  ${graft.functions.TextFunctions.Sql.tokenCount("text")} AS n_tokens
-         |FROM documents
-         |WHERE ${graft.functions.TextFunctions.Sql.stopwordRatio("text")} >= 0.05""".stripMargin,
-    "docs_ingest_file_stream" ->
-      s"""SELECT doc_id, source,
-         |  ${graft.functions.TextFunctions.Sql.tokenCount("text")} AS n_tokens
-         |FROM documents
-         |WHERE ${graft.functions.TextFunctions.Sql.stopwordRatio("text")} >= 0.05""".stripMargin,
+    "docs_ingest_available_now" -> docsGateSql,
+    "docs_ingest_file_stream" -> docsGateSql,
     "taxi_total_stream" -> TaxiQueries.oracleSql("taxi_total_count"),
     // per-record network emission under fault injection must converge
     // to the same batch state as the foreachBatch log sink

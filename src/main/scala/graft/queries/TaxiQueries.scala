@@ -1,40 +1,31 @@
 package graft.queries
 
-import graft.Tables
 import graft.geo.NycGeo
+import graft.streaming.TaxiPipelines
+import graft.streaming.TaxiReplay.ridesFromEvents
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's three taxi pipelines (SURVEY.md §2 O4–O12, O15) in
   * batch form, oracle-checked. The reference's taxi data file is absent
-  * from its clone, so the pipelines run over a deterministic "rides"
-  * view derived from the driver's `events` table: lon/lat/passenger
-  * fields are pure integer arithmetic on event columns, computable
-  * identically by Spark and DuckDB. The *streaming* forms of the same
-  * pipelines live in `graft.streaming` and are equivalence-tested
-  * against these batch plans in ScalaTest (SURVEY.md §5.1).
+  * from its clone, so the pipelines run over a deterministic rides view
+  * of the driver's `events` table ([[graft.streaming.TaxiReplay.ridesFromEvents]]):
+  * lon/lat/passenger fields are pure integer arithmetic on event
+  * columns, computable identically by Spark and DuckDB (`ridesSql`).
   *
-  * Event time is epoch milliseconds throughout (`t_ms`), matching the
-  * reference's native unit (Flink event time, `TaxiRideSource.scala:116`)
-  * and sidestepping ns-vs-µs parquet timestamp mismatches.
+  * One pipeline per operator: every entry reads that rides frame, the
+  * cell-keyed ones through [[TaxiPipelines.cellProject]], and the
+  * total, sliding and ride-duration entries ARE the functions their
+  * streaming twins run ([[TaxiPipelines]]). On a batch frame the
+  * pipelines' `withWatermark` is a no-op the optimizer removes
+  * (PlanShapeSpec pins that). The DuckDB SQL below is the reference
+  * implementation every entry, batch or stream, is checked against.
+  *
+  * Output event times are epoch milliseconds (`t_ms`, `w_end_ms`),
+  * matching the reference's native unit (Flink event time,
+  * `TaxiRideSource.scala:116`).
   */
 object TaxiQueries {
-
-  /** Deterministic rides view over `events`:
-    *   rideId = event_id, t_ms = epoch ms, isStart = even event_id,
-    *   lon/lat = bounded integer lattice inside the NYC bbox,
-    *   passengers = 1..4.
-    * A fraction of points (user_id % 360 > 350 → lon east of −73.7)
-    * falls OUTSIDE the bbox so the O5 filter is actually exercised.
-    */
-  private def rides(s: SparkSession, dir: String): DataFrame =
-    Tables.events(s, dir).select(
-      col("event_id").as("rideId"),
-      unix_millis(col("ts")).as("t_ms"),
-      (col("event_id") % 2 === 0).as("isStart"),
-      (lit(-74.05) + (col("user_id") % 360) * lit(0.001)).as("lon"),
-      (lit(40.5) + (col("event_id") % 520) * lit(0.001)).as("lat"),
-      (col("event_id") % 4 + 1).cast("int").as("passengers"))
 
   private val ridesSql: String =
     """SELECT event_id AS rideId,
@@ -45,18 +36,6 @@ object TaxiQueries {
       |       CAST(event_id % 4 + 1 AS INT) AS passengers
       |FROM events""".stripMargin
 
-  /** Shared prefix of all three pipelines: END events, in-NYC, cell id
-    * (reference O4 → O5 → O6/O7). Filters sit before the shuffle;
-    * Catalyst pushes them into the parquet scan.
-    */
-  private def cellEvents(s: SparkSession, dir: String): DataFrame =
-    rides(s, dir)
-      .filter(!col("isStart"))
-      .filter(NycGeo.isInNYC(col("lon"), col("lat")))
-      .select(
-        NycGeo.gridCell(col("lon"), col("lat")).as("cell"),
-        col("rideId"), col("t_ms"), col("passengers"))
-
   private val cellEventsSql: String =
     s"""SELECT ${NycGeo.Sql.gridCell} AS cell, rideId, t_ms, passengers
        |FROM ($ridesSql)
@@ -66,49 +45,31 @@ object TaxiQueries {
     // O9 TotalArrivalCount, final-state form: per cell, last event time
     // + running passenger total + cell center (O12). One shuffle on
     // `cell` (bounded key space: 100k cells — SURVEY §6).
-    "taxi_total_count" -> ((s, dir) => {
-      cellEvents(s, dir)
-        .groupBy(col("cell"))
-        .agg(max(col("t_ms")).as("last_t_ms"), sum(col("passengers")).as("cnt"))
-        .select(
-          col("cell"), col("last_t_ms"), col("cnt"),
-          NycGeo.cellCenterLon(col("cell")).as("center_lon"),
-          NycGeo.cellCenterLat(col("cell")).as("center_lat"))
-    }),
+    "taxi_total_count" -> ((s, dir) =>
+      TaxiPipelines.totalArrivalCount(ridesFromEvents(s, dir).toDF())),
 
     // O9 exact per-event emission (running fold): batch window-function
-    // form — running sum per cell ordered by (t_ms, rideId).
+    // form — running sum per cell ordered by (ts, rideId).
     "taxi_running_count" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("cell"))
-        .orderBy(col("t_ms"), col("rideId"))
+        .orderBy(col("ts"), col("rideId"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      cellEvents(s, dir)
-        .select(col("cell"), col("rideId"), col("t_ms"),
+      TaxiPipelines.cellProject(ridesFromEvents(s, dir).toDF())
+        .select(col("cell"), col("rideId"), unix_millis(col("ts")).as("t_ms"),
           sum(col("passengers")).over(w).as("running_cnt"))
     }),
 
     // O10 SlidingArrivalCount: 15-min window / 5-min slide per cell.
     // Spark's `window()` explodes each event into its 3 overlapping
     // panes and pre-aggregates map-side before the shuffle.
-    "taxi_sliding_count" -> ((s, dir) => {
-      cellEvents(s, dir)
-        .withColumn("ts", timestamp_millis(col("t_ms")))
-        .groupBy(window(col("ts"), "15 minutes", "5 minutes"), col("cell"))
-        .agg(sum(col("passengers")).as("cnt"))
-        .select(
-          col("cell"),
-          unix_millis(col("window.end")).as("w_end_ms"),
-          col("cnt"),
-          NycGeo.cellCenterLon(col("cell")).as("center_lon"),
-          NycGeo.cellCenterLat(col("cell")).as("center_lat"))
-    }),
+    "taxi_sliding_count" -> ((s, dir) =>
+      TaxiPipelines.slidingArrivalCount(ridesFromEvents(s, dir).toDF())),
 
     // Tumbling window = degenerate slide (slide == size): the API case
     // the reference supports but no demo uses (SURVEY §2.1 Streaming).
     "taxi_tumbling_count" -> ((s, dir) => {
-      cellEvents(s, dir)
-        .withColumn("ts", timestamp_millis(col("t_ms")))
+      TaxiPipelines.cellProject(ridesFromEvents(s, dir).toDF())
         .groupBy(window(col("ts"), "15 minutes"), col("cell"))
         .agg(sum(col("passengers")).as("cnt"))
         .select(col("cell"), unix_millis(col("window.end")).as("w_end_ms"), col("cnt"))
@@ -116,21 +77,12 @@ object TaxiQueries {
 
     // The latent ride-duration interval join (SURVEY.md §2.1 "Joins"):
     // START and END events of a ride pair on pair_id within a ±1 h
-    // event-time bound. Batch form of the stream-stream interval join
-    // in StreamingQueries. Equi-join on pair_id → single shuffle,
-    // AQE-handled; the time bound is the state-cleanup contract in the
-    // streaming twin.
-    "taxi_ride_duration" -> ((s, dir) => {
-      val r = rides(s, dir)
-      val starts = r.filter(col("isStart"))
-        .select(expr("rideId div 2").as("pair_id"), col("t_ms").as("t_start"))
-      val ends = r.filter(!col("isStart"))
-        .select(expr("rideId div 2").as("pair_id"), col("t_ms").as("t_end"))
-      starts.join(ends, Seq("pair_id"))
-        .filter(col("t_end").between(col("t_start") - 3600000L, col("t_start") + 3600000L))
-        .select(col("pair_id"), col("t_start"), col("t_end"),
-          (col("t_end") - col("t_start")).as("duration_ms"))
-    }),
+    // event-time bound — the stream-stream join of
+    // `taxi_duration_stream` on a batch frame. Equi-join on pair_id →
+    // single shuffle, AQE-handled; the time bound is the state-cleanup
+    // contract in the streaming twin.
+    "taxi_ride_duration" -> ((s, dir) =>
+      TaxiPipelines.rideDurationJoin(ridesFromEvents(s, dir).toDF())),
 
     // Origin→destination matrix — the trip-flow rollup a taxi/mobility
     // deployment actually reports (reference computes arrivals only;
@@ -143,7 +95,7 @@ object TaxiQueries {
     // leg carries the passenger count (the reference's convention:
     // arrivals own the count).
     "taxi_od_matrix" -> ((s, dir) => {
-      val r = rides(s, dir).filter(NycGeo.isInNYC(col("lon"), col("lat")))
+      val r = ridesFromEvents(s, dir).filter(NycGeo.isInNYC(col("lon"), col("lat")))
       val o = r.filter(col("isStart"))
         .select(expr("rideId div 2").as("pair_id"),
           NycGeo.gridCell(col("lon"), col("lat")).as("o_cell"))
@@ -160,12 +112,11 @@ object TaxiQueries {
     // event via explode(array(...)) — the awk script's 1→2 expansion
     // (`convertTrips.sh:35`) as a single narrow Spark stage, no shuffle.
     "taxi_etl_explode" -> ((s, dir) => {
-      val r = rides(s, dir).filter(col("isStart"))
-      r.select(
+      ridesFromEvents(s, dir).filter(col("isStart")).select(
         col("rideId"),
         explode(array(
-          struct(col("t_ms").as("t_ms"), lit("START").as("tag")),
-          struct((col("t_ms") + (col("passengers") * lit(60000L))).as("t_ms"),
+          struct(col("tMs").as("t_ms"), lit("START").as("tag")),
+          struct((col("tMs") + (col("passengers") * lit(60000L))).as("t_ms"),
             lit("END").as("tag")))).as("ev"))
         .select(col("rideId"), col("ev.t_ms").as("t_ms"), col("ev.tag").as("tag"))
     }),
@@ -185,9 +136,9 @@ object TaxiQueries {
     // day-total consumers share one pass. Exact integers throughout.
     "taxi_concurrency" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val iv = rides(s, dir).filter(col("isStart"))
-        .select(col("t_ms").as("t_start"),
-          (col("t_ms") + col("passengers") * lit(120000L)).as("t_end"))
+      val iv = ridesFromEvents(s, dir).filter(col("isStart"))
+        .select(col("tMs").as("t_start"),
+          (col("tMs") + col("passengers") * lit(120000L)).as("t_end"))
       val deltas = iv.select(col("t_start").as("t_ms"), lit(1L).as("delta"))
         .unionAll(iv.select(col("t_end").as("t_ms"), lit(-1L).as("delta")))
       val agg = deltas.groupBy(col("t_ms")).agg(sum(col("delta")).as("d"))

@@ -5,7 +5,12 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** The reference's three streaming pipelines on Structured Streaming.
+/** The reference's three pipelines, defined once for Structured
+  * Streaming and batch: each function takes a ride stream or a batch
+  * rides frame ([[TaxiReplay.ridesFromEvents]]), and the batch
+  * `taxi_*` entries in `TaxiQueries` apply the same functions as their
+  * streaming twins. On a batch frame `withWatermark` is a no-op that
+  * the optimizer removes.
   *
   * All three share the prefix: watermark → END-filter → NYC bbox →
   * grid-cell projection (reference O2-O7). The watermark is declared
@@ -20,7 +25,8 @@ object TaxiPipelines {
   val WindowSlideMs: Long = 5 * 60 * 1000L
 
   /** Shared pipeline prefix. `stream` needs columns
-    * (rideId, ts: timestamp, isStart, lon, lat, passengers).
+    * (rideId, ts: timestamp, isStart, lon, lat, passengers), as every
+    * ride feed and the batch rides view carry them.
     */
   def cellEvents(stream: DataFrame, watermarkDelay: String): DataFrame =
     cellProject(stream.withWatermark("ts", watermarkDelay))
@@ -79,9 +85,9 @@ object TaxiPipelines {
     * sides carry the watermark; the time-range condition is the
     * state-expiry contract — without it stream-stream join state
     * grows forever (the 100 TB failure mode). The ONE definition of
-    * this pipeline: the oracle query (`taxi_duration_stream`) and the
-    * bench warm-up both build it here, so the warmed plan IS the
-    * shipped plan.
+    * this pipeline: the batch entry (`taxi_ride_duration`), its
+    * streaming twin (`taxi_duration_stream`) and the bench warm-up all
+    * build it here, so the warmed plan IS the shipped plan.
     */
   def rideDurationJoin(stream: DataFrame, watermarkDelay: String = "60 seconds"): DataFrame = {
     val wm = stream.withWatermark("ts", watermarkDelay)

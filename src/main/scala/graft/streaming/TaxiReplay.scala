@@ -32,9 +32,14 @@ import org.apache.spark.sql.functions._
   */
 object TaxiReplay {
 
-  /** Deterministic rides view over the driver's `events` table —
-    * identical projection to `TaxiQueries.rides` (kept in sync by the
-    * streaming-equivalence spec).
+  /** The rides view over the driver's `events` table — the one Spark
+    * spelling of it: the batch `taxi_*` entries read it as a frame, and
+    * the replays collect it into their feeds. rideId = event_id, tMs =
+    * epoch ms, isStart = even event_id, lon/lat = a bounded integer
+    * lattice inside the NYC bbox (user_id % 360 > 350 falls east of
+    * it, so the bbox filter is exercised), passengers = 1..4. It
+    * carries the event-time `ts` the feeds carry, so the
+    * [[TaxiPipelines]] functions apply to it unchanged.
     */
   def ridesFromEvents(spark: SparkSession, sfDir: String): Dataset[RideEvent] = {
     import spark.implicits._
@@ -45,6 +50,7 @@ object TaxiReplay {
       (lit(-74.05) + (col("user_id") % 360) * lit(0.001)).as("lon"),
       (lit(40.5) + (col("event_id") % 520) * lit(0.001)).as("lat"),
       (col("event_id") % 4 + 1).cast("int").as("passengers"))
+      .withColumn("ts", timestamp_millis(col("tMs")))
       .as[RideEvent]
   }
 

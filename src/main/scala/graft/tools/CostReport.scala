@@ -3,13 +3,14 @@ package graft.tools
 import graft.{Bench, Session, SparkEntry}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
-/** Measured physical cost of a named query — rows/bytes through the
-  * shuffle system and bytes read from storage, straight from the task
-  * metrics (not estimates): the evidence behind SCALE.md's "only X
-  * crosses the exchange" claims. The query is materialized exactly
-  * as `Bench` times it, so every output column is computed.
+/** Time and measured physical cost of named queries: per rep, the wall
+  * time, the output rows, and the rows/bytes through the shuffle
+  * system and bytes read from storage, straight from the task metrics
+  * (not estimates) — the evidence behind SCALE.md's "only X crosses the
+  * exchange" claims. After `Session.warmUp`, each rep is materialized
+  * exactly as `Bench` times it, so every output column is computed.
   *
-  *   sbt "runMain graft.tools.CostReport <name> [sfDir]"
+  *   sbt "runMain graft.tools.CostReport <name>[,<name>...] [sfDir] [reps]"
   */
 object CostReport {
   private class Acc extends SparkListener {
@@ -37,17 +38,20 @@ object CostReport {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(',').map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
+    val reps = if (args.length > 2) args(2).toInt else 2
     val spark = Session()
     val acc = new Acc
     spark.sparkContext.addSparkListener(acc)
     // warm the session so one-time init doesn't pollute the first row
     Session.warmUp(spark, sfDir)
-    names.foreach { name =>
+    for (name <- names; r <- 1 to reps) {
       acc.reset()
+      val t0 = System.nanoTime()
       val n = Bench.materialize(SparkEntry.queries(name)(spark, sfDir))
+      val secs = (System.nanoTime() - t0) / 1e9
       // listener events are delivered async; drain before reading
       org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-      println(f"[cost] $name: out_rows=$n input=${acc.inputRecords}%,d rows" +
+      println(f"[cost] $name rep$r: $secs%.3f s out_rows=$n input=${acc.inputRecords}%,d rows" +
         f"/${acc.inputBytes / 1024}%,d KiB shuffle_write=${acc.shufWriteRecords}%,d rows" +
         f"/${acc.shufWrite / 1024}%,d KiB shuffle_read=${acc.shufRead / 1024}%,d KiB")
     }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.plans.AsOfJoinExec
+import graft.queries.StreamingQueries
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,23 +19,7 @@ class PlanShapeSpec extends AnyFunSuite {
   /** Streaming entries execute a replay on call (their returned frame
     * is the materialized result, not the plan under test).
     */
-  private val streamingEntries = Set(
-    "taxi_total_stream", "taxi_total_tws", "taxi_total_bootstrap",
-    "taxi_total_complete",
-    "taxi_sliding_stream", "taxi_rollup_stream", "taxi_early_stream",
-    "taxi_early_fires", "taxi_duration_stream", "taxi_running_stream",
-    "taxi_dedup_stream", "events_sessionize_stream",
-    "events_sessionize_dynamic_stream", "events_expectations_stream",
-    "taxi_sliding_file_stream", "taxi_late_drop", "docs_ingest_stream",
-    "docs_ingest_file_stream", "docs_ingest_available_now",
-    "docs_incremental_stream",
-    "events_funnel_stream", "events_attribution_stream",
-    "events_attribution_full_stream", "events_trending_stream",
-    "events_enrich_stream", "events_debounce_stream",
-    "events_type_counts_stream", "events_rate_stream",
-    "events_hll_stream", "events_cms_stream",
-    "embedding_ingest_stream", "dedup_cc_stream",
-    "multimodal_ingest_stream")
+  private val streamingEntries = StreamingQueries.queries.keySet
 
   /** Pre-AQE physical plan: assertable deterministically; AQE only
     * re-plans *away* from shapes asserted here on runtime stats.
@@ -361,5 +346,17 @@ class PlanShapeSpec extends AnyFunSuite {
     }
     assert(partials.size == 2,
       s"expected 2 partial k-min aggregation stages (build + union), found ${partials.size}")
+  }
+
+  test("batch taxi entries share the streaming functions without a watermark in their plans") {
+    // taxi_total_count, taxi_sliding_count and taxi_ride_duration ARE
+    // TaxiPipelines' streaming functions applied to the batch rides
+    // frame; their withWatermark must be gone from the batch plan
+    Seq("taxi_total_count", "taxi_sliding_count", "taxi_ride_duration").foreach { name =>
+      val wm = SparkEntry.queries(name)(spark, sf).queryExecution.optimizedPlan.collect {
+        case w: org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark => w
+      }
+      assert(wm.isEmpty, s"$name plans an EventTimeWatermark")
+    }
   }
 }
