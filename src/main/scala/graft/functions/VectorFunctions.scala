@@ -12,6 +12,11 @@ import org.apache.spark.sql.functions._
   * left-to-right summation order so Spark and the DuckDB `Sql`
   * mirrors produce bit-identical results.
   *
+  * Driver-held models (learned centroids, PQ codebooks, lattice rows
+  * as data) are applied by [[VectorModel]], the one place for the
+  * scoring order and the tie-break; the literal lattice weights below
+  * come from [[VectorModel.latticeWeight]].
+  *
   * Query-shape rule for 100 TB: precompute `norm` once per vector
   * *before* any join (it's O(dim) per row), so each candidate pair
   * costs exactly one dot product.
@@ -58,45 +63,34 @@ object VectorFunctions {
   def dotInt(a: Column, b: Column): Column = DotProductInt(a, b)
 
   /** Random-hyperplane LSH bucket id: k sign bits of dot products with
-    * deterministic integer-lattice hyperplanes
-    * w(h, j) = ((((h·1000003 + j)·2654435761) div 1024) mod 7) − 3
-    * (j is 1-based). The integer-divide-then-mod breaks the mod-7
-    * periodicity a plain polynomial family has (any polynomial mod 7
-    * is a function of h mod 7, which would make bits h and h+7
-    * IDENTICAL hyperplanes — fatal once buckets are sliced into
-    * multi-bit LSH bands). The product maxes at ~8.2e16, exact in both
-    * a Scala Long and a DuckDB BIGINT, so the bucket is computable
-    * identically in the SQL oracle; the sign of a double dot product
-    * flips only within ~1e-12 of 0.
+    * the deterministic integer-lattice hyperplanes
+    * [[VectorModel.latticeWeight]](h, j), h = 0 until k (the divide-
+    * then-mod family keeps bits h and h+7 distinct — needed once
+    * buckets are sliced into multi-bit LSH bands). The bucket is
+    * computable identically in the SQL oracle; the sign of a double
+    * dot product flips only within ~1e-12 of 0.
     */
   def lshBucket(a: Column, dim: Int, k: Int): Column = {
     val bits = (0 until k).map { h =>
-      val plane = array((1 to dim).map { j =>
-        lit((((h.toLong * 1000003L + j) * 2654435761L / 1024L) % 7L - 3L).toFloat)
-      }: _*)
+      val plane = array((1 to dim).map(j => lit(VectorModel.latticeWeight(h, j))): _*)
       when(dot(a, plane) > 0, lit(1L << h)).otherwise(lit(0L))
     }
     bits.reduce(_ + _)
   }
 
   /** Deterministic coarse-quantizer (IVF) centroid dot products:
-    * centroid j (0-based) takes integer-lattice weights from the same
-    * divide-then-mod hash family as `lshBucket`, offset to
-    * h = 1000 + j so centroids and hyperplanes are decorrelated.
+    * centroid j (0-based) takes the lattice weights of row h = 1000 + j
+    * ([[VectorModel.latticeModel]]'s rows, offset so centroids and
+    * hyperplanes are decorrelated).
     * Returns [dot(a, c₀), …, dot(a, cₙ₋₁)]; argmax is the vector's
-    * IVF cell (max-inner-product assignment). The hash product stays
-    * < 2.7e18 — exact in both a Scala Long and a DuckDB BIGINT, so
-    * the assignment is oracle-computable. At production scale the
+    * IVF cell (max-inner-product assignment), oracle-computable
+    * because the weights are exact integers. At production scale the
     * lattice centroids are replaced by k-means centroids learned
     * offline; only this column changes, not the query shape.
     */
   def centroidDots(a: Column, dim: Int, n: Int): Column =
     array((0 until n).map { j =>
-      val h = (1000 + j).toLong
-      val c = array((1 to dim).map { i =>
-        lit((((h * 1000003L + i) * 2654435761L / 1024L) % 7L - 3L).toFloat)
-      }: _*)
-      dot(a, c)
+      dot(a, array((1 to dim).map(i => lit(VectorModel.latticeWeight(1000 + j, i))): _*))
     }: _*)
 
   object Sql {

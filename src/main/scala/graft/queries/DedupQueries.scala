@@ -1,10 +1,11 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.{MinHash, TextFunctions, VectorFunctions}
+import graft.functions.{MinHash, TextFunctions, VectorFunctions, VectorModel}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge.unpersistCheckpoint
 
 /** Deduplication operators over `documents` / `embeddings`
   * (SURVEY.md §2.2, driver north star): exact, MinHash+LSH, SimHash,
@@ -729,16 +730,6 @@ object DedupQueries {
         coalesce(col("core_deg"), lit(0L)).as("core_deg"))
   }
 
-  /** Free the executor blocks behind a superseded localCheckpoint.
-    * `Dataset.unpersist` can't reach them — the blocks hang off the
-    * materialized RDD inside the plan's LogicalRDD leaf, not off a
-    * cache-manager entry keyed by the plan.
-    */
-  private[graft] def unpersistCheckpoint(df: DataFrame): Unit =
-    org.apache.spark.sql.graftbridge.ColumnBridge.analyzedPlan(df).collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(_.unpersist(blocking = false))
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Exact dedup: hash-groupBy on content. At scale: group on
     // md5(text) (fixed-width shuffle key) instead of raw text.
@@ -1379,33 +1370,22 @@ object DedupQueries {
     // closed-form integer-lattice family as the fixed entry, built as
     // driver-held model rows instead of literal expressions (bit count
     // is data-dependent; 4·20 = 80 literal dot exprs would crowd
-    // janino's method ceiling — the PQ-encode lesson), applied in one
-    // compute-repartitioned mapPartitions pass.
+    // janino's method ceiling — the PQ-encode lesson), applied by
+    // VectorModel.signBits in one compute-repartitioned mapPartitions
+    // pass.
     "dedup_embedding_scaled" -> ((s, dir) => {
       import s.implicits._
       val emb = Tables.embeddings(s, dir)
       val bits = embBandBits(emb.count())
       val nBands = EmbBands
-      val planes: Array[Array[Float]] = Array.tabulate(nBands * bits) { h =>
-        Array.tabulate(Dim) { j0 =>
-          val j = j0 + 1
-          ((h.toLong * 1000003L + j) * 2654435761L / 1024L % 7L - 3L).toFloat
-        }
-      }
+      // band k's hyperplanes are lattice rows k·bits until (k+1)·bits
+      val bands = Array.tabulate(nBands)(k =>
+        Array.tabulate(bits)(b => VectorModel.latticeRow(k * bits + b, Dim)))
       val banded = emb.select(col("vec_id"), col("label"), col("embedding"))
         .repartition(s.sparkContext.defaultParallelism)
         .as[(Long, Int, Array[Float])]
         .mapPartitions(_.flatMap { case (id, label, e) =>
-          val bvals = new Array[Long](nBands)
-          var h = 0
-          while (h < planes.length) {
-            var d = 0.0
-            var i = 0
-            while (i < e.length) { d += e(i).toDouble * planes(h)(i).toDouble; i += 1 }
-            if (d > 0) bvals(h / bits) |= 1L << (h % bits)
-            h += 1
-          }
-          Iterator.tabulate(nBands)(k => (id, label, k, bvals(k)))
+          Iterator.tabulate(nBands)(k => (id, label, k, VectorModel.signBits(e, bands(k))))
         }).toDF("vec_id", "label", "band", "bval")
       val cand = banded.as("x").join(banded.as("y"),
           col("x.label") === col("y.label") && col("x.band") === col("y.band") &&

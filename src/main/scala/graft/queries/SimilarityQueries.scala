@@ -1,8 +1,9 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.VectorFunctions
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.functions.{VectorFunctions, VectorModel}
+import graft.functions.VectorModel.{Centroid, Codebook, FxScale}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,6 +18,12 @@ import org.apache.spark.sql.functions._
   * with a bucket-equi-join: shuffle on bucket id, score only within
   * buckets — the same shape IVF takes with learned centroids instead
   * of hyperplanes.
+  *
+  * Every learned or lattice model here is a driver-held
+  * [[VectorModel]]: its centroid type, Lloyd UPDATE, nearest-centroid
+  * loop, sign bits and ADC lookup are the one place for the scoring
+  * order and the tie-break, so the k-generic (scaled) entries and the
+  * fixed-k ones cannot drift apart.
   */
 object SimilarityQueries {
 
@@ -27,9 +34,7 @@ object SimilarityQueries {
   private val LshBits = 8
   private val IvfCentroids = 8
   private val IvfMask = -1e300 // argmax mask sentinel, far below any dot
-  private val KmMask = 1e300 // argmin mask sentinel, far above any score
   private val SemTau = 0.35 // SemDeDup within-cell cosine threshold
-  private val FxScale = 16777216.0 // 2²⁴ — fixed-point lift scale
   private val KmIters = 2 // Lloyd rounds after the lattice init
 
   // ---- Scaled-IVF sizing: the cell count TRACKS the corpus. ----
@@ -73,73 +78,31 @@ object SimilarityQueries {
   private def cosCol = VectorFunctions.dot(col("q_emb"), col("embedding")) /
     (col("q_nrm") * col("nrm"))
 
-  /** A learned IVF centroid as driver-held model parameters: the cell
-    * id it refines, its float-rounded coordinates, and the precomputed
-    * Σc_i² term of the assignment score. 8×65 doubles total — the
-    * MLlib-KMeans pattern of centroids living on the driver between
-    * Lloyd rounds; the DATA never leaves executors (updates reduce to
-    * one 65-value row per cell via partial aggregation).
-    */
-  private case class KmCentroid(cell: Int, cf: Array[Float], cc: Double)
+  private def cosWindow = Window.partitionBy(col("query_id"))
+    .orderBy(col("cos").desc, col("vec_id").asc)
 
-  /** Exact fixed-point lift of embedding lane `i` (1-based):
-    * floor(x·2²⁴ + 0.5) as a long. float→double is exact, ·2²⁴ is an
-    * exponent shift (exact), and |x·2²⁴| < 2⁵² keeps the +0.5 and
-    * floor exact — so centroid-update SUMS are integer arithmetic:
-    * order-independent, hence bit-identical regardless of partitioning
-    * or shuffle order. This is what makes iterative k-means
-    * oracle-checkable cross-engine: the one order-sensitive operation
-    * of Lloyd's algorithm (the mean's summation) is made associative.
+  /** Exact top-K by cosine over a candidate relation carrying
+    * (query_id, q_emb, q_nrm, vec_id, embedding, nrm): rank by
+    * (cos DESC, vec_id ASC) — the oracle's ROW_NUMBER — and emit
+    * (query_id, neighbor_id, rnk, cos_r).
     */
-  private def fxLane(x: Column, i: Int): Column =
-    floor(element_at(x, i).cast("double") * FxScale + lit(0.5)).cast("long")
+  private def topKByCos(cands: DataFrame): DataFrame =
+    cands.withColumn("cos", cosCol)
+      .withColumn("rnk", row_number().over(cosWindow))
+      .filter(col("rnk") <= K)
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rnk"),
+        round(col("cos"), 6).as("cos_r"))
 
-  /** One Lloyd UPDATE step: per-cell exact integer lane sums + count,
-    * one shuffle reduced to ≤ |cells| rows by partial aggregation,
-    * collected as model parameters. Centroid lane value
-    * (s/n)/2²⁴ is rounded to float so the ASSIGN step's dot product
-    * reuses the codegen'd float kernel; the rounding is IEEE-defined,
-    * mirrored by the oracle's CAST(… AS FLOAT).
-    */
-  private def updateCentroids(assigned: DataFrame): Seq[KmCentroid] = {
-    val aggs = count(lit(1)).as("n") +:
-      (1 to Dim).map(i => sum(fxLane(col("embedding"), i)).as(s"s$i"))
-    assigned.groupBy(col("cell")).agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map { r =>
-        val n = r.getAs[Long]("n")
-        val cf = Array.tabulate(Dim) { i =>
-          ((r.getAs[Long](s"s${i + 1}").toDouble / n.toDouble) / FxScale).toFloat
-        }
-        var cc = 0.0
-        var i = 0
-        while (i < Dim) { cc += cf(i).toDouble * cf(i).toDouble; i += 1 }
-        KmCentroid(r.getAs[Number]("cell").intValue, cf, cc)
-      }
-      .sortBy(_.cell).toSeq
+  /** A model exported lane by lane: (s, cell, lane, c). */
+  private def laneRows(s: SparkSession, cents: Seq[Centroid]): DataFrame = {
+    import s.implicits._
+    cents.flatMap(c => c.cf.iterator.zipWithIndex.map { case (v, i) => (c.s, c.cell, i + 1, v) })
+      .toDF("s", "cell", "lane", "c")
   }
 
-  /** Assignment scores [score_c] in cell order: Lloyd assigns by min
-    * squared distance |x−c|² = |x|² − 2x·c + |c|²; |x|² is common to
-    * every cell, so argmin(|c|² − 2x·c) picks the same cell without
-    * computing it — one codegen'd literal-array dot per centroid,
-    * exactly the lattice `centroidDots` shape.
-    */
-  private def kmScores(cents: Seq[KmCentroid], x: Column): Column =
-    array(cents.map(c =>
-      lit(c.cc) - lit(2.0) * VectorFunctions.dot(x, array(c.cf.map(lit(_)): _*))): _*)
-
-  /** Map an argmin position (1-based, long) back to its cell id. */
-  private def kmCellAt(cents: Seq[KmCentroid], pos: Column): Column =
-    element_at(array(cents.map(c => lit(c.cell)): _*), pos.cast("int"))
-
-  /** Corpus-side ASSIGN: nearest learned centroid, first-occurrence
-    * (= lowest cell id) tie-break on both engines.
-    */
-  private def kmAssign(cents: Seq[KmCentroid], x: Column): Column = {
-    val s = kmScores(cents, x)
-    kmCellAt(cents, array_position(s, array_min(s)))
-  }
+  /** One Lloyd UPDATE of the whole-vector (IVF) model from `cell`. */
+  private def ivfUpdate(assigned: DataFrame): Seq[Centroid] =
+    VectorModel.update(assigned, Seq(col("cell")), col("embedding"), Dim)
 
   /** Learned IVF centroids: init from the deterministic lattice cells
     * (refining an existing coarse quantizer — the production warm-start
@@ -153,119 +116,105 @@ object SimilarityQueries {
     * sums + IEEE-defined assign scores make the whole training run
     * deterministic and therefore DuckDB-expressible, CTE per round.
     */
-  private def learnedCentroids(emb: DataFrame): Seq[KmCentroid] = {
+  private def learnedCentroids(emb: DataFrame): Seq[Centroid] = {
     val a0 = emb
       .withColumn("dots", VectorFunctions.centroidDots(col("embedding"), Dim, IvfCentroids))
       .withColumn("cell", array_position(col("dots"), array_max(col("dots"))))
-    var cents = updateCentroids(a0)
+    var cents = ivfUpdate(a0)
     for (_ <- 1 until KmIters)
-      cents = updateCentroids(emb.withColumn("cell", kmAssign(cents, col("embedding"))))
+      cents = ivfUpdate(emb.withColumn("cell", VectorModel.assign(cents, col("embedding"))))
     require(cents.size >= 2, s"k-means degenerated to ${cents.size} cell(s)")
     cents
   }
 
-  /** The deterministic integer-lattice centroids for ANY k, as
-    * driver-held model rows — the same closed-form weights
-    * [[VectorFunctions.centroidDots]] unrolls as k literal
-    * expressions, built as data instead so k can track the corpus.
-    */
-  private def latticeModel(k: Int): Seq[KmCentroid] =
-    (0 until k).map { j =>
-      val h = (1000 + j).toLong
-      val cf = Array.tabulate(Dim) { i0 =>
-        val i = i0 + 1
-        (((h * 1000003L + i) * 2654435761L / 1024L) % 7L - 3L).toFloat
-      }
-      var cc = 0.0
-      var i = 0
-      while (i < Dim) { cc += cf(i).toDouble * cf(i).toDouble; i += 1 }
-      KmCentroid(j + 1, cf, cc)
-    }
-
-  /** Model-side ASSIGN for arbitrary k: per row the argmax-dot cell
+  /** Model-side ASSIGN for arbitrary k: per row the max-dot cell
     * (init, mirroring the lattice warm start's list_max) or the
-    * argmin(‖c‖²−2x·c) cell (Lloyd rounds), strict keep-first over
-    * cell-sorted models — the same double left-fold dot and tie-break
-    * as the literal-expression form and the oracle's ROW_NUMBER. A
-    * plain-JVM mapPartitions loop, not k literal expressions: past
-    * k ≈ 128, codegen'd literal dots exceed janino's method limit and
-    * silently fall back to interpreted eval (the PQ-encode lesson at
-    * [[pqEncode]]); the loop JIT-compiles with no ceiling.
+    * nearest cell (Lloyd rounds) by the [[VectorModel]] loop. The
+    * assign loop is N·k dots of CPU, but the embeddings table is
+    * bytes-SMALL (64 floats/row): a 200 k-row corpus is one 51 MB scan
+    * split, so without an explicit fan-out the whole model application
+    * — and every stage pipelined after it — runs on ONE core
+    * (measured: 29× for 10× data at sf10). Partition by compute, not
+    * bytes; values are row-local, so the round-robin exchange cannot
+    * change results.
     */
-  private def modelAssign(emb: DataFrame, cents: Seq[KmCentroid],
+  private def modelAssign(emb: DataFrame, cents: Seq[Centroid],
       byMaxDot: Boolean): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val cb = cents.map(c => (c.cell, c.cf, c.cc)).toArray // cell-sorted
-    // The assign loop is N·k dots of CPU, but the embeddings table is
-    // bytes-SMALL (64 floats/row): a 200 k-row corpus is one 51 MB
-    // scan split, so without an explicit fan-out the whole model
-    // application — and every stage pipelined after it — runs on ONE
-    // core (measured: 29× for 10× data at sf10 before this line).
-    // Partition by compute, not bytes; values are row-local, so the
-    // round-robin exchange cannot change results.
+    val m = cents.toArray // cell-sorted
     emb.select(col("vec_id"), col("embedding"))
       .repartition(spark.sparkContext.defaultParallelism)
       .as[(Long, Array[Float])]
       .mapPartitions(_.map { case (id, e) =>
-        var best = 0
-        var bestScore = if (byMaxDot) Double.MinValue else Double.MaxValue
-        var j = 0
-        while (j < cb.length) {
-          var d = 0.0
-          var i = 0
-          while (i < Dim) { d += e(i).toDouble * cb(j)._2(i).toDouble; i += 1 }
-          val sc = if (byMaxDot) d else cb(j)._3 - 2.0 * d
-          val better = if (byMaxDot) sc > bestScore else sc < bestScore
-          if (better) { bestScore = sc; best = cb(j)._1 }
-          j += 1
-        }
-        (id, e, best)
+        val j = if (byMaxDot) VectorModel.nearestByDot(e, m) else VectorModel.nearest(e, 0, m)
+        (id, e, m(j).cell)
       }).toDF("vec_id", "embedding", "cell")
   }
 
-  /** Query-side nprobe=2: the two lowest-score cells per query,
-    * (score ASC, cell ASC) — exactly the oracle's rn ≤ 2 and the
-    * masked-argmin pair of the fixed-k entries, as one model loop.
+  /** Query-side nprobe=2 by the [[VectorModel.nearest2]] loop — the
+    * (score ASC, cell ASC) pair the oracle's rn ≤ 2 and the fixed-k
+    * entries' [[VectorModel.probe2]] pick.
     */
-  private def modelProbe2(qs: DataFrame, cents: Seq[KmCentroid]): DataFrame = {
+  private def modelProbe2(qs: DataFrame, cents: Seq[Centroid]): DataFrame = {
     val spark = qs.sparkSession
     import spark.implicits._
-    val cb = cents.map(c => (c.cell, c.cf, c.cc)).toArray
+    val m = cents.toArray
     qs.select(col("query_id"), col("q_emb"), col("q_nrm"))
       .as[(Long, Array[Float], Double)]
       .mapPartitions(_.flatMap { case (id, e, nrm) =>
-        var b1 = 0; var s1 = Double.MaxValue
-        var b2 = 0; var s2 = Double.MaxValue
-        var j = 0
-        while (j < cb.length) {
-          var d = 0.0
-          var i = 0
-          while (i < Dim) { d += e(i).toDouble * cb(j)._2(i).toDouble; i += 1 }
-          val sc = cb(j)._3 - 2.0 * d
-          if (sc < s1) { b2 = b1; s2 = s1; b1 = cb(j)._1; s1 = sc }
-          else if (sc < s2) { b2 = cb(j)._1; s2 = sc }
-          j += 1
-        }
-        Iterator((id, e, nrm, b1), (id, e, nrm, b2))
+        val (j1, j2) = VectorModel.nearest2(e, 0, m)
+        Iterator((id, e, nrm, m(j1).cell), (id, e, nrm, m(j2).cell))
       }).toDF("query_id", "q_emb", "q_nrm", "cell")
   }
 
+  /** The fixed-k query probe: [[VectorModel.probe2]]'s expression pair
+    * exploded to (probe_rank, cell) rows.
+    */
+  private def exprProbe2(qs: DataFrame, cents: Seq[Centroid]): DataFrame =
+    VectorModel.probe2(qs, cents, col("q_emb"))
+      .select(col("query_id"), col("q_emb"), col("q_nrm"), posexplode(col("probes")))
+      .select(col("query_id"), col("q_emb"), col("q_nrm"),
+        (col("pos") + 1).as("probe_rank"), col("col").as("cell"))
+
   /** Scaled training run: k from the corpus count, Lloyd on the
     * deterministic `vec_id % m` subsample (m = [[trainStride]]), the
-    * exact fixed-point UPDATE machinery of [[updateCentroids]]
-    * unchanged — so the whole run stays bit-deterministic and
-    * oracle-checkable at any k.
+    * exact fixed-point UPDATE unchanged — so the whole run stays
+    * bit-deterministic and oracle-checkable at any k.
     */
-  private def learnedCentroidsScaled(emb: DataFrame): Seq[KmCentroid] = {
+  private def learnedCentroidsScaled(emb: DataFrame): Seq[Centroid] = {
     val n = emb.count()
     val k = scaledK(n)
     val train = emb.filter(col("vec_id") % trainStride(n, k) === 0)
-    var cents = updateCentroids(modelAssign(train, latticeModel(k), byMaxDot = true))
+    var cents = ivfUpdate(modelAssign(train, VectorModel.latticeModel(k, Dim), byMaxDot = true))
     for (_ <- 1 until KmIters)
-      cents = updateCentroids(modelAssign(train, cents, byMaxDot = false))
+      cents = ivfUpdate(modelAssign(train, cents, byMaxDot = false))
     require(cents.size >= 2, s"scaled k-means degenerated to ${cents.size} cell(s)")
     cents
+  }
+
+  /** SemDeDup over an assignment (vec_id, embedding, nrm, cell): a
+    * vector survives unless some LOWER-id same-cell vector is ≥ SemTau
+    * cosine. The assignment is checkpointed once; both self-join sides
+    * rename columns up front (qualified-attribute resolution fails on
+    * a deduplicated self-join of the same checkpointed plan — same
+    * pitfall as CC's pointer-jump join).
+    */
+  private def semDedup(assigned: DataFrame): DataFrame = {
+    val asg = assigned.select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
+      .localCheckpoint()
+    val l = asg.select(col("vec_id").as("a_id"), col("embedding").as("a_emb"),
+      col("nrm").as("a_nrm"), col("cell"))
+    val r = asg.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"),
+      col("nrm").as("b_nrm"), col("cell"))
+    val dom = l.join(r, Seq("cell"))
+      .filter(col("a_id") < col("b_id") &&
+        VectorFunctions.dot(col("a_emb"), col("b_emb")) /
+          (col("a_nrm") * col("b_nrm")) >= SemTau)
+      .select(col("b_id").as("vec_id")).distinct()
+    asg.join(dom.withColumn("dup", lit(1)), Seq("vec_id"), "left")
+      .select(col("vec_id"), col("cell"),
+        (lit(1) - coalesce(col("dup"), lit(0))).as("is_kept"))
   }
 
   // ---- Product quantization (PQ): the vector-store compression tier
@@ -280,16 +229,11 @@ object SimilarityQueries {
   // (4 B) instead of 64 floats (256 B): 64× compression. Retrieval
   // is ADC (asymmetric distance): the query stays float, each corpus
   // vector scores as Σ_s q_s·codebook[s][code_s] — at scale the
-  // codebook is a driver-held literal (the MLlib pattern, 128×8
+  // codebook is a driver-held model (the MLlib pattern, 128×8
   // floats) and scoring reads 8 codes per row, never the floats.
 
   private val PqM = 8 // subspaces
   private val PqSub = 8 // dims per subspace
-
-  /** One learned PQ codeword: subspace, cell id, float coords, and
-    * the precomputed Σc² term of the assignment score.
-    */
-  private[queries] case class PqCentroid(s: Int, cell: Int, cf: Array[Float], cc: Double)
 
   /** The exploded subvector relation: one row per (vector, subspace). */
   private def pqSubvectors(emb: DataFrame): DataFrame =
@@ -306,84 +250,20 @@ object SimilarityQueries {
       when(element_at(sub, j + 1) > lit(0.0f), lit(1 << j)).otherwise(lit(0)))
       .reduce(_ + _) + lit(1)
 
-  /** One PQ Lloyd UPDATE: per-(subspace, cell) exact integer lane
-    * sums + count — ONE shuffle partial-aggregated to ≤ 128 rows,
-    * collected as the driver-held codebook.
-    */
-  private def pqUpdate(assigned: DataFrame): Seq[PqCentroid] = {
-    val aggs = count(lit(1)).as("n") +:
-      (1 to PqSub).map(i => sum(fxLane(col("sub"), i)).as(s"s$i"))
-    assigned.groupBy(col("s"), col("cell")).agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map { r =>
-        val n = r.getAs[Long]("n")
-        val cf = Array.tabulate(PqSub) { i =>
-          ((r.getAs[Long](s"s${i + 1}").toDouble / n.toDouble) / FxScale).toFloat
-        }
-        var cc = 0.0
-        var i = 0
-        while (i < PqSub) { cc += cf(i).toDouble * cf(i).toDouble; i += 1 }
-        PqCentroid(r.getAs[Number]("s").intValue, r.getAs[Number]("cell").intValue,
-          cf, cc)
-      }
-      .sortBy(c => (c.s, c.cell)).toSeq
-  }
+  /** One PQ Lloyd UPDATE: ≤ 128 (subspace, cell) rows. */
+  private def pqUpdate(assigned: DataFrame): Seq[Centroid] =
+    VectorModel.update(assigned, Seq(col("s"), col("cell")), col("sub"), PqSub)
 
-  /** The surviving codewords of one subspace, cell-sorted. */
-  private def pqCellsOf(cents: Seq[PqCentroid], s: Int): Seq[PqCentroid] =
-    cents.filter(_.s == s)
-
-  /** Serializable codebook for executor-side model application:
-    * cb(s) = the subspace's (cell, coords, Σc²) triples, cell-sorted.
-    * A 128-codeword / 8-float model is driver-held and ships in the
-    * task closure (the MLlib pattern) — 128 literal-array dot
-    * EXPRESSIONS here would exceed janino's generated-method limit
-    * and silently fall back to interpreted eval (observed), so model
-    * application runs as typed `mapPartitions` plain-JVM loops
-    * instead: JIT-compiled, no codegen ceiling, same arithmetic.
-    */
-  private def pqCodebookArrays(
-      cents: Seq[PqCentroid]): Array[Array[(Int, Array[Float], Double)]] =
-    Array.tabulate(PqM)(s => pqCellsOf(cents, s).map(c => (c.cell, c.cf, c.cc)).toArray)
-
-  /** Left-fold double dot of a subvector against codeword lanes —
-    * the exact accumulation order of DotProductFloat / the oracle's
-    * list_reduce (index-ascending, double-widened operands).
-    */
-  private def pqSubDot(e: Array[Float], off: Int, cf: Array[Float]): Double = {
-    var d = 0.0
-    var i = 0
-    while (i < PqSub) { d += e(off + i).toDouble * cf(i).toDouble; i += 1 }
-    d
-  }
-
-  /** ENCODE: per vector the 8 argmin codes — |x−c|² argmin via
-    * cc − 2x·c, strict-less keep-first over cell-sorted codewords
-    * (= the oracle's row_number (score ASC, cell ASC)). Pure
+  /** ENCODE: per vector the 8 nearest-codeword codes — a pure
     * partition-local map; output keeps the embedding so training's
     * UPDATE can slice subvectors without a join.
     */
-  private[queries] def pqEncode(emb: DataFrame, cents: Seq[PqCentroid]): DataFrame = {
+  private[queries] def pqEncode(emb: DataFrame, cents: Seq[Centroid]): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val cb = pqCodebookArrays(cents)
+    val cb = new Codebook(cents)
     emb.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-      .mapPartitions(_.map { case (id, e) =>
-        val codes = Array.tabulate(PqM) { s =>
-          val cs = cb(s)
-          var best = 0
-          var bestScore = Double.MaxValue
-          var k = 0
-          while (k < cs.length) {
-            val (cell, cf, cc) = cs(k)
-            val sc = cc - 2.0 * pqSubDot(e, s * PqSub, cf)
-            if (sc < bestScore) { bestScore = sc; best = cell }
-            k += 1
-          }
-          best
-        }
-        (id, e, codes)
-      })
+      .mapPartitions(_.map { case (id, e) => (id, e, cb.encode(e)) })
       .toDF("vec_id", "embedding", "codes")
   }
 
@@ -400,104 +280,62 @@ object SimilarityQueries {
         col("col.sub").as("sub"), col("col.cell").as("cell"))
 
   /** IVF residual table: each vector's nearest LEARNED coarse cell
-    * (the same argmin the kmAssign expression computes — score
-    * cc − 2x·c, strict-less keep-first over cell-sorted centroids)
-    * plus the float residual x − c (subtraction in double, rounded to
-    * float — the one spelling both engines share). This is the input
-    * PQ trains on in the FAISS IVF-PQ architecture: residuals are
-    * centered around the coarse cells, exactly the clustered
-    * distribution PQ codes well. One partition-local pass; at scale
-    * residuals are never materialized outside training (the encode
-    * pass recomputes them inline — see [[ivfPqEncode]]).
+    * plus the float residual x − c. This is the input PQ trains on in
+    * the FAISS IVF-PQ architecture: residuals are centered around the
+    * coarse cells, exactly the clustered distribution PQ codes well.
+    * One partition-local map, never materialized: each training round
+    * and the encode pass ([[ivfPqEncode]]) recompute it from the scan.
     */
-  private def ivfResiduals(emb: DataFrame, cents: Seq[KmCentroid]): DataFrame = {
+  private def ivfResiduals(emb: DataFrame, coarse: Codebook): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val cc = cents.map(c => (c.cell, c.cf, c.cc)).toArray // cell-sorted
+    val m = coarse.subspaces(0)
     emb.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
       .mapPartitions(_.map { case (id, e) =>
-        var bi = 0
-        var bestScore = Double.MaxValue
-        var k = 0
-        while (k < cc.length) {
-          var d = 0.0
-          var i = 0
-          while (i < Dim) { d += e(i).toDouble * cc(k)._2(i).toDouble; i += 1 }
-          val sc = cc(k)._3 - 2.0 * d
-          if (sc < bestScore) { bestScore = sc; bi = k }
-          k += 1
-        }
-        val cf = cc(bi)._2
-        val resid = Array.tabulate(Dim)(i => (e(i).toDouble - cf(i).toDouble).toFloat)
-        (id, cc(bi)._1, resid)
+        val c = m(VectorModel.nearest(e, 0, m))
+        (id, c.cell, VectorModel.residual(e, c.cf))
       })
       .toDF("vec_id", "cell", "embedding")
   }
 
   /** One-pass IVF-PQ corpus ENCODE: coarse cell + the 8 residual
     * nibble codes, straight from the original vectors (residuals
-    * computed inline, never materialized) — the persisted index of
-    * the FAISS IVF-PQ shape: (cell, 4 B of codes) per vector.
+    * computed in the same pipelined pass, never materialized) — the
+    * persisted index of the FAISS IVF-PQ shape: (cell, 4 B of codes)
+    * per vector.
     */
-  private def ivfPqEncode(
-      emb: DataFrame,
-      ivfCents: Seq[KmCentroid],
-      rcb: Seq[PqCentroid]): DataFrame = {
+  private def ivfPqEncode(emb: DataFrame, coarse: Codebook, rcb: Codebook): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val cc = ivfCents.map(c => (c.cell, c.cf, c.cc)).toArray
-    val cb = pqCodebookArrays(rcb)
-    emb.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-      .mapPartitions(_.map { case (id, e) =>
-        var bi = 0
-        var bestScore = Double.MaxValue
-        var k = 0
-        while (k < cc.length) {
-          var d = 0.0
-          var i = 0
-          while (i < Dim) { d += e(i).toDouble * cc(k)._2(i).toDouble; i += 1 }
-          val sc = cc(k)._3 - 2.0 * d
-          if (sc < bestScore) { bestScore = sc; bi = k }
-          k += 1
-        }
-        val cf = cc(bi)._2
-        val resid = Array.tabulate(Dim)(i => (e(i).toDouble - cf(i).toDouble).toFloat)
-        val codes = Array.tabulate(PqM) { s =>
-          val cs = cb(s)
-          var best = 0
-          var bs = Double.MaxValue
-          var j = 0
-          while (j < cs.length) {
-            val sc = cs(j)._3 - 2.0 * pqSubDot(resid, s * PqSub, cs(j)._2)
-            if (sc < bs) { bs = sc; best = cs(j)._1 }
-            j += 1
-          }
-          best
-        }
-        (id, cc(bi)._1, codes)
-      })
+    ivfResiduals(emb, coarse).as[(Long, Int, Array[Float])]
+      .map { case (id, cell, r) => (id, cell, rcb.encode(r)) }
       .toDF("vec_id", "cell", "codes")
   }
 
-  /** Bounded top-k finisher shared by the approximate retrieval
-    * entries: per-query TopKByScore partial aggregation → ranked
-    * (query_id, neighbor_id, rnk, <scoreCol>) rows.
+  /** (query_id, neighbor_id, score) candidate rows of a retrieval. */
+  private type ScoredPairs = Dataset[(Long, Long, Double)]
+
+  /** Per-query bounded top-k: (query_id, topk) by TopKByScore partial
+    * aggregation — each partition moves ≤ k rows per query.
     */
-  private def topKSelect(
-      scored: org.apache.spark.sql.Dataset[(Long, Long, Double)],
-      k: Int,
-      scoreCol: String): DataFrame = {
+  private def topKOf(scored: ScoredPairs, k: Int): DataFrame = {
     val spark = scored.sparkSession
     import spark.implicits._
     scored.groupByKey(_._1)
       .mapValues(t => graft.functions.Scored(t._2, t._3))
       .agg(new graft.functions.TopKByScore(k).toColumn)
       .toDF("query_id", "topk")
+  }
+
+  /** Bounded top-k finisher shared by the approximate retrieval
+    * entries: ranked (query_id, neighbor_id, rnk, <scoreCol>) rows.
+    */
+  private def topKSelect(scored: ScoredPairs, k: Int, scoreCol: String): DataFrame =
+    topKOf(scored, k)
       .select(col("query_id"), posexplode(col("topk")))
       .select(col("query_id"), col("col.vec_id").as("neighbor_id"),
         (col("pos") + 1).cast("int").as("rnk"),
         round(col("col.cos"), 6).as(scoreCol))
-  }
 
   /** Two-stage finisher shared by every re-rank entry: a k′ = 3K
     * shortlist from the approximate scores (bounded TopKByScore
@@ -506,58 +344,31 @@ object SimilarityQueries {
     * second corpus scan. Approximation error is confined below rank
     * 3K; the emitted top-K ordering is exact-cosine.
     */
-  private def exactRerank(
-      scored: org.apache.spark.sql.Dataset[(Long, Long, Double)],
-      s: SparkSession,
-      dir: String): DataFrame = {
-    import s.implicits._
-    val shortlist = scored.groupByKey(_._1)
-      .mapValues(t => graft.functions.Scored(t._2, t._3))
-      .agg(new graft.functions.TopKByScore(3 * K).toColumn)
-      .toDF("query_id", "topk")
+  private def exactRerank(scored: ScoredPairs, s: SparkSession, dir: String): DataFrame = {
+    val shortlist = topKOf(scored, 3 * K)
       .select(col("query_id"), explode(col("topk.vec_id")).as("vec_id"))
     val emb = corpus(s, dir)
     val qf = queriesOf(emb)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    broadcast(shortlist).join(emb, Seq("vec_id"))
-      .join(broadcast(qf), Seq("query_id"))
-      .withColumn("cos", cosCol)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= K)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rnk"),
-        round(col("cos"), 6).as("cos_r"))
+    topKByCos(broadcast(shortlist).join(emb, Seq("vec_id"))
+      .join(broadcast(qf), Seq("query_id")))
   }
 
   /** The raw-PQ ADC scored relation (train → encode → broadcast-query
     * scan over 8-int code rows) — shared by the single-stage and
-    * re-ranked retrieval entries; ONE spelling of the score
-    * arithmetic keeps both in lockstep with the shared oracle
-    * fragments.
+    * re-ranked retrieval entries.
     */
-  private def pqAdcScored(
-      s: SparkSession, dir: String): org.apache.spark.sql.Dataset[(Long, Long, Double)] = {
+  private def pqAdcScored(s: SparkSession, dir: String): ScoredPairs = {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
     val cents = pqCodebooks(emb)
-    val cb = pqCodebookArrays(cents)
-    val cellIdx: Array[Map[Int, Int]] =
-      cb.map(cs => cs.iterator.zipWithIndex.map { case (c, i) => c._1 -> i }.toMap)
+    val cb = new Codebook(cents)
     val codes = pqEncode(emb, cents).select(col("vec_id"), col("codes"))
     val q = emb.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     broadcast(q).join(codes, col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("q_emb"), col("vec_id"), col("codes"))
       .as[(Long, Array[Float], Long, Array[Int])]
-      .mapPartitions(_.map { case (qid, qEmb, vid, cds) =>
-        var est = 0.0
-        var sp = 0
-        while (sp < PqM) {
-          est += pqSubDot(qEmb, sp * PqSub, cb(sp)(cellIdx(sp)(cds(sp)))._2)
-          sp += 1
-        }
-        (qid, vid, est)
-      })
+      .mapPartitions(_.map { case (qid, qEmb, vid, cds) => (qid, vid, cb.adc(qEmb, cds, 0.0)) })
   }
 
   /** The int8 scored relation (quantize → broadcast-query scan →
@@ -565,8 +376,7 @@ object SimilarityQueries {
     * entries. The integer dot is exact in a Long, so the ranking
     * input is deterministic bit-for-bit.
     */
-  private def int8Scored(
-      s: SparkSession, dir: String): org.apache.spark.sql.Dataset[(Long, Long, Double)] = {
+  private def int8Scored(s: SparkSession, dir: String): ScoredPairs = {
     import s.implicits._
     val base = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding"),
@@ -594,13 +404,10 @@ object SimilarityQueries {
     * queries, codegen float kernel over the sliced arrays, bounded
     * TopKByScore partial agg downstream).
     */
-  private def matryoshkaScored(
-      s: SparkSession, dir: String): org.apache.spark.sql.Dataset[(Long, Long, Double)] =
+  private def matryoshkaScored(s: SparkSession, dir: String): ScoredPairs =
     matryoshkaScoredAt(s, dir, MatDim)
 
-  private def matryoshkaScoredAt(
-      s: SparkSession, dir: String,
-      matDim: Int): org.apache.spark.sql.Dataset[(Long, Long, Double)] = {
+  private def matryoshkaScoredAt(s: SparkSession, dir: String, matDim: Int): ScoredPairs = {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), slice(col("embedding"), 1, matDim).as("head"))
@@ -615,33 +422,28 @@ object SimilarityQueries {
       .as[(Long, Long, Double)]
   }
 
-  /** The IVF-PQ scored relation (train both models → one-pass encode
-    * → nprobe=2 probes → cell equi-join → coarse + residual ADC
-    * terms) — shared by the single-stage and re-ranked entries.
+  /** The IVF-PQ scored relation: train the coarse model with `train`
+    * and the residual PQ codebooks on its residuals → one-pass encode
+    * → nprobe=2 query cells from `probe` → cell equi-join → coarse +
+    * residual ADC terms (coarse term first, then the 8 residual terms
+    * in subspace order — the literal addition order the oracle
+    * mirrors). The fixed-k form trains [[learnedCentroids]] and probes
+    * by expressions; the scaled form trains the corpus-tracking
+    * [[learnedCentroidsScaled]] (k = N/CellTarget bounds candidates
+    * per query at ~2·CellTarget at any N) and probes by the model loop.
     */
   private def ivfPqScored(
-      s: SparkSession, dir: String): org.apache.spark.sql.Dataset[(Long, Long, Double)] = {
+      s: SparkSession, dir: String,
+      train: DataFrame => Seq[Centroid],
+      probe: (DataFrame, Seq[Centroid]) => DataFrame): ScoredPairs = {
     import s.implicits._
     val emb0 = corpus(s, dir)
-    val ivfCents = learnedCentroids(emb0)
+    val ivfCents = train(emb0)
+    val coarse = new Codebook(ivfCents)
     val emb = Tables.embeddings(s, dir)
-    val res = ivfResiduals(emb, ivfCents).localCheckpoint()
-    val rcb = pqCodebooks(res)
-    val cb = pqCodebookArrays(rcb)
-    val cellIdx: Array[Map[Int, Int]] =
-      cb.map(cs => cs.iterator.zipWithIndex.map { case (c, i) => c._1 -> i }.toMap)
-    val ivfByCell: Map[Int, Array[Float]] =
-      ivfCents.map(c => c.cell -> c.cf).toMap
-    val index = ivfPqEncode(emb, ivfCents, rcb)
-    val q = queriesOf(emb0)
-      .withColumn("sc", kmScores(ivfCents, col("q_emb")))
-      .withColumn("pp1", array_position(col("sc"), array_min(col("sc"))))
-      .withColumn("masked", transform(sequence(lit(1), lit(ivfCents.size)),
-        i => when(i.cast("long") === col("pp1"), lit(KmMask))
-          .otherwise(element_at(col("sc"), i))))
-      .withColumn("pp2", array_position(col("masked"), array_min(col("masked"))))
-      .withColumn("cell", explode(array(
-        kmCellAt(ivfCents, col("pp1")), kmCellAt(ivfCents, col("pp2")))))
+    val rcb = new Codebook(pqCodebooks(ivfResiduals(emb, coarse)))
+    val index = ivfPqEncode(emb, coarse, rcb)
+    val q = probe(queriesOf(emb0), ivfCents)
       .select(col("query_id"), col("q_emb"), col("cell"))
     broadcast(q).join(index, Seq("cell"))
       .filter(col("query_id") =!= col("vec_id"))
@@ -649,94 +451,31 @@ object SimilarityQueries {
         col("codes"))
       .as[(Long, Array[Float], Int, Long, Array[Int])]
       .mapPartitions(_.map { case (qid, qEmb, cell, vid, cds) =>
-        val cf = ivfByCell(cell)
-        var est = 0.0
-        var i = 0
-        while (i < Dim) { est += qEmb(i).toDouble * cf(i).toDouble; i += 1 }
-        var sp = 0
-        while (sp < PqM) {
-          est += pqSubDot(qEmb, sp * PqSub, cb(sp)(cellIdx(sp)(cds(sp)))._2)
-          sp += 1
-        }
-        (qid, vid, est)
-      })
-  }
-
-  /** The SCALED IVF-PQ scored relation — [[ivfPqScored]]'s anatomy on
-    * the corpus-tracking coarse quantizer ([[learnedCentroidsScaled]]):
-    * k = N/CellTarget cells bound candidates per query at ~2·CellTarget
-    * vectors regardless of N (the fixed-k form measured 30× for 10×
-    * data at sf10 — SCALE.md second decade), while the residual-PQ
-    * tier still reads 4 B of codes per candidate. Every model
-    * application is a driver-held-model loop (k is data-dependent;
-    * k literal dot expressions would cross janino's method ceiling
-    * past ~128): residual/encode reuse the k-generic [[ivfResiduals]]/
-    * [[ivfPqEncode]] loops unchanged, and the query probe is
-    * [[modelProbe2]] — the same (score ASC, cell ASC) keep-first pair
-    * as the fixed-k masked argmin. ADC scoring adds the coarse term
-    * first, then the 8 residual terms in subspace order — the literal
-    * addition order the oracle mirrors.
-    */
-  private def ivfPqScoredScaled(
-      s: SparkSession, dir: String): org.apache.spark.sql.Dataset[(Long, Long, Double)] = {
-    import s.implicits._
-    val emb0 = corpus(s, dir)
-    val ivfCents = learnedCentroidsScaled(emb0)
-    val emb = Tables.embeddings(s, dir)
-    val res = ivfResiduals(emb, ivfCents).localCheckpoint()
-    val rcb = pqCodebooks(res)
-    val cb = pqCodebookArrays(rcb)
-    val cellIdx: Array[Map[Int, Int]] =
-      cb.map(cs => cs.iterator.zipWithIndex.map { case (c, i) => c._1 -> i }.toMap)
-    val ivfByCell: Map[Int, Array[Float]] =
-      ivfCents.map(c => c.cell -> c.cf).toMap
-    val index = ivfPqEncode(emb, ivfCents, rcb)
-    val q = modelProbe2(queriesOf(emb0), ivfCents)
-      .select(col("query_id"), col("q_emb"), col("cell"))
-    broadcast(q).join(index, Seq("cell"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("q_emb"), col("cell"), col("vec_id"),
-        col("codes"))
-      .as[(Long, Array[Float], Int, Long, Array[Int])]
-      .mapPartitions(_.map { case (qid, qEmb, cell, vid, cds) =>
-        val cf = ivfByCell(cell)
-        var est = 0.0
-        var i = 0
-        while (i < Dim) { est += qEmb(i).toDouble * cf(i).toDouble; i += 1 }
-        var sp = 0
-        while (sp < PqM) {
-          est += pqSubDot(qEmb, sp * PqSub, cb(sp)(cellIdx(sp)(cds(sp)))._2)
-          sp += 1
-        }
-        (qid, vid, est)
+        (qid, vid, rcb.adc(qEmb, cds, VectorModel.dot(qEmb, 0, coarse.codeword(0, cell))))
       })
   }
 
   /** Full PQ training run: warm start + KmIters Lloyd rounds, one
     * corpus scan (encode) + one ≤128-row update shuffle per round.
+    * Nothing is checkpointed: the subvector relation is read once
+    * (round 1), and `emb` — raw vectors or IVF residuals, a pure map
+    * of the scan — is cheaper to recompute per round than to pin.
     */
-  private[queries] def pqCodebooks(emb: DataFrame): Seq[PqCentroid] = {
-    val sv = pqSubvectors(emb).localCheckpoint()
-    var cents = pqUpdate(sv.withColumn("cell", pqInitCell(col("sub"))))
+  private[queries] def pqCodebooks(emb: DataFrame): Seq[Centroid] = {
+    var cents = pqUpdate(pqSubvectors(emb).withColumn("cell", pqInitCell(col("sub"))))
     for (_ <- 1 until KmIters)
       cents = pqUpdate(pqAssigned(pqEncode(emb, cents)))
     require(cents.size >= PqM, s"PQ training degenerated to ${cents.size} codewords")
     cents
   }
 
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // The learned PQ codebook itself, lane-by-lane — pins the full
     // per-subspace training run (sign warm start + KmIters exact
     // fixed-point Lloyd rounds over the exploded subvector relation)
     // against the oracle's CTE-per-round mirror.
-    "pq_codebooks" -> ((s, dir) => {
-      import s.implicits._
-      pqCodebooks(Tables.embeddings(s, dir))
-        .flatMap(c => c.cf.iterator.zipWithIndex.map {
-          case (v, i) => (c.s, c.cell, i + 1, v)
-        })
-        .toDF("s", "cell", "lane", "c")
-    }),
+    "pq_codebooks" -> ((s, dir) => laneRows(s, pqCodebooks(Tables.embeddings(s, dir)))),
 
     // ENCODE the corpus: 8 nibble codes per vector (the 64×-smaller
     // representation a 100 TB vector store actually persists); pure
@@ -778,14 +517,8 @@ object SimilarityQueries {
     // the coarse cells, exactly the clustered distribution PQ codes
     // well — WHY the composition beats PQ-on-raw at equal bits.
     "ivfpq_codebooks" -> ((s, dir) => {
-      import s.implicits._
       val emb = Tables.embeddings(s, dir)
-      val res = ivfResiduals(emb, learnedCentroids(emb)).localCheckpoint()
-      pqCodebooks(res)
-        .flatMap(c => c.cf.iterator.zipWithIndex.map {
-          case (v, i) => (c.s, c.cell, i + 1, v)
-        })
-        .toDF("s", "cell", "lane", "c")
+      laneRows(s, pqCodebooks(ivfResiduals(emb, new Codebook(learnedCentroids(emb)))))
     }),
 
     // IVF-PQ retrieval — the canonical billion-scale ANN index
@@ -799,7 +532,7 @@ object SimilarityQueries {
     // both scale levers composed. Scoring runs in mapPartitions over
     // the driver-held models (coarse term first, then subspace terms
     // in order — the oracle mirrors the literal addition order).
-    "knn_ivfpq" -> ((s, dir) => topKSelect(ivfPqScored(s, dir), K, "est_r")),
+    "knn_ivfpq" -> ((s, dir) => topKSelect(ivfPqScored(s, dir, learnedCentroids, exprProbe2), K, "est_r")),
 
     // IVF-PQ in its PRODUCTION form — the FAISS serving shape end to
     // end: cell-bounded ADC scan (nprobe=2 probed cells, 4 B codes)
@@ -809,7 +542,7 @@ object SimilarityQueries {
     // PQ 64×, IVF-PQ cell-bounded 64×): coarse-code error confined
     // below rank 3K, emitted ordering exact-cosine over what the
     // probes reached.
-    "knn_ivfpq_rerank" -> ((s, dir) => exactRerank(ivfPqScored(s, dir), s, dir)),
+    "knn_ivfpq_rerank" -> ((s, dir) => exactRerank(ivfPqScored(s, dir, learnedCentroids, exprProbe2), s, dir)),
 
     // Matryoshka (prefix-dim) retrieval — the dimension-truncation
     // serving lever: score by cosine over the first 16 of 64 lanes
@@ -881,15 +614,8 @@ object SimilarityQueries {
         .withColumn("bucket0", VectorFunctions.lshBucket(col("q_emb"), Dim, LshBits))
         .withColumn("bucket", explode(array(probes: _*)))
         .drop("bucket0")
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cos").desc, col("vec_id").asc)
-      broadcast(q).join(emb, Seq("bucket"))
-        .filter(col("query_id") =!= col("vec_id"))
-        .withColumn("cos", cosCol)
-        .withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= K)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rnk"),
-          round(col("cos"), 6).as("cos_r"))
+      topKByCos(broadcast(q).join(emb, Seq("bucket"))
+        .filter(col("query_id") =!= col("vec_id")))
     }),
 
     // Symmetric int8 quantization of the embedding corpus — the 4×
@@ -966,15 +692,8 @@ object SimilarityQueries {
         .withColumn("p2", array_position(col("masked"), array_max(col("masked"))))
         .withColumn("cell", explode(array(col("p1"), col("p2"))))
         .drop("dots", "masked", "p1", "p2")
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cos").desc, col("vec_id").asc)
-      broadcast(q).join(emb, Seq("cell"))
-        .filter(col("query_id") =!= col("vec_id"))
-        .withColumn("cos", cosCol)
-        .withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= K)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rnk"),
-          round(col("cos"), 6).as("cos_r"))
+      topKByCos(broadcast(q).join(emb, Seq("cell"))
+        .filter(col("query_id") =!= col("vec_id")))
     }),
 
     // Two-stage retrieval — the production pattern the knn_int8
@@ -1000,32 +719,15 @@ object SimilarityQueries {
     // exact rational division (hit count / nq·K). Corpus-side plan
     // stays one cell equi-join per level; queries broadcast.
     "knn_ivf_recall" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       val emb0 = corpus(s, dir)
       val cents = learnedCentroids(emb0)
-      val emb = emb0.withColumn("cell", kmAssign(cents, col("embedding")))
+      val emb = emb0.withColumn("cell", VectorModel.assign(cents, col("embedding")))
       val nQ = emb0.filter(col("vec_id") % 50 === 0).count()
-      val probes = queriesOf(emb0)
-        .withColumn("sc", kmScores(cents, col("q_emb")))
-        .withColumn("pp1", array_position(col("sc"), array_min(col("sc"))))
-        .withColumn("masked", transform(sequence(lit(1), lit(cents.size)),
-          i => when(i.cast("long") === col("pp1"), lit(KmMask))
-            .otherwise(element_at(col("sc"), i))))
-        .withColumn("pp2", array_position(col("masked"), array_min(col("masked"))))
-        .select(col("query_id"), col("q_emb"), col("q_nrm"),
-          posexplode(array(kmCellAt(cents, col("pp1")),
-            kmCellAt(cents, col("pp2")))))
-        .select(col("query_id"), col("q_emb"), col("q_nrm"),
-          (col("pos") + 1).as("probe_rank"), col("col").as("cell"))
+      val probes = exprProbe2(queriesOf(emb0), cents)
       val ivf = Seq(1, 2).map { np =>
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("cos").desc, col("vec_id").asc)
-        broadcast(probes.filter(col("probe_rank") <= np)).join(emb, Seq("cell"))
-          .filter(col("query_id") =!= col("vec_id"))
-          .withColumn("cos", cosCol)
-          .withColumn("rnk", row_number().over(w))
-          .filter(col("rnk") <= K)
-          .select(lit(np).as("nprobe"), col("query_id"), col("vec_id"))
+        topKByCos(broadcast(probes.filter(col("probe_rank") <= np)).join(emb, Seq("cell"))
+          .filter(col("query_id") =!= col("vec_id")))
+          .select(lit(np).as("nprobe"), col("query_id"), col("neighbor_id").as("vec_id"))
       }.reduce(_ unionAll _)
       val brute = queries("knn_brute")(s, dir)
         .select(col("query_id"), col("neighbor_id").as("vec_id"))
@@ -1046,29 +748,11 @@ object SimilarityQueries {
     // bounded, exactly the IVF sizing knob). Keep rule: a vector
     // survives unless some LOWER-id same-cell vector is ≥ SemTau
     // cosine — greedy-by-id, the deterministic form of "keep one per
-    // near-set". Assignment is checkpointed once; both self-join
-    // sides rename columns up front (qualified-attribute resolution
-    // fails on a deduplicated self-join of the same checkpointed
-    // plan — same pitfall as CC's pointer-jump join).
+    // near-set" ([[semDedup]]).
     "dedup_semantic" -> ((s, dir) => {
       val emb0 = corpus(s, dir)
-      val cents = learnedCentroids(emb0)
-      val asg = emb0
-        .withColumn("cell", kmAssign(cents, col("embedding")))
-        .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
-        .localCheckpoint()
-      val l = asg.select(col("vec_id").as("a_id"), col("embedding").as("a_emb"),
-        col("nrm").as("a_nrm"), col("cell"))
-      val r = asg.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"),
-        col("nrm").as("b_nrm"), col("cell"))
-      val dom = l.join(r, Seq("cell"))
-        .filter(col("a_id") < col("b_id") &&
-          VectorFunctions.dot(col("a_emb"), col("b_emb")) /
-            (col("a_nrm") * col("b_nrm")) >= SemTau)
-        .select(col("b_id").as("vec_id")).distinct()
-      asg.join(dom.withColumn("dup", lit(1)), Seq("vec_id"), "left")
-        .select(col("vec_id"), col("cell"),
-          (lit(1) - coalesce(col("dup"), lit(0))).as("is_kept"))
+      semDedup(emb0.withColumn("cell",
+        VectorModel.assign(learnedCentroids(emb0), col("embedding"))))
     }),
 
     // Nearest-centroid (Rocchio) classification — the embedding-space
@@ -1082,8 +766,8 @@ object SimilarityQueries {
     // |labels|²-row aggregate — nothing grows with N but the scans.
     "embedding_classify" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val cents = updateCentroids(emb.withColumn("cell", col("label")))
-      emb.withColumn("pred_label", kmAssign(cents, col("embedding")))
+      val cents = VectorModel.update(emb, Seq(col("label")), col("embedding"), Dim)
+      emb.withColumn("pred_label", VectorModel.assign(cents, col("embedding")))
         .groupBy(col("label"), col("pred_label"))
         .agg(count(lit(1)).as("n"))
     }),
@@ -1092,14 +776,8 @@ object SimilarityQueries {
     // pins the full k-means training run (lattice init + KmIters Lloyd
     // rounds of exact-integer updates) against the oracle's
     // CTE-per-round mirror, independent of any retrieval on top.
-    "ivf_kmeans_centroids" -> ((s, dir) => {
-      import s.implicits._
-      learnedCentroids(Tables.embeddings(s, dir))
-        .flatMap(c => c.cf.iterator.zipWithIndex.map {
-          case (v, i) => (c.cell, i + 1, v)
-        })
-        .toDF("cell", "lane", "c")
-    }),
+    "ivf_kmeans_centroids" -> ((s, dir) =>
+      laneRows(s, learnedCentroids(Tables.embeddings(s, dir))).drop("s")),
 
     // IVF ANN over LEARNED cells (closes the knn_ivf scaladoc's
     // stand-in): identical retrieval anatomy — probes explode on the
@@ -1111,26 +789,9 @@ object SimilarityQueries {
     "knn_ivf_kmeans" -> ((s, dir) => {
       val emb0 = corpus(s, dir)
       val cents = learnedCentroids(emb0)
-      val emb = emb0.withColumn("cell", kmAssign(cents, col("embedding")))
-      val q = queriesOf(emb0)
-        .withColumn("sc", kmScores(cents, col("q_emb")))
-        .withColumn("pp1", array_position(col("sc"), array_min(col("sc"))))
-        .withColumn("masked", transform(sequence(lit(1), lit(cents.size)),
-          i => when(i.cast("long") === col("pp1"), lit(KmMask))
-            .otherwise(element_at(col("sc"), i))))
-        .withColumn("pp2", array_position(col("masked"), array_min(col("masked"))))
-        .withColumn("cell", explode(array(
-          kmCellAt(cents, col("pp1")), kmCellAt(cents, col("pp2")))))
-        .drop("sc", "masked", "pp1", "pp2")
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cos").desc, col("vec_id").asc)
-      broadcast(q).join(emb, Seq("cell"))
-        .filter(col("query_id") =!= col("vec_id"))
-        .withColumn("cos", cosCol)
-        .withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= K)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rnk"),
-          round(col("cos"), 6).as("cos_r"))
+      val emb = emb0.withColumn("cell", VectorModel.assign(cents, col("embedding")))
+      topKByCos(broadcast(exprProbe2(queriesOf(emb0), cents)).join(emb, Seq("cell"))
+        .filter(col("query_id") =!= col("vec_id")))
     }),
 
     // IVF ANN where the cell count TRACKS the corpus — the 100 TB
@@ -1171,22 +832,8 @@ object SimilarityQueries {
     // greedy-by-id keep rule, same one cell-keyed shuffle.
     "dedup_semantic_scaled" -> ((s, dir) => {
       val emb0 = corpus(s, dir)
-      val cents = learnedCentroidsScaled(emb0)
-      val asg = modelAssign(emb0, cents, byMaxDot = false)
-        .withColumn("nrm", VectorFunctions.norm(col("embedding")))
-        .localCheckpoint()
-      val l = asg.select(col("vec_id").as("a_id"), col("embedding").as("a_emb"),
-        col("nrm").as("a_nrm"), col("cell"))
-      val r = asg.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"),
-        col("nrm").as("b_nrm"), col("cell"))
-      val dom = l.join(r, Seq("cell"))
-        .filter(col("a_id") < col("b_id") &&
-          VectorFunctions.dot(col("a_emb"), col("b_emb")) /
-            (col("a_nrm") * col("b_nrm")) >= SemTau)
-        .select(col("b_id").as("vec_id")).distinct()
-      asg.join(dom.withColumn("dup", lit(1)), Seq("vec_id"), "left")
-        .select(col("vec_id"), col("cell"),
-          (lit(1) - coalesce(col("dup"), lit(0))).as("is_kept"))
+      semDedup(modelAssign(emb0, learnedCentroidsScaled(emb0), byMaxDot = false)
+        .withColumn("nrm", VectorFunctions.norm(col("embedding"))))
     }),
 
     // LSH ANN with corpus-tracking bucket width — the 100 TB form of
@@ -1205,33 +852,16 @@ object SimilarityQueries {
       import s.implicits._
       val emb0 = corpus(s, dir)
       val bits = DedupQueries.embBandBits(emb0.count())
-      val planes: Array[Array[Float]] = Array.tabulate(bits) { h =>
-        Array.tabulate(Dim) { j0 =>
-          val j = j0 + 1
-          ((h.toLong * 1000003L + j) * 2654435761L / 1024L % 7L - 3L).toFloat
-        }
-      }
-      def bucketOf(e: Array[Float]): Long = {
-        var bkt = 0L
-        var h = 0
-        while (h < planes.length) {
-          var d = 0.0
-          var i = 0
-          while (i < e.length) { d += e(i).toDouble * planes(h)(i).toDouble; i += 1 }
-          if (d > 0) bkt |= 1L << h
-          h += 1
-        }
-        bkt
-      }
+      val planes = Array.tabulate(bits)(h => VectorModel.latticeRow(h, Dim))
       val emb = emb0.select(col("vec_id"), col("embedding"), col("nrm"))
         .repartition(s.sparkContext.defaultParallelism)
         .as[(Long, Array[Float], Double)]
-        .mapPartitions(_.map { case (id, e, nrm) => (id, e, nrm, bucketOf(e)) })
+        .mapPartitions(_.map { case (id, e, nrm) => (id, e, nrm, VectorModel.signBits(e, planes)) })
         .toDF("vec_id", "embedding", "nrm", "bucket")
       val q = queriesOf(emb0)
         .as[(Long, Array[Float], Double)]
         .mapPartitions(_.flatMap { case (id, e, nrm) =>
-          val b0 = bucketOf(e)
+          val b0 = VectorModel.signBits(e, planes)
           Iterator.single((id, e, nrm, b0)) ++
             Iterator.tabulate(planes.length)(b => (id, e, nrm, b0 ^ (1L << b)))
         }).toDF("query_id", "q_emb", "q_nrm", "bucket")
@@ -1251,7 +881,8 @@ object SimilarityQueries {
     // fixed-k twin measured 30× for 10× data; this form's per-stage
     // costs are linear in N (training reads the fixed subsample,
     // encode and retrieval scan once each).
-    "knn_ivfpq_scaled" -> ((s, dir) => exactRerank(ivfPqScoredScaled(s, dir), s, dir))
+    "knn_ivfpq_scaled" -> ((s, dir) =>
+      exactRerank(ivfPqScored(s, dir, learnedCentroidsScaled, modelProbe2), s, dir))
   )
 
   /** CTE chain mirroring [[learnedCentroids]] round for round: fx =

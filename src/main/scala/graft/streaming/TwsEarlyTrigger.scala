@@ -79,40 +79,41 @@ class EarlyTriggerBlobProcessor(threshold: Int)
         }
       }
     }
-    val (ripe, live) = m.partition(_._1 <= wm)
-    ripe.toSeq.sortBy(_._1).foreach { case (wEnd, c) =>
-      out += WindowCount(cell, wEnd, c.sum, isFinal = true)
-    }
-    if (live.isEmpty) panes.clear() else panes.update(live)
-    val armed = getHandle.listTimers().toSeq
-    val next = if (live.isEmpty) None else Some(live.keys.max)
-    if (armed != next.toSeq) {
-      armed.foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
-      next.foreach(getHandle.registerTimer)
-    }
-    out.iterator
+    (out ++= purgeAndRearm(cell, wm, m, fired = None)).iterator
   }
 
   override def handleExpiredTimer(
       cell: Int,
       timers: TimerValues,
       expired: ExpiredTimerInfo): Iterator[WindowCount] = {
-    val wm = timers.getCurrentWatermarkInMs()
     val m = if (panes.exists()) panes.get() else Map.empty[Long, PaneCounters]
+    purgeAndRearm(cell, timers.getCurrentWatermarkInMs(), m,
+      fired = Some(expired.getExpiryTimeInMs())).iterator
+  }
+
+  /** The tail both callbacks share: FIRE_AND_PURGE the panes the
+    * watermark `wm` has passed (returned in pane-end order), store the
+    * live rest, and leave exactly one timer armed, at the latest live
+    * pane end. `fired` is the timer whose callback is running: Spark
+    * deletes it itself AFTER the callback, so it counts as already
+    * gone (see the class scaladoc).
+    */
+  private def purgeAndRearm(
+      cell: Int,
+      wm: Long,
+      m: Map[Long, PaneCounters],
+      fired: Option[Long]): Seq[WindowCount] = {
     val (ripe, live) = m.partition(_._1 <= wm)
-    val fires = ripe.toSeq.sortBy(_._1).map { case (wEnd, c) =>
-      WindowCount(cell, wEnd, c.sum, isFinal = true)
-    }
     if (live.isEmpty) panes.clear() else panes.update(live)
-    // the fired timer is deleted by Spark AFTER this callback — treat
-    // it as already-gone (see the class scaladoc)
     val armed = getHandle.listTimers().toSeq
-      .filterNot(t => t.asInstanceOf[Long] == expired.getExpiryTimeInMs())
+      .filterNot(t => fired.contains(t.asInstanceOf[Long]))
     val next = if (live.isEmpty) None else Some(live.keys.max)
     if (armed != next.toSeq) {
       armed.foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
       next.foreach(getHandle.registerTimer)
     }
-    fires.iterator
+    ripe.toSeq.sortBy(_._1).map { case (wEnd, c) =>
+      WindowCount(cell, wEnd, c.sum, isFinal = true)
+    }
   }
 }

@@ -34,8 +34,14 @@ final case class TotalCount(cell: Int, lastTMs: Long, cnt: Long)
   * measured-negative default for the OTHER replay entries (SCALE.md
   * "State-store provider") stands.
   */
-class TotalCountProcessor extends StatefulProcessor[Int, CellEvent, TotalCount] {
-  @transient private var st: ValueState[TotalTwsState] = _
+class TotalCountProcessor extends TotalCountFold
+
+/** The state and the fold both total processors share: `init` opens
+  * the per-key (Σ passengers, max event time) `ValueState`, and each
+  * micro-batch folds the key's rows into it and emits the new total.
+  */
+trait TotalCountFold extends StatefulProcessor[Int, CellEvent, TotalCount] {
+  @transient protected var st: ValueState[TotalTwsState] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
     st = getHandle.getValueState("total", Encoders.product[TotalTwsState],
@@ -64,30 +70,14 @@ class TotalCountProcessor extends StatefulProcessor[Int, CellEvent, TotalCount] 
   */
 class TotalCountBootstrapProcessor
     extends org.apache.spark.sql.streaming.StatefulProcessorWithInitialState[
-      Int, CellEvent, TotalCount, TotalTwsState] {
-  @transient private var st: ValueState[TotalTwsState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState("total", Encoders.product[TotalTwsState],
-      TTLConfig.NONE)
+      Int, CellEvent, TotalCount, TotalTwsState]
+    with TotalCountFold {
 
   override def handleInitialState(
       cell: Int,
       initial: TotalTwsState,
       timers: TimerValues): Unit =
     st.update(initial)
-
-  override def handleInputRows(
-      cell: Int,
-      rows: Iterator[CellEvent],
-      timers: TimerValues): Iterator[TotalCount] = {
-    var s = if (st.exists()) st.get() else TotalTwsState(0L, Long.MinValue)
-    rows.foreach { e =>
-      s = TotalTwsState(s.sum + e.passengers, math.max(s.lastT, e.tMs))
-    }
-    st.update(s)
-    Iterator.single(TotalCount(cell, s.lastT, s.sum))
-  }
 }
 
 object TwsTotalCount {

@@ -2,6 +2,7 @@ package graft
 
 import graft.queries.DedupQueries
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins [[DedupQueries.kCorePeel]]'s contract on graphs where the
@@ -71,11 +72,11 @@ class KCoreSpec extends AnyFunSuite {
           .groupBy(col("v")).agg(count(lit(1)).as("deg"))
         val next = deg.filter(col("deg") >= DedupQueries.KCoreK).select(col("v"))
           .localCheckpoint()
-        DedupQueries.unpersistCheckpoint(alive)
+        CheckpointBridge.unpersistCheckpoint(alive)
         alive = next
       }
       val out = alive.as[Long].collect().toSet
-      DedupQueries.unpersistCheckpoint(alive)
+      CheckpointBridge.unpersistCheckpoint(alive)
       out
     }
     val atContract = coreSet(DedupQueries.KCoreRounds)
@@ -90,6 +91,6 @@ class KCoreSpec extends AnyFunSuite {
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(out.getOrElse(1, 0L) > 0, "fixture 2-core is empty — vacuous entry")
     assert(out.getOrElse(0, 0L) > 0, "nothing peeled — vacuous entry")
-    DedupQueries.unpersistCheckpoint(pairs)
+    CheckpointBridge.unpersistCheckpoint(pairs)
   }
 }

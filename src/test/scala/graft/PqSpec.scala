@@ -4,9 +4,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Product-quantization properties the oracle can't see from one run:
-  * training determinism, argmin correctness of the encoder against a
-  * brute recompute, and the ADC ≡ reconstructed-dot identity that
-  * makes the score an honest inner-product approximation.
+  * training determinism, no checkpoint left pinned by training,
+  * argmin correctness of the encoder against a brute recompute, and
+  * the ADC ≡ reconstructed-dot identity that makes the score an honest
+  * inner-product approximation.
   */
 class PqSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -18,6 +19,16 @@ class PqSpec extends AnyFunSuite {
     val a = run("pq_codebooks").collect().map(_.toString).sorted.toSeq
     val b = run("pq_codebooks").collect().map(_.toString).sorted.toSeq
     assert(a == b)
+  }
+
+  test("PQ training pins no checkpoint: building a codebook adds no persistent RDD") {
+    val sc = spark.sparkContext
+    for (name <- Seq("pq_codebooks", "ivfpq_codebooks")) {
+      val before = sc.getPersistentRDDs.keySet
+      run(name)
+      val added = sc.getPersistentRDDs.keySet -- before
+      assert(added.isEmpty, s"$name: persistent RDDs added: $added")
+    }
   }
 
   test("every vector gets 8 codes; each code is a live codeword of its subspace") {
