@@ -1,11 +1,10 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.{MinHash, TextFunctions, VectorFunctions, VectorModel}
+import graft.functions.{MinHash, PairGraph, TextFunctions, VectorFunctions, VectorModel}
+import graft.functions.PairGraph.{KCoreK, KCoreRounds, LpRounds, PrIters, PrScale}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.CheckpointBridge.unpersistCheckpoint
 
 /** Deduplication operators over `documents` / `embeddings`
   * (SURVEY.md §2.2, driver north star): exact, MinHash+LSH, SimHash,
@@ -44,19 +43,6 @@ object DedupQueries {
     while (b < EmbBitsMax && (1L << b) * EmbBucketTarget < n) b += 1
     b
   }
-  val LpRounds = 2 // synchronous label-propagation rounds (see labelPropagation)
-
-  /** k-core peel threshold and FIXED round count (see [[kCorePeel]]).
-    * K = 2: the 2-core keeps triangle-bearing duplicate cliques and
-    * sheds pair/chain fringe — the cohesion cut between a true
-    * duplicate cluster and a string of borderline matches. The fixed
-    * round count is the LPA discipline: cascading peel has a
-    * data-dependent round-to-fixpoint, so the ROUND COUNT is the
-    * cross-engine contract (KCoreSpec asserts the fixture reaches
-    * the fixpoint within it — a 5th round changes nothing).
-    */
-  val KCoreK = 2
-  val KCoreRounds = 4
 
   /** dedup_ngram_jaccard's similarity threshold t. The prefix length
     * (sz − ⌈t·sz⌉ + 1) and the size-ratio conjunct
@@ -227,14 +213,6 @@ object DedupQueries {
       s"ascii(substring($text, i + 1, 1)) * 256 + ascii(substring($text, i + 2, 1)) " +
       s"for i in range(1, greatest(length($text) - 2, 1) + 1)])"
 
-  /** Oracle mirrors of [[minhashVerifiedPairs]], split so
-    * `dedup_components` can extend the CTE chain with the recursive
-    * closure.
-    */
-  // bands' body is wrapped in a derived table: under WITH RECURSIVE a
-  // CTE whose body is a top-level UNION [ALL] is parsed as
-  // anchor-plus-recursive-term, which breaks the nested `WITH sigs`
-  // scoping ("Table with name sigs does not exist").
   /** Candidate pairs from a `bands` relation — one spelling, shared
     * by the inline CTE chain and the staging tool (which runs it over
     * bhash-bucketed band batches: the join requires equal bhash, so
@@ -248,6 +226,14 @@ object DedupQueries {
   private[queries] def tgCte(src: String): String =
     s"tg AS (SELECT doc_id, ${trigramsSql("text")} AS tg FROM $src)"
 
+  /** Oracle mirrors of [[minhashVerifiedPairs]] (these CTEs, then
+    * [[minhashPairsSelect]]), split so the graph entries can extend
+    * the CTE chain with the recursive closure. bands' body is wrapped
+    * in a derived table: under WITH RECURSIVE a CTE whose body is a
+    * top-level UNION [ALL] is parsed as anchor-plus-recursive-term,
+    * which breaks the nested `WITH sigs` scoping ("Table with name
+    * sigs does not exist").
+    */
   private[queries] def minhashPairsCtes(src: String): String =
     s"""bands AS (SELECT * FROM (${minhashBandsSql(src)})),
        |cand AS (
@@ -355,11 +341,6 @@ object DedupQueries {
       +: (1 to LpRounds).map(round)).mkString(",\n")
   }
 
-  /** The verified near-dup pair relation: LSH candidates in-bucket,
-    * then trigram-Jaccard ≥ 0.6 verification — shared by
-    * `dedup_minhash_pairs` (which exports it) and `dedup_components`
-    * (which clusters it).
-    */
   /** SHUFFLE_HASH hint with an escape hatch (judge ADVICE r15 #4):
     * shuffled-hash build sides cannot spill, so a pathologically
     * skewed candidate bucket at a large scale factor could OOM an
@@ -371,6 +352,15 @@ object DedupQueries {
     if (sys.env.get("SPARK_GRAFT_NO_SHJ_HINT").contains("true")) df
     else df.hint("shuffle_hash")
 
+  /** The node set of the document graph entries. */
+  private def docIds(s: SparkSession, dir: String): DataFrame =
+    Tables.documents(s, dir).select(col("doc_id"))
+
+  /** The verified near-dup pair relation (doc_a < doc_b, jac): LSH
+    * candidates in-bucket, then trigram-Jaccard ≥ 0.6 verification —
+    * shared by `dedup_minhash_pairs` (which exports it) and every
+    * [[PairGraph]] entry (which runs supersteps over it).
+    */
   private[graft] def minhashVerifiedPairs(s: SparkSession, dir: String): DataFrame =
     minhashVerifiedPairsOf(Tables.documents(s, dir))
 
@@ -412,322 +402,6 @@ object DedupQueries {
         col("inter").cast("double") / (col("da.sz") + col("db.sz") - col("inter")))
       .filter(col("jaccard") >= 0.6)
       .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jac"))
-  }
-
-  /** Connected components by Pregel-style min-label propagation:
-    * component(v) := min over v's neighborhood-closure of doc_id,
-    * computed as a driver-bounded loop of distributed supersteps —
-    * each iteration is one partition-reusing join + one hash
-    * aggregation, NEVER a driver-side graph walk.
-    *
-    * Scale anatomy:
-    *  - `edges` is symmetrized and hash-partitioned on `src` ONCE
-    *    (localCheckpoint also cuts its upstream lineage — at cluster
-    *    scale this becomes a reliable checkpoint to HDFS/object
-    *    store); every iteration's join reuses that partitioning.
-    *  - `labels` comes out of each superstep hash-partitioned on
-    *    doc_id by the groupBy, which the next join reuses — so the
-    *    steady-state cost per superstep is one shuffle of the
-    *    propagated (dst, component) pairs.
-    *  - Convergence is detected by the monotone label-sum (labels
-    *    only ever decrease): one scan-and-agg per superstep in
-    *    DECIMAL(38,0) — overflow-safe for any realistic id domain —
-    *    instead of a change-counting join.
-    *  - Iterations are O(cluster diameter): near-dup clusters from
-    *    banded LSH are dense (candidates form in-bucket cliques), so
-    *    this converges in a handful of supersteps. An adversarial
-    *    long-chain graph would want the large-star/small-star
-    *    variant; the superstep skeleton (and the oracle) would not
-    *    change. MaxIters caps the loop — a non-converging run throws
-    *    rather than silently returning partial clusters.
-    */
-  val CcMaxIters = 64
-
-  /** PageRank rounds (fixed count — makes the run oracle-expressible
-    * as one unrolled CTE per round) and the fixed-point rank scale:
-    * ranks are BIGINTs in units of 1e-12 of total mass. All arithmetic
-    * is integer (multiply, floor-divide, sum), so results are
-    * bit-identical regardless of partitioning, shuffle order, or
-    * engine — the same associativity trick the k-means fixed-point
-    * lift uses. Floor division leaks ≤ 1 unit of mass per (node,
-    * round) — at this scale a ~1e-10 relative loss, irrelevant to
-    * ranking and identical on both engines.
-    */
-  val PrIters = 3
-  val PrScale = 1000000000000L
-
-  /** Fixed-point PageRank over an undirected pair relation (first two
-    * columns = the edge endpoints; symmetrized internally, so deg ≥ 1
-    * everywhere and there is no dangling mass). Returns one row per
-    * graph node: (doc_id, deg, rank). See the `dedup_pagerank` entry
-    * below for the push-model semantics and scale anatomy; exposed so
-    * PageRankSpec can pin the invariants on a controlled graph.
-    */
-  def pageRank(pairs: DataFrame): DataFrame = {
-    val p = pairs.localCheckpoint()
-    val a = p.columns(0)
-    val b = p.columns(1)
-    val edges = p.select(col(a).as("src"), col(b).as("dst"))
-      .union(p.select(col(b).as("src"), col(a).as("dst")))
-      .repartition(col("src"))
-      .localCheckpoint()
-    unpersistCheckpoint(p)
-    val deg = edges.groupBy(col("src").as("v"))
-      .agg(count(lit(1)).as("deg")).localCheckpoint()
-    val ng = broadcast(deg.agg(count(lit(1)).as("ng")))
-    var ranks = deg.crossJoin(ng)
-      .select(col("v"), expr(s"$PrScale div ng").as("rank"))
-      .localCheckpoint()
-    for (_ <- 1 to PrIters) {
-      val shares = ranks.join(deg, "v")
-        .select(col("v").as("sv"),
-          expr("(rank * 85) div (100 * deg)").as("share"))
-      val next = edges.join(shares, col("src") === col("sv"))
-        .groupBy(col("dst").as("v"))
-        .agg(sum(col("share")).as("in_mass"))
-        .crossJoin(ng)
-        .select(col("v"),
-          expr(s"(15 * $PrScale) div (100 * ng) + in_mass").as("rank"))
-        .localCheckpoint()
-      unpersistCheckpoint(ranks)
-      ranks = next
-    }
-    val out = ranks.join(deg, "v")
-      .select(col("v").as("doc_id"), col("deg"), col("rank"))
-    unpersistCheckpoint(edges)
-    out
-  }
-
-  def connectedComponents(
-      s: SparkSession, pairs: DataFrame, nodes: DataFrame): DataFrame =
-    connectedComponentsWithIters(s, pairs, nodes)._1
-
-  /** Supersteps of plain propagation before pointer-jumping joins in.
-    * LSH near-dup graphs are in-bucket cliques (diameter 1-2) that
-    * converge well under this bound, so the default path never pays
-    * the jump's extra join; only an adversarial long-chain graph
-    * crosses it.
-    */
-  val CcJumpAfter = 6
-
-  /** Returns (labels, supersteps). The iteration count is exposed so
-    * ConnectedComponentsSpec can pin the convergence contract:
-    * min-label propagation moves a component's minimum one hop per
-    * superstep, so a path of diameter d ≤ [[CcJumpAfter]] converges in
-    * exactly d + 1 supersteps (the +1 detects the fixpoint). Beyond
-    * that, each superstep adds a pointer-jump (label := label of
-    * label — one self-join of the label table, the same
-    * shortcutting that drives the large-star/small-star CC of
-    * Kiveris et al., "Connected Components in MapReduce and Beyond"):
-    * the hop distance to the component minimum then halves per round,
-    * turning the worst case from O(diameter) to
-    * O([[CcJumpAfter]] + log d) without changing the oracle — label
-    * values are always same-component node ids, mins are preserved,
-    * and the monotone label-sum convergence check applies unchanged.
-    */
-  def connectedComponentsWithIters(
-      s: SparkSession, pairs: DataFrame, nodes: DataFrame): (DataFrame, Int) = {
-    import org.apache.spark.sql.types.DecimalType
-    // Materialize the pair relation ONCE before the symmetrizing union
-    // consumes it twice — for dedup_components `pairs` is the whole
-    // LSH + trigram-verify pipeline, which would otherwise be planned
-    // and executed twice in the same job.
-    val p = pairs.localCheckpoint()
-    val a = p.columns(0)
-    val b = p.columns(1)
-    val edges = p.select(col(a).as("src"), col(b).as("dst"))
-      .union(p.select(col(b).as("src"), col(a).as("dst")))
-      .repartition(col("src"))
-      .localCheckpoint()
-    unpersistCheckpoint(p) // `edges` was its only consumer
-    // The monotone label-sum convergence metric rides the checkpoint
-    // materialization itself (`observe` → CollectMetrics accumulators,
-    // read after `localCheckpoint`'s action completes): the sum
-    // previously cost a SECOND full pass over the freshly-materialized
-    // label table per superstep — guide §1.2 step 1, remove whole
-    // passes before tuning anything inside one. One superstep = one
-    // job. (ObserveCheckpointSpec pins that the metric equals the
-    // separate-aggregate spelling.)
-    def checkpointWithSum(l: DataFrame): (DataFrame, java.math.BigDecimal) = {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = l.observe(obs,
-        coalesce(sum(col("component").cast(DecimalType(38, 0))),
-          lit(java.math.BigDecimal.ZERO)).as("lsum"))
-        .localCheckpoint()
-      (ck, obs.get("lsum").asInstanceOf[java.math.BigDecimal])
-    }
-    var (labels, prevSum) = checkpointWithSum(nodes
-      .select(col(nodes.columns(0)).as("doc_id"))
-      .withColumn("component", col("doc_id")))
-    var iters = 0
-    var converged = false
-    while (!converged) {
-      iters += 1
-      require(iters <= CcMaxIters,
-        s"connectedComponents did not converge in $CcMaxIters supersteps")
-      val prop = edges.join(labels, col("src") === col("doc_id"))
-        .select(col("dst").as("doc_id"), col("component"))
-      val propagated = labels.union(prop)
-        .groupBy("doc_id").agg(min("component").as("component"))
-      var (next, newSum) =
-        if (iters < CcJumpAfter) checkpointWithSum(propagated)
-        else (propagated.localCheckpoint(), java.math.BigDecimal.ZERO)
-      if (iters >= CcJumpAfter) {
-        // pointer-jump: component := component's component. Left join:
-        // a label value is a same-component node id, but callers may
-        // pass `nodes` missing a pair endpoint — such labels keep
-        // their value rather than dropping the row. The join reads the
-        // checkpoint twice (no recompute); the superseded generation
-        // is freed like any other.
-        // explicit renames, not .as("x")/.as("y") qualifiers: both
-        // sides are the same checkpointed plan and qualified-attribute
-        // resolution fails on the deduplicated self-join
-        val parent = next.select(
-          col("doc_id").as("p_id"), col("component").as("p_comp"))
-        // the convergence sum must read the POST-jump labels, so the
-        // observe rides the jump's checkpoint in jump supersteps
-        val (jumped, jumpedSum) = checkpointWithSum(next
-          .join(parent, col("component") === col("p_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("p_comp"), col("component")).as("component")))
-        unpersistCheckpoint(next)
-        next = jumped
-        newSum = jumpedSum
-      }
-      converged = newSum.compareTo(prevSum) == 0
-      prevSum = newSum
-      // the superseded generation is dead the moment `next` is
-      // materialized; without this a run near CcMaxIters pins ~64
-      // generations of label blocks in executor storage memory
-      unpersistCheckpoint(labels)
-      labels = next
-    }
-    unpersistCheckpoint(edges)
-    (labels, iters)
-  }
-
-  /** Synchronous label-propagation rounds for community detection
-    * (Raghavan et al. 2007) — the graph primitive BESIDE
-    * [[connectedComponents]]'s transitive closure: each round every
-    * node adopts the PLURALITY label over its neighbors AND itself
-    * (count desc, label asc tie-break — deterministic where classic
-    * LPA's random sweep order is not). The INCLUSIVE rule matters:
-    * without the self-vote, a duplicate PAIR oscillates (the two
-    * labels swap every synchronous round — the textbook 2-cycle), so
-    * any even round count would split genuine pairs; with it, the
-    * pair settles to min-id in round 1 and isolated nodes need no
-    * special case (they always win their own vote). The round count
-    * is FIXED ([[LpRounds]]): LPA has no order-independent fixpoint,
-    * so the round count IS the operator's contract — what makes it
-    * oracle-checkable cross-engine. Curation difference vs CC: labels
-    * move ≤ [[LpRounds]] hops, so 2 rounds agree with CC on in-bucket
-    * duplicate cliques but refuse to bridge long chains of borderline
-    * pairs — the policy that matters exactly where CC over-merges.
-    * Superstep dataflow: per round ONE edges⋈labels shuffle + a
-    * per-node plurality (map-side partial counts, then a per-v
-    * row_number — no global window); label generations are
-    * localCheckpointed and freed like CC's, so lineage never grows
-    * with rounds.
-    */
-  def labelPropagation(
-      s: SparkSession, pairs: DataFrame, nodes: DataFrame): DataFrame = {
-    val p = pairs.localCheckpoint()
-    val a = p.columns(0)
-    val b = p.columns(1)
-    val edges = p.select(col(a).as("v"), col(b).as("nbr"))
-      .unionAll(p.select(col(b).as("v"), col(a).as("nbr")))
-      .repartition(col("nbr"))
-      .localCheckpoint()
-    unpersistCheckpoint(p)
-    var labels = nodes
-      .select(col(nodes.columns(0)).as("v"))
-      .withColumn("lbl", col("v"))
-      .localCheckpoint()
-    for (_ <- 1 to LpRounds) {
-      // explicit renames (not qualifiers): the join's right side is a
-      // projection of the same checkpointed relation family — same
-      // dedup-self-join pitfall CC documents
-      val votes = edges
-        .join(labels.select(col("v").as("nbr"), col("lbl").as("nlbl")), Seq("nbr"))
-        .select(col("v"), col("nlbl"))
-        .unionAll(labels.select(col("v"), col("lbl").as("nlbl")))
-      val w = Window.partitionBy(col("v"))
-        .orderBy(col("c").desc, col("nlbl").asc)
-      val next = votes
-        .groupBy(col("v"), col("nlbl"))
-        .agg(count(lit(1)).as("c"))
-        .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .select(col("v"), col("nlbl").as("lbl"))
-        .localCheckpoint()
-      unpersistCheckpoint(labels)
-      labels = next
-    }
-    unpersistCheckpoint(edges)
-    labels.select(col("v").as("doc_id"), col("lbl").as("community"))
-  }
-
-  /** Fixed-round k-core peel (Seidman 1983's core decomposition,
-    * bounded to [[KCoreRounds]] synchronous rounds) — the THIRD graph
-    * policy over the verified pair graph, beside CC's transitive
-    * closure and LPA's plurality communities: each round drops every
-    * node whose degree AMONG SURVIVORS is < [[KCoreK]], so removals
-    * cascade down chains while cliques are self-supporting. Curation
-    * reading: in-core docs sit in densely-duplicated clusters (safe
-    * to collapse aggressively); peeled docs matched only through
-    * fringe pairs (review before dropping). Superstep dataflow: per
-    * round TWO semi-joins confine the edge table to survivors (each a
-    * shuffle on one endpoint; the alive set is node-sized, far below
-    * the edge table) + one degree partial-agg — no window, no global
-    * sort; the alive generation is localCheckpointed and freed like
-    * CC's labels, so lineage stays flat across rounds. Output covers
-    * EVERY document (in_core flag + within-core degree, 0 when
-    * peeled), so both verdicts are non-vacuous at every SF.
-    *
-    * SEMANTICS OF THE BOUND (ADVICE r14): `in_core = 1` means
-    * "survived [[KCoreRounds]] peel rounds with ≥ [[KCoreK]]
-    * surviving neighbors" — which equals true k-core membership
-    * exactly when the peel converged within the bound. The fixture's
-    * convergence is asserted (KCoreSpec: round KCoreRounds+1 changes
-    * nothing at sf0.01); at SFs the spec doesn't cover, a cascade
-    * deeper than KCoreRounds would leave in_core=1 rows with
-    * core_deg < K. Cross-engine hashes stay exact regardless (the
-    * oracle mirrors the round count), so the contract IS the round
-    * count — a deployment needing the true core at unknown depth
-    * raises KCoreRounds or iterates to fixpoint with the same body.
-    */
-  def kCorePeel(s: SparkSession, pairs: DataFrame, nodes: DataFrame): DataFrame = {
-    val p = pairs.localCheckpoint()
-    val a = p.columns(0)
-    val b = p.columns(1)
-    val edges = p.select(col(a).as("v"), col(b).as("nbr"))
-      .unionAll(p.select(col(b).as("v"), col(a).as("nbr")))
-      .repartition(col("v"))
-      .localCheckpoint()
-    unpersistCheckpoint(p)
-    def survivorDegrees(alive: DataFrame): DataFrame = edges
-      .join(alive, Seq("v"), "leftsemi")
-      .join(alive.select(col("v").as("nbr")), Seq("nbr"), "leftsemi")
-      .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-    var alive = edges.select(col("v")).distinct().localCheckpoint()
-    for (_ <- 1 to KCoreRounds) {
-      val next = survivorDegrees(alive)
-        .filter(col("deg") >= KCoreK).select(col("v"))
-        .localCheckpoint()
-      unpersistCheckpoint(alive)
-      alive = next
-    }
-    // materialize the survivors' within-core degrees BEFORE freeing
-    // the edge/alive blocks the lazy plan still references
-    val coreDeg = survivorDegrees(alive)
-      .select(col("v").as("doc_id"), col("deg").as("core_deg"))
-      .localCheckpoint()
-    unpersistCheckpoint(edges)
-    unpersistCheckpoint(alive)
-    nodes.select(col(nodes.columns(0)).as("doc_id"))
-      .join(coreDeg, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        col("core_deg").isNotNull.cast("int").as("in_core"),
-        coalesce(col("core_deg"), lit(0L)).as("core_deg"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -804,21 +478,11 @@ object DedupQueries {
     // PageRank over the verified near-dup graph — centrality ranks a
     // duplicate cluster's most-connected member, the natural canonical
     // pick when min-id is arbitrary (and, on a citation/link graph,
-    // the standard quality prior for corpus curation). Iterative
-    // dataflow in the CC/k-means mold: a driver-bounded loop of
-    // distributed supersteps, each ONE join (edges × ranks, reusing
-    // edges' src-hash partitioning) + ONE aggregation (sum of shares
-    // by dst) — never a driver-side graph walk. Ranks are fixed-point
-    // BIGINTs (see [[PrScale]]): each round a node keeps none of its
-    // mass (pure push), sends floor(rank·85/(100·deg)) to each
-    // neighbor, and every node receives the same floor((15·S)/(100·N))
-    // teleport base. The symmetrized graph has deg ≥ 1 everywhere, so
-    // there is no dangling mass. Per-node share is computed ONCE
-    // (ranks ⋈ deg, both already hash-partitioned on the node id)
-    // and fanned out by the edge join — not recomputed per edge.
-    // Superseded rank generations are unpersisted like CC's labels.
+    // the standard quality prior for corpus curation). Fixed-point
+    // integer ranks, so both engines agree bit for bit; see
+    // [[PairGraph.pageRank]] for the push model and its supersteps.
     "dedup_pagerank" -> ((s, dir) =>
-      pageRank(minhashVerifiedPairs(s, dir).select(col("doc_a"), col("doc_b")))),
+      PairGraph.using(minhashVerifiedPairs(s, dir))(_.pageRank())),
 
     // Asymmetric CONTAINMENT verify over the shared LSH candidates:
     // C(A,B) = |A∩B| / |A| catches doc-contains-doc (quotes,
@@ -959,38 +623,29 @@ object DedupQueries {
     // Pair graph → duplicate CLUSTERS: connected components over the
     // verified near-dup pairs, the step that turns pairwise matches
     // into a canonical-doc assignment (keep component representative,
-    // drop the rest). See [[connectedComponents]] for the iteration's
+    // drop the rest). See [[PairGraph.components]] for the iteration's
     // scale anatomy.
-    "dedup_components" -> ((s, dir) => {
-      val pairs = minhashVerifiedPairs(s, dir)
-      val nodes = Tables.documents(s, dir).select(col("doc_id"))
-      connectedComponents(s, pairs.select(col("doc_a"), col("doc_b")), nodes)
+    "dedup_components" -> ((s, dir) =>
+      PairGraph.using(minhashVerifiedPairs(s, dir))(_.components(docIds(s, dir)))
         .withColumn("is_canonical",
-          (col("doc_id") === col("component")).cast("int"))
-    }),
+          (col("doc_id") === col("component")).cast("int"))),
 
     // Plurality-label communities over the same pair graph — the
     // alternative clustering POLICY to dedup_components' transitive
-    // closure (see [[labelPropagation]] for semantics + scale
+    // closure (see [[PairGraph.communities]] for semantics + scale
     // anatomy): agrees with CC on duplicate cliques, refuses to
     // bridge long chains of borderline matches.
-    "dedup_label_prop" -> ((s, dir) => {
-      val pairs = minhashVerifiedPairs(s, dir)
-      val nodes = Tables.documents(s, dir).select(col("doc_id"))
-      labelPropagation(s, pairs.select(col("doc_a"), col("doc_b")), nodes)
-    }),
+    "dedup_label_prop" -> ((s, dir) =>
+      PairGraph.using(minhashVerifiedPairs(s, dir))(_.communities(docIds(s, dir)))),
 
     // Core decomposition over the same pair graph — the cohesion CUT
     // beside CC (merge everything reachable) and LPA (plurality
     // communities): the [[KCoreK]]-core keeps only docs held by ≥ K
     // surviving near-dup partners, the dense clusters safe to
     // collapse wholesale; the peel cascades chain fringe out. See
-    // [[kCorePeel]] for semantics + scale anatomy.
-    "dedup_kcore" -> ((s, dir) => {
-      val pairs = minhashVerifiedPairs(s, dir)
-      val nodes = Tables.documents(s, dir).select(col("doc_id"))
-      kCorePeel(s, pairs.select(col("doc_a"), col("doc_b")), nodes)
-    }),
+    // [[PairGraph.kCore]] for semantics + scale anatomy.
+    "dedup_kcore" -> ((s, dir) =>
+      PairGraph.using(minhashVerifiedPairs(s, dir))(_.kCore(docIds(s, dir), KCoreRounds))),
 
     // The CC-vs-LPA POLICY DIFFERENCE, measured on the real pair
     // graph (the diagnostics-family companion to dedup_label_prop's
@@ -999,15 +654,12 @@ object DedupQueries {
     // cliques both policies agree on and n_comms > 1 rows are
     // exactly the long-chain clusters LPA refuses to bridge (the
     // candidates a curation pass reviews before dropping whole
-    // clusters). Pairs are checkpointed ONCE and feed both
-    // clusterings — the LSH+verify pipeline does not run twice.
+    // clusters). One graph feeds both clusterings — the LSH+verify
+    // pipeline and the edge build run once.
     "dedup_community_compare" -> ((s, dir) => {
-      val pairs = minhashVerifiedPairs(s, dir)
-        .select(col("doc_a"), col("doc_b")).localCheckpoint()
-      val nodes = Tables.documents(s, dir).select(col("doc_id"))
-      val comp = connectedComponents(s, pairs, nodes)
-      val lpa = labelPropagation(s, pairs, nodes)
-      comp.join(lpa, Seq("doc_id"))
+      val nodes = docIds(s, dir)
+      PairGraph.using(minhashVerifiedPairs(s, dir))(g =>
+          g.components(nodes).join(g.communities(nodes), Seq("doc_id")))
         .groupBy(col("component"))
         .agg(countDistinct(col("community")).as("n_comms"))
         .groupBy(col("n_comms"))
@@ -1074,75 +726,15 @@ object DedupQueries {
     // sit far from the representative (a long chain means "near-dup
     // of a near-dup", where transitive similarity has decayed — the
     // classic over-merging signal a curation pass inspects before
-    // dropping whole clusters). FRONTIER supersteps, not full-table
-    // ones: only nodes whose distance improved last round propagate,
-    // so each superstep's join touches the frontier's incident edges
-    // — not all |E| — and at 100 TB the per-round work decays with
-    // the shrinking frontier instead of staying corpus-sized (the
-    // textbook delta-BFS the full dist⋈edges form wastes). The dist
-    // table crosses one doc_id-keyed join per round; convergence =
-    // the frontier empties (its count IS the per-round action — no
-    // separate checksum pass). The fixture proves the point: measured
-    // chains reach 10 hops at sf0.01 (7 at sf0.1 — denser corpora
-    // merge into rounder clusters). The oracle's recursive walk caps
-    // at 16, above every measured diameter; the Spark loop requires
-    // convergence within [[CcMaxIters]].
-    "dedup_hop_distance" -> ((s, dir) => {
-      val pairs = minhashVerifiedPairs(s, dir)
-        .select(col("doc_a"), col("doc_b")).localCheckpoint()
-      val nodes = Tables.documents(s, dir).select(col("doc_id"))
-      val comp = connectedComponents(s, pairs, nodes).localCheckpoint()
-      val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-        .repartition(col("src"))
-        .localCheckpoint()
-      val Inf = 1000000L
-      // Frontier sizes ride the checkpoint materializations via
-      // `observe` (same §1.2 move as connectedComponents' label sum):
-      // each BFS round previously paid a second pass over the merged
-      // dist table just to count the surviving frontier.
-      val obs0 = org.apache.spark.sql.Observation()
-      var dist = comp.select(col("doc_id"),
-        when(col("doc_id") === col("component"), lit(0L)).otherwise(lit(Inf))
-          .as("hops"))
-        .observe(obs0, count(when(col("hops") === 0L, 1)).as("nf"))
-        .localCheckpoint()
-      // round-0 frontier: the canonicals themselves
-      var frontier = dist.filter(col("hops") === 0L)
-      var frontierSize = obs0.get("nf").asInstanceOf[Long]
-      var mergedCk: DataFrame = null
-      var iters = 0
-      while (frontierSize > 0) {
-        iters += 1
-        require(iters <= CcMaxIters, s"BFS did not converge in $CcMaxIters supersteps")
-        // relaxations from the frontier only
-        val prop = edges.join(frontier, col("src") === col("doc_id"))
-          .select(col("dst"), (col("hops") + 1).as("cand"))
-          .groupBy(col("dst")).agg(min(col("cand")).as("cand"))
-          .withColumnRenamed("dst", "doc_id")
-        // one checkpointed merge feeds next-dist, next-frontier AND
-        // (via the observed metric) the next frontier size
-        val obs = org.apache.spark.sql.Observation()
-        val merged = dist.join(prop, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("hops"), col("cand"))
-          .observe(obs, count(when(col("cand") < col("hops"), 1)).as("nf"))
-          .localCheckpoint()
-        val nextFrontier = merged.filter(col("cand") < col("hops"))
-          .select(col("doc_id"), col("cand").as("hops"))
-        frontierSize = obs.get("nf").asInstanceOf[Long]
-        // round i−1's blocks: the initial dist checkpoint (round 1)
-        // or the previous merged (dist/frontier are projections of it)
-        if (mergedCk != null) unpersistCheckpoint(mergedCk)
-        else unpersistCheckpoint(dist)
-        mergedCk = merged
-        dist = merged.select(col("doc_id"),
-          least(col("hops"), coalesce(col("cand"), lit(Inf))).as("hops"))
-        frontier = nextFrontier
-      }
-      unpersistCheckpoint(edges)
-      comp.join(dist, "doc_id")
-        .select(col("doc_id"), col("component"), col("hops").cast("int").as("hops"))
-    }),
+    // dropping whole clusters). One graph serves CC and the BFS; see
+    // [[PairGraph.hops]] for the frontier supersteps. The fixture
+    // proves the point: measured chains reach 10 hops at sf0.01 (7 at
+    // sf0.1 — denser corpora merge into rounder clusters). The
+    // oracle's recursive walk caps at 16, above every measured
+    // diameter; the Spark loop requires convergence within
+    // [[PairGraph.CcMaxIters]].
+    "dedup_hop_distance" -> ((s, dir) =>
+      PairGraph.using(minhashVerifiedPairs(s, dir))(g => g.hops(g.components(docIds(s, dir))))),
 
     // Cluster → canonical-doc collapse: the stage after connected
     // components that actually shrinks the corpus. Per multi-member
@@ -1154,10 +746,9 @@ object DedupQueries {
     // partitioning; only (id, int) columns flow, never text.
     "dedup_representatives" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val pairs = minhashVerifiedPairs(s, dir)
-      val docs = Tables.documents(s, dir)
-      val labels = connectedComponents(
-        s, pairs.select(col("doc_a"), col("doc_b")), docs.select(col("doc_id")))
+            val docs = Tables.documents(s, dir)
+      val labels = PairGraph.using(minhashVerifiedPairs(s, dir))(
+        _.components(docs.select(col("doc_id"))))
       val w = Window.partitionBy(col("component"))
         .orderBy(col("n_chars").desc, col("doc_id"))
       labels.join(docs.select(col("doc_id"), col("n_chars")), "doc_id")
@@ -1193,7 +784,7 @@ object DedupQueries {
     // prunes candidates before the exact codegen'd intersect verifies.
     "dedup_ngram_jaccard" -> ((parent, dir) => {
       import org.apache.spark.sql.expressions.Window
-      // Partitions-track-volume, without per-SF tuning: the verify
+            // Partitions-track-volume, without per-SF tuning: the verify
       // join's candidate stream grows linearly with the corpus, and at
       // 10x data the session default (32) spilled its sort (measured
       // 76.6 s -> 31.0 s at 128 — SCALE.md round-12 exponents). The
@@ -1299,7 +890,7 @@ object DedupQueries {
     // corpus' duplicate-rich source so the top tail stays populated.
     "dedup_lsh_scurve" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val sampled = TextFunctions.tokenHash(concat(col("source"), lit(":scv2"))) % 5 === 0
+            val sampled = TextFunctions.tokenHash(concat(col("source"), lit(":scv2"))) % 5 === 0
       val docs = Tables.documents(s, dir)
         .filter(sampled)
         .withColumn("rn", row_number().over(Window.partitionBy(col("source"))

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.functions.PairGraph
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -166,14 +167,14 @@ object TextQueries {
     // text_curation_pipeline's gate→split→manifest frame. Scale shape:
     // the manifest columns are projected narrow BEFORE the canonical
     // semi-join, so text crosses no exchange; the cluster step inherits
-    // connectedComponents' bounded-bucket pair generation and
+    // PairGraph.components' bounded-bucket pair generation and
     // O(diameter) supersteps (in-bucket cliques → 2-3 here).
     "text_curation_neardup" -> ((s, dir) => {
       val gated = gatedDocs(s, dir)
       val manifest = gated.select(
         col("doc_id"), col("source"), splitCol.as("split"),
         tokenCount(col("text")).as("n_tokens"))
-      manifest.join(canonicalOf(s, gated), "doc_id")
+      manifest.join(canonicalOf(gated), "doc_id")
     }),
 
     // Repetition quality signal (Gopher-style): per doc, the dominant
@@ -367,11 +368,8 @@ object TextQueries {
     // unchanged) with a ':csplit'-salted component hash — independent
     // of the per-doc split hash, deterministic re-runs.
     "text_cluster_split" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val pairs = DedupQueries.minhashVerifiedPairs(s, dir)
-        .select(col("doc_a"), col("doc_b"))
-      val comp = DedupQueries.connectedComponents(s, pairs,
-        docs.select(col("doc_id")))
+      val comp = PairGraph.using(DedupQueries.minhashVerifiedPairs(s, dir))(
+        _.components(Tables.documents(s, dir).select(col("doc_id"))))
       val ch = tokenHash(concat(col("component").cast("string"), lit(":csplit"))) % 100
       comp.select(col("doc_id"), col("component"),
         when(ch < 80, "train").when(ch < 90, "val").otherwise("test").as("split"))
@@ -1155,8 +1153,8 @@ object TextQueries {
   /** Quality-gated corpus, localCheckpointed ONCE: the gated scan
     * feeds several consumers (signatures, trigram verify, CC nodes,
     * manifest) — without the checkpoint each one re-plans scan +
-    * stopwordRatio, i.e. redundant corpus scans at 100 TB. Same
-    * lineage-cut policy as connectedComponents' `pairs`.
+    * stopwordRatio, i.e. redundant corpus scans at 100 TB. The same
+    * lineage cut [[PairGraph]] makes once on its edge table.
     */
   private def gatedDocs(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
@@ -1166,7 +1164,7 @@ object TextQueries {
   private def recipePipeline(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val gated = gatedDocs(s, dir)
-    val canon = canonicalOf(s, gated)
+    val canon = canonicalOf(gated)
     val manifest0 = gated
       .join(canon, "doc_id")
       .select(col("doc_id"), col("source"), splitCol.as("split"),
@@ -1205,12 +1203,10 @@ object TextQueries {
     * the keep-set of cluster-then-keep dedup, shared by
     * `text_curation_neardup` and the composed recipe.
     */
-  private def canonicalOf(s: SparkSession, gated: DataFrame): DataFrame = {
-    val pairs = DedupQueries.minhashVerifiedPairsOf(gated)
-      .select(col("doc_a"), col("doc_b"))
-    DedupQueries.connectedComponents(s, pairs, gated.select(col("doc_id")))
+  private def canonicalOf(gated: DataFrame): DataFrame =
+    PairGraph.using(DedupQueries.minhashVerifiedPairsOf(gated))(
+        _.components(gated.select(col("doc_id"))))
       .filter(col("doc_id") === col("component")).select(col("doc_id"))
-  }
 
   /** Distinct word n-grams of the corpus' test split — the MB-scale
     * eval-suite stand-in both contamination consumers broadcast.

@@ -1,10 +1,11 @@
 package graft.tools
 
 import graft.{Bench, Session, SparkEntry}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 
 /** Time and measured physical cost of named queries: per rep, the wall
-  * time, the output rows, and the rows/bytes through the shuffle
+  * time, the Spark jobs submitted (AQE stage jobs included), the
+  * output rows, and the rows/bytes through the shuffle
   * system and bytes read from storage, straight from the task metrics
   * (not estimates) — the evidence behind SCALE.md's "only X crosses the
   * exchange" claims. After `Session.warmUp`, each rep is materialized
@@ -14,6 +15,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   */
 object CostReport {
   private class Acc extends SparkListener {
+    @volatile var jobs = 0
     @volatile var shufWrite = 0L
     @volatile var shufWriteRecords = 0L
     @volatile var shufRead = 0L
@@ -29,7 +31,9 @@ object CostReport {
         inputRecords += m.inputMetrics.recordsRead
       }
     }
+    override def onJobStart(j: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
     def reset(): Unit = synchronized {
+      jobs = 0
       shufWrite = 0L; shufWriteRecords = 0L; shufRead = 0L
       inputBytes = 0L; inputRecords = 0L
     }
@@ -51,7 +55,7 @@ object CostReport {
       val secs = (System.nanoTime() - t0) / 1e9
       // listener events are delivered async; drain before reading
       org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-      println(f"[cost] $name rep$r: $secs%.3f s out_rows=$n input=${acc.inputRecords}%,d rows" +
+      println(f"[cost] $name rep$r: $secs%.3f s jobs=${acc.jobs} out_rows=$n input=${acc.inputRecords}%,d rows" +
         f"/${acc.inputBytes / 1024}%,d KiB shuffle_write=${acc.shufWriteRecords}%,d rows" +
         f"/${acc.shufWrite / 1024}%,d KiB shuffle_read=${acc.shufRead / 1024}%,d KiB")
     }

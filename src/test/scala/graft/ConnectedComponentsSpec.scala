@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.DedupQueries
+import graft.functions.PairGraph
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The min-label-propagation superstep loop on graphs whose shape the
@@ -12,8 +12,7 @@ class ConnectedComponentsSpec extends AnyFunSuite {
 
   private def run(edges: Seq[(Long, Long)], nodes: Seq[Long]): Map[Long, Long] = {
     import spark.implicits._
-    val labels = DedupQueries.connectedComponents(
-      spark, edges.toDF("a", "b"), nodes.toDF("doc_id"))
+    val labels = PairGraph.using(edges.toDF("a", "b"))(_.components(nodes.toDF("doc_id")))
     labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
@@ -43,10 +42,10 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     // pointer-jump upgrade: below CcJumpAfter no jump join ever runs
     // and plain propagation's exact d + 1 count still holds
     import spark.implicits._
-    val d = DedupQueries.CcJumpAfter - 2
+    val d = PairGraph.CcJumpAfter - 2
     val chain = (0L until d.toLong).map(i => (i, i + 1))
-    val (labels, iters) = DedupQueries.connectedComponentsWithIters(
-      spark, chain.toDF("a", "b"), (0L to d.toLong).map(Tuple1(_)).toDF("doc_id"))
+    val (labels, iters) = PairGraph.using(chain.toDF("a", "b"))(
+      _.componentsWithIters((0L to d.toLong).map(Tuple1(_)).toDF("doc_id")))
     assert(iters == d + 1)
     assert(labels.filter("component = 0").count() == d + 1)
   }
@@ -57,9 +56,9 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     *    plain propagation crosses CcJumpAfter supersteps, each round
     *    adds a pointer-jump (label := label of label) and the hop
     *    distance to the component minimum at least halves per round —
-    *    see connectedComponentsWithIters' scaladoc;
+    *    see PairGraph.componentsWithIters' scaladoc;
     *  - executor storage stays FLAT across supersteps: superseded
-    *    label checkpoints (and the edges/pairs checkpoints) are
+    *    label checkpoints (and the edge table) are
     *    unpersisted as soon as their successor materializes, so only
     *    the returned labels generation survives the call.
     */
@@ -69,13 +68,13 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     val d = 24
     val chain = (100L until (100L + d)).map(i => (i, i + 1))
     val before = sc.getPersistentRDDs.size
-    val (labels, iters) = DedupQueries.connectedComponentsWithIters(
-      spark, chain.toDF("a", "b"), (100L to (100L + d)).map(Tuple1(_)).toDF("doc_id"))
+    val (labels, iters) = PairGraph.using(chain.toDF("a", "b"))(
+      _.componentsWithIters((100L to (100L + d)).map(Tuple1(_)).toDF("doc_id")))
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == (100L to (100L + d)).map(_ -> 100L).toMap)
     val log2d = (math.log(d) / math.log(2)).ceil.toInt
     assert(iters < d + 1, s"pointer-jump never engaged: $iters supersteps")
-    assert(iters <= DedupQueries.CcJumpAfter + log2d + 1,
+    assert(iters <= PairGraph.CcJumpAfter + log2d + 1,
       s"$iters supersteps exceeds the O(CcJumpAfter + log d) bound")
     // only the returned generation may remain persisted
     assert(sc.getPersistentRDDs.size <= before + 1)
@@ -86,12 +85,12 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     import spark.implicits._
     val prop = Prop.forAll(Gen.choose(2, 12)) { d: Int =>
       val chain = (0L until d.toLong).map(i => (i, i + 1))
-      val (labels, iters) = DedupQueries.connectedComponentsWithIters(
-        spark, chain.toDF("a", "b"), (0L to d.toLong).map(Tuple1(_)).toDF("doc_id"))
+      val (labels, iters) = PairGraph.using(chain.toDF("a", "b"))(
+        _.componentsWithIters((0L to d.toLong).map(Tuple1(_)).toDF("doc_id")))
       val log2d = (math.log(d) / math.log(2)).ceil.toInt
       // jumping may only accelerate: labels with jumps are pointwise ≤
       // labels without at every round, so convergence is never later
-      val bound = math.min(d + 1, DedupQueries.CcJumpAfter + log2d + 1)
+      val bound = math.min(d + 1, PairGraph.CcJumpAfter + log2d + 1)
       iters <= bound && labels.filter("component = 0").count() == d + 1
     }
     // each case runs ~d Spark supersteps — a handful of cases suffices

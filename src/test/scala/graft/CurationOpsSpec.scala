@@ -25,8 +25,7 @@ class CurationOpsSpec extends AnyFunSuite {
     import graft.queries.DedupQueries
     val pairs = DedupQueries.minhashVerifiedPairs(spark, sf)
     val docs = Tables.documents(spark, sf)
-    val labels = DedupQueries.connectedComponents(
-      spark, pairs.select(col("doc_a"), col("doc_b")), docs.select(col("doc_id")))
+    val labels = graft.functions.PairGraph.using(pairs)(_.components(docs.select(col("doc_id"))))
     val byComp = labels.join(docs.select(col("doc_id"), col("n_chars")), "doc_id")
       .collect()
       .groupBy(_.getAs[Long]("component"))

@@ -1,11 +1,12 @@
 package graft
 
+import graft.functions.PairGraph
 import graft.queries.DedupQueries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.CheckpointBridge
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins [[DedupQueries.kCorePeel]]'s contract on graphs where the
+/** Pins [[PairGraph.kCore]]'s contract on graphs where the
   * answer is derivable by hand (clique self-support, chain cascade,
   * pair fringe) and — on the real fixture graph — that the FIXED
   * round count actually reaches the peel fixpoint, the empirical half
@@ -17,8 +18,8 @@ class KCoreSpec extends AnyFunSuite {
 
   private def run(pairs: Seq[(Long, Long)], nodes: Seq[Long]): Map[Long, (Int, Long)] = {
     import spark.implicits._
-    DedupQueries.kCorePeel(spark,
-        pairs.toDF("doc_a", "doc_b"), nodes.toDF("doc_id"))
+    PairGraph.using(pairs.toDF("doc_a", "doc_b"))(
+        _.kCore(nodes.toDF("doc_id"), PairGraph.KCoreRounds))
       .collect().map(r => r.getLong(0) -> ((r.getInt(1), r.getLong(2)))).toMap
   }
 
@@ -49,40 +50,19 @@ class KCoreSpec extends AnyFunSuite {
 
   test("fixture graph reaches the peel fixpoint within KCoreRounds, non-vacuously") {
     import spark.implicits._
-    val pairs = DedupQueries.minhashVerifiedPairs(spark, sf)
-      .select(col("doc_a"), col("doc_b")).localCheckpoint()
-    val nodes = Tables.documents(spark, sf).select(col("doc_id"))
-    def coreSet(rounds: Int): Set[Long] = {
-      // re-run the peel with a different bound by calling the helper's
-      // round body inline: alive after `rounds` rounds. Mirror the
-      // production checkpoint hygiene (ADVICE r14): each generation
-      // frees its predecessor's blocks, and the final generation is
-      // freed after collect — two coreSet calls must not leave ~10
-      // materialized RDDs in executor storage for the rest of the
-      // suite.
-      var alive = pairs.select(col("doc_a").as("v"))
-        .unionAll(pairs.select(col("doc_b").as("v"))).distinct()
-        .localCheckpoint()
-      val edges = pairs.select(col("doc_a").as("v"), col("doc_b").as("nbr"))
-        .unionAll(pairs.select(col("doc_b").as("v"), col("doc_a").as("nbr")))
-      for (_ <- 1 to rounds) {
-        val deg = edges
-          .join(alive, Seq("v"), "leftsemi")
-          .join(alive.select(col("v").as("nbr")), Seq("nbr"), "leftsemi")
-          .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-        val next = deg.filter(col("deg") >= DedupQueries.KCoreK).select(col("v"))
-          .localCheckpoint()
-        CheckpointBridge.unpersistCheckpoint(alive)
-        alive = next
-      }
+    // the production peel at the contract's round count and one past
+    // it, on one graph; each survivor set is freed once collected
+    def coreSet(g: PairGraph, rounds: Int): Set[Long] = {
+      val alive = g.peel(rounds)
       val out = alive.as[Long].collect().toSet
       CheckpointBridge.unpersistCheckpoint(alive)
       out
     }
-    val atContract = coreSet(DedupQueries.KCoreRounds)
-    val onePast = coreSet(DedupQueries.KCoreRounds + 1)
+    val (atContract, onePast) =
+      PairGraph.using(DedupQueries.minhashVerifiedPairs(spark, sf))(g =>
+        (coreSet(g, PairGraph.KCoreRounds), coreSet(g, PairGraph.KCoreRounds + 1)))
     assert(atContract == onePast,
-      s"fixture peel not at fixpoint after ${DedupQueries.KCoreRounds} rounds: " +
+      s"fixture peel not at fixpoint after ${PairGraph.KCoreRounds} rounds: " +
         s"${atContract.size} -> ${onePast.size} survivors")
     // non-vacuity: both verdicts live (the 62-triangle fixture graph
     // has a real 2-core, and fringe pairs exist to peel)
@@ -91,6 +71,5 @@ class KCoreSpec extends AnyFunSuite {
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(out.getOrElse(1, 0L) > 0, "fixture 2-core is empty — vacuous entry")
     assert(out.getOrElse(0, 0L) > 0, "nothing peeled — vacuous entry")
-    CheckpointBridge.unpersistCheckpoint(pairs)
   }
 }

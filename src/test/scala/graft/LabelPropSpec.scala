@@ -1,9 +1,9 @@
 package graft
 
-import graft.queries.DedupQueries
+import graft.functions.PairGraph
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins [[DedupQueries.labelPropagation]]'s contract on graphs where
+/** Pins [[PairGraph.communities]]'s contract on graphs where
   * the answer is derivable by hand: the inclusive rule's fix for the
   * synchronous 2-cycle, clique agreement with CC, and the ≤-LpRounds
   * hop bound that makes LPA refuse the long chains CC bridges.
@@ -13,8 +13,7 @@ class LabelPropSpec extends AnyFunSuite {
 
   private def run(pairs: Seq[(Long, Long)], nodes: Seq[Long]): Map[Long, Long] = {
     import spark.implicits._
-    DedupQueries.labelPropagation(spark,
-        pairs.toDF("doc_a", "doc_b"), nodes.toDF("doc_id"))
+    PairGraph.using(pairs.toDF("doc_a", "doc_b"))(_.communities(nodes.toDF("doc_id")))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
@@ -41,8 +40,7 @@ class LabelPropSpec extends AnyFunSuite {
       s"LPA collapsed the 7-node chain: $lpa")
     // ...while transitive closure merges it entirely
     import spark.implicits._
-    val cc = DedupQueries.connectedComponents(spark,
-        pairs.toDF("doc_a", "doc_b"), nodes.toDF("doc_id"))
+    val cc = PairGraph.using(pairs.toDF("doc_a", "doc_b"))(_.components(nodes.toDF("doc_id")))
       .collect().map(_.getLong(1)).toSet
     assert(cc == Set(0L))
     // and every LPA label is a same-chain node id (labels are always

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * itself (Dataset.checkpoint runs under withAction, so the
   * CollectMetrics accumulators publish), letting convergence checks
   * ride the materialization instead of paying a second full pass per
-  * superstep (connectedComponents' label sum, hop-distance BFS's
+  * superstep (PairGraph.components' label sum, PairGraph.hops'
   * frontier count).
   */
 class ObserveCheckpointSpec extends AnyFunSuite {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.DedupQueries
+import graft.functions.PairGraph
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Fixed-point PageRank invariants on controlled graphs the sf
@@ -12,7 +12,7 @@ class PageRankSpec extends AnyFunSuite {
 
   private def run(pairs: Seq[(Long, Long)]): Map[Long, (Long, Long)] = {
     import spark.implicits._
-    DedupQueries.pageRank(pairs.toDF("doc_a", "doc_b"))
+    PairGraph.using(pairs.toDF("doc_a", "doc_b"))(_.pageRank())
       .collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
       .toMap
@@ -35,10 +35,10 @@ class PageRankSpec extends AnyFunSuite {
     val n = got.size.toLong
     // each round each node floors once on the teleport term and once
     // per share; with deg ≤ n the per-round leak is < n·(n+1) units
-    val maxLeak = DedupQueries.PrIters * n * (n + 1)
-    assert(total <= DedupQueries.PrScale)
-    assert(total >= DedupQueries.PrScale - maxLeak,
-      s"lost more than floor leakage: $total vs ${DedupQueries.PrScale}")
+    val maxLeak = PairGraph.PrIters * n * (n + 1)
+    assert(total <= PairGraph.PrScale)
+    assert(total >= PairGraph.PrScale - maxLeak,
+      s"lost more than floor leakage: $total vs ${PairGraph.PrScale}")
   }
 
   test("regular graph (cycle) is the uniform fixpoint") {
