@@ -364,30 +364,34 @@ object DedupQueries {
   private[graft] def minhashVerifiedPairs(s: SparkSession, dir: String): DataFrame =
     minhashVerifiedPairsOf(Tables.documents(s, dir))
 
-  /** LSH candidate pairs (band-bucket in-group expansion, distinct,
-    * canonical doc_a < doc_b) — the shared front half of every
-    * verify variant (Jaccard, containment).
+  /** LSH candidate pairs (distinct, canonical doc_a < doc_b) — the
+    * shared front half of every verify variant (Jaccard, containment).
+    * `FromBands` serves callers that already hold the signatures
+    * ([[dedup_minhash_estimate]]'s side table), so they derive bands
+    * without recomputing MinHashSignature from text.
     */
   private[queries] def lshCandidates(documents: DataFrame): DataFrame =
     lshCandidatesFromBands(minhashBands(documents))
 
-  /** Candidate pairs from an already-built (doc_id, band, bhash)
-    * relation — split out so callers that ALREADY hold the signature
-    * table ([[dedup_minhash_estimate]]'s checkpointed side table) can
-    * derive bands from the sig columns instead of recomputing
-    * MinHashSignature from text a second time.
+  private[graft] def lshCandidatesFromBands(bands: DataFrame): DataFrame =
+    coBucketPairs(bands, Seq("band", "bhash")).distinct()
+
+  /** The (doc_a < doc_b) pairs of docs sharing a bucket of `rows`,
+    * once per shared bucket: one shuffle, then in-group expansion of
+    * each bucket of 2 to `maxDocs` doc_ids (no self-join).
     */
-  private[queries] def lshCandidatesFromBands(bands: DataFrame): DataFrame =
-    bands
-      .groupBy(col("band"), col("bhash"))
+  private[graft] def coBucketPairs(rows: DataFrame, bucketCols: Seq[String],
+                                   maxDocs: Int = Int.MaxValue): DataFrame =
+    rows
+      .groupBy(bucketCols.map(col): _*)
       .agg(collect_list(col("doc_id")).as("ids"))
-      .filter(size(col("ids")) > 1)
+      .filter(size(col("ids")).between(2, maxDocs))
       .select(explode(expr(
         """flatten(transform(ids, (x, i) ->
           |  transform(slice(ids, i + 2, size(ids) - i - 1), y ->
           |    struct(least(x, y) AS a, greatest(x, y) AS b))))""".stripMargin)).as("p"))
+      .filter(col("p.a") < col("p.b"))
       .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
-      .distinct()
 
   private[queries] def minhashVerifiedPairsOf(documents: DataFrame): DataFrame = {
     val cand = lshCandidates(documents)

@@ -990,40 +990,16 @@ object TextQueries {
     // of ≥ G+W-1 tokens is GUARANTEED to share a fingerprint, while
     // only ~1/W of grams are kept. That sampling is what distinguishes
     // it from text_dup_spans (which hashes every gram): at 100 TB the
-    // fingerprint index is a W-fold smaller join. Selection is the
+    // fingerprint index is a W-fold smaller shuffle. Selection is the
     // distinct window-min set — position-free, so it's mirrorable as
-    // list arithmetic with no window functions. Cross-doc pairs come
-    // from a fingerprint-bucket join with the LSH-banding discipline:
-    // fingerprints shared by > [[WinnowMaxDf]] docs are dropped as
-    // stop-fingerprints (bounding per-bucket pair fan-out), pairs
-    // need ≥ [[WinnowMinShared]] shared fingerprints.
-    "text_winnow" -> ((s, dir) => {
-      // fingerprints are computed by the fused native expression
-      // (gram → md5 → sliding min → distinct in one pass,
-      // [[graft.functions.expressions.WinnowFingerprints]]): the
-      // r14 interpreted chain — even with the gram-hash array bound
-      // to an attribute to avoid the O(tokens²) re-evaluation trap
-      // (54.4 s, SCALE.md "text_winnow: O(tokens²) lambda-capture
-      // fix") — still evaluated md5 and the window-min lambdas per
-      // element as interpreted expressions (guide §4); the spec pins
-      // equality against that spelling.
-      val fp = Tables.documents(s, dir)
-        .select(col("doc_id"),
-          explode(graft.functions.expressions.WinnowFingerprints(
-            tokens(col("text")), WinnowG, WinnowW)).as("fp"))
-        .localCheckpoint() // two consumers: df counts + pair join
-      val shared = fp.groupBy(col("fp"))
-        .agg(count(lit(1)).as("nd"))
-        .filter(col("nd") >= 2 && col("nd") <= WinnowMaxDf)
-        .select(col("fp"))
-      val hits = fp.join(shared, "fp")
-      hits.select(col("fp"), col("doc_id").as("doc_a"))
-        .join(hits.select(col("fp"), col("doc_id").as("doc_b")), "fp")
-        .filter(col("doc_a") < col("doc_b"))
-        .groupBy(col("doc_a"), col("doc_b"))
-        .agg(count(lit(1)).as("n_shared"))
-        .filter(col("n_shared") >= WinnowMinShared)
-    }),
+    // list arithmetic with no window functions; one fused native
+    // expression computes it (gram → md5 → sliding min → distinct).
+    // Cross-doc pairs: [[winnowPairs]], one grouped pass over the
+    // fingerprint buckets.
+    "text_winnow" -> ((s, dir) =>
+      winnowPairs(Tables.documents(s, dir).select(col("doc_id"),
+        explode(graft.functions.expressions.WinnowFingerprints(
+          tokens(col("text")), WinnowG, WinnowW)).as("fp")))),
 
     // Misra–Gries heavy hitters as a first-class entry: the
     // [[graft.functions.MisraGriesAgg]] typed aggregator (map-side
@@ -1057,6 +1033,16 @@ object TextQueries {
         .select(col("token"), col("cnt"))
     })
   )
+
+  /** text_winnow's pairs from distinct (doc_id, fp) rows: buckets above
+    * [[WinnowMaxDf]] docs are stop-fingerprints (bounding pair fan-out,
+    * as LSH banding does), and a pair needs ≥ [[WinnowMinShared]].
+    */
+  private[graft] def winnowPairs(fp: DataFrame): DataFrame =
+    DedupQueries.coBucketPairs(fp, Seq("fp"), WinnowMaxDf)
+      .groupBy(col("doc_a"), col("doc_b"))
+      .agg(count(lit(1)).as("n_shared"))
+      .filter(col("n_shared") >= WinnowMinShared)
 
   /** Winnowing parameters: word-gram width G, window W (detection
     * guarantee: shared token runs ≥ G+W-1 = 8 — the same span the

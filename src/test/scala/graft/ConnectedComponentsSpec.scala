@@ -67,7 +67,7 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     val sc = spark.sparkContext
     val d = 24
     val chain = (100L until (100L + d)).map(i => (i, i + 1))
-    val before = sc.getPersistentRDDs.size
+    val before = sc.getPersistentRDDs.keySet.toSet
     val (labels, iters) = PairGraph.using(chain.toDF("a", "b"))(
       _.componentsWithIters((100L to (100L + d)).map(Tuple1(_)).toDF("doc_id")))
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -76,8 +76,12 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(iters < d + 1, s"pointer-jump never engaged: $iters supersteps")
     assert(iters <= PairGraph.CcJumpAfter + log2d + 1,
       s"$iters supersteps exceeds the O(CcJumpAfter + log d) bound")
-    // only the returned generation may remain persisted
-    assert(sc.getPersistentRDDs.size <= before + 1)
+    // only the returned generation may remain persisted; the map is
+    // weak-valued, so compare key sets while `labels` stays referenced
+    // (a collected RDD of an earlier suite must not hide a leak)
+    val kept = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(kept.size <= 1, s"generations left persisted: $kept")
+    assert(labels.columns.contains("component"))
   }
 
   test("iteration count never exceeds min(d + 1, jump bound) (ScalaCheck)") {
