@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.{MinHash, PairGraph, TextFunctions, VectorFunctions, VectorModel}
+import graft.functions.{MinHash, NearDup, PairGraph, TextFunctions, VectorFunctions, VectorModel}
 import graft.functions.PairGraph.{KCoreK, KCoreRounds, LpRounds, PrIters, PrScale}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -111,13 +111,13 @@ object DedupQueries {
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.bhash").as("bhash"))
   }
 
-  /** The delta-probe relation both incremental entries must equal:
-    * delta bands join index bands, candidates verify by trigram
-    * Jaccard ≥ 0.6 — shared by `dedup_incremental` (recompute form)
-    * and `dedup_incremental_bucketed` (persisted bucketed index).
+  /** The oracle CTEs of the delta probe, shared by both incremental
+    * entries and `docs_incremental_stream`: the band table, the split
+    * hash `hh`, the delta-to-index candidates `cand(new_id, idx_id)`
+    * and the trigram table `tg`.
     */
-  private def incrementalSql: String =
-    s"""WITH bands AS (SELECT * FROM (${minhashBandsSql("documents")})),
+  private[queries] def incrementalCtes: String =
+    s"""bands AS (SELECT * FROM (${minhashBandsSql("documents")})),
        |hh AS (SELECT doc_id,
        |         ${TextFunctions.Sql.tokenHash("CAST(doc_id AS VARCHAR)")} % 100 AS h
        |       FROM documents),
@@ -126,12 +126,17 @@ object DedupQueries {
        |  FROM bands n JOIN bands i ON n.band = i.band AND n.bhash = i.bhash
        |  JOIN hh hn ON n.doc_id = hn.doc_id AND hn.h >= 90
        |  JOIN hh hi ON i.doc_id = hi.doc_id AND hi.h < 90),
-       |tg AS (SELECT doc_id, ${trigramsSql("text")} AS tg FROM documents),
+       |${tgCte("documents")}""".stripMargin
+
+  /** The relation both incremental entries must equal (the persisted
+    * bucketed index cannot change it).
+    */
+  private def incrementalSql: String =
+    s"""WITH $incrementalCtes,
        |ver AS (
        |  SELECT new_id, idx_id FROM cand
        |  JOIN tg dn ON new_id = dn.doc_id JOIN tg di ON idx_id = di.doc_id
-       |  WHERE len(list_intersect(dn.tg, di.tg))::DOUBLE /
-       |        len(list_distinct(list_concat(dn.tg, di.tg))) >= 0.6)
+       |  WHERE ${trigramJaccardSql("dn.tg", "di.tg", 8)} >= 0.6)
        |SELECT new_id AS doc_id, MIN(idx_id) AS dup_of, COUNT(*) AS n_dups
        |FROM ver GROUP BY new_id""".stripMargin
 
@@ -208,6 +213,14 @@ object DedupQueries {
   private[queries] def trigrams(textCol: String): org.apache.spark.sql.Column =
     graft.functions.expressions.PackedTrigrams(col(textCol))
 
+  /** The DuckDB trigram Jaccard of the list columns `x` and `y` (the
+    * oracle spelling of [[NearDup.jaccard]]): the divisor goes on a
+    * second line, aligned under column `at`, where the expression
+    * starts.
+    */
+  private[queries] def trigramJaccardSql(x: String, y: String, at: Int): String =
+    s"len(list_intersect($x, $y))::DOUBLE /\n${" " * at}len(list_distinct(list_concat($x, $y)))"
+
   private[queries] def trigramsSql(text: String): String =
     s"list_distinct([ascii(substring($text, i, 1)) * 65536 + " +
       s"ascii(substring($text, i + 1, 1)) * 256 + ascii(substring($text, i + 2, 1)) " +
@@ -241,12 +254,10 @@ object DedupQueries {
        |${tgCte(src)}""".stripMargin
 
   private[queries] def minhashPairsSelect: String =
-    """SELECT doc_a, doc_b,
-      |  ROUND(len(list_intersect(da.tg, db.tg))::DOUBLE /
-      |        len(list_distinct(list_concat(da.tg, db.tg))), 6) AS jac
-      |FROM cand JOIN tg da ON doc_a = da.doc_id JOIN tg db ON doc_b = db.doc_id
-      |WHERE len(list_intersect(da.tg, db.tg))::DOUBLE /
-      |      len(list_distinct(list_concat(da.tg, db.tg))) >= 0.6""".stripMargin
+    s"""SELECT doc_a, doc_b,
+       |  ROUND(${trigramJaccardSql("da.tg", "db.tg", 8)}, 6) AS jac
+       |FROM cand JOIN tg da ON doc_a = da.doc_id JOIN tg db ON doc_b = db.doc_id
+       |WHERE ${trigramJaccardSql("da.tg", "db.tg", 6)} >= 0.6""".stripMargin
 
   /** ORACLE STAGING (driver-side measurement plumbing, not engine
     * code). The inline chain oracles re-derive every shingle md5
@@ -304,6 +315,23 @@ object DedupQueries {
           tgCte("documents") -> "tg AS (SELECT * FROM staged_tg)")
     subs.foldLeft(sql) { case (s, (from, to)) => s.replace(from, to) }
   }
+
+  /** [[minhashPairsCtes]] over `nodes`, then `pairs` and the
+    * transitive closure over them, ending with `comp(doc_id,
+    * component)`; every doc of `nodes` is its own component's seed.
+    */
+  private[queries] def pairsClosureCtes(nodes: String): String =
+    s"""${minhashPairsCtes(nodes)},
+       |pairs AS ($minhashPairsSelect),
+       |edges AS (SELECT * FROM (
+       |  SELECT doc_a AS ea, doc_b AS eb FROM pairs
+       |  UNION
+       |  SELECT doc_b, doc_a FROM pairs)),
+       |reach AS (
+       |  SELECT doc_id AS v, doc_id AS r FROM $nodes
+       |  UNION
+       |  SELECT reach.v, e.eb FROM reach JOIN edges e ON reach.r = e.ea),
+       |comp AS (SELECT v AS doc_id, MIN(r) AS component FROM reach GROUP BY v)""".stripMargin
 
   /** Shared oracle CTE fragments over a `pairs(doc_a, doc_b)` CTE —
     * one spelling each, so the closure form, the LPA round count
@@ -393,20 +421,39 @@ object DedupQueries {
       .filter(col("p.a") < col("p.b"))
       .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
 
-  private[queries] def minhashVerifiedPairsOf(documents: DataFrame): DataFrame = {
-    val cand = lshCandidates(documents)
-    val docs = documents.select(col("doc_id"), trigrams("text").as("tg"))
-      .withColumn("sz", size(col("tg")))
-    cand
-      .join(docs.as("da"), col("doc_a") === col("da.doc_id"))
-      .join(docs.as("db"), col("doc_b") === col("db.doc_id"))
-      .withColumn("inter",
-        graft.functions.expressions.SortedIntersectSize(col("da.tg"), col("db.tg")))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("da.sz") + col("db.sz") - col("inter")))
-      .filter(col("jaccard") >= 0.6)
-      .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jac"))
-  }
+  private[queries] def minhashVerifiedPairsOf(documents: DataFrame): DataFrame =
+    NearDup.verified(lshCandidates(documents), NearDup.sets(documents, trigrams("text")), 0.6)
+
+  /** The incremental probe: each new doc of `cand(new_id, idx_id)`
+    * with an index partner at trigram Jaccard ≥ 0.6, its canonical
+    * (minimum id) partner and its match count. Shared by both
+    * `dedup_incremental` entries and `docs_incremental_stream`.
+    */
+  private[graft] def incrementalDups(cand: DataFrame, newSets: DataFrame,
+                                     idxSets: DataFrame): DataFrame =
+    NearDup.pairs(cand.select(col("new_id").as("doc_a"), col("idx_id").as("doc_b")),
+        newSets, idxSets)
+      .filter(NearDup.jaccard >= 0.6)
+      .groupBy(col("doc_a"))
+      .agg(min(col("doc_b")).as("dup_of"), count(lit(1)).as("n_dups"))
+      .select(col("doc_a").as("doc_id"), col("dup_of"), col("n_dups"))
+
+  /** [[incrementalDups]] over the split-hash halves of `docs`. */
+  private def incrementalDupsOf(docs: DataFrame, cand: DataFrame): DataFrame =
+    incrementalDups(cand, NearDup.sets(docs.filter(col("h") >= 90), trigrams("text")),
+      NearDup.sets(docs.filter(col("h") < 90), trigrams("text")))
+
+  /** Exact cosine ≥ 0.3 over embedding candidates `(doc_a, doc_b)` of
+    * vec ids, as `(id_a, id_b, cos_r)`.
+    */
+  private def cosineVerified(cand: DataFrame, emb: DataFrame): DataFrame =
+    NearDup.sides(cand, emb.select(col("vec_id").as("doc_id"), col("embedding"),
+        VectorFunctions.norm(col("embedding")).as("nrm")))
+      .withColumn("cos",
+        VectorFunctions.dot(col("a_embedding"), col("b_embedding")) /
+          (col("a_nrm") * col("b_nrm")))
+      .filter(col("cos") >= 0.3)
+      .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"), round(col("cos"), 6).as("cos_r"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Exact dedup: hash-groupBy on content. At scale: group on
@@ -491,26 +538,17 @@ object DedupQueries {
     // Asymmetric CONTAINMENT verify over the shared LSH candidates:
     // C(A,B) = |A∩B| / |A| catches doc-contains-doc (quotes,
     // boilerplate-wrapped copies) that symmetric Jaccard under-scores
-    // — a pair with J = 0.4 can still have C = 0.9 one way. Same
-    // codegen'd SortedIntersectSize kernel; both directions emitted
-    // so the consumer sees which side subsumes which. Candidate
-    // recall is the banded-Jaccard index's (documented: a production
-    // subset detector stratifies the index by length or uses the
-    // prefix-filter index); the verify itself is exact on candidates.
+    // — a pair with J = 0.4 can still have C = 0.9 one way. Both
+    // directions are emitted so the consumer sees which side subsumes
+    // which. Candidate recall is the banded-Jaccard index's
+    // (documented: a production subset detector stratifies the index
+    // by length or uses the prefix-filter index).
     "dedup_containment" -> ((s, dir) => {
       val documents = Tables.documents(s, dir)
-      val docs = documents.select(col("doc_id"), trigrams("text").as("tg"))
-        .withColumn("sz", size(col("tg")))
-      lshCandidates(documents)
-        .join(docs.as("da"), col("doc_a") === col("da.doc_id"))
-        .join(docs.as("db"), col("doc_b") === col("db.doc_id"))
-        .withColumn("inter",
-          graft.functions.expressions.SortedIntersectSize(col("da.tg"), col("db.tg")))
-        .withColumn("c_ab", col("inter").cast("double") / col("da.sz"))
-        .withColumn("c_ba", col("inter").cast("double") / col("db.sz"))
-        .filter(greatest(col("c_ab"), col("c_ba")) >= 0.7)
-        .select(col("doc_a"), col("doc_b"),
-          round(col("c_ab"), 6).as("c_ab_r"), round(col("c_ba"), 6).as("c_ba_r"))
+      val (cAb, cBa) = NearDup.containment
+      NearDup.pairs(lshCandidates(documents), NearDup.sets(documents, trigrams("text")))
+        .filter(greatest(cAb, cBa) >= 0.7)
+        .select(col("doc_a"), col("doc_b"), round(cAb, 6).as("c_ab_r"), round(cBa, 6).as("c_ba_r"))
     }),
 
     // Incremental (delta-ingest) near-dup check: a NEW batch of
@@ -521,34 +559,17 @@ object DedupQueries {
     // the arriving batch. The batch's band table joins the index's
     // band table on (band, bhash) — at scale the index bands are a
     // PERSISTED table bucketed on the band key, so only the (small)
-    // delta shuffles; candidates verify with the same codegen'd
-    // trigram-Jaccard >= 0.6 as minhashVerifiedPairsOf. Output: each
-    // batch doc with a near-dup already in the index, its canonical
-    // index partner, and the match count — exact integers.
+    // delta shuffles; candidates verify through [[incrementalDups]].
+    // Output: each batch doc with a near-dup already in the index, its
+    // canonical index partner, and the match count — exact integers.
     "dedup_incremental" -> ((s, dir) => {
       val docs = Tables.documents(s, dir).withColumn("h", TextQueries.splitHash)
       val bIdx = minhashBands(docs.filter(col("h") < 90))
         .select(col("band"), col("bhash"), col("doc_id").as("idx_id"))
       val bNew = minhashBands(docs.filter(col("h") >= 90))
         .select(col("band"), col("bhash"), col("doc_id").as("new_id"))
-      val cand = bNew.join(bIdx, Seq("band", "bhash"))
-        .select(col("new_id"), col("idx_id")).distinct()
-      val tgIdx = docs.filter(col("h") < 90)
-        .select(col("doc_id").as("i_id"), trigrams("text").as("i_tg"))
-        .withColumn("i_sz", size(col("i_tg")))
-      val tgNew = docs.filter(col("h") >= 90)
-        .select(col("doc_id").as("n_id"), trigrams("text").as("n_tg"))
-        .withColumn("n_sz", size(col("n_tg")))
-      cand
-        .join(tgNew, col("new_id") === col("n_id"))
-        .join(tgIdx, col("idx_id") === col("i_id"))
-        .withColumn("inter",
-          graft.functions.expressions.SortedIntersectSize(col("n_tg"), col("i_tg")))
-        .filter(col("inter").cast("double") /
-          (col("n_sz") + col("i_sz") - col("inter")) >= 0.6)
-        .groupBy(col("new_id"))
-        .agg(min(col("idx_id")).as("dup_of"), count(lit(1)).as("n_dups"))
-        .select(col("new_id").as("doc_id"), col("dup_of"), col("n_dups"))
+      incrementalDupsOf(docs, bNew.join(bIdx, Seq("band", "bhash"))
+        .select(col("new_id"), col("idx_id")).distinct())
     }),
 
     // dedup_incremental's claimed 100 TB layout, DEMONSTRATED: the
@@ -560,26 +581,9 @@ object DedupQueries {
     // forever. Identical relation and oracle as dedup_incremental
     // (layout cannot change the answer — that equality IS the check);
     // the one-exchange plan shape is pinned by BucketedJoinSpec.
-    "dedup_incremental_bucketed" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).withColumn("h", TextQueries.splitHash)
-      val cand = bucketedBandProbe(s, dir)
-      val tgIdx = docs.filter(col("h") < 90)
-        .select(col("doc_id").as("i_id"), trigrams("text").as("i_tg"))
-        .withColumn("i_sz", size(col("i_tg")))
-      val tgNew = docs.filter(col("h") >= 90)
-        .select(col("doc_id").as("n_id"), trigrams("text").as("n_tg"))
-        .withColumn("n_sz", size(col("n_tg")))
-      cand
-        .join(tgNew, col("new_id") === col("n_id"))
-        .join(tgIdx, col("idx_id") === col("i_id"))
-        .withColumn("inter",
-          graft.functions.expressions.SortedIntersectSize(col("n_tg"), col("i_tg")))
-        .filter(col("inter").cast("double") /
-          (col("n_sz") + col("i_sz") - col("inter")) >= 0.6)
-        .groupBy(col("new_id"))
-        .agg(min(col("idx_id")).as("dup_of"), count(lit(1)).as("n_dups"))
-        .select(col("new_id").as("doc_id"), col("dup_of"), col("n_dups"))
-    }),
+    "dedup_incremental_bucketed" -> ((s, dir) =>
+      incrementalDupsOf(Tables.documents(s, dir).withColumn("h", TextQueries.splitHash),
+        bucketedBandProbe(s, dir))),
 
     // EXACT-dedup delta ingest with a BLOOM PREFILTER — the sketch-
     // prefilter + exact-verify shape every 100 TB ingest runs before
@@ -682,21 +686,14 @@ object DedupQueries {
     // agreement overstates similarity. This is the quantitative
     // reason every LSH pipeline here VERIFIES candidates with the
     // exact measure instead of trusting ĵ. Candidate pairs are
-    // index-bounded (never all-pairs); per pair one codegen'd
-    // sorted-intersect + 16 integer equality tests.
+    // index-bounded (never all-pairs); per pair one exact shingle
+    // Jaccard + 16 integer equality tests.
     "dedup_minhash_estimate" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val sigs = minhashSigsOf(docs)
-      val sh = docs.select(col("doc_id"),
-          graft.functions.expressions.SortedShingleHashes(col("text"), 5).as("sh"))
-        .withColumn("sz", size(col("sh")))
-      val side = sigs.join(sh, "doc_id").localCheckpoint()
-      def renamed(p: String) = side.select(
-        col("doc_id").as(s"${p}id") +: col("sh").as(s"${p}sh") +:
-          col("sz").as(s"${p}sz") +:
-          (0 until MinHash.NumHashes).map(i => col(s"sig$i").as(s"$p$i")): _*)
+      val sh = NearDup.sets(docs, graft.functions.expressions.SortedShingleHashes(col("text"), 5))
+      val side = minhashSigsOf(docs).join(sh, "doc_id").localCheckpoint()
       val agree = (0 until MinHash.NumHashes)
-        .map(i => (col(s"a$i") === col(s"b$i")).cast("int"))
+        .map(i => (col(s"a_sig$i") === col(s"b_sig$i")).cast("int"))
         .reduce(_ + _)
       // bands derive from the CHECKPOINTED sig columns — the text is
       // scanned (and MinHashSignature computed) exactly once; the
@@ -710,13 +707,8 @@ object DedupQueries {
       // with zero sorts of array-carrying rows (guide §3.1); the
       // build side is bounded per partition by docs/partitions, which
       // scales out with the cluster, unlike a broadcast of the corpus.
-      lshCandidatesFromBands(bandsOfSigs(side))
-        .join(shjHint(renamed("a")), col("doc_a") === col("aid"))
-        .join(shjHint(renamed("b")), col("doc_b") === col("bid"))
-        .withColumn("inter",
-          graft.functions.expressions.SortedIntersectSize(col("ash"), col("bsh")))
-        .withColumn("sj",
-          col("inter").cast("double") / (col("asz") + col("bsz") - col("inter")))
+      NearDup.pairs(lshCandidatesFromBands(bandsOfSigs(side)), shjHint(side))
+        .withColumn("sj", NearDup.jaccard)
         .withColumn("est", agree.cast("double") / MinHash.NumHashes)
         .select(col("doc_a"), col("doc_b"),
           round(col("sj"), 6).as("sj_r"), round(col("est"), 6).as("est_r"),
@@ -785,7 +777,7 @@ object DedupQueries {
     // bucket anywhere. Shuffles are all linear in corpus size:
     // explode→freq, prefix rank, token equi-join, verify join.
     // The size-ratio conjunct (jac ≥ t needs min·(1+1/t) ≥ |A|+|B|)
-    // prunes candidates before the exact codegen'd intersect verifies.
+    // prunes candidates before the exact verify.
     "dedup_ngram_jaccard" -> ((parent, dir) => {
       import org.apache.spark.sql.expressions.Window
             // Partitions-track-volume, without per-SF tuning: the verify
@@ -813,8 +805,7 @@ object DedupQueries {
         initialParts.toString)
       val docs = Tables.documents(s, dir)
         .select(col("doc_id"), col("source"), trigrams("text").as("tg"))
-        .withColumn("sz", size(col("tg")))
-      val tok = docs.select(col("doc_id"), col("source"), col("sz"),
+      val tok = docs.select(col("doc_id"), col("source"), size(col("tg")).as("sz"),
         explode(col("tg")).as("t"))
       // global rarity order; trigram domain is small → broadcast back
       val freq = tok.groupBy("t").agg(count(lit(1)).as("freq"))
@@ -849,16 +840,7 @@ object DedupQueries {
               NgramSizeRatio >= col("a.sz") + col("b.sz"))
         .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
         .distinct()
-      val tgs = docs.select(col("doc_id"), col("tg"), col("sz"))
-      cand
-        .join(tgs.as("da"), col("doc_a") === col("da.doc_id"))
-        .join(tgs.as("db"), col("doc_b") === col("db.doc_id"))
-        .withColumn("inter",
-          graft.functions.expressions.SortedIntersectSize(col("da.tg"), col("db.tg")))
-        .withColumn("jaccard",
-          col("inter").cast("double") / (col("da.sz") + col("db.sz") - col("inter")))
-        .filter(col("jaccard") >= NgramJaccardT)
-        .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jac"))
+      NearDup.verified(cand, NearDup.sets(docs, col("tg")), NgramJaccardT)
     }),
 
     // Embedding-cosine near-dup: banded random-hyperplane LSH
@@ -885,9 +867,11 @@ object DedupQueries {
     // bounded here per source group; at 100 TB this report runs on a
     // stable SAMPLE of groups (it is a tuning diagnostic, not a
     // production stage). Shingle sets computed once (localCheckpoint)
-    // for both pair sides; the capture join is one LEFT join on the
-    // canonical pair key + a ≤ 8-row rollup. The sample is IN the
-    // query: a stable source-hash predicate keeps 1-in-5 source
+    // for both pair sides, which the same-source self-join carries
+    // (fetching them per pair afterwards took one more job at sf0.1);
+    // the capture join is one LEFT join on the canonical pair key + a
+    // ≤ 8-row rollup. The sample is IN the query: a stable
+    // source-hash predicate keeps 1-in-5 source
     // groups (the ':scv' salt — independent of every other sampling
     // hash), because the diagnostic's cost is quadratic per group and
     // its estimate converges per-group; the ':scv2' draw keeps the
@@ -905,15 +889,11 @@ object DedupQueries {
           graft.functions.expressions.SortedShingleHashes(col("text"), 5).as("sh"))
         .withColumn("sz", size(col("sh")))
         .localCheckpoint()
-      val a = docs.select(col("source"), col("doc_id").as("doc_a"),
-        col("sh").as("sha"), col("sz").as("sza"))
-      val b = docs.select(col("source"), col("doc_id").as("doc_b"),
-        col("sh").as("shb"), col("sz").as("szb"))
-      val ex = a.join(b, Seq("source")).filter(col("doc_a") < col("doc_b"))
-        .withColumn("inter",
-          graft.functions.expressions.SortedIntersectSize(col("sha"), col("shb")))
-        .withColumn("jac",
-          col("inter").cast("double") / (col("sza") + col("szb") - col("inter")))
+      def side(p: String) = docs.select(col("source"), col("doc_id").as(s"doc_$p"),
+        col("sh").as(s"${p}_set"), col("sz").as(s"${p}_sz"))
+      val ex = NearDup.scored(side("a").join(side("b"), Seq("source"))
+          .filter(col("doc_a") < col("doc_b")))
+        .withColumn("jac", NearDup.jaccard)
         .filter(col("jac") >= ScurveMinJac)
       // candidates over the sampled docs only — pair capture is a
       // pairwise band property, unaffected by out-of-sample docs
@@ -930,31 +910,17 @@ object DedupQueries {
 
     "dedup_embedding_pairs" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-        .withColumn("nrm", VectorFunctions.norm(col("embedding")))
         .withColumn("bucket",
           VectorFunctions.lshBucket(col("embedding"), Dim, EmbBands * EmbBandBits))
       val bandMask = (1 << EmbBandBits) - 1
-      val banded = emb.select(col("vec_id"), col("label"),
+      val banded = emb.select(col("vec_id").as("doc_id"), col("label"),
           explode(array((0 until EmbBands).map(k => struct(
             lit(k).as("band"),
             shiftright(col("bucket"), k * EmbBandBits).bitwiseAND(lit(bandMask.toLong))
               .as("bval"))): _*)).as("bb"))
-        .select(col("vec_id"), col("label"), col("bb.band").as("band"),
+        .select(col("doc_id"), col("label"), col("bb.band").as("band"),
           col("bb.bval").as("bval"))
-      val cand = banded.as("x").join(banded.as("y"),
-          col("x.label") === col("y.label") && col("x.band") === col("y.band") &&
-            col("x.bval") === col("y.bval") && col("x.vec_id") < col("y.vec_id"))
-        .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"))
-        .distinct()
-      val vecs = emb.select(col("vec_id"), col("embedding"), col("nrm"))
-      cand
-        .join(vecs.as("a"), col("id_a") === col("a.vec_id"))
-        .join(vecs.as("b"), col("id_b") === col("b.vec_id"))
-        .withColumn("cos",
-          VectorFunctions.dot(col("a.embedding"), col("b.embedding")) /
-            (col("a.nrm") * col("b.nrm")))
-        .filter(col("cos") >= 0.3)
-        .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos_r"))
+      cosineVerified(coBucketPairs(banded, Seq("label", "band", "bval")).distinct(), emb)
     }),
 
     // Embedding-LSH near-dup mining with corpus-tracking band width —
@@ -981,22 +947,8 @@ object DedupQueries {
         .as[(Long, Int, Array[Float])]
         .mapPartitions(_.flatMap { case (id, label, e) =>
           Iterator.tabulate(nBands)(k => (id, label, k, VectorModel.signBits(e, bands(k))))
-        }).toDF("vec_id", "label", "band", "bval")
-      val cand = banded.as("x").join(banded.as("y"),
-          col("x.label") === col("y.label") && col("x.band") === col("y.band") &&
-            col("x.bval") === col("y.bval") && col("x.vec_id") < col("y.vec_id"))
-        .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"))
-        .distinct()
-      val vecs = emb.select(col("vec_id"), col("embedding"),
-        VectorFunctions.norm(col("embedding")).as("nrm"))
-      cand
-        .join(vecs.as("a"), col("id_a") === col("a.vec_id"))
-        .join(vecs.as("b"), col("id_b") === col("b.vec_id"))
-        .withColumn("cos",
-          VectorFunctions.dot(col("a.embedding"), col("b.embedding")) /
-            (col("a.nrm") * col("b.nrm")))
-        .filter(col("cos") >= 0.3)
-        .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos_r"))
+        }).toDF("doc_id", "label", "band", "bval")
+      cosineVerified(coBucketPairs(banded, Seq("label", "band", "bval")).distinct(), emb)
     })
   )
 
@@ -1160,17 +1112,7 @@ object DedupQueries {
       // from canonicals along edges yields min hop distances (UNION
       // dedups (v, d) pairs; d < 16 caps cycles far above any LSH
       // clique diameter)
-      s"""WITH RECURSIVE ${minhashPairsCtes("documents")},
-         |pairs AS ($minhashPairsSelect),
-         |edges AS (SELECT * FROM (
-         |  SELECT doc_a AS ea, doc_b AS eb FROM pairs
-         |  UNION
-         |  SELECT doc_b, doc_a FROM pairs)),
-         |reach AS (
-         |  SELECT doc_id AS v, doc_id AS r FROM documents
-         |  UNION
-         |  SELECT reach.v, e.eb FROM reach JOIN edges e ON reach.r = e.ea),
-         |comp AS (SELECT v AS doc_id, MIN(r) AS component FROM reach GROUP BY v),
+      s"""WITH RECURSIVE ${pairsClosureCtes("documents")},
          |walk AS (
          |  SELECT doc_id AS v, 0 AS d FROM comp WHERE doc_id = component
          |  UNION
@@ -1193,11 +1135,9 @@ object DedupQueries {
     "dedup_ngram_jaccard" ->
       s"""WITH tg AS (SELECT doc_id, source, ${trigramsSql("text")} AS tg FROM documents)
          |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |  ROUND(len(list_intersect(a.tg, b.tg))::DOUBLE /
-         |        len(list_distinct(list_concat(a.tg, b.tg))), 6) AS jac
+         |  ROUND(${trigramJaccardSql("a.tg", "b.tg", 8)}, 6) AS jac
          |FROM tg a JOIN tg b ON a.source = b.source AND a.doc_id < b.doc_id
-         |WHERE len(list_intersect(a.tg, b.tg))::DOUBLE /
-         |      len(list_distinct(list_concat(a.tg, b.tg))) >= $NgramJaccardT""".stripMargin,
+         |WHERE ${trigramJaccardSql("a.tg", "b.tg", 6)} >= $NgramJaccardT""".stripMargin,
     "dedup_lsh_scurve" ->
       // exact same-source pair Jaccard in the SHINGLE domain LEFT
       // JOIN the banded candidate set (the minhash CTEs), rolled up

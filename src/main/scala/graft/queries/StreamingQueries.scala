@@ -1133,27 +1133,23 @@ object StreamingQueries {
     * tables on the band key / doc_id); the delta (split hash ≥ 90)
     * arrives as doubled gz JSONL chunks through the file-stream front
     * door, is restored to exactly-once by watermark dedup, and each
-    * micro-batch then runs `dedup_incremental`'s probe inside
-    * `foreachBatch`: delta bands join the index bands, candidates
-    * verify by trigram Jaccard ≥ 0.6, and only NON-duplicate delta
-    * docs append to the manifest table — a real parquet append, the
-    * transactional-table write a production job does, not a memory
-    * sink. Only the (small) delta is ever scanned per batch; the
+    * micro-batch then runs `dedup_incremental`'s probe
+    * ([[DedupQueries.incrementalDups]]) inside `foreachBatch`; only
+    * NON-duplicate delta docs append to the manifest table — a real
+    * parquet append, the transactional-table write a production job
+    * does, not a memory sink. Only the (small) delta is ever scanned per batch; the
     * index is probed, never rebuilt. Output: the grown manifest,
     * index ∪ surviving delta — which is exactly the batch oracle.
     */
   def docsIncrementalStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.functions.TextFunctions
+    import graft.functions.{NearDup, TextFunctions}
     val ss = streamSession(spark)
     val docs = graft.Tables.documents(ss, sfDir).withColumn("h", TextQueries.splitHash)
     val idxDocs = docs.filter(col("h") < 90).select(col("doc_id"), col("text"))
     val idxBands = DedupQueries.minhashBands(idxDocs)
       .select(col("band"), col("bhash"), col("doc_id").as("idx_id"))
       .localCheckpoint()
-    val idxTg = idxDocs
-      .select(col("doc_id").as("i_id"), DedupQueries.trigrams("text").as("i_tg"))
-      .withColumn("i_sz", size(col("i_tg")))
-      .localCheckpoint()
+    val idxTg = NearDup.sets(idxDocs, DedupQueries.trigrams("text")).localCheckpoint()
     // at-least-once, straddling chunk bounds
     val deltaDir = Replay.write(docEvents(docs.filter(col("h") >= 90)), 3)
     val outDir = TempDir.create("graft-manifest-").toString
@@ -1167,17 +1163,9 @@ object StreamingQueries {
             .select(col("band"), col("bhash"), col("doc_id").as("new_id"))
           val cand = bNew.join(idxBands, Seq("band", "bhash"))
             .select(col("new_id"), col("idx_id")).distinct()
-          val tgNew = b
-            .select(col("doc_id").as("n_id"), DedupQueries.trigrams("text").as("n_tg"))
-            .withColumn("n_sz", size(col("n_tg")))
-          val dupIds = cand
-            .join(tgNew, col("new_id") === col("n_id"))
-            .join(idxTg, col("idx_id") === col("i_id"))
-            .withColumn("inter", graft.functions.expressions.SortedIntersectSize(
-              col("n_tg"), col("i_tg")))
-            .filter(col("inter").cast("double") /
-              (col("n_sz") + col("i_sz") - col("inter")) >= 0.6)
-            .select(col("new_id").as("doc_id")).distinct()
+          val dupIds = DedupQueries.incrementalDups(cand,
+              NearDup.sets(b, DedupQueries.trigrams("text")), idxTg)
+            .select(col("doc_id"))
           // batchId-deterministic overwrite target (not a bare append):
           // a foreachBatch retry re-lands on identical bytes instead of
           // duplicating manifest rows — the manifest-append idempotence
@@ -1719,21 +1707,11 @@ object StreamingQueries {
     // the dup set is dedup_incremental's verified-probe relation
     "docs_incremental_stream" -> {
       import graft.functions.TextFunctions
-      s"""WITH bands AS (SELECT * FROM (${DedupQueries.minhashBandsSql("documents")})),
-         |hh AS (SELECT doc_id,
-         |         ${TextFunctions.Sql.tokenHash("CAST(doc_id AS VARCHAR)")} % 100 AS h
-         |       FROM documents),
-         |cand AS (
-         |  SELECT DISTINCT n.doc_id AS new_id, i.doc_id AS idx_id
-         |  FROM bands n JOIN bands i ON n.band = i.band AND n.bhash = i.bhash
-         |  JOIN hh hn ON n.doc_id = hn.doc_id AND hn.h >= 90
-         |  JOIN hh hi ON i.doc_id = hi.doc_id AND hi.h < 90),
-         |tg AS (SELECT doc_id, ${DedupQueries.trigramsSql("text")} AS tg FROM documents),
+      s"""WITH ${DedupQueries.incrementalCtes},
          |dup AS (
          |  SELECT DISTINCT new_id FROM cand
          |  JOIN tg dn ON new_id = dn.doc_id JOIN tg di ON idx_id = di.doc_id
-         |  WHERE len(list_intersect(dn.tg, di.tg))::DOUBLE /
-         |        len(list_distinct(list_concat(dn.tg, di.tg))) >= 0.6)
+         |  WHERE ${DedupQueries.trigramJaccardSql("dn.tg", "di.tg", 8)} >= 0.6)
          |SELECT d.doc_id, 'index' AS origin,
          |  ${TextFunctions.Sql.tokenCount("d.text")} AS n_tokens
          |FROM documents d JOIN hh ON d.doc_id = hh.doc_id AND hh.h < 90

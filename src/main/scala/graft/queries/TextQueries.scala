@@ -1358,17 +1358,7 @@ object TextQueries {
          |GROUP BY c.n_docs_prefix""".stripMargin
     },
     "text_cluster_split" ->
-      s"""WITH RECURSIVE ${DedupQueries.minhashPairsCtes("documents")},
-         |pairs AS (${DedupQueries.minhashPairsSelect}),
-         |edges AS (SELECT * FROM (
-         |  SELECT doc_a AS ea, doc_b AS eb FROM pairs
-         |  UNION
-         |  SELECT doc_b, doc_a FROM pairs)),
-         |reach AS (
-         |  SELECT doc_id AS v, doc_id AS r FROM documents
-         |  UNION
-         |  SELECT reach.v, e.eb FROM reach JOIN edges e ON reach.r = e.ea),
-         |comp AS (SELECT v AS doc_id, MIN(r) AS component FROM reach GROUP BY v)
+      s"""WITH RECURSIVE ${DedupQueries.pairsClosureCtes("documents")}
          |SELECT doc_id, component,
          |  CASE WHEN h < 80 THEN 'train' WHEN h < 90 THEN 'val'
          |       ELSE 'test' END AS split
@@ -1498,17 +1488,7 @@ object TextQueries {
     "text_curation_neardup" ->
       s"""WITH RECURSIVE docs_g AS (
          |  SELECT * FROM documents WHERE ${Sql.stopwordRatio("text")} >= 0.05),
-         |${DedupQueries.minhashPairsCtes("docs_g")},
-         |pairs AS (${DedupQueries.minhashPairsSelect}),
-         |edges AS (SELECT * FROM (
-         |  SELECT doc_a AS ea, doc_b AS eb FROM pairs
-         |  UNION
-         |  SELECT doc_b, doc_a FROM pairs)),
-         |reach AS (
-         |  SELECT doc_id AS v, doc_id AS r FROM docs_g
-         |  UNION
-         |  SELECT reach.v, e.eb FROM reach JOIN edges e ON reach.r = e.ea),
-         |comp AS (SELECT v AS doc_id, MIN(r) AS component FROM reach GROUP BY v)
+         |${DedupQueries.pairsClosureCtes("docs_g")}
          |SELECT d.doc_id, d.source,
          |  CASE WHEN h < 80 THEN 'train' WHEN h < 90 THEN 'val'
          |       ELSE 'test' END AS split,
@@ -1566,17 +1546,7 @@ object TextQueries {
     "text_recipe_pipeline" ->
       s"""WITH RECURSIVE docs_g AS (
          |  SELECT * FROM documents WHERE ${Sql.stopwordRatio("text")} >= 0.05),
-         |${DedupQueries.minhashPairsCtes("docs_g")},
-         |pairs AS (${DedupQueries.minhashPairsSelect}),
-         |edges AS (SELECT * FROM (
-         |  SELECT doc_a AS ea, doc_b AS eb FROM pairs
-         |  UNION
-         |  SELECT doc_b, doc_a FROM pairs)),
-         |reach AS (
-         |  SELECT doc_id AS v, doc_id AS r FROM docs_g
-         |  UNION
-         |  SELECT reach.v, e.eb FROM reach JOIN edges e ON reach.r = e.ea),
-         |comp AS (SELECT v AS doc_id, MIN(r) AS component FROM reach GROUP BY v),
+         |${DedupQueries.pairsClosureCtes("docs_g")},
          |manifest0 AS (
          |  SELECT d.doc_id, d.source,
          |    CASE WHEN h < 80 THEN 'train' WHEN h < 90 THEN 'val'
