@@ -444,16 +444,24 @@ object DedupQueries {
       NearDup.sets(docs.filter(col("h") < 90), trigrams("text")))
 
   /** Exact cosine ≥ 0.3 over embedding candidates `(doc_a, doc_b)` of
-    * vec ids, as `(id_a, id_b, cos_r)`.
+    * vec ids, as `(id_a, id_b, cos_r)`. While the per-doc side fits
+    * the broadcast threshold both fetches build on it, so the second
+    * fetch reuses the first one's broadcast; left to size estimates,
+    * the planner built the first fetch on the (smaller) candidates
+    * and broadcast the embeddings once more for the second.
     */
-  private def cosineVerified(cand: DataFrame, emb: DataFrame): DataFrame =
-    NearDup.sides(cand, emb.select(col("vec_id").as("doc_id"), col("embedding"),
-        VectorFunctions.norm(col("embedding")).as("nrm")))
+  private def cosineVerified(cand: DataFrame, emb: DataFrame): DataFrame = {
+    val vecs = emb.select(col("vec_id").as("doc_id"), col("embedding"),
+      VectorFunctions.norm(col("embedding")).as("nrm"))
+    val fits = vecs.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
+    NearDup.sides(cand, if (fits) broadcast(vecs) else vecs)
       .withColumn("cos",
         VectorFunctions.dot(col("a_embedding"), col("b_embedding")) /
           (col("a_nrm") * col("b_nrm")))
       .filter(col("cos") >= 0.3)
       .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"), round(col("cos"), 6).as("cos_r"))
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Exact dedup: hash-groupBy on content. At scale: group on

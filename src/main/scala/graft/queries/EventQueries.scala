@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Event-stream analytics over the `events` table: sessionization
@@ -1033,23 +1033,11 @@ object EventQueries {
     // Estimate error is bounded by the bin width (spec-pinned
     // against the exact rank value).
     "events_quantile_sketch" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       val cells = Tables.events(s, dir)
         .select(col("event_type"),
           floor(col("value") / lit(QhWidth)).cast("long").as("b"))
         .groupBy(col("event_type"), col("b")).agg(count(lit(1)).as("c"))
-      val tw = Window.partitionBy(col("event_type"))
-      cells
-        .withColumn("cum", sum(col("c")).over(tw.orderBy(col("b"))))
-        .withColumn("n", sum(col("c")).over(tw))
-        .withColumn("p", explode(array(QhPcts.map(lit): _*)))
-        .withColumn("target", expr("(n * p + 99) div 100"))
-        .filter(col("target") > col("cum") - col("c") &&
-          col("target") <= col("cum"))
-        .select(col("event_type"), col("p"), col("n"), col("target"),
-          round(col("b") * lit(QhWidth) +
-            (lit(QhWidth) * (col("target") - (col("cum") - col("c"))))
-              / col("c"), 4).as("qest_r"))
+      quantileEstimates(cells, col("b") * lit(QhWidth), lit(QhWidth))
     }),
 
     // Unknown-domain quantile sketch (judge VERDICT r13 item 7): the
@@ -1068,7 +1056,6 @@ object EventQueries {
     // subtraction, one division, floor, clamp — same interpolation
     // contract as the fixed entry, error ≤ one (per-type) width.
     "events_quantile_adaptive" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       val events = Tables.events(s, dir)
       val w = events.groupBy(col("event_type"))
         .agg(min(col("value")).as("vmin"), max(col("value")).as("vmax"))
@@ -1081,18 +1068,8 @@ object EventQueries {
           least(floor((col("value") - col("vmin")) / col("width")).cast("long"),
             lit((QaBins - 1).toLong)).as("b"))
         .groupBy(col("event_type"), col("b")).agg(count(lit(1)).as("c"))
-      val tw = Window.partitionBy(col("event_type"))
-      cells.join(broadcast(w), "event_type")
-        .withColumn("cum", sum(col("c")).over(tw.orderBy(col("b"))))
-        .withColumn("n", sum(col("c")).over(tw))
-        .withColumn("p", explode(array(QhPcts.map(lit): _*)))
-        .withColumn("target", expr("(n * p + 99) div 100"))
-        .filter(col("target") > col("cum") - col("c") &&
-          col("target") <= col("cum"))
-        .select(col("event_type"), col("p"), col("n"), col("target"),
-          round(col("vmin") + col("b") * col("width") +
-            (col("width") * (col("target") - (col("cum") - col("c"))))
-              / col("c"), 4).as("qest_r"))
+      quantileEstimates(cells.join(broadcast(w), "event_type"),
+        col("vmin") + col("b") * col("width"), col("width"))
     }),
 
     // Position-based (U-shaped) multi-touch attribution — the credit-
@@ -1288,6 +1265,39 @@ object EventQueries {
           .cast("long") % CmsW).as("b"))
       .groupBy(col("d"), col("b")).agg(count(lit(1)).as("c"))
   }
+
+  /** Quantile extraction over a per-type bin table (event_type, b, c)
+    * whose bin b covers [lo, lo + width): per percentile p of
+    * [[QhPcts]] the integer rank target ceil(p·n/100), the bin whose
+    * cumulative count covers it, and one interpolation inside it,
+    * lo + (width·(target − (cum − c)))/c in that IEEE order.
+    */
+  private def quantileEstimates(cells: DataFrame, lo: Column, width: Column): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val tw = Window.partitionBy(col("event_type"))
+    cells
+      .withColumn("cum", sum(col("c")).over(tw.orderBy(col("b"))))
+      .withColumn("n", sum(col("c")).over(tw))
+      .withColumn("p", explode(array(QhPcts.map(lit): _*)))
+      .withColumn("target", expr("(n * p + 99) div 100"))
+      .filter(col("target") > col("cum") - col("c") &&
+        col("target") <= col("cum"))
+      .select(col("event_type"), col("p"), col("n"), col("target"),
+        round(lo + (width * (col("target") - (col("cum") - col("c")))) / col("c"), 4)
+          .as("qest_r"))
+  }
+
+  /** The [[quantileEstimates]] mirror over CTE `cum` (event_type, b, c,
+    * cum, n and the columns `lo` and `w` read).
+    */
+  private def quantileTailSql(lo: String, w: String): String =
+    s"""tq AS (
+       |  SELECT *, (n * p + 99) // 100 AS target
+       |  FROM cum, (SELECT unnest([${QhPcts.mkString(", ")}]) AS p) q)
+       |SELECT event_type, p, n, target,
+       |  ROUND($lo + ($w * (target - (cum - c))) / c, 4) AS qest_r
+       |FROM tq
+       |WHERE target > cum - c AND target <= cum""".stripMargin
 
   /** Sessionization via session_window: per (user, 30-minute session)
     * the start, last-event time, event count and exact value sum. One
@@ -1486,13 +1496,7 @@ object EventQueries {
          |    CAST(SUM(c) OVER (PARTITION BY event_type ORDER BY b) AS BIGINT) AS cum,
          |    CAST(SUM(c) OVER (PARTITION BY event_type) AS BIGINT) AS n
          |  FROM cells),
-         |tq AS (
-         |  SELECT *, (n * p + 99) // 100 AS target
-         |  FROM cum, (SELECT unnest([${QhPcts.mkString(", ")}]) AS p) q)
-         |SELECT event_type, p, n, target,
-         |  ROUND(b * $QhWidth + ($QhWidth * (target - (cum - c))) / c, 4) AS qest_r
-         |FROM tq
-         |WHERE target > cum - c AND target <= cum""".stripMargin,
+         |${quantileTailSql(s"b * $QhWidth", s"$QhWidth")}""".stripMargin,
     "events_quantile_adaptive" ->
       s"""WITH bounds AS (
          |  SELECT event_type, MIN(value) AS vmin, MAX(value) AS vmax
@@ -1514,13 +1518,7 @@ object EventQueries {
          |    CAST(SUM(cl.c) OVER (PARTITION BY cl.event_type ORDER BY cl.b) AS BIGINT) AS cum,
          |    CAST(SUM(cl.c) OVER (PARTITION BY cl.event_type) AS BIGINT) AS n
          |  FROM cells cl JOIN w ON cl.event_type = w.event_type),
-         |tq AS (
-         |  SELECT *, (n * p + 99) // 100 AS target
-         |  FROM cum, (SELECT unnest([${QhPcts.mkString(", ")}]) AS p) q)
-         |SELECT event_type, p, n, target,
-         |  ROUND(vmin + b * width + (width * (target - (cum - c))) / c, 4) AS qest_r
-         |FROM tq
-         |WHERE target > cum - c AND target <= cum""".stripMargin,
+         |${quantileTailSql("vmin + b * width", "width")}""".stripMargin,
     "events_attribution_position" ->
       s"""WITH e AS (
          |  SELECT event_id, user_id, event_type,

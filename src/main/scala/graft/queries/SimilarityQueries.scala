@@ -93,6 +93,13 @@ object SimilarityQueries {
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rnk"),
         round(col("cos"), 6).as("cos_r"))
 
+  /** [[topKByCos]] over the broadcast query rows `q` joined to the
+    * corpus rows of `emb` that share `key` (bucket or cell), self
+    * excluded: the probe shape of every bucketed or celled entry.
+    */
+  private def probeTopK(q: DataFrame, emb: DataFrame, key: String): DataFrame =
+    topKByCos(broadcast(q).join(emb, Seq(key)).filter(col("query_id") =!= col("vec_id")))
+
   /** A model exported lane by lane: (s, cell, lane, c). */
   private def laneRows(s: SparkSession, cents: Seq[Centroid]): DataFrame = {
     import s.implicits._
@@ -337,6 +344,33 @@ object SimilarityQueries {
         (col("pos") + 1).cast("int").as("rnk"),
         round(col("col.cos"), 6).as(scoreCol))
 
+  /** [[topKSelect]] of K by exact cosine over candidate rows carrying
+    * (query_id, q_emb, q_nrm, vec_id, embedding, nrm): the rows are
+    * projected to (ids, score) before ranking, so the bounded partial
+    * aggregation moves skinny rows, never the embedding arrays.
+    */
+  private def cosTopK(cands: DataFrame): DataFrame = {
+    val spark = cands.sparkSession
+    import spark.implicits._
+    topKSelect(cands.select(col("query_id"), col("vec_id"), cosCol.as("cos"))
+      .as[(Long, Long, Double)], K, "cos_r")
+  }
+
+  /** Recall@K per `level` of retrieved (level, query_id, neighbor_id)
+    * rows against the [[K]] exact neighbors of knn_brute: the hits by
+    * semi-join, and hits / (nq·K) as one exact rational division.
+    */
+  private def recallAtK(levels: DataFrame, level: String, s: SparkSession,
+      dir: String): DataFrame = {
+    val nQ = Tables.embeddings(s, dir).filter(col("vec_id") % 50 === 0).count()
+    val brute = queries("knn_brute")(s, dir).select(col("query_id"), col("neighbor_id"))
+    levels.join(brute, Seq("query_id", "neighbor_id"), "left_semi")
+      .groupBy(col(level))
+      .agg(count(lit(1)).as("n_hits"))
+      .select(col(level), col("n_hits"),
+        round(col("n_hits").cast("double") / lit((nQ * K).toDouble), 6).as("recall_r"))
+  }
+
   /** Two-stage finisher shared by every re-rank entry: a k′ = 3K
     * shortlist from the approximate scores (bounded TopKByScore
     * partial agg), then exact float cosine over ONLY shortlist rows
@@ -348,9 +382,9 @@ object SimilarityQueries {
     val shortlist = topKOf(scored, 3 * K)
       .select(col("query_id"), explode(col("topk.vec_id")).as("vec_id"))
     val emb = corpus(s, dir)
-    val qf = queriesOf(emb)
-    topKByCos(broadcast(shortlist).join(emb, Seq("vec_id"))
-      .join(broadcast(qf), Seq("query_id")))
+    val cands = broadcast(shortlist).join(emb, Seq("vec_id"))
+      .join(broadcast(queriesOf(emb)), Seq("query_id"))
+    topKByCos(cands)
   }
 
   /** The raw-PQ ADC scored relation (train → encode → broadcast-query
@@ -568,19 +602,11 @@ object SimilarityQueries {
     // fixture it quantifies the lever's worst case. One bounded top-K
     // scan per level; ground truth is knn_brute by definition.
     "knn_matryoshka_recall" -> ((s, dir) => {
-      val nQ = Tables.embeddings(s, dir).filter(col("vec_id") % 50 === 0).count()
       val levels = MatRecallDims.map { md =>
         topKSelect(matryoshkaScoredAt(s, dir, md), K, "est_r")
           .select(lit(md).as("mat_dim"), col("query_id"), col("neighbor_id"))
       }.reduce(_ unionAll _)
-      val brute = queries("knn_brute")(s, dir)
-        .select(col("query_id"), col("neighbor_id"))
-      levels.join(brute, Seq("query_id", "neighbor_id"), "left_semi")
-        .groupBy(col("mat_dim"))
-        .agg(count(lit(1)).as("n_hits"))
-        .select(col("mat_dim"), col("n_hits"),
-          round(col("n_hits").cast("double") / lit((nQ * K).toDouble), 6)
-            .as("recall_r"))
+      recallAtK(levels, "mat_dim", s, dir)
     }),
 
     // Exact top-k: broadcast queries × corpus scored partition-local,
@@ -588,13 +614,8 @@ object SimilarityQueries {
     // reduces each partition to ≤ k rows per query before the shuffle
     // (Q×k×partitions moved, not Q×N as a rank window would).
     "knn_brute" -> ((s, dir) => {
-      import s.implicits._
       val emb = corpus(s, dir)
-      val q = queriesOf(emb)
-      val scored = broadcast(q).join(emb, col("query_id") =!= col("vec_id"))
-        .select(col("query_id"), col("vec_id"), cosCol.as("cos"))
-        .as[(Long, Long, Double)]
-      topKSelect(scored, K, "cos_r")
+      cosTopK(broadcast(queriesOf(emb)).join(emb, col("query_id") =!= col("vec_id")))
     }),
 
     // LSH ANN with multi-probe: score within the query's hyperplane
@@ -614,8 +635,7 @@ object SimilarityQueries {
         .withColumn("bucket0", VectorFunctions.lshBucket(col("q_emb"), Dim, LshBits))
         .withColumn("bucket", explode(array(probes: _*)))
         .drop("bucket0")
-      topKByCos(broadcast(q).join(emb, Seq("bucket"))
-        .filter(col("query_id") =!= col("vec_id")))
+      probeTopK(q, emb, "bucket")
     }),
 
     // Symmetric int8 quantization of the embedding corpus — the 4×
@@ -692,8 +712,7 @@ object SimilarityQueries {
         .withColumn("p2", array_position(col("masked"), array_max(col("masked"))))
         .withColumn("cell", explode(array(col("p1"), col("p2"))))
         .drop("dots", "masked", "p1", "p2")
-      topKByCos(broadcast(q).join(emb, Seq("cell"))
-        .filter(col("query_id") =!= col("vec_id")))
+      probeTopK(q, emb, "cell")
     }),
 
     // Two-stage retrieval — the production pattern the knn_int8
@@ -722,21 +741,12 @@ object SimilarityQueries {
       val emb0 = corpus(s, dir)
       val cents = learnedCentroids(emb0)
       val emb = emb0.withColumn("cell", VectorModel.assign(cents, col("embedding")))
-      val nQ = emb0.filter(col("vec_id") % 50 === 0).count()
       val probes = exprProbe2(queriesOf(emb0), cents)
       val ivf = Seq(1, 2).map { np =>
-        topKByCos(broadcast(probes.filter(col("probe_rank") <= np)).join(emb, Seq("cell"))
-          .filter(col("query_id") =!= col("vec_id")))
-          .select(lit(np).as("nprobe"), col("query_id"), col("neighbor_id").as("vec_id"))
+        probeTopK(probes.filter(col("probe_rank") <= np), emb, "cell")
+          .select(lit(np).as("nprobe"), col("query_id"), col("neighbor_id"))
       }.reduce(_ unionAll _)
-      val brute = queries("knn_brute")(s, dir)
-        .select(col("query_id"), col("neighbor_id").as("vec_id"))
-      ivf.join(brute, Seq("query_id", "vec_id"), "left_semi")
-        .groupBy(col("nprobe"))
-        .agg(count(lit(1)).as("n_hits"))
-        .select(col("nprobe"), col("n_hits"),
-          round(col("n_hits").cast("double") / lit((nQ * K).toDouble), 6)
-            .as("recall_r"))
+      recallAtK(ivf, "nprobe", s, dir)
     }),
 
     // SemDeDup (Abbas et al. 2023): semantic deduplication = cluster
@@ -790,8 +800,7 @@ object SimilarityQueries {
       val emb0 = corpus(s, dir)
       val cents = learnedCentroids(emb0)
       val emb = emb0.withColumn("cell", VectorModel.assign(cents, col("embedding")))
-      topKByCos(broadcast(exprProbe2(queriesOf(emb0), cents)).join(emb, Seq("cell"))
-        .filter(col("query_id") =!= col("vec_id")))
+      probeTopK(exprProbe2(queriesOf(emb0), cents), emb, "cell")
     }),
 
     // IVF ANN where the cell count TRACKS the corpus — the 100 TB
@@ -806,22 +815,15 @@ object SimilarityQueries {
     // model mapPartitions loop (k is data-dependent; k literal dot
     // expressions would hit janino's method ceiling past ~128).
     "knn_ivf_scaled" -> ((s, dir) => {
-      import s.implicits._
       val emb0 = corpus(s, dir)
       val cents = learnedCentroidsScaled(emb0)
       val embA = modelAssign(emb0, cents, byMaxDot = false)
         .withColumn("nrm", VectorFunctions.norm(col("embedding")))
       val q = modelProbe2(queriesOf(emb0), cents)
-      // project to (ids, score) BEFORE ranking and use the bounded
-      // top-k aggregator: candidates are ~2·CellTarget per query at
-      // any N, but a rank window would still sort them carrying both
-      // embedding arrays (~550 B/row); the partial agg moves
-      // Q×K×partitions skinny rows instead.
-      val scored = broadcast(q).join(embA, Seq("cell"))
-        .filter(col("query_id") =!= col("vec_id"))
-        .select(col("query_id"), col("vec_id"), cosCol.as("cos"))
-        .as[(Long, Long, Double)]
-      topKSelect(scored, K, "cos_r")
+      // the bounded top-k aggregator, not a rank window: candidates
+      // are ~2·CellTarget per query at any N, and a window would sort
+      // them carrying both embedding arrays (~550 B/row)
+      cosTopK(broadcast(q).join(embA, Seq("cell")).filter(col("query_id") =!= col("vec_id")))
     }),
 
     // SemDeDup with corpus-tracking cells — the scale form of
@@ -865,11 +867,7 @@ object SimilarityQueries {
           Iterator.single((id, e, nrm, b0)) ++
             Iterator.tabulate(planes.length)(b => (id, e, nrm, b0 ^ (1L << b)))
         }).toDF("query_id", "q_emb", "q_nrm", "bucket")
-      val scored = broadcast(q).join(emb, Seq("bucket"))
-        .filter(col("query_id") =!= col("vec_id"))
-        .select(col("query_id"), col("vec_id"), cosCol.as("cos"))
-        .as[(Long, Long, Double)]
-      topKSelect(scored, K, "cos_r")
+      cosTopK(broadcast(q).join(emb, Seq("bucket")).filter(col("query_id") =!= col("vec_id")))
     }),
 
     // IVF-PQ retrieval with the corpus-tracking coarse quantizer —
@@ -909,12 +907,136 @@ object SimilarityQueries {
   private def kmCentsSql(m: String): String =
     s"(SELECT cell, c, $ccExpr AS cc FROM (SELECT cell, n, $centList AS c FROM $m))"
   private def kmAssignSql(c: String, fxRel: String): String =
-    s"""(SELECT vec_id, embedding, fx, cell FROM (
-       |  SELECT f.vec_id, f.embedding, f.fx, c.cell,
-       |    ROW_NUMBER() OVER (PARTITION BY f.vec_id ORDER BY
-       |      c.cc - 2 * ${VectorFunctions.Sql.dot("f.embedding", "c.c", Dim)} ASC,
+    s"(${nearestCellSql("vec_id, embedding, fx, cell", "f.vec_id, f.embedding, f.fx",
+      "f.vec_id", "f.embedding", Dim, s"$fxRel f CROSS JOIN $c c", "rn = 1")})"
+
+  // ---- The oracle vocabulary of the retrieval family: every ranked
+  // select of the oracles is one of these two, so the DuckDB mirrors
+  // spell the Spark side's tie-breaks once. ----
+
+  /** Nearest cell(s) per row: the rows `f` of `from` ranked against
+    * their cells `c` (columns cell, c, cc) by ‖c‖² − 2·x·c ASC, then
+    * cell ASC — the first-occurrence argmin of [[VectorModel.nearest]]
+    * — within each `part` group. `cols` of f and c.cell come out as
+    * `out` where `keep` holds: rn = 1 assigns, rn <= 2 is the
+    * nprobe = 2 probe pair of [[VectorModel.nearest2]].
+    */
+  private def nearestCellSql(out: String, cols: String, part: String, x: String,
+      dim: Int, from: String, keep: String): String =
+    s"""SELECT $out FROM (
+       |  SELECT $cols, c.cell,
+       |    ROW_NUMBER() OVER (PARTITION BY $part ORDER BY
+       |      c.cc - 2 * ${VectorFunctions.Sql.dot(x, "c.c", dim)} ASC,
        |      c.cell ASC) AS rn
-       |  FROM $fxRel f CROSS JOIN $c c) WHERE rn = 1)""".stripMargin
+       |  FROM $from) WHERE $keep""".stripMargin
+
+  /** Per-group top-k: the rows of `from` ranked by `score` DESC, then
+    * `id` ASC — the order of [[topKByCos]] and TopKByScore — within
+    * each `part` group, kept while rnk <= k. `cols` come out as `keep`;
+    * a non-empty `out` adds rnk and ROUND(score, 6) AS out.
+    */
+  private def topKSql(keep: String, cols: String, part: String, score: String, id: String,
+      from: String, k: Int, out: String = ""): String = {
+    val (outer, rounded) =
+      if (out.isEmpty) (keep, "") else (s"$keep, rnk, $out", s",\n    ROUND($score, 6) AS $out")
+    s"""SELECT $outer FROM (
+       |  SELECT $cols,
+       |    ROW_NUMBER() OVER (PARTITION BY $part
+       |      ORDER BY $score DESC, $id ASC) AS rnk$rounded
+       |  FROM $from) WHERE rnk <= $k""".stripMargin
+  }
+
+  /** [[topKSql]] over query rows `q` and corpus rows `e` of `from`. */
+  private def pairTopKSql(score: String, from: String, k: Int, out: String = "",
+      keep: String = "query_id, neighbor_id"): String =
+    topKSql(keep, "q.vec_id AS query_id, e.vec_id AS neighbor_id", "q.vec_id", score,
+      "e.vec_id", from, k, out)
+
+  /** Every query × every other corpus vector. */
+  private val allPairs =
+    "embeddings q JOIN embeddings e ON q.vec_id % 50 = 0 AND q.vec_id != e.vec_id"
+
+  private def cosQE(dim: Int): String =
+    VectorFunctions.Sql.cosine("q.embedding", "e.embedding", dim)
+
+  /** Exact top-k by cosine over the first `dim` lanes of all pairs. */
+  private def bruteTopKSql(dim: Int, k: Int, out: String = "",
+      keep: String = "query_id, neighbor_id"): String =
+    pairTopKSql(cosQE(dim), allPairs, k, out, keep)
+
+  /** [[topKSql]] over the approximate scores `est` of candidate CTE
+    * `sc(query_id, nid, est)`.
+    */
+  private def scTopKSql(k: Int, out: String = ""): String =
+    topKSql("query_id, neighbor_id", "query_id, nid AS neighbor_id", "query_id", "est", "nid",
+      "sc", k, out)
+
+  /** The two-stage tail: CTE `sl` = `shortlist` (query_id,
+    * neighbor_id), then the exact-cosine top-K over shortlist rows only.
+    */
+  private def rerankSql(shortlist: String): String = {
+    val rows = """sl JOIN embeddings qe ON sl.query_id = qe.vec_id
+                 |          JOIN embeddings ne ON sl.neighbor_id = ne.vec_id""".stripMargin
+    s"""sl AS (
+       |  $shortlist)
+       |${topKSql("query_id, neighbor_id", "sl.query_id, sl.neighbor_id", "sl.query_id",
+         VectorFunctions.Sql.cosine("qe.embedding", "ne.embedding", Dim), "sl.neighbor_id",
+         rows, K, "cos_r")}""".stripMargin
+  }
+
+  /** The ADC tail: the 3K shortlist of `sc`, re-ranked by cosine. */
+  private def adcRerankSql: String = rerankSql(scTopKSql(3 * K))
+
+  /** The recall@K tail over CTE body `levels` (`level`, query_id,
+    * neighbor_id): hits against the brute top-K, over nq·K.
+    */
+  private def recallSql(level: String, levels: String): String =
+    s"""lv AS (
+       |$levels),
+       |brute AS (
+       |  ${bruteTopKSql(Dim, K)}),
+       |nq AS (SELECT COUNT(*)::DOUBLE AS n FROM embeddings WHERE vec_id % 50 = 0)
+       |SELECT lv.$level, COUNT(*) AS n_hits,
+       |  ROUND(COUNT(*)::DOUBLE / (nq.n * $K), 6) AS recall_r
+       |FROM lv JOIN brute USING (query_id, neighbor_id) CROSS JOIN nq
+       |GROUP BY lv.$level, nq.n""".stripMargin
+
+  /** The nprobe = 2 probe CTE `qp`: each query row of `fxRel` against
+    * the cells of `centsRel`.
+    */
+  private def probeCte(fxRel: String, centsRel: String, out: String = "vec_id, cell"): String =
+    s"""qp AS (
+       |  ${nearestCellSql(out, "f.vec_id", "f.vec_id", "f.embedding", Dim,
+         s"$fxRel f CROSS JOIN $centsRel c WHERE f.vec_id % 50 = 0", "rn <= 2")})""".stripMargin
+
+  /** Probed candidate pairs: `qp` rows with their vectors from `fxRel`
+    * as q, the rows of assignment `asgRel` in the probed cell as e.
+    */
+  private def probedPairs(fxRel: String, asgRel: String,
+      qpCols: String = "qp.vec_id, qp.cell"): String =
+    s"""(SELECT $qpCols, f.embedding
+       |        FROM qp JOIN $fxRel f ON qp.vec_id = f.vec_id) q
+       |  JOIN $asgRel e ON q.cell = e.cell AND q.vec_id != e.vec_id""".stripMargin
+
+  /** IVF retrieval over a Lloyd chain: probes, then exact cosine top-K. */
+  private def ivfKnnSql(chain: String, fxRel: String, centsRel: String, asgRel: String): String =
+    s"""WITH $chain,
+       |${probeCte(fxRel, centsRel)}
+       |${pairTopKSql(cosQE(Dim), probedPairs(fxRel, asgRel), K, "cos_r")}""".stripMargin
+
+  /** SemDeDup over assignment `asgRel`: a vector is kept unless a
+    * lower-id vector of its cell is at least [[SemTau]] cosine.
+    */
+  private def semDedupSql(chain: String, asgRel: String): String =
+    s"""WITH $chain,
+       |g AS (SELECT vec_id, embedding, cell FROM $asgRel),
+       |dom AS (
+       |  SELECT DISTINCT b.vec_id FROM g a JOIN g b
+       |    ON a.cell = b.cell AND a.vec_id < b.vec_id
+       |  WHERE ${VectorFunctions.Sql.cosine("a.embedding", "b.embedding", Dim)} >= $SemTau)
+       |SELECT g.vec_id, g.cell,
+       |  CASE WHEN d.vec_id IS NULL THEN 1 ELSE 0 END AS is_kept
+       |FROM g LEFT JOIN dom d ON g.vec_id = d.vec_id""".stripMargin
 
   private def kmeansCtes: String = {
     val rounds = (1 to KmIters).map { r =>
@@ -963,12 +1085,9 @@ object SimilarityQueries {
        |         FROM (SELECT unnest(range(0, k)) AS j FROM kk))),
        |sfx AS (SELECT vec_id, embedding, $fxList AS fx FROM embeddings),
        |strain AS (SELECT * FROM sfx WHERE vec_id % (SELECT m FROM kk) = 0),
-       |sa0 AS (SELECT vec_id, embedding, fx, cell FROM (
-       |  SELECT f.vec_id, f.embedding, f.fx, c.cell,
-       |    ROW_NUMBER() OVER (PARTITION BY f.vec_id ORDER BY
-       |      ${VectorFunctions.Sql.dot("f.embedding", "c.c", Dim)} DESC,
-       |      c.cell ASC) AS rn
-       |  FROM strain f CROSS JOIN l0 c) WHERE rn = 1),
+       |sa0 AS (${topKSql("vec_id, embedding, fx, cell", "f.vec_id, f.embedding, f.fx, c.cell",
+         "f.vec_id", VectorFunctions.Sql.dot("f.embedding", "c.c", Dim), "c.cell",
+         "strain f CROSS JOIN l0 c", 1)}),
        |$rounds,
        |sall AS ${kmAssignSql(s"sc$KmIters", "sfx")}""".stripMargin
   }
@@ -986,18 +1105,18 @@ object SimilarityQueries {
   private val pqCcExpr = "list_reduce(list_prepend(0.0::DOUBLE, " +
     s"[c[i]::DOUBLE * c[i]::DOUBLE for i in range(1, ${PqSub + 1})]), (acc, v) -> acc + v)"
 
+  /** Per-(vector, subspace) nearest codeword of the rows `from`. */
+  private def pqAssignSql(out: String, cols: String, from: String): String =
+    nearestCellSql(out, cols, "f.vec_id, f.sp", "f.sub", PqSub, s"$from ON f.sp = c.sp", "rn = 1")
+
   private[queries] def pqCtes(src: String = "embeddings"): String = {
     def update(prev: String) =
       s"(SELECT sp, cell, COUNT(*) AS n, $pqLaneSums AS ls FROM $prev GROUP BY sp, cell)"
     def cents(m: String) =
       s"(SELECT sp, cell, c, $pqCcExpr AS cc FROM (SELECT sp, cell, n, $pqCentList AS c FROM $m))"
     def assign(c: String) =
-      s"""(SELECT vec_id, sp, sub, fx, cell FROM (
-         |  SELECT f.vec_id, f.sp, f.sub, f.fx, c.cell,
-         |    ROW_NUMBER() OVER (PARTITION BY f.vec_id, f.sp ORDER BY
-         |      c.cc - 2 * ${VectorFunctions.Sql.dot("f.sub", "c.c", PqSub)} ASC,
-         |      c.cell ASC) AS rn
-         |  FROM pfx f JOIN $c c ON f.sp = c.sp) WHERE rn = 1)""".stripMargin
+      s"(${pqAssignSql("vec_id, sp, sub, fx, cell", "f.vec_id, f.sp, f.sub, f.fx",
+        s"pfx f JOIN $c c")})"
     val rounds = (1 to KmIters).map { r =>
       s"""pm$r AS ${update(s"pa${r - 1}")},
          |pc$r AS ${cents(s"pm$r")},
@@ -1063,12 +1182,7 @@ object SimilarityQueries {
        |    embedding[(t.sp*$PqSub+1):(t.sp*$PqSub+$PqSub)] AS sub
        |  FROM embeddings, range(0, $PqM) t(sp)),
        |allasg AS (
-       |  SELECT vec_id, sp, cell FROM (
-       |    SELECT f.vec_id, f.sp, c.cell,
-       |      ROW_NUMBER() OVER (PARTITION BY f.vec_id, f.sp ORDER BY
-       |        c.cc - 2 * ${VectorFunctions.Sql.dot("f.sub", "c.c", PqSub)} ASC,
-       |        c.cell ASC) AS rn
-       |    FROM allsub f JOIN pc$KmIters c ON f.sp = c.sp) WHERE rn = 1)
+       |  ${pqAssignSql("vec_id, sp, cell", "f.vec_id, f.sp", s"allsub f JOIN pc$KmIters c")})
        |SELECT vec_id, CAST(sp AS INT) AS s, CAST(cell AS INT) AS code,
        |  CASE WHEN vec_id % 10 = 9 THEN 'delta' ELSE 'index' END AS origin
        |FROM allasg""".stripMargin
@@ -1090,14 +1204,7 @@ object SimilarityQueries {
       VectorFunctions.Sql.dot(
         s"(q.embedding[${s * PqSub + 1}:${s * PqSub + PqSub}])", s"b$s.c", PqSub)
     }.mkString(" + ")
-    s"""qp AS (
-       |  SELECT vec_id, cell FROM (
-       |    SELECT f.vec_id, c.cell,
-       |      ROW_NUMBER() OVER (PARTITION BY f.vec_id ORDER BY
-       |        c.cc - 2 * ${VectorFunctions.Sql.dot("f.embedding", "c.c", Dim)} ASC,
-       |        c.cell ASC) AS rn
-       |    FROM $fxRel f CROSS JOIN $centsRel c WHERE f.vec_id % 50 = 0)
-       |  WHERE rn <= 2),
+    s"""${probeCte(fxRel, centsRel)},
        |sc AS (
        |  SELECT q.vec_id AS query_id, r.vec_id AS nid,
        |    ${VectorFunctions.Sql.dot("q.embedding", "civ.c", Dim)} + $terms AS est
@@ -1108,16 +1215,32 @@ object SimilarityQueries {
        |  $joins)""".stripMargin
   }
 
-  private def ivfpqScoreCtes: String = ivfpqScoreCtesFor("fx", s"c$KmIters")
+  /** The ADC retrieval select: top-K of `sc` by its estimate. */
+  private def pqAdcSelect: String = scTopKSql(K, "est_r")
 
-  private def pqAdcSelect: String =
-    s"""$pqAdcScoreCte
-       |SELECT query_id, neighbor_id, rnk, est_r FROM (
-       |  SELECT query_id, nid AS neighbor_id,
-       |    ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY est DESC, nid ASC) AS rnk,
-       |    ROUND(est, 6) AS est_r
-       |  FROM sc) WHERE rnk <= $K""".stripMargin
+  /** The IVF-PQ chain over a Lloyd chain: residuals, residual PQ
+    * training and the cell-bounded ADC score CTE `sc`.
+    */
+  private def ivfpqCtes(chain: String, fxRel: String, asgRel: String, centsRel: String): String =
+    s"""$chain,
+       |${ivfpqResCteFor(asgRel, centsRel)},
+       |${pqCtes("res")},
+       |${ivfpqScoreCtesFor(fxRel, centsRel)}""".stripMargin
+
+  private def ivfpqCtesFixed: String = ivfpqCtes(kmeansCtes, "fx", s"a$KmIters", s"c$KmIters")
+
+  /** The int8 codes CTE `qz` and the rescaled integer-dot estimate. */
+  private val int8Cte =
+    s"""qz AS (
+       |  SELECT vec_id, scale,
+       |    ${VectorFunctions.Sql.quantCodes("embedding", "scale", Dim)} AS codes
+       |  FROM (SELECT vec_id, embedding,
+       |          ${VectorFunctions.Sql.quantScale("embedding")} AS scale
+       |        FROM embeddings))""".stripMargin
+  private def int8TopKSql(k: Int, out: String = ""): String =
+    pairTopKSql(
+      s"${VectorFunctions.Sql.dotInt("q.codes", "e.codes", Dim)}::DOUBLE / (q.scale * e.scale)",
+      "qz q JOIN qz e ON q.vec_id % 50 = 0 AND q.vec_id != e.vec_id", k, out)
 
   val oracleSql: Map[String, String] = Map(
     "pq_codebooks" ->
@@ -1131,6 +1254,7 @@ object SimilarityQueries {
          |FROM pa$KmIters""".stripMargin,
     "knn_pq_adc" ->
       s"""WITH ${pqCtes()},
+         |$pqAdcScoreCte
          |$pqAdcSelect""".stripMargin,
     "ivfpq_codebooks" ->
       s"""WITH $kmeansCtes,
@@ -1140,131 +1264,34 @@ object SimilarityQueries {
          |  CAST(t.i AS INT) AS lane, c[t.i] AS c
          |FROM pc$KmIters, range(1, ${PqSub + 1}) t(i)""".stripMargin,
     "knn_ivfpq" ->
-      s"""WITH $kmeansCtes,
-         |$ivfpqResCte,
-         |${pqCtes("res")},
-         |$ivfpqScoreCtes
-         |SELECT query_id, neighbor_id, rnk, est_r FROM (
-         |  SELECT query_id, nid AS neighbor_id,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY est DESC, nid ASC) AS rnk,
-         |    ROUND(est, 6) AS est_r
-         |  FROM sc) WHERE rnk <= $K""".stripMargin,
+      s"""WITH $ivfpqCtesFixed
+         |$pqAdcSelect""".stripMargin,
     "knn_ivfpq_rerank" ->
       // stage 1 = the cell-bounded ADC score CTE at rnk ≤ 3K;
       // stage 2 = exact-cosine re-rank over shortlist rows only
-      s"""WITH $kmeansCtes,
-         |$ivfpqResCte,
-         |${pqCtes("res")},
-         |$ivfpqScoreCtes,
-         |sl AS (
-         |  SELECT query_id, nid AS neighbor_id FROM (
-         |    SELECT query_id, nid,
-         |      ROW_NUMBER() OVER (PARTITION BY query_id
-         |        ORDER BY est DESC, nid ASC) AS rnk
-         |    FROM sc) WHERE rnk <= ${3 * K})
-         |SELECT query_id, neighbor_id, rnk, cos_r FROM (
-         |  SELECT sl.query_id, sl.neighbor_id,
-         |    ROW_NUMBER() OVER (PARTITION BY sl.query_id
-         |      ORDER BY ${VectorFunctions.Sql.cosine("qe.embedding", "ne.embedding", Dim)} DESC,
-         |               sl.neighbor_id ASC) AS rnk,
-         |    ROUND(${VectorFunctions.Sql.cosine("qe.embedding", "ne.embedding", Dim)}, 6) AS cos_r
-         |  FROM sl JOIN embeddings qe ON sl.query_id = qe.vec_id
-         |          JOIN embeddings ne ON sl.neighbor_id = ne.vec_id
-         |) WHERE rnk <= $K""".stripMargin,
+      s"""WITH $ivfpqCtesFixed,
+         |$adcRerankSql""".stripMargin,
     "knn_pq_rerank" ->
       // stage 1 = the ADC score CTE at rnk ≤ 3K; stage 2 = exact-
       // cosine re-rank over shortlist rows only (the knn_int8_rerank
       // mirror with PQ codes as the shortlist engine)
       s"""WITH ${pqCtes()},
          |$pqAdcScoreCte,
-         |sl AS (
-         |  SELECT query_id, nid AS neighbor_id FROM (
-         |    SELECT query_id, nid,
-         |      ROW_NUMBER() OVER (PARTITION BY query_id
-         |        ORDER BY est DESC, nid ASC) AS rnk
-         |    FROM sc) WHERE rnk <= ${3 * K})
-         |SELECT query_id, neighbor_id, rnk, cos_r FROM (
-         |  SELECT sl.query_id, sl.neighbor_id,
-         |    ROW_NUMBER() OVER (PARTITION BY sl.query_id
-         |      ORDER BY ${VectorFunctions.Sql.cosine("qe.embedding", "ne.embedding", Dim)} DESC,
-         |               sl.neighbor_id ASC) AS rnk,
-         |    ROUND(${VectorFunctions.Sql.cosine("qe.embedding", "ne.embedding", Dim)}, 6) AS cos_r
-         |  FROM sl JOIN embeddings qe ON sl.query_id = qe.vec_id
-         |          JOIN embeddings ne ON sl.neighbor_id = ne.vec_id
-         |) WHERE rnk <= $K""".stripMargin,
-    "knn_brute" ->
-      s"""SELECT query_id, neighbor_id, rnk, cos_r FROM (
-         |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-         |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-         |      ORDER BY ${VectorFunctions.Sql.cosine("q.embedding", "e.embedding", Dim)} DESC,
-         |               e.vec_id ASC) AS rnk,
-         |    ROUND(${VectorFunctions.Sql.cosine("q.embedding", "e.embedding", Dim)}, 6) AS cos_r
-         |  FROM embeddings q JOIN embeddings e ON q.vec_id != e.vec_id
-         |  WHERE q.vec_id % 50 = 0
-         |) WHERE rnk <= $K""".stripMargin,
-    "knn_matryoshka" ->
-      // prefix-dim cosine: the same brute anatomy with the lane range
-      // cut at MatDim (Sql.cosine's range end IS the truncation)
-      s"""SELECT query_id, neighbor_id, rnk, est_r FROM (
-         |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-         |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-         |      ORDER BY ${VectorFunctions.Sql.cosine("q.embedding", "e.embedding", MatDim)} DESC,
-         |               e.vec_id ASC) AS rnk,
-         |    ROUND(${VectorFunctions.Sql.cosine("q.embedding", "e.embedding", MatDim)}, 6) AS est_r
-         |  FROM embeddings q JOIN embeddings e ON q.vec_id != e.vec_id
-         |  WHERE q.vec_id % 50 = 0
-         |) WHERE rnk <= $K""".stripMargin,
+         |$adcRerankSql""".stripMargin,
+    "knn_brute" -> bruteTopKSql(Dim, K, "cos_r"),
+    // prefix-dim cosine: the same brute anatomy with the lane range
+    // cut at MatDim (Sql.cosine's range end IS the truncation)
+    "knn_matryoshka" -> bruteTopKSql(MatDim, K, "est_r"),
     "knn_matryoshka_rerank" ->
       // stage 1 = the prefix-dim shortlist at rnk ≤ 3K; stage 2 =
       // full-dim exact-cosine re-rank over shortlist rows only
-      s"""WITH sl AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-         |      ROW_NUMBER() OVER (PARTITION BY q.vec_id
-         |        ORDER BY ${VectorFunctions.Sql.cosine("q.embedding", "e.embedding", MatDim)} DESC,
-         |                 e.vec_id ASC) AS rnk
-         |    FROM embeddings q JOIN embeddings e
-         |      ON q.vec_id % 50 = 0 AND q.vec_id != e.vec_id
-         |  ) WHERE rnk <= ${3 * K})
-         |SELECT query_id, neighbor_id, rnk, cos_r FROM (
-         |  SELECT sl.query_id, sl.neighbor_id,
-         |    ROW_NUMBER() OVER (PARTITION BY sl.query_id
-         |      ORDER BY ${VectorFunctions.Sql.cosine("qe.embedding", "ne.embedding", Dim)} DESC,
-         |               sl.neighbor_id ASC) AS rnk,
-         |    ROUND(${VectorFunctions.Sql.cosine("qe.embedding", "ne.embedding", Dim)}, 6) AS cos_r
-         |  FROM sl JOIN embeddings qe ON sl.query_id = qe.vec_id
-         |          JOIN embeddings ne ON sl.neighbor_id = ne.vec_id
-         |) WHERE rnk <= $K""".stripMargin,
+      s"WITH ${rerankSql(bruteTopKSql(MatDim, 3 * K))}",
     "knn_matryoshka_recall" -> {
       // one UNION ALL branch per head width (the lane range is a
       // literal in Sql.cosine, as in the Spark plan's slice)
-      val branches = MatRecallDims.map { md =>
-        s"""  SELECT $md AS mat_dim, query_id, neighbor_id FROM (
-           |    SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-           |      ROW_NUMBER() OVER (PARTITION BY q.vec_id
-           |        ORDER BY ${VectorFunctions.Sql.cosine("q.embedding", "e.embedding", md)} DESC,
-           |                 e.vec_id ASC) AS rnk
-           |    FROM embeddings q JOIN embeddings e
-           |      ON q.vec_id % 50 = 0 AND q.vec_id != e.vec_id
-           |  ) WHERE rnk <= $K""".stripMargin
-      }.mkString("\nUNION ALL\n")
-      s"""WITH mat AS (
-         |$branches),
-         |brute AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-         |      ROW_NUMBER() OVER (PARTITION BY q.vec_id
-         |        ORDER BY ${VectorFunctions.Sql.cosine("q.embedding", "e.embedding", Dim)} DESC,
-         |                 e.vec_id ASC) AS rnk
-         |    FROM embeddings q JOIN embeddings e
-         |      ON q.vec_id % 50 = 0 AND q.vec_id != e.vec_id
-         |  ) WHERE rnk <= $K),
-         |nq AS (SELECT COUNT(*)::DOUBLE AS n FROM embeddings WHERE vec_id % 50 = 0)
-         |SELECT mat.mat_dim, COUNT(*) AS n_hits,
-         |  ROUND(COUNT(*)::DOUBLE / (nq.n * $K), 6) AS recall_r
-         |FROM mat JOIN brute USING (query_id, neighbor_id) CROSS JOIN nq
-         |GROUP BY mat.mat_dim, nq.n""".stripMargin
+      val levels = MatRecallDims.map(md =>
+        "  " + bruteTopKSql(md, K, keep = s"$md AS mat_dim, query_id, neighbor_id"))
+      s"WITH ${recallSql("mat_dim", levels.mkString("\nUNION ALL\n"))}"
     },
     "embedding_quantize" ->
       s"""SELECT e.vec_id, ROUND(scale, 6) AS scale_r, CAST(t.i AS INT) AS lane,
@@ -1285,39 +1312,20 @@ object SimilarityQueries {
          |WHERE tj.j >= ti.i
          |GROUP BY 1, 2""".stripMargin,
     "knn_int8" ->
-      s"""WITH qz AS (
-         |  SELECT vec_id, scale,
-         |    ${VectorFunctions.Sql.quantCodes("embedding", "scale", Dim)} AS codes
-         |  FROM (SELECT vec_id, embedding,
-         |          ${VectorFunctions.Sql.quantScale("embedding")} AS scale
-         |        FROM embeddings))
-         |SELECT query_id, neighbor_id, rnk, est_r FROM (
-         |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-         |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-         |      ORDER BY ${VectorFunctions.Sql.dotInt("q.codes", "e.codes", Dim)}::DOUBLE /
-         |               (q.scale * e.scale) DESC,
-         |               e.vec_id ASC) AS rnk,
-         |    ROUND(${VectorFunctions.Sql.dotInt("q.codes", "e.codes", Dim)}::DOUBLE /
-         |          (q.scale * e.scale), 6) AS est_r
-         |  FROM qz q JOIN qz e ON q.vec_id % 50 = 0 AND q.vec_id != e.vec_id
-         |) WHERE rnk <= $K""".stripMargin,
+      s"""WITH $int8Cte
+         |${int8TopKSql(K, "est_r")}""".stripMargin,
     "knn_lsh" -> {
       // same probe set as the Spark plan: exact bucket + Hamming-1
       val probeXors = (0L +: (0 until LshBits).map(1L << _).map(_.toLong))
         .mkString("(", ", ", ")")
+      val probed =
+        s"""(SELECT vec_id, embedding, bucket FROM b WHERE vec_id % 50 = 0) q
+           |  JOIN b e ON xor(q.bucket, e.bucket) IN $probeXors AND q.vec_id != e.vec_id""".stripMargin
       s"""WITH b AS (
          |  SELECT vec_id, embedding,
          |    ${VectorFunctions.Sql.lshBucket("embedding", Dim, LshBits)} AS bucket
          |  FROM embeddings)
-         |SELECT query_id, neighbor_id, rnk, cos_r FROM (
-         |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-         |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-         |      ORDER BY ${VectorFunctions.Sql.cosine("q.embedding", "e.embedding", Dim)} DESC,
-         |               e.vec_id ASC) AS rnk,
-         |    ROUND(${VectorFunctions.Sql.cosine("q.embedding", "e.embedding", Dim)}, 6) AS cos_r
-         |  FROM (SELECT vec_id, embedding, bucket FROM b WHERE vec_id % 50 = 0) q
-         |  JOIN b e ON xor(q.bucket, e.bucket) IN $probeXors AND q.vec_id != e.vec_id
-         |) WHERE rnk <= $K""".stripMargin
+         |${pairTopKSql(cosQE(Dim), probed, K, "cos_r")}""".stripMargin
     },
     "knn_ivf" ->
       // mirrors the Spark plan: cell = argmax centroid dot
@@ -1342,42 +1350,14 @@ object SimilarityQueries {
          |          [CASE WHEN i = p1 THEN -1e300 ELSE dots[i] END
          |           for i in range(1, ${IvfCentroids + 1})] AS m
          |        FROM q1))
-         |SELECT query_id, neighbor_id, rnk, cos_r FROM (
-         |  SELECT q2.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    ROW_NUMBER() OVER (PARTITION BY q2.vec_id
-         |      ORDER BY ${VectorFunctions.Sql.cosine("q2.embedding", "c.embedding", Dim)} DESC,
-         |               c.vec_id ASC) AS rnk,
-         |    ROUND(${VectorFunctions.Sql.cosine("q2.embedding", "c.embedding", Dim)}, 6) AS cos_r
-         |  FROM q2 JOIN c
-         |    ON (c.cell = q2.p1 OR c.cell = q2.p2) AND q2.vec_id != c.vec_id
-         |) WHERE rnk <= $K""".stripMargin,
+         |${pairTopKSql(cosQE(Dim),
+           "q2 q JOIN c e ON (e.cell = q.p1 OR e.cell = q.p2) AND q.vec_id != e.vec_id",
+           K, "cos_r")}""".stripMargin,
     "knn_int8_rerank" ->
       // stage 1 = the knn_int8 shortlist CTE at rnk ≤ 3K; stage 2 =
       // exact-cosine re-rank over shortlist rows only
-      s"""WITH qz AS (
-         |  SELECT vec_id, scale,
-         |    ${VectorFunctions.Sql.quantCodes("embedding", "scale", Dim)} AS codes
-         |  FROM (SELECT vec_id, embedding,
-         |          ${VectorFunctions.Sql.quantScale("embedding")} AS scale
-         |        FROM embeddings)),
-         |sl AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-         |      ROW_NUMBER() OVER (PARTITION BY q.vec_id
-         |        ORDER BY ${VectorFunctions.Sql.dotInt("q.codes", "e.codes", Dim)}::DOUBLE /
-         |                 (q.scale * e.scale) DESC,
-         |                 e.vec_id ASC) AS rnk
-         |    FROM qz q JOIN qz e ON q.vec_id % 50 = 0 AND q.vec_id != e.vec_id
-         |  ) WHERE rnk <= ${3 * K})
-         |SELECT query_id, neighbor_id, rnk, cos_r FROM (
-         |  SELECT sl.query_id, sl.neighbor_id,
-         |    ROW_NUMBER() OVER (PARTITION BY sl.query_id
-         |      ORDER BY ${VectorFunctions.Sql.cosine("qe.embedding", "ne.embedding", Dim)} DESC,
-         |               sl.neighbor_id ASC) AS rnk,
-         |    ROUND(${VectorFunctions.Sql.cosine("qe.embedding", "ne.embedding", Dim)}, 6) AS cos_r
-         |  FROM sl JOIN embeddings qe ON sl.query_id = qe.vec_id
-         |          JOIN embeddings ne ON sl.neighbor_id = ne.vec_id
-         |) WHERE rnk <= $K""".stripMargin,
+      s"""WITH $int8Cte,
+         |${rerankSql(int8TopKSql(3 * K))}""".stripMargin,
     "embedding_classify" ->
       // label-as-cell instance of the kmeansCtes fragments: exact
       // BIGINT lane sums → float centroid → argmin assignment
@@ -1389,118 +1369,34 @@ object SimilarityQueries {
          |cc AS (SELECT cell, c, $ccExpr AS cc
          |       FROM (SELECT cell, $centList AS c FROM m)),
          |a AS (
-         |  SELECT vec_id, label, cell AS pred_label FROM (
-         |    SELECT f.vec_id, f.label, c.cell,
-         |      ROW_NUMBER() OVER (PARTITION BY f.vec_id ORDER BY
-         |        c.cc - 2 * ${VectorFunctions.Sql.dot("f.embedding", "c.c", Dim)} ASC,
-         |        c.cell ASC) AS rn
-         |    FROM fx f CROSS JOIN cc c) WHERE rn = 1)
+         |  ${nearestCellSql("vec_id, label, cell AS pred_label", "f.vec_id, f.label", "f.vec_id",
+           "f.embedding", Dim, "fx f CROSS JOIN cc c", "rn = 1")})
          |SELECT label, pred_label, COUNT(*) AS n
          |FROM a GROUP BY label, pred_label""".stripMargin,
     "ivf_kmeans_centroids" ->
       s"""WITH $kmeansCtes
          |SELECT cell, CAST(t.i AS INT) AS lane, c[t.i] AS c
          |FROM c$KmIters, range(1, ${Dim + 1}) t(i)""".stripMargin,
-    "knn_ivf_kmeans" ->
-      // probes = rn ≤ 2 over (score asc, cell asc) — identical pair to
-      // Spark's argmin + position-masked runner-up (the mask removes
-      // the POSITION, not the value, so score ties resolve to the two
-      // lowest cell ids on both engines)
+    // probes = rn ≤ 2 over (score asc, cell asc) — identical pair to
+    // Spark's argmin + position-masked runner-up (the mask removes
+    // the POSITION, not the value, so score ties resolve to the two
+    // lowest cell ids on both engines)
+    "knn_ivf_kmeans" -> ivfKnnSql(kmeansCtes, "fx", s"c$KmIters", s"a$KmIters"),
+    "knn_ivf_recall" -> {
+      // each nprobe level ranks the candidates of its first nprobe probes
+      val levels = probedPairs("fx", s"a$KmIters", "qp.vec_id, qp.cell, qp.rn") +
+        """
+          |    CROSS JOIN (SELECT unnest([1, 2]) AS nprobe) np
+          |    WHERE q.rn <= np.nprobe""".stripMargin
       s"""WITH $kmeansCtes,
-         |qp AS (
-         |  SELECT vec_id, cell FROM (
-         |    SELECT f.vec_id, c.cell,
-         |      ROW_NUMBER() OVER (PARTITION BY f.vec_id ORDER BY
-         |        c.cc - 2 * ${VectorFunctions.Sql.dot("f.embedding", "c.c", Dim)} ASC,
-         |        c.cell ASC) AS rn
-         |    FROM fx f CROSS JOIN c$KmIters c WHERE f.vec_id % 50 = 0)
-         |  WHERE rn <= 2)
-         |SELECT query_id, neighbor_id, rnk, cos_r FROM (
-         |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-         |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-         |      ORDER BY ${VectorFunctions.Sql.cosine("q.embedding", "e.embedding", Dim)} DESC,
-         |               e.vec_id ASC) AS rnk,
-         |    ROUND(${VectorFunctions.Sql.cosine("q.embedding", "e.embedding", Dim)}, 6) AS cos_r
-         |  FROM (SELECT qp.vec_id, qp.cell, f.embedding
-         |        FROM qp JOIN fx f ON qp.vec_id = f.vec_id) q
-         |  JOIN a$KmIters e ON q.cell = e.cell AND q.vec_id != e.vec_id
-         |) WHERE rnk <= $K""".stripMargin,
-    "knn_ivf_recall" ->
-      s"""WITH $kmeansCtes,
-         |qp AS (
-         |  SELECT vec_id, cell, rn FROM (
-         |    SELECT f.vec_id, c.cell,
-         |      ROW_NUMBER() OVER (PARTITION BY f.vec_id ORDER BY
-         |        c.cc - 2 * ${VectorFunctions.Sql.dot("f.embedding", "c.c", Dim)} ASC,
-         |        c.cell ASC) AS rn
-         |    FROM fx f CROSS JOIN c$KmIters c WHERE f.vec_id % 50 = 0)
-         |  WHERE rn <= 2),
-         |ivf AS (
-         |  SELECT nprobe, query_id, neighbor_id FROM (
-         |    SELECT np.nprobe, q.vec_id AS query_id, e.vec_id AS neighbor_id,
-         |      ROW_NUMBER() OVER (PARTITION BY np.nprobe, q.vec_id
-         |        ORDER BY ${VectorFunctions.Sql.cosine("q.embedding", "e.embedding", Dim)} DESC,
-         |                 e.vec_id ASC) AS rnk
-         |    FROM (SELECT qp.vec_id, qp.cell, qp.rn, f.embedding
-         |          FROM qp JOIN fx f ON qp.vec_id = f.vec_id) q
-         |    JOIN a$KmIters e ON q.cell = e.cell AND q.vec_id != e.vec_id
-         |    CROSS JOIN (SELECT unnest([1, 2]) AS nprobe) np
-         |    WHERE q.rn <= np.nprobe)
-         |  WHERE rnk <= $K),
-         |brute AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-         |      ROW_NUMBER() OVER (PARTITION BY q.vec_id
-         |        ORDER BY ${VectorFunctions.Sql.cosine("q.embedding", "e.embedding", Dim)} DESC,
-         |                 e.vec_id ASC) AS rnk
-         |    FROM embeddings q JOIN embeddings e ON q.vec_id != e.vec_id
-         |    WHERE q.vec_id % 50 = 0)
-         |  WHERE rnk <= $K),
-         |nq AS (SELECT COUNT(*)::DOUBLE AS n FROM embeddings WHERE vec_id % 50 = 0)
-         |SELECT ivf.nprobe, COUNT(*) AS n_hits,
-         |  ROUND(COUNT(*)::DOUBLE / (nq.n * $K), 6) AS recall_r
-         |FROM ivf JOIN brute USING (query_id, neighbor_id) CROSS JOIN nq
-         |GROUP BY ivf.nprobe, nq.n""".stripMargin,
-    "dedup_semantic" ->
-      s"""WITH $kmeansCtes,
-         |g AS (SELECT vec_id, embedding, cell FROM a$KmIters),
-         |dom AS (
-         |  SELECT DISTINCT b.vec_id FROM g a JOIN g b
-         |    ON a.cell = b.cell AND a.vec_id < b.vec_id
-         |  WHERE ${VectorFunctions.Sql.cosine("a.embedding", "b.embedding", Dim)} >= $SemTau)
-         |SELECT g.vec_id, g.cell,
-         |  CASE WHEN d.vec_id IS NULL THEN 1 ELSE 0 END AS is_kept
-         |FROM g LEFT JOIN dom d ON g.vec_id = d.vec_id""".stripMargin,
-    "knn_ivf_scaled" ->
-      s"""WITH $kmeansCtesScaled,
-         |qp AS (
-         |  SELECT vec_id, cell FROM (
-         |    SELECT f.vec_id, c.cell,
-         |      ROW_NUMBER() OVER (PARTITION BY f.vec_id ORDER BY
-         |        c.cc - 2 * ${VectorFunctions.Sql.dot("f.embedding", "c.c", Dim)} ASC,
-         |        c.cell ASC) AS rn
-         |    FROM sfx f CROSS JOIN sc$KmIters c WHERE f.vec_id % 50 = 0)
-         |  WHERE rn <= 2)
-         |SELECT query_id, neighbor_id, rnk, cos_r FROM (
-         |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-         |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-         |      ORDER BY ${VectorFunctions.Sql.cosine("q.embedding", "e.embedding", Dim)} DESC,
-         |               e.vec_id ASC) AS rnk,
-         |    ROUND(${VectorFunctions.Sql.cosine("q.embedding", "e.embedding", Dim)}, 6) AS cos_r
-         |  FROM (SELECT qp.vec_id, qp.cell, f.embedding
-         |        FROM qp JOIN sfx f ON qp.vec_id = f.vec_id) q
-         |  JOIN sall e ON q.cell = e.cell AND q.vec_id != e.vec_id
-         |) WHERE rnk <= $K""".stripMargin,
-    "dedup_semantic_scaled" ->
-      s"""WITH $kmeansCtesScaled,
-         |g AS (SELECT vec_id, embedding, cell FROM sall),
-         |dom AS (
-         |  SELECT DISTINCT b.vec_id FROM g a JOIN g b
-         |    ON a.cell = b.cell AND a.vec_id < b.vec_id
-         |  WHERE ${VectorFunctions.Sql.cosine("a.embedding", "b.embedding", Dim)} >= $SemTau)
-         |SELECT g.vec_id, g.cell,
-         |  CASE WHEN d.vec_id IS NULL THEN 1 ELSE 0 END AS is_kept
-         |FROM g LEFT JOIN dom d ON g.vec_id = d.vec_id""".stripMargin,
+         |${probeCte("fx", s"c$KmIters", "vec_id, cell, rn")},
+         |${recallSql("nprobe", "  " + topKSql("nprobe, query_id, neighbor_id",
+           "np.nprobe, q.vec_id AS query_id, e.vec_id AS neighbor_id", "np.nprobe, q.vec_id",
+           cosQE(Dim), "e.vec_id", levels, K))}""".stripMargin
+    },
+    "dedup_semantic" -> semDedupSql(kmeansCtes, s"a$KmIters"),
+    "knn_ivf_scaled" -> ivfKnnSql(kmeansCtesScaled, "sfx", s"sc$KmIters", "sall"),
+    "dedup_semantic_scaled" -> semDedupSql(kmeansCtesScaled, "sall"),
     "knn_lsh_scaled" -> {
       // bits-generic mirror (the dedup_embedding_scaled machinery on
       // one bucket of bb bits): nb = exact integer width search, hp =
@@ -1511,7 +1407,10 @@ object SimilarityQueries {
       val dotW = s"list_reduce(list_prepend(0.0::DOUBLE, " +
         s"[e.embedding[i]::DOUBLE * hp.w[i]::DOUBLE for i in range(1, ${Dim + 1})]), " +
         "(acc, v) -> acc + v)"
-      val cosQE = VectorFunctions.Sql.cosine("q.embedding", "e.embedding", Dim)
+      val probed = """(SELECT * FROM be WHERE vec_id % 50 = 0) q
+                     |  JOIN be e ON (xor(q.bucket, e.bucket) = 0
+                     |                OR bit_count(xor(q.bucket, e.bucket)) = 1)
+                     |    AND q.vec_id != e.vec_id""".stripMargin
       s"""WITH nb AS (
          |  SELECT COALESCE(MIN(bb), ${DedupQueries.EmbBitsMax}) AS bb
          |  FROM (SELECT unnest(range(${DedupQueries.EmbBitsMin}, ${DedupQueries.EmbBitsMax + 1})) AS bb) t,
@@ -1531,40 +1430,14 @@ object SimilarityQueries {
          |be AS (
          |  SELECT b.vec_id, b.bucket, e.embedding
          |  FROM bk b JOIN embeddings e USING (vec_id))
-         |SELECT query_id, neighbor_id, rnk, cos_r FROM (
-         |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-         |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-         |      ORDER BY $cosQE DESC, e.vec_id ASC) AS rnk,
-         |    ROUND($cosQE, 6) AS cos_r
-         |  FROM (SELECT * FROM be WHERE vec_id % 50 = 0) q
-         |  JOIN be e ON (xor(q.bucket, e.bucket) = 0
-         |                OR bit_count(xor(q.bucket, e.bucket)) = 1)
-         |    AND q.vec_id != e.vec_id
-         |) WHERE rnk <= $K""".stripMargin
+         |${pairTopKSql(cosQE(Dim), probed, K, "cos_r")}""".stripMargin
     },
     "knn_ivfpq_scaled" ->
       // the knn_ivfpq_rerank mirror on the scaled chain: scaled Lloyd
       // (kmeansCtesScaled: sall = full assignment, sc2 = centroids) →
       // residuals → residual-PQ training → cell-bounded ADC at
       // rnk ≤ 3K → exact-cosine re-rank over shortlist rows only
-      s"""WITH $kmeansCtesScaled,
-         |${ivfpqResCteFor("sall", s"sc$KmIters")},
-         |${pqCtes("res")},
-         |${ivfpqScoreCtesFor("sfx", s"sc$KmIters")},
-         |sl AS (
-         |  SELECT query_id, nid AS neighbor_id FROM (
-         |    SELECT query_id, nid,
-         |      ROW_NUMBER() OVER (PARTITION BY query_id
-         |        ORDER BY est DESC, nid ASC) AS rnk
-         |    FROM sc) WHERE rnk <= ${3 * K})
-         |SELECT query_id, neighbor_id, rnk, cos_r FROM (
-         |  SELECT sl.query_id, sl.neighbor_id,
-         |    ROW_NUMBER() OVER (PARTITION BY sl.query_id
-         |      ORDER BY ${VectorFunctions.Sql.cosine("qe.embedding", "ne.embedding", Dim)} DESC,
-         |               sl.neighbor_id ASC) AS rnk,
-         |    ROUND(${VectorFunctions.Sql.cosine("qe.embedding", "ne.embedding", Dim)}, 6) AS cos_r
-         |  FROM sl JOIN embeddings qe ON sl.query_id = qe.vec_id
-         |          JOIN embeddings ne ON sl.neighbor_id = ne.vec_id
-         |) WHERE rnk <= $K""".stripMargin
+      s"""WITH ${ivfpqCtes(kmeansCtesScaled, "sfx", "sall", s"sc$KmIters")},
+         |$adcRerankSql""".stripMargin
   )
 }

@@ -618,24 +618,7 @@ object TextQueries {
     // in-bucket rank (parallel window per bucket). Same two-level
     // construction a sort-based global shuffle uses on a real cluster;
     // re-runs are bit-identical (no RNG).
-    "text_global_shuffle" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"),
-          tokenHash(concat(lit("shuf:"), col("doc_id").cast("string"))).as("h"))
-        .withColumn("b", (col("h") % ShuffleBuckets).cast("int"))
-      val offs = docs.groupBy(col("b")).agg(count(lit(1)).as("cnt"))
-        .withColumn("off", coalesce(
-          sum(col("cnt")).over(
-            Window.orderBy(col("b")).rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-        .select(col("b"), col("off"))
-      docs.join(broadcast(offs), "b")
-        .withColumn("pos", col("off") +
-          row_number().over(Window.partitionBy(col("b"))
-            .orderBy(col("h"), col("doc_id"))))
-        .select(col("doc_id"), col("pos"))
-    }),
+    "text_global_shuffle" -> ((s, dir) => globalShuffle(Tables.documents(s, dir), ShuffleBuckets)),
 
     // Global shuffle with corpus-tracking bucket count — the 100 TB
     // form of text_global_shuffle. Fixed 32 buckets make the in-bucket
@@ -648,25 +631,9 @@ object TextQueries {
     // both engines; everything else is the fixed entry's two-level
     // prefix sum unchanged.
     "text_shuffle_scaled" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       val n = Tables.documents(s, dir).count()
-      val nb = math.max(ShuffleBucketsMin,
-        math.min(ShuffleBucketsMax, n / ShuffleBucketTarget))
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"),
-          tokenHash(concat(lit("shuf:"), col("doc_id").cast("string"))).as("h"))
-        .withColumn("b", (col("h") % nb).cast("int"))
-      val offs = docs.groupBy(col("b")).agg(count(lit(1)).as("cnt"))
-        .withColumn("off", coalesce(
-          sum(col("cnt")).over(
-            Window.orderBy(col("b")).rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-        .select(col("b"), col("off"))
-      docs.join(broadcast(offs), "b")
-        .withColumn("pos", col("off") +
-          row_number().over(Window.partitionBy(col("b"))
-            .orderBy(col("h"), col("doc_id"))))
-        .select(col("doc_id"), col("pos"))
+      globalShuffle(Tables.documents(s, dir),
+        math.max(ShuffleBucketsMin, math.min(ShuffleBucketsMax, n / ShuffleBucketTarget)))
     }),
 
     // Deletion propagation plan (right-to-be-forgotten / takedown):
@@ -1083,6 +1050,30 @@ object TextQueries {
     */
   val TempSampleC = 10.0
 
+  /** The two-level global shuffle of `docs` over `nb` range buckets:
+    * each doc's position is its bucket's offset (a cumulative count
+    * over the ≤ nb-row bucket table, broadcast) plus its rank by
+    * (h, doc_id) inside the bucket (one window per bucket).
+    */
+  private def globalShuffle(docs: DataFrame, nb: Long): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val hashed = docs
+      .select(col("doc_id"),
+        tokenHash(concat(lit("shuf:"), col("doc_id").cast("string"))).as("h"))
+      .withColumn("b", (col("h") % nb).cast("int"))
+    val offs = hashed.groupBy(col("b")).agg(count(lit(1)).as("cnt"))
+      .withColumn("off", coalesce(
+        sum(col("cnt")).over(
+          Window.orderBy(col("b")).rowsBetween(Window.unboundedPreceding, -1)),
+        lit(0L)))
+      .select(col("b"), col("off"))
+    hashed.join(broadcast(offs), "b")
+      .withColumn("pos", col("off") +
+        row_number().over(Window.partitionBy(col("b"))
+          .orderBy(col("h"), col("doc_id"))))
+      .select(col("doc_id"), col("pos"))
+  }
+
   /** The tf-annotated postings relation (token, doc_id, tf). */
   private def postings(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
@@ -1318,6 +1309,22 @@ object TextQueries {
        |            CASE WHEN (acc = ma OR ends_with(acc, ' ' || ma)) AND t = mb
        |                 THEN acc || t ELSE acc || ' ' || t END) AS seq
        |        FROM $prev, t$i)""".stripMargin
+
+  /** The global-shuffle mirror over `nb` buckets; `ctes` (empty, or
+    * CTEs ending in a comma) come first so `nb` may read them.
+    */
+  private def globalShuffleSql(ctes: String, nb: String): String =
+    s"""WITH ${ctes}bs AS (
+       |  SELECT doc_id, h, h % $nb AS b FROM (
+       |    SELECT doc_id,
+       |      ${Sql.tokenHash("'shuf:' || CAST(doc_id AS VARCHAR)")} AS h
+       |    FROM documents)),
+       |cnts AS (SELECT b, COUNT(*) AS cnt FROM bs GROUP BY b),
+       |offs AS (SELECT b, COALESCE(SUM(cnt) OVER (ORDER BY b
+       |  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off FROM cnts)
+       |SELECT bs.doc_id, CAST(offs.off + ROW_NUMBER() OVER (
+       |  PARTITION BY bs.b ORDER BY bs.h, bs.doc_id) AS BIGINT) AS pos
+       |FROM bs JOIN offs ON bs.b = offs.b""".stripMargin
 
   val oracleSql: Map[String, String] = Map(
     "text_winnow" -> {
@@ -1656,35 +1663,15 @@ object TextQueries {
          |    ${Sql.tokenHash("CAST(doc_id AS VARCHAR) || ':strat'")} AS sh
          |  FROM documents))
          |WHERE rk <= $StratQuota""".stripMargin,
-    "text_global_shuffle" ->
-      s"""WITH bs AS (
-         |  SELECT doc_id, h, h % $ShuffleBuckets AS b FROM (
-         |    SELECT doc_id,
-         |      ${Sql.tokenHash("'shuf:' || CAST(doc_id AS VARCHAR)")} AS h
-         |    FROM documents)),
-         |cnts AS (SELECT b, COUNT(*) AS cnt FROM bs GROUP BY b),
-         |offs AS (SELECT b, COALESCE(SUM(cnt) OVER (ORDER BY b
-         |  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off FROM cnts)
-         |SELECT bs.doc_id, CAST(offs.off + ROW_NUMBER() OVER (
-         |  PARTITION BY bs.b ORDER BY bs.h, bs.doc_id) AS BIGINT) AS pos
-         |FROM bs JOIN offs ON bs.b = offs.b""".stripMargin,
+    "text_global_shuffle" -> globalShuffleSql("", ShuffleBuckets.toString),
     "text_shuffle_scaled" ->
       // the fixed oracle with the bucket count derived from COUNT(*)
       // (exact integer clamp — no SQL text depends on the value)
-      s"""WITH nbk AS (
-         |  SELECT GREATEST($ShuffleBucketsMin, LEAST($ShuffleBucketsMax,
-         |    COUNT(*) // $ShuffleBucketTarget)) AS nb FROM documents),
-         |bs AS (
-         |  SELECT doc_id, h, h % (SELECT nb FROM nbk) AS b FROM (
-         |    SELECT doc_id,
-         |      ${Sql.tokenHash("'shuf:' || CAST(doc_id AS VARCHAR)")} AS h
-         |    FROM documents)),
-         |cnts AS (SELECT b, COUNT(*) AS cnt FROM bs GROUP BY b),
-         |offs AS (SELECT b, COALESCE(SUM(cnt) OVER (ORDER BY b
-         |  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off FROM cnts)
-         |SELECT bs.doc_id, CAST(offs.off + ROW_NUMBER() OVER (
-         |  PARTITION BY bs.b ORDER BY bs.h, bs.doc_id) AS BIGINT) AS pos
-         |FROM bs JOIN offs ON bs.b = offs.b""".stripMargin,
+      globalShuffleSql(
+        s"""nbk AS (
+           |  SELECT GREATEST($ShuffleBucketsMin, LEAST($ShuffleBucketsMax,
+           |    COUNT(*) // $ShuffleBucketTarget)) AS nb FROM documents),
+           |""".stripMargin, "(SELECT nb FROM nbk)"),
     // chunk rows per doc mirror text_chunk's generator arithmetic;
     // postings rows are the doc's distinct tokens
     "docs_purge_plan" ->

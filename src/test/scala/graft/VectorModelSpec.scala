@@ -22,8 +22,9 @@ import scala.jdk.CollectionConverters._
   * Spark side runs twice: generated code only (CODEGEN_ONLY, whole-
   * stage on) and interpreted only (NO_CODEGEN, whole-stage off). Rows
   * come from an RDD, so the optimizer cannot fold the projection on
-  * the driver. The last case is a source scan that keeps the lattice
-  * hash and the centroid type in the kernel file.
+  * the driver. The last two cases are source scans: one keeps the
+  * lattice hash and the centroid type in the kernel file, the other
+  * keeps each top-K spelling of SimilarityQueries in its one helper.
   */
 class VectorModelSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -167,5 +168,30 @@ class VectorModelSpec extends AnyFunSuite {
     assert(files.exists(_.getFileName.toString == "SimilarityQueries.scala"))
     val found = files.flatMap(hits)
     assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("each top-K spelling of SimilarityQueries lives in its one helper") {
+    val file = Paths.get("src/main/scala/graft/queries/SimilarityQueries.scala")
+    assert(Files.exists(file), s"$file not found from ${Paths.get("").toAbsolutePath}")
+    val lines = Files.readAllLines(file).asScala.toVector
+    // the owner of a line is the last object member declared above it
+    val member = """^  (?:private(?:\[\w+\])?\s+)?(?:def|val|lazy val)\s+(\w+)""".r
+    val owners = lines.scanLeft("")((owner, line) =>
+      member.findFirstMatchIn(line).map(_.group(1)).getOrElse(owner)).tail
+    def owned(token: String) = lines.indices.filter(i => lines(i).contains(token))
+      .map(i => owners(i) -> s"$file:${i + 1}: ${lines(i).trim}")
+    // token -> the helpers allowed to spell it, and how many sites there are
+    val rules = Seq(
+      "ROW_NUMBER() OVER" -> (Set("nearestCellSql", "topKSql"), 2),
+      "topKByCos(broadcast(" -> (Set("probeTopK"), 1),
+      "queries(\"knn_brute\")" -> (Set("recallAtK"), 1),
+      "as(\"recall_r\")" -> (Set("recallAtK"), 1),
+      "AS recall_r" -> (Set("recallSql"), 1))
+    rules.foreach { case (token, (helpers, sites)) =>
+      val hits = owned(token)
+      val stray = hits.filterNot(h => helpers.contains(h._1)).map(_._2)
+      assert(stray.isEmpty, s"`$token` outside ${helpers.mkString(", ")}:\n${stray.mkString("\n")}")
+      assert(hits.size == sites, s"`$token`: ${hits.size} sites, expected $sites")
+    }
   }
 }
